@@ -1,74 +1,116 @@
-"""Incremental exact dedup against persisted fingerprint state
-(§2.12 × the reference's incremental-ingest design).
+"""Incremental dedup against persisted signature state (§2.12 × the
+reference's incremental-ingest design).
 
 A training corpus is not built in one shot: batches land daily and
 each batch must be deduplicated against EVERYTHING already accepted
-— the incremental generalization of ``dedup_exact``, exactly the way
-the reference's cutoff/dedup pair (main_pipeline.py:328,331-341)
+— the incremental generalization of the one-shot dedups, exactly the
+way the reference's cutoff/dedup pair (main_pipeline.py:328,331-341)
 generalizes to content identity.
 
-Durable layout under ``state_dir`` — two tables, both written
-batch-at-a-time so every write is atomic at the batch granularity:
+One protocol, five modalities. Every ``ingest_*`` function is a thin
+front end of :func:`_ingest`; a modality supplies only its signer,
+its within-batch + cross-state match and its signature table:
 
-* ``accepted/batch=<id>/`` — the surviving rows themselves (all
-  original columns), written FIRST. This is the artifact downstream
-  consumes; it exists on disk before the fingerprint state ever
-  mentions its documents.
-* ``fingerprints/batch=<id>/fp_prefix=<hex>/`` — one row per accepted
-  document (fingerprint + doc id), derived from the STAGED files (not
-  the lazy plan), written SECOND. A batch's fingerprints count as
-  state only once its ``_SUCCESS`` marker exists; partial part-files
-  from a crashed append are invisible to :func:`read_state`.
+* :func:`ingest_batch` — exact text, ``fingerprints`` (md5 of the
+  normalized text, partitioned by ``fp_prefix``);
+* :func:`ingest_fuzzy_batch` — near-dup text, ``minhash_sigs``;
+* :func:`ingest_image_batch` — pHash, ``phashes`` (``fp_prefix``);
+* :func:`ingest_audio_batch` — Haitsma–Kalker, ``audio_fps`` (plus
+  per-rate ``word_counts`` for the hub guard);
+* :func:`ingest_video_batch` — sampled frame pHashes,
+  ``frame_phashes``.
 
-Crash consistency — the ordering makes every window safe:
+The protocol, in order (:func:`_ingest` owns every step):
+
+1. validate the batch schema (reserved columns), ``on_error`` and the
+   maintenance threshold — before anything touches disk — then take
+   the caller's ``batch_id`` or a fresh uuid;
+2. resume: if ``<table>/batch=<id>`` committed (its own ``_SUCCESS``,
+   or a compaction's provenance), return the staged survivors without
+   recomputing; under quarantine, first backfill a missing
+   quarantine-identity commit;
+3. sign the batch once, persist the signatures and run ONE eager
+   count (the within-batch self-join's two map sides must not race an
+   expensive decode twice); a cheap signer (the text md5) skips the
+   cache;
+4. stage survivors: ``accepted/batch=<id>/`` with overwrite — all
+   original columns, the artifact downstream consumes — and read them
+   back with the batch's explicit schema (an empty survivor set writes
+   a part-file-less dir that inference cannot read);
+5. commit the signatures of the STAGED ids to ``<table>/batch=<id>``,
+   partitioned per :data:`_STATE_TABLES` — state can only ever record
+   documents that are already durable. This ``_SUCCESS`` is the
+   batch's single commit point;
+6. commit the quarantine identity (media ingests, ``on_error=
+   "quarantine"``);
+7. run :func:`maintain_state` on the touched tables, then unpersist.
+
+Crash windows — the ordering makes every one safe:
 
 * die before/while staging: state unchanged, staging overwritten on
   re-run — clean recompute;
-* die while appending fingerprints: the batch dir has no
-  ``_SUCCESS``, so state still excludes it; re-run overwrites both
-  dirs — clean;
-* die after the fingerprint commit: the accepted rows are already
-  durable in ``accepted/batch=<id>``; re-running with the same
-  ``batch_id`` short-circuits and returns them (state records
-  nothing the corpus does not hold — the pre-round-6 design's
-  ``localCheckpoint`` loss window is gone).
+* die while committing signatures: the batch dir has no ``_SUCCESS``,
+  so every state read (:func:`_committed_batch_dirs`) excludes it;
+  re-run overwrites both dirs — clean;
+* die between the signature and quarantine commits: the batch counts
+  as committed; its resume recomputes the identity rows from the
+  staged payloads (:func:`_backfill_quarantine`);
+* die after: the accepted rows are durable in ``accepted/batch=<id>``
+  (or in the accepted compaction that folded it); re-running with the
+  same ``batch_id`` short-circuits and returns them.
 
-Idempotency: re-ingesting already-accepted CONTENT (a fresh
-``batch_id``) accepts nothing — every fingerprint anti-joins away;
-re-running the same ``batch_id`` after a crash resumes to the
-one-shot result.
+Common arguments and result of every ``ingest_*``: it returns the
+surviving rows (all original columns, read back from the staged
+files); min-id survivor within a batch, history always wins across
+batches. A stable ``batch_id`` makes a crashed run resumable; omitted,
+a fresh id is generated and the call has pure content semantics.
+``maintain_max_batch_dirs`` (default :data:`MAINTAIN_MAX_BATCH_DIRS`,
+at least 2) compacts the touched tables inline once one holds that
+many committed batch dirs — a no-op 15 of 16 ingests, one amortized
+rewrite otherwise; ``None`` disables (callers running their own
+maintenance cadence). ``on_error`` (media ingests): ``"raise"``
+(default) keeps the exact contract, ``"quarantine"`` accepts corrupt
+payloads as described below.
 
-Scale notes: the anti-join is one keyed shuffle on a uniform 128-bit
-key (never all-pairs); at 100 TB the state side is the small one by
-construction. ``fp_prefix`` (first hex digit) keeps per-batch state
-files bucketed for prefix-co-located readers. Concurrent ingests
-should serialize through the run lock (schedule.py), same as the
-reference's ``max_active_runs=1``.
+Idempotency: re-ingesting already-accepted CONTENT under a fresh
+``batch_id`` accepts nothing — history always wins; re-running the
+same ``batch_id`` after a crash resumes to the one-shot result. This
+is Structured Streaming's epoch-keyed idempotent sink, which
+``streaming/ingest.py`` keys into with ``batch_id=f"{run_id}-{epoch}"``.
 
-Beyond the two core tables, the module maintains (same protocols):
-modality signature tables (``phashes`` / ``audio_fps`` /
-``frame_phashes`` — the image/audio/video ingests; ``minhash_sigs``
-— the near-dup TEXT ingest, r16), the
-``quarantine_md5s`` identity table (r15 — exact content identity for
-corrupt rows accepted under quarantine mode, so re-delivery
-rejects), per-rate ``word_counts`` for the audio hub guard, and the
-tiered accepted-corpus compaction (``compact_accepted`` — bounded
-small-files fragmentation for the staged corpus itself, resume-safe
-via ``_src_batch`` + provenance). ``maintain_state`` sweeps all of
-it inline after every ingest.
+Quarantine (media ingests, ``on_error="quarantine"``): a corrupt
+payload is ACCEPTED with no usable decode signature (a NULL one for
+image/audio, no frame rows for video) plus an exact ``md5(raw
+bytes)`` row in the ``quarantine_md5s`` identity table. Survivors =
+clean survivors ∪ quarantine representatives: within a batch equal
+corrupt payloads collapse to the min id, and re-delivered corrupt
+bytes reject against the identity table.
 
-Reserved column names (r15 ADVICE): the accepted-corpus layout
-claims ``batch`` (the staging partition column) and ``_src_batch``
-(the compaction provenance column); every ingest validates the batch
-schema against both and raises a clear ``ValueError`` on a clash.
+Scale notes: every match is a keyed join on a signature or band key
+(never all-pairs); at 100 TB the state side is the small one by
+construction. Concurrent ingests must serialize through the run lock
+(schedule.py), same as the reference's ``max_active_runs=1``.
+
+Maintenance: :func:`maintain_state` runs inline after every ingest —
+:func:`compact_state` bounds each signature table's batch dirs and
+:func:`compact_accepted` folds the staged corpus itself (tiered,
+resume-safe via ``_src_batch`` + ``_sources.json`` provenance).
+
+Reserved column names: the accepted-corpus layout claims ``batch``
+(the staging partition column) and ``_src_batch`` (the compaction
+provenance column); every ingest rejects a batch schema carrying
+either with a clear ``ValueError``.
 """
 
 from __future__ import annotations
 
+import hashlib
 import posixpath
 import uuid
+from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -130,12 +172,19 @@ def _committed_batch_dirs(spark: SparkSession, root: str) -> list[str]:
     return sorted(out)
 
 
-#: Name of the provenance file a compacted batch dir carries: every
-#: ORIGINAL batch id folded into it (transitively — re-compacting a
-#: compact dir unions its provenance). Written after the parquet
-#: commit and before source deletion, so at every crash point a
-#: folded batch id is discoverable either by its own ``_SUCCESS``
-#: (sources not yet deleted) or here.
+#: Name of the provenance file a compacted batch dir carries. Its
+#: invariant: ORIGINAL batch ids (and streaming run intervals) are
+#: transitive — re-compacting a compact dir carries its originals
+#: over — while ``compact-*`` names are DIRECT only: a compact records
+#: the compact dirs it folded itself, never the ones those folded.
+#: Direct names suffice because a crash-left compact is always gone
+#: by the next compaction (compact_state folds every committed dir;
+#: compact_accepted's sweep deletes every dir a live compact folds),
+#: and they keep the file from growing by one name per compaction
+#: forever. Written after the parquet commit and before source
+#: deletion, so at every crash point a folded batch id is
+#: discoverable either by its own ``_SUCCESS`` (sources not yet
+#: deleted) or here.
 #:
 #: Two on-disk forms (r16, closing the r15 continuous-regime watch):
 #: the legacy JSON list of ids, and — whenever any folded id belongs
@@ -249,6 +298,15 @@ class _Provenance:
         for run, (lo, hi) in other.runs.items():
             plo, phi = out.runs.get(run, (lo, hi))
             out.runs[run] = (min(plo, lo), max(phi, hi))
+        return out
+
+    def absorb(self, name: str, prov: "_Provenance") -> "_Provenance":
+        """Fold compact source ``name`` whose provenance is ``prov``:
+        its original ids and run intervals carry over, and of the
+        compact names only its own (see :data:`_PROVENANCE_FILE`)."""
+        originals = {i for i in prov.ids if not i.startswith("compact-")}
+        out = self.union(_Provenance(originals, prov.runs))
+        out.ids.add(name)
         return out
 
     def __contains__(self, bid: str) -> bool:
@@ -368,6 +426,24 @@ def _folded_batch_ids(spark: SparkSession, root: str) -> "_Provenance":
     return out
 
 
+def _fold_sources(
+    spark: SparkSession, state_dir: str, dirs: list[str]
+) -> "_Provenance":
+    """The provenance a compaction of ``dirs`` writes — the one fold
+    both :func:`compact_state` and :func:`compact_accepted` use. A
+    plain source contributes its batch id (a registered run's epoch
+    widens that run's interval); a compact source is absorbed."""
+    stream_runs = _stream_run_ids(spark, state_dir)
+    out = _Provenance()
+    for d in dirs:
+        name = d.rsplit("batch=", 1)[1]
+        if name.startswith("compact-"):
+            out = out.absorb(name, _read_provenance(spark, d))
+        else:
+            out.add(name, stream_runs)
+    return out
+
+
 def _batch_committed(
     spark: SparkSession, state_dir: str, table: str, bid: str
 ) -> bool:
@@ -384,16 +460,6 @@ def _batch_committed(
     if fs.exists(marker):
         return True
     return bid in _folded_batch_ids(spark, root)
-
-
-def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The accepted-fingerprint table (committed batches only), or
-    None before the first successful ingest."""
-    root = posixpath.join(state_dir, "fingerprints")
-    dirs = _committed_batch_dirs(spark, root)
-    if not dirs:
-        return None
-    return spark.read.option("basePath", root).parquet(*dirs)
 
 
 #: Default state-maintenance threshold: an ingest that leaves this
@@ -432,83 +498,11 @@ def _validate_batch_columns(batch: DataFrame) -> None:
         )
 
 
-def ingest_batch(
-    spark: SparkSession,
-    batch: DataFrame,
-    state_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    batch_id: str | None = None,
-    maintain_max_batch_dirs: int | None = MAINTAIN_MAX_BATCH_DIRS,
-) -> DataFrame:
-    """Deduplicate ``batch`` within itself and against all previously
-    accepted content, durably stage the survivors, commit their
-    fingerprints to state, and return the surviving rows (all
-    original columns, read back from the staged files). Min-id
-    survivor within a batch; history always wins across batches.
+# ------------------------------------------------- state tables
 
-    Pass a stable ``batch_id`` to make a failed run resumable: if the
-    batch already committed, the call returns its staged rows without
-    recomputing (and without double-appending state). Omitted, a
-    fresh id is generated and the call has pure content semantics —
-    re-ingesting accepted content under a new id accepts nothing.
-
-    ``maintain_max_batch_dirs`` (default 16) keeps state
-    fragmentation bounded WITHOUT a separate scheduler hook: after
-    the commit, :func:`maintain_state` compacts this ingest's state
-    table iff its committed-dir count reached the threshold — a
-    no-op 15 of 16 ingests, one amortized O(state) rewrite
-    otherwise. ``None`` disables (callers running their own
-    maintenance cadence).
-    """
-    _validate_batch_columns(batch)
-    bid = batch_id if batch_id is not None else uuid.uuid4().hex
-    staged_dir = posixpath.join(state_dir, "accepted", f"batch={bid}")
-    fp_dir = posixpath.join(state_dir, "fingerprints", f"batch={bid}")
-
-    def _staged(schema: StructType) -> DataFrame:
-        # Explicit schema: a batch whose survivors are empty writes a
-        # part-file-less dir that schema inference cannot read.
-        return spark.read.schema(schema).parquet(staged_dir)
-
-    if batch_id is not None and _batch_committed(
-        spark, state_dir, "fingerprints", bid
-    ):
-        # resume — staged dir, or the accepted-compaction that folded it
-        return _read_staged_resume(spark, state_dir, bid, batch.schema)
-
-    fps = fingerprint_docs(batch, id_col, text_col)
-    within = key_dedup_deterministic(fps, ["fp"], id_col, keep="min")
-    state = read_state(spark, state_dir)
-    if state is not None:
-        fresh = within.join(state.select("fp"), "fp", "left_anti")
-    else:
-        fresh = within
-
-    # 1) Stage the survivors (the durable artifact) BEFORE any state
-    #    mutation; overwrite makes a re-run of a crashed attempt clean.
-    batch.join(fresh.select(F.col(id_col)), id_col).write.mode(
-        "overwrite"
-    ).parquet(staged_dir)
-    accepted = _staged(batch.schema)
-
-    # 2) Commit fingerprints DERIVED FROM THE STAGED FILES — state can
-    #    only ever record documents that are already durable.
-    fingerprint_docs(accepted, id_col, text_col).select(
-        "fp", "fp_prefix", F.col(id_col)
-    ).write.mode("overwrite").partitionBy("fp_prefix").parquet(fp_dir)
-    if maintain_max_batch_dirs is not None:
-        maintain_state(
-            spark, state_dir, maintain_max_batch_dirs, ("fingerprints",), exclude_bid=bid
-        )
-    return accepted
-
-
-# ----------------------------------------------- state compaction
-
-#: State tables compact_state understands: table name → partition
-#: columns its batch dirs carry (must be preserved through the
-#: rewrite so prefix-co-located readers keep working).
+#: Signature/identity state tables: table name → partition columns
+#: its batch dirs carry (preserved through compaction so
+#: prefix-co-located readers keep working).
 _STATE_TABLES = {
     "fingerprints": ["fp_prefix"],
     "phashes": ["fp_prefix"],
@@ -527,10 +521,11 @@ _STATE_TABLES = {
 }
 
 #: Explicit read schemas for state tables whose column set changed
-#: across releases (compaction must not let schema inference pick a
-#: pre-change footer and silently drop the newer column; an absent
-#: column reads as NULL). ``batch`` is the partition column —
-#: included so the explicit-schema basePath read still surfaces it.
+#: across releases (schema inference must not pick a pre-change
+#: footer and silently drop the newer column; an absent column reads
+#: as NULL), or whose commits can be part-file-less (inference cannot
+#: read those). ``batch`` is the partition column — included so the
+#: explicit-schema basePath read still surfaces it.
 _STATE_TABLE_SCHEMAS = {
     "quarantine_md5s": StructType(
         [
@@ -541,6 +536,267 @@ _STATE_TABLE_SCHEMAS = {
         ]
     ),
 }
+
+
+def _read_table(
+    spark: SparkSession, state_dir: str, table: str, *cols: str
+) -> DataFrame | None:
+    """``table``'s committed batches (a basePath read, so ``batch``
+    surfaces as a column; projected to ``cols`` when given), or None
+    before its first commit."""
+    root = posixpath.join(state_dir, table)
+    dirs = _committed_batch_dirs(spark, root)
+    if not dirs:
+        return None
+    reader = spark.read.option("basePath", root)
+    if table in _STATE_TABLE_SCHEMAS:
+        reader = reader.schema(_STATE_TABLE_SCHEMAS[table])
+    frame = reader.parquet(*dirs)
+    return frame.select(*cols) if cols else frame
+
+
+def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    """The accepted-fingerprint table of :func:`ingest_batch`, or None
+    before its first commit."""
+    return _read_table(spark, state_dir, "fingerprints")
+
+
+def read_image_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    """The accepted-pHash table of :func:`ingest_image_batch`, or None
+    before its first commit."""
+    return _read_table(spark, state_dir, "phashes")
+
+
+def read_audio_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    """The accepted audio-fingerprint table of
+    :func:`ingest_audio_batch` — one (doc_id, fp array<int>) row per
+    accepted clip — or None before its first commit."""
+    return _read_table(spark, state_dir, "audio_fps")
+
+
+def read_video_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    """The accepted frame-hash table of :func:`ingest_video_batch`, or
+    None before its first commit. One (doc_id, frame_idx, phash) row
+    per SAMPLED frame of each accepted clip — NULL-hash rows
+    (degenerate constant frames) are stored too: they never join, but
+    they keep the match_frac denominator at the full sampled count."""
+    return _read_table(spark, state_dir, "frame_phashes")
+
+
+def read_fuzzy_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    """The accepted MinHash-signature table of
+    :func:`ingest_fuzzy_batch` — one (doc_id, sig array<string>) row
+    per accepted document — or None before its first commit."""
+    return _read_table(spark, state_dir, "minhash_sigs", "doc_id", "sig")
+
+
+def read_quarantine_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    """The accepted-quarantine identity table, or None before any
+    quarantined acceptance: one (content_md5, doc_id) row per ACCEPTED
+    corrupt payload. This is what lets quarantine mode reject
+    re-delivered corrupt bytes — a NULL decode signature has no
+    content identity, so without it a firehose of the same corrupt
+    blob would grow the accepted set without bound. Empty commits
+    (every corrupt row a re-delivery) are part-file-less dirs whose
+    ``_SUCCESS`` still marks the identity committed; the explicit
+    schema reads them."""
+    return _read_table(
+        spark, state_dir, "quarantine_md5s", "content_md5", "doc_id"
+    )
+
+
+# ------------------------------------------------ the ingest protocol
+
+
+def _drop_dups(sigs: DataFrame, pairs: DataFrame, key: str) -> DataFrame:
+    """``sigs`` minus the non-representatives of every within-batch
+    duplicate cluster: the connected components of the ``(id_a,
+    id_b)`` pairs collapse to their min id."""
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
+        dup_components,
+    )
+
+    comp = dup_components(pairs)
+    losers = comp.filter(F.col("rep") != F.col("doc_id")).select(
+        F.col("doc_id").alias(key)
+    )
+    return sigs.join(losers, key, "left_anti")
+
+
+def _ingest(
+    spark: SparkSession,
+    batch: DataFrame,
+    state_dir: str,
+    batch_id: str | None,
+    maintain_max_batch_dirs: int | None,
+    *,
+    table: str,
+    id_col: str,
+    key: str,
+    sign: Callable[[DataFrame, Callable[[DataFrame], DataFrame]], DataFrame],
+    match: Callable[[DataFrame, DataFrame | None, int | None], DataFrame],
+    commit_cols: tuple,
+    on_error: str = "raise",
+    binary_col: str | None = None,
+    decoded: Column | None = None,
+    after_commit: Callable[[str], None] | None = None,
+) -> DataFrame:
+    """The ingest protocol of the module docstring, steps 1-7, for
+    every modality. The modality's part:
+
+    * ``sign(frame, cache)`` — ``frame``'s signature rows, keyed by
+      ``key``. Expensive frames go through ``cache`` (persisted now,
+      unpersisted when the call ends). A signer that caches nothing
+      is re-run on the staged rows for the commit; a caching one
+      commits its cached rows joined to the staged ids, so decode
+      never runs twice.
+    * ``match(sigs, state, n)`` — the surviving rows of ``sigs`` after
+      the within-batch and cross-state match; ``state`` is ``table``'s
+      committed rows (None before the first commit), ``n`` the eager
+      count (None when nothing was cached).
+    * ``commit_cols`` — what ``table`` stores per accepted row.
+    * ``decoded`` — under quarantine, the predicate of a decoded
+      signature row; None when a corrupt payload emits no row at all.
+    * ``after_commit(bid)`` — a write that follows the signature
+      commit (audio's hub-guard word counts)."""
+    _validate_batch_columns(batch)
+    if on_error not in ("raise", "quarantine"):
+        raise ValueError(
+            f"on_error must be 'raise' or 'quarantine' (got {on_error!r})"
+        )
+    if maintain_max_batch_dirs is not None and maintain_max_batch_dirs < 2:
+        raise ValueError("maintain_max_batch_dirs must be >= 2 or None")
+    quarantine = on_error == "quarantine"
+    bid = batch_id if batch_id is not None else uuid.uuid4().hex
+
+    def undecoded(frame: DataFrame, sigs: DataFrame) -> DataFrame:
+        # ids of `frame` with no decoded row in `sigs`
+        ids = frame.select(F.col(id_col).alias("doc_id"))
+        if decoded is None:
+            return ids.distinct().join(
+                sigs.select("doc_id").distinct(), "doc_id", "left_anti"
+            )
+        return (
+            sigs.filter(~decoded).select("doc_id").join(ids, "doc_id").distinct()
+        )
+
+    if batch_id is not None and _batch_committed(spark, state_dir, table, bid):
+        acc = _read_staged_resume(spark, state_dir, bid, batch.schema)
+        if quarantine and not _batch_committed(
+            spark, state_dir, "quarantine_md5s", bid
+        ):
+            # crash between the signature and quarantine commits: the
+            # staged rows without a decoded state row ARE the accepted
+            # corrupt set the original run decided
+            state = _read_table(spark, state_dir, table)
+            if state is not None:
+                _backfill_quarantine(
+                    spark, state_dir, bid, acc, id_col, binary_col,
+                    undecoded(acc, state),
+                )
+        return acc
+
+    cached: list[DataFrame] = []
+
+    def cache(frame: DataFrame) -> DataFrame:
+        cached.append(frame.persist())
+        return frame
+
+    try:
+        sigs = sign(batch, cache)
+        # ONE eager count fills every cache before the match's
+        # multi-branch consumers can race it into a duplicate decode
+        n = sigs.count() if cached else None
+        state = _read_table(spark, state_dir, table)
+        clean = sigs
+        if quarantine and decoded is not None:
+            clean = sigs.filter(decoded)
+        fresh = match(clean, state, n).select(key)
+        q_md5s = None
+        if quarantine:
+            # a cheap probe: the common all-clean batch skips the
+            # identity plan entirely
+            corrupt = (
+                sigs.filter(~decoded).select("doc_id")
+                if decoded is not None
+                else undecoded(batch, sigs)
+            )
+            if not corrupt.isEmpty():
+                q_md5s, _ = _quarantine_identity(
+                    spark, state_dir, batch, id_col, binary_col, corrupt
+                )
+                fresh = fresh.unionByName(
+                    q_md5s.select(F.col("doc_id").alias(key))
+                )
+
+        # stage BEFORE any state mutation; overwrite makes re-running a
+        # crashed attempt clean. A semi join: survivor ids may repeat
+        # (one row per sampled video frame)
+        staged_dir = posixpath.join(state_dir, "accepted", f"batch={bid}")
+        batch.join(
+            fresh.withColumnRenamed(key, id_col), id_col, "left_semi"
+        ).write.mode("overwrite").parquet(staged_dir)
+        accepted = spark.read.schema(batch.schema).parquet(staged_dir)
+
+        # the commit point: signatures of the STAGED ids only
+        rows = (
+            sigs.join(accepted.select(F.col(id_col).alias(key)), key)
+            if cached
+            else sign(accepted, cache)
+        )
+        sig_dir = posixpath.join(state_dir, table, f"batch={bid}")
+        writer = rows.select(*commit_cols).write.mode("overwrite")
+        if _STATE_TABLES[table]:
+            writer = writer.partitionBy(*_STATE_TABLES[table])
+        writer.parquet(sig_dir)
+        if after_commit is not None:
+            after_commit(bid)
+        if q_md5s is not None:
+            _commit_quarantine(spark, state_dir, bid, q_md5s, accepted, id_col)
+        if maintain_max_batch_dirs is not None:
+            maintain_state(
+                spark, state_dir, maintain_max_batch_dirs,
+                (table, "quarantine_md5s"), exclude_bid=bid,
+            )
+        return accepted
+    finally:
+        for frame in cached:
+            frame.unpersist()
+
+
+def ingest_batch(
+    spark: SparkSession,
+    batch: DataFrame,
+    state_dir: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    batch_id: str | None = None,
+    maintain_max_batch_dirs: int | None = MAINTAIN_MAX_BATCH_DIRS,
+) -> DataFrame:
+    """Exact-duplicate TEXT ingest. A document is a duplicate when its
+    :func:`fingerprint_docs` md5 equals a batch-mate's (the min id
+    survives) or any accepted document's (history always wins). State:
+    ``fingerprints/batch=<id>/fp_prefix=<hex>/``, one (fp, id) row per
+    accepted document; the anti-join is one keyed shuffle on a uniform
+    128-bit key. Arguments and return value: see the module
+    docstring."""
+
+    def match(fps: DataFrame, state: DataFrame | None, _n) -> DataFrame:
+        kept = key_dedup_deterministic(fps, ["fp"], id_col, keep="min")
+        if state is None:
+            return kept
+        return kept.join(state.select("fp"), "fp", "left_anti")
+
+    return _ingest(
+        spark, batch, state_dir, batch_id, maintain_max_batch_dirs,
+        table="fingerprints", id_col=id_col, key=id_col,
+        sign=lambda frame, _cache: fingerprint_docs(frame, id_col, text_col),
+        match=match,
+        commit_cols=("fp", "fp_prefix", id_col),
+    )
+
+
+# ----------------------------------------------- state compaction
 
 
 def compact_state(spark: SparkSession, state_dir: str, table: str) -> int:
@@ -587,8 +843,6 @@ def compact_state(spark: SparkSession, state_dir: str, table: str) -> int:
 
     Returns the number of source batch dirs rewritten (0 = nothing to
     do: fewer than two committed dirs)."""
-    import hashlib
-
     if table not in _STATE_TABLES:
         raise ValueError(
             f"table must be one of {sorted(_STATE_TABLES)} (got {table!r})"
@@ -604,48 +858,27 @@ def compact_state(spark: SparkSession, state_dir: str, table: str) -> int:
     # drop the batch= partition column the basePath read surfaces —
     # it is dir metadata, not state, and keeping it would defeat the
     # self-healing distinct (a row duplicated across a crashed
-    # compaction's old and new dirs differs ONLY in batch)
-    reader = spark.read.option("basePath", root)
-    if table in _STATE_TABLE_SCHEMAS:
-        # explicit schema: mixed-era dirs (a column added in a later
-        # release, e.g. quarantine src_batch in r16) would otherwise
-        # depend on WHICH footer schema inference samples — without
-        # mergeSchema it can silently drop the newer column from
-        # every row. Absent columns read as NULL.
-        reader = reader.schema(_STATE_TABLE_SCHEMAS[table])
-    df = reader.parquet(*dirs).drop("batch").distinct()
+    # compaction's old and new dirs differs ONLY in batch). Tables in
+    # _STATE_TABLE_SCHEMAS read with their explicit schema: mixed-era
+    # dirs would otherwise depend on WHICH footer inference samples.
+    df = _read_table(spark, state_dir, table).drop("batch").distinct()
     parts = _STATE_TABLES[table]
     writer = df.write.mode("overwrite")
     if parts:
         writer = writer.partitionBy(*parts)
     writer.parquet(out_dir)
 
-    # Provenance BEFORE deletion (r14): record every original batch
-    # id this dir folds (transitively, through re-compacted compact
-    # dirs) so a crashed ingest whose fp dir was compacted away can
-    # still resume by id instead of recomputing-to-empty and
-    # destroying its staged survivors. Crash between the parquet
-    # commit and this write: sources still exist, so every id is
-    # still discoverable via its own _SUCCESS — no window.
-    stream_runs = _stream_run_ids(spark, state_dir)
-    folded = _Provenance()
-    for d in dirs:
-        if d == out_dir:
-            continue
-        name = d.rsplit("batch=", 1)[1]
-        if name.startswith("compact-"):
-            folded = folded.union(_read_provenance(spark, d))
-            # record the compact source's OWN name too (review-found
-            # r14): read_audio_hubs filters visible dirs by this set,
-            # and in a RE-compaction crash window (new compact dir
-            # committed, old compact source not yet deleted) the old
-            # dir must be skippable or every historical word counts
-            # twice. Harmless to _batch_committed — compact names are
-            # never ingest batch_ids.
-            folded.ids.add(name)
-        else:
-            folded.add(name, stream_runs)
-    _write_provenance(spark, out_dir, folded)
+    # Provenance BEFORE deletion: a crashed ingest whose fp dir
+    # was compacted away can still resume by id instead of
+    # recomputing-to-empty and destroying its staged survivors. The
+    # compact sources' own names let read_audio_hubs skip them in a
+    # re-compaction crash window. Crash between the parquet commit
+    # and this write: sources still exist, so every id is still
+    # discoverable via its own _SUCCESS — no window.
+    _write_provenance(
+        spark, out_dir,
+        _fold_sources(spark, state_dir, [d for d in dirs if d != out_dir]),
+    )
 
     if table == "audio_fps":
         # Roll the sources' sampled word-count tables up into the
@@ -770,62 +1003,72 @@ def _committed_ingest_bids(
     return out
 
 
-def _accepted_listing(
+def _accepted_dirs(
     spark: SparkSession, state_dir: str
-) -> tuple[list[str], list[str]]:
-    """(plain_dirs, compact_dirs) under ``accepted/``:
+) -> tuple[list[str], list[str], list[str]]:
+    """(plain_dirs, compact_dirs, dead_dirs) under ``accepted/``:
 
-    * ``plain_dirs`` — per-ingest staged dirs whose batch COMMITTED
-      (an uncommitted dir is in-flight staging, untouchable) and that
-      no committed compaction has already folded;
+    * ``plain_dirs`` — per-ingest staged dirs whose batch COMMITTED (an
+      uncommitted dir is in-flight staging, untouchable) and that no
+      committed compaction has already folded;
     * ``compact_dirs`` — committed accepted-compaction dirs that are
-      LIVE (not themselves folded by a later re-compaction — the
-      crash-window skip rule, same as read_audio_hubs).
+      LIVE: carrying provenance and not folded by a later compaction;
+    * ``dead_dirs`` — what crashed compactions left behind. An ORPHAN
+      compact (committed, no ``_sources.json``: the compaction died
+      before its provenance rename) is dead because deletion strictly
+      follows the provenance write, so its sources still carry every
+      row; counting it would duplicate the corpus, and with a
+      different cid on the next sweep the duplication would never
+      self-heal. A committed dir, plain or compact, that a committed
+      compact's provenance folds is dead too (that compaction died
+      before deleting it); since provenance names compacts only
+      directly, such a compact must go before its folder is itself
+      folded, or nothing would name it any more.
 
-    A committed compact dir with NO ``_sources.json`` is an ORPHAN —
-    the compaction crashed after the parquet ``_SUCCESS`` but before
-    the provenance rename — and is NOT live (r15 ADVICE, medium):
-    by the protocol's invariant its sources were never deleted
-    (deletion strictly follows the provenance write), so every folded
-    row is still discoverable through the sources' own ``_SUCCESS``
-    markers; counting the orphan alongside them would duplicate the
-    corpus, and because later sweeps use a different source set (and
-    hence a different cid) the duplication would never self-heal the
-    way ``compact_state``'s ``distinct()`` read does. Orphans are
-    swept by the next :func:`compact_accepted` run."""
+    Dead dirs are never read; the next :func:`compact_accepted`
+    deletes them."""
     root = posixpath.join(state_dir, "accepted")
     fs, jroot = _fs(spark, root)
     if not fs.exists(jroot):
-        return [], []
+        return [], [], []
     compacts: list[str] = []
+    dead: list[str] = []
     plain: dict[str, str] = {}
     for st in fs.listStatus(jroot):
-        if not st.isDirectory():
-            continue
         name = st.getPath().getName()
-        if not name.startswith("batch="):
+        if not st.isDirectory() or not name.startswith("batch="):
             continue
         bid, path = name[6:], st.getPath().toString()
-        if bid.startswith("compact-"):
-            if fs.exists(st.getPath().suffix("/_SUCCESS")) and fs.exists(
-                st.getPath().suffix("/" + _PROVENANCE_FILE)
-            ):
-                compacts.append(path)
-        else:
+        if not bid.startswith("compact-"):
             plain[bid] = path
+        elif fs.exists(st.getPath().suffix("/_SUCCESS")):
+            if fs.exists(st.getPath().suffix("/" + _PROVENANCE_FILE)):
+                compacts.append(path)
+            else:
+                dead.append(path)
     folded = _Provenance()
     for d in compacts:
         folded = folded.union(_read_provenance(spark, d))
     committed = _committed_ingest_bids(spark, state_dir)
-    live_compacts = [
-        d for d in compacts if d.rsplit("batch=", 1)[1] not in folded
-    ]
-    plain_dirs = [
-        p
-        for b, p in sorted(plain.items())
-        if b in committed and b not in folded
-    ]
-    return plain_dirs, live_compacts
+    live: list[str] = []
+    for d in compacts:
+        (dead if d.rsplit("batch=", 1)[1] in folded else live).append(d)
+    plain_dirs: list[str] = []
+    for b, p in sorted(plain.items()):
+        if b in folded:
+            dead.append(p)
+        elif b in committed:
+            plain_dirs.append(p)
+    return plain_dirs, live, dead
+
+
+def _accepted_listing(
+    spark: SparkSession, state_dir: str
+) -> tuple[list[str], list[str]]:
+    """(plain_dirs, compact_dirs): the live part of
+    :func:`_accepted_dirs`."""
+    plain, compacts, _ = _accepted_dirs(spark, state_dir)
+    return plain, compacts
 
 
 def _part_file_bytes(spark: SparkSession, d: str) -> tuple[int, int]:
@@ -837,6 +1080,37 @@ def _part_file_bytes(spark: SparkSession, d: str) -> tuple[int, int]:
             n += 1
             total += st.getLen()
     return n, total
+
+
+def _accepted_frame(
+    spark: SparkSession,
+    state_dir: str,
+    plain: list[str],
+    compacts: list[str],
+    attributed: bool,
+) -> DataFrame | None:
+    """One frame over the readable (part-file-holding) dirs of both
+    accepted tiers, or None when every dir is survivor-less. The tiers
+    read separately: a single multi-dir read would need mergeSchema (a
+    footer read per file — the small-files cost again) to see the
+    compact tier's ``_src_batch`` column. ``attributed`` keeps
+    ``_src_batch``; plain dirs take it from their ``batch`` value."""
+    root = posixpath.join(state_dir, "accepted")
+    frames = []
+    for dirs, compact in ((plain, False), (compacts, True)):
+        readable = [d for d in dirs if _part_file_bytes(spark, d)[0] > 0]
+        if not readable:
+            continue
+        frame = spark.read.option("basePath", root).parquet(*readable)
+        if attributed and not compact:
+            frame = frame.withColumn(
+                _SRC_BATCH_COL, F.col("batch").cast("string")
+            )
+        frame = frame.drop("batch")
+        if compact and not attributed:
+            frame = frame.drop(_SRC_BATCH_COL)
+        frames.append(frame)
+    return reduce(lambda a, b: a.unionByName(b), frames) if frames else None
 
 
 def compact_accepted(
@@ -866,7 +1140,9 @@ def compact_accepted(
     (:func:`_read_staged_resume`); ``_sources.json`` provenance is
     written before any deletion, exactly the compact_state protocol
     (crash windows self-heal: a committed-but-undeleted source is
-    skipped by the folded-set rule on the next read).
+    skipped by the folded-set rule on every read, and the first step
+    here deletes it along with orphan compacts — see
+    :func:`_accepted_dirs`).
 
     ``exclude_bid`` keeps one batch out of this sweep — the inline
     maintenance path excludes the batch it just committed, because
@@ -876,82 +1152,34 @@ def compact_accepted(
     modality (accepted schemas must union), and run under the
     schedule.py run lock. Returns the number of source dirs folded
     (0 = nothing to do)."""
-    import hashlib
-    from functools import reduce
-
-    root = posixpath.join(state_dir, "accepted")
-    # Sweep orphan compacts first: a committed compact dir with no
-    # provenance crashed before its _sources.json rename, so its
-    # sources were never deleted and still carry every row — the dir
-    # is dead weight that _accepted_listing already skips (r15
-    # ADVICE). Deleting it here is safe under the run lock and keeps
-    # the crash window from leaking directories forever.
-    fs_root, jroot = _fs(spark, root)
-    if fs_root.exists(jroot):
-        for st in fs_root.listStatus(jroot):
-            name = st.getPath().getName()
-            if (
-                st.isDirectory()
-                and name.startswith("batch=compact-")
-                and fs_root.exists(st.getPath().suffix("/_SUCCESS"))
-                and not fs_root.exists(
-                    st.getPath().suffix("/" + _PROVENANCE_FILE)
-                )
-            ):
-                fs_root.delete(st.getPath(), True)
-    plain, compacts = _accepted_listing(spark, state_dir)
+    plain, compacts, dead = _accepted_dirs(spark, state_dir)
+    fs, _ = _fs(spark, state_dir)
+    for d in dead:  # safe under the run lock: dead dirs are never read
+        fs.delete(_fs(spark, d)[1], True)
     if exclude_bid is not None:
         plain = [
             d for d in plain if d.rsplit("batch=", 1)[1] != exclude_bid
         ]
-    sources = plain + (compacts if fold_compacts else [])
+    folding = compacts if fold_compacts else []
+    sources = plain + folding
     if len(sources) < 2:
         return 0
-    sized = {d: _part_file_bytes(spark, d) for d in sources}
-    readable_plain = [d for d in plain if sized[d][0] > 0]
-    readable_compacts = (
-        [d for d in compacts if sized[d][0] > 0] if fold_compacts else []
-    )
-    if not readable_plain and not readable_compacts:
+    out = _accepted_frame(spark, state_dir, plain, folding, attributed=True)
+    if out is None:
         return 0  # only survivor-less dirs: nothing to write
-    frames = []
-    if readable_plain:
-        frames.append(
-            spark.read.option("basePath", root)
-            .parquet(*readable_plain)
-            .withColumn(_SRC_BATCH_COL, F.col("batch").cast("string"))
-            .drop("batch")
-        )
-    if readable_compacts:
-        frames.append(
-            spark.read.option("basePath", root)
-            .parquet(*readable_compacts)
-            .drop("batch")
-        )
-    out = reduce(lambda a, b: a.unionByName(b), frames)
-    total_bytes = sum(sized[d][1] for d in sources)
+    total_bytes = sum(_part_file_bytes(spark, d)[1] for d in sources)
     target = max(1, total_bytes // _ACCEPTED_TARGET_FILE_BYTES + 1)
     cid = "compact-" + hashlib.sha256(
         "|".join(sorted(sources)).encode()
     ).hexdigest()[:12]
-    out_dir = posixpath.join(root, f"batch={cid}")
+    out_dir = posixpath.join(state_dir, "accepted", f"batch={cid}")
     (
         out.coalesce(int(target))
         .sortWithinPartitions(_SRC_BATCH_COL)
         .write.mode("overwrite")
         .parquet(out_dir)
     )
-    stream_runs = _stream_run_ids(spark, state_dir)
-    folded_prov = _Provenance()
-    for d in sources:
-        name = d.rsplit("batch=", 1)[1]
-        if name.startswith("compact-"):
-            folded_prov = folded_prov.union(_read_provenance(spark, d))
-            folded_prov.ids.add(name)  # re-compaction crash-window skip
-        else:
-            folded_prov.add(name, stream_runs)
-    _write_provenance(spark, out_dir, folded_prov)
-    fs, _ = _fs(spark, state_dir)
+    _write_provenance(spark, out_dir, _fold_sources(spark, state_dir, sources))
     for d in sources:
         if d != out_dir:
             fs.delete(_fs(spark, d)[1], True)
@@ -996,39 +1224,16 @@ def read_accepted(spark: SparkSession, state_dir: str) -> DataFrame:
     — plain staged dirs and accepted-compaction dirs alike (the
     streaming face's corpus read; streaming/ingest.py::accepted_corpus
     delegates here). Raises ValueError before the first commit."""
-    from functools import reduce
-
-    root = posixpath.join(state_dir, "accepted")
     plain, compacts = _accepted_listing(spark, state_dir)
-    readable_plain = [d for d in plain if _part_file_bytes(spark, d)[0] > 0]
-    readable_compacts = [
-        d for d in compacts if _part_file_bytes(spark, d)[0] > 0
-    ]
-    if not readable_plain and not readable_compacts:
+    frame = _accepted_frame(spark, state_dir, plain, compacts, attributed=False)
+    if frame is None:
         if not plain and not compacts:
             raise ValueError(f"no committed ingest batches under {state_dir}")
         # committed batches exist but every one staged zero survivors
         raise ValueError(
             f"committed batches under {state_dir} staged no survivors"
         )
-    # the two tiers read separately: a single multi-dir read would
-    # need mergeSchema (footer reads on every file — the small-files
-    # cost again) to see the compact tier's _src_batch column
-    frames = []
-    if readable_plain:
-        frames.append(
-            spark.read.option("basePath", root)
-            .parquet(*readable_plain)
-            .drop("batch")
-        )
-    if readable_compacts:
-        frames.append(
-            spark.read.option("basePath", root)
-            .parquet(*readable_compacts)
-            .drop("batch")
-            .drop(_SRC_BATCH_COL)
-        )
-    return reduce(lambda a, b: a.unionByName(b), frames)
+    return frame
 
 
 def read_accepted_attributed(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1038,33 +1243,14 @@ def read_accepted_attributed(spark: SparkSession, state_dir: str) -> DataFrame:
     the compact dirs' ``_src_batch`` data column; plain dirs carry it
     as the ``batch`` partition value). The name is one of the two
     RESERVED columns, so it can never collide with a user schema."""
-    from functools import reduce
-
-    root = posixpath.join(state_dir, "accepted")
-    plain, compacts = _accepted_listing(spark, state_dir)
-    readable_plain = [d for d in plain if _part_file_bytes(spark, d)[0] > 0]
-    readable_compacts = [
-        d for d in compacts if _part_file_bytes(spark, d)[0] > 0
-    ]
-    if not readable_plain and not readable_compacts:
+    frame = _accepted_frame(
+        spark, state_dir, *_accepted_listing(spark, state_dir), attributed=True
+    )
+    if frame is None:
         raise ValueError(
             f"no committed ingest batches with survivors under {state_dir}"
         )
-    frames = []
-    if readable_plain:
-        frames.append(
-            spark.read.option("basePath", root)
-            .parquet(*readable_plain)
-            .withColumn(_SRC_BATCH_COL, F.col("batch").cast("string"))
-            .drop("batch")
-        )
-    if readable_compacts:
-        frames.append(
-            spark.read.option("basePath", root)
-            .parquet(*readable_compacts)
-            .drop("batch")
-        )
-    return reduce(lambda a, b: a.unionByName(b), frames)
+    return frame
 
 
 def corpus_growth(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1179,38 +1365,6 @@ def _prune_stale_word_counts(spark: SparkSession, state_dir: str) -> None:
 # -------------------------------------- quarantine content identity
 
 
-def read_quarantine_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The accepted-quarantine identity table (committed batches
-    only), or None before any quarantined acceptance: one
-    (content_md5, doc_id) row per ACCEPTED corrupt payload. This is
-    what lets quarantine mode reject re-delivered corrupt bytes —
-    a NULL decode signature has no content identity, so without it a
-    firehose of the same corrupt blob would grow the accepted set
-    without bound (r14 documented hole, closed r15)."""
-    root = posixpath.join(state_dir, "quarantine_md5s")
-    dirs = _committed_batch_dirs(spark, root)
-    if not dirs:
-        return None
-    # Explicit schema, same reason as ingest_batch._staged: a batch
-    # whose quarantine commit was EMPTY (all corrupt rows rejected as
-    # re-deliveries, or a raise-mode batch backfilled on resume)
-    # writes a part-file-less dir that schema inference cannot read —
-    # and the empty dir must still exist, because its _SUCCESS is
-    # what marks the batch's quarantine identity committed.
-    schema = StructType(
-        [
-            StructField("content_md5", StringType()),
-            StructField("doc_id", LongType()),
-        ]
-    )
-    return (
-        spark.read.schema(schema)
-        .option("basePath", root)
-        .parquet(*dirs)
-        .select("content_md5", "doc_id")
-    )
-
-
 def quarantine_report(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Operational view of everything quarantine mode has accepted:
     one ``(batch, content_md5, doc_id)`` row per accepted corrupt
@@ -1224,29 +1378,12 @@ def quarantine_report(spark: SparkSession, state_dir: str) -> DataFrame | None:
     the column as NULL and fall back to the dir name — for those,
     folded attribution degrades to the compact id as before, with
     the original ids in the compact dir's ``_sources.json``).
-    Returns None before any quarantined acceptance."""
-    root = posixpath.join(state_dir, "quarantine_md5s")
-    dirs = _committed_batch_dirs(spark, root)
-    if not dirs:
+    Returns None before any quarantined acceptance. The explicit
+    table schema keeps ``batch`` even when every commit is
+    part-file-less (nothing for partition discovery to find)."""
+    frame = _read_table(spark, state_dir, "quarantine_md5s")
+    if frame is None:
         return None
-    schema = StructType(
-        [
-            StructField("content_md5", StringType()),
-            StructField("doc_id", LongType()),
-            StructField("src_batch", StringType()),
-        ]
-    )
-    frame = spark.read.schema(schema).option("basePath", root).parquet(*dirs)
-    if "batch" not in frame.columns:
-        # Every committed dir is part-file-less (empty commits are
-        # routine — a raise-mode batch resumed under quarantine, or a
-        # duplicates-only batch), so partition discovery found no data
-        # files and the inferred `batch` column does not exist.
-        # Return the empty report instead of raising (r15 ADVICE;
-        # read_quarantine_state already handles this shape).
-        return spark.createDataFrame(
-            [], "batch string, content_md5 string, doc_id long"
-        )
     return frame.select(
         F.coalesce(
             F.col("src_batch"), F.col("batch").cast("string")
@@ -1371,16 +1508,6 @@ def _backfill_quarantine(
 # ------------------------------------------ incremental IMAGE ingest
 
 
-def read_image_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The accepted-pHash table (committed batches only), or None
-    before the first successful image ingest."""
-    root = posixpath.join(state_dir, "phashes")
-    dirs = _committed_batch_dirs(spark, root)
-    if not dirs:
-        return None
-    return spark.read.option("basePath", root).parquet(*dirs)
-
-
 def ingest_image_batch(
     spark: SparkSession,
     batch: DataFrame,
@@ -1393,61 +1520,29 @@ def ingest_image_batch(
     maintain_max_batch_dirs: int | None = MAINTAIN_MAX_BATCH_DIRS,
     on_error: str = "raise",
 ) -> DataFrame:
-    """Incremental near-duplicate IMAGE ingest — the pHash
-    generalization of :func:`ingest_batch`, under the SAME
-    two-dir crash-consistency protocol (stage survivors first, commit
-    hashes second, ``_SUCCESS``-gated state reads):
+    """Near-duplicate IMAGE ingest (pHash). Within the batch,
+    perceptual near-dup clusters (operators/phash.py candidates + the
+    shared closure) collapse to the min id; against history, an image
+    within ``max_hamming`` of ANY accepted hash is rejected (blocked
+    pigeonhole or banded join against the state — never all-pairs).
+    State: ``phashes``, one 16-byte (phash, doc_id) row per accepted
+    image, partitioned by the hash's top hex digit. Rejection is judged
+    against ACCEPTED hashes only: a chain a~b~c arriving in one batch
+    collapses through the closure; split across batches, b is rejected
+    against a and c is judged against a alone.
 
-    * within the batch: perceptual near-dup clusters collapse to the
-      min-id survivor (operators/phash.py candidates + the shared
-      closure);
-    * against history: a new image within ``max_hamming`` of ANY
-      accepted hash is rejected (blocked pigeonhole join against the
-      state table — never all-pairs; history always wins, exactly the
-      ``ingest_batch`` semantics).
-
-    State stores one (phash, id) row per accepted image, partitioned
-    by the top hex digit — 16 bytes/row, orders smaller than the
-    payloads, so at corpus scale the anti-join's state side stays the
-    small one. Near-dup rejection is transitive-free by design:
-    acceptance is judged against ACCEPTED hashes only (the same
-    asymmetry every incremental dedup has — a chain a~b~c arriving in
-    one batch collapses via the closure; split across batches, b is
-    rejected against a and c is judged against a alone).
-
-    Same resumability contract as :func:`ingest_batch`: pass a stable
-    ``batch_id`` to make a crashed run resumable; omit it for pure
-    content semantics.
-
-    ``maintain_max_batch_dirs`` (default 16): same inline state
-    maintenance as :func:`ingest_batch` — after the commit,
-    :func:`maintain_state` compacts THIS table iff its committed-dir
-    count reached the threshold; ``None`` disables.
-
-    ``on_error="quarantine"`` (r14, all three modality ingests): a
-    corrupt payload in a daily batch must not kill the nightly
-    ingest. Quarantined rows are ACCEPTED with a NULL decode
-    signature (which can never match anything) plus an exact
-    ``md5(raw bytes)`` identity row in the ``quarantine_md5s`` state
-    table (r15): within one batch duplicate corrupt payloads collapse
-    to the min-id representative, and RE-DELIVERED corrupt bytes
-    reject against state — history always wins, the same semantics
-    the clean rows get, so a repeating corrupt source can no longer
-    grow the accepted set without bound. Default ``"raise"`` keeps
-    the exact contract.
-
-    ``method`` routes the candidate joins through the image-dedup
-    method doctrine (operators/phash.py): ``"auto"`` (default)
-    measures the batch and state counts once and picks pigeonhole
-    (recall 1.0) while the estimated bucket terms fit the row budget
-    — the within-batch term is batch-squared, the cross-state term
-    bilinear batch×state — switching each join independently to
-    banded LSH beyond (a year of accepted state vs a day's batch can
-    cross the bilinear budget long before a single batch crosses the
-    quadratic one)."""
+    ``method`` routes both candidate joins through the image-dedup
+    doctrine (operators/phash.py). ``"auto"`` (default) sizes each
+    join from the eager batch count (and a parquet-metadata state
+    count) and picks pigeonhole (recall 1.0) while its estimated
+    bucket terms fit the row budget — batch-squared within, bilinear
+    batch×state across (a year of state vs a day's batch crosses the
+    bilinear budget long before a batch crosses the quadratic one) —
+    and banded LSH beyond; ``"pigeonhole"`` / ``"banded"`` force one,
+    banded sized from the same counts. Other arguments: see the module
+    docstring."""
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
         blocked_hamming_matches,
-        dup_components,
     )
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.phash import (
         auto_banded_params,
@@ -1463,167 +1558,60 @@ def ingest_image_batch(
             f"method must be 'auto', 'pigeonhole' or 'banded' (got {method!r})"
         )
 
-    _validate_batch_columns(batch)
-    bid = batch_id if batch_id is not None else uuid.uuid4().hex
-    staged_dir = posixpath.join(state_dir, "accepted", f"batch={bid}")
-    ph_dir = posixpath.join(state_dir, "phashes", f"batch={bid}")
-
-    def _staged(schema: StructType) -> DataFrame:
-        return spark.read.schema(schema).parquet(staged_dir)
-
-    if batch_id is not None and _batch_committed(
-        spark, state_dir, "phashes", bid
-    ):
-        # resume — staged dir, or the accepted-compaction that folded it
-        acc = _read_staged_resume(spark, state_dir, bid, batch.schema)
-        if on_error == "quarantine" and not _batch_committed(
-            spark, state_dir, "quarantine_md5s", bid
-        ):
-            # crash between signature commit and quarantine commit
-            # (or a pre-r15 batch): staged ids whose state signature
-            # is NULL are exactly the accepted-corrupt set
-            state = read_image_state(spark, state_dir)
-            if state is not None:
-                corrupt = (
-                    state.filter(F.col("phash").isNull())
-                    .select("doc_id")
-                    .join(
-                        acc.select(F.col(id_col).alias("doc_id")), "doc_id"
-                    )
-                    .distinct()
-                )
-                _backfill_quarantine(
-                    spark, state_dir, bid, acc, id_col, binary_col, corrupt
-                )
-        return acc
-
-    # hash once, persist: the within-batch self-join reads both sides
-    # and the cross-state join reads it again (same rationale as
-    # dedup_phash)
-    hashes = with_phash(
-        batch, id_col, binary_col, on_error=on_error
-    ).persist()
-    try:
-        state = read_image_state(spark, state_dir)
-        # counts feed BOTH auto's method choice and banded's LSH
-        # sizing, so take them whenever any banded path can run —
-        # an explicit method="banded" used to size from a placeholder
-        # n=2 / 2^20 guess (review-found: a 10^6-batch × 10^9-state
-        # call got k sized for a 2-row corpus). The batch count
-        # materializes the persist it was paying for anyway; the
-        # state count is a parquet-metadata count.
-        # the batch count ALWAYS runs: auto/banded need it for
-        # sizing, and on every path it eagerly materializes the
-        # persisted hash cache before the candidate self-join's two
-        # map sides can race it into a duplicate decode (r13)
-        n_batch = hashes.count()
-        n_state = None
-        if method != "pigeonhole":
-            n_state = state.count() if state is not None else 0
-
+    def route(n_a: int, n_b: int | None = None):
+        # (method, bands, bits) for one candidate join
         if method == "auto":
-            within_method, bands, bits = resolve_phash_method(
-                max_hamming, n_batch
-            )
-        else:
-            within_method = method
-            if method == "banded":
-                bands, bits = auto_banded_params(n_batch, max_hamming)
-        if within_method == "pigeonhole":
+            return resolve_phash_method(max_hamming, n_a, n_b=n_b)
+        if method == "banded":
+            return ("banded", *auto_banded_params(n_a, max_hamming, n_b=n_b))
+        return "pigeonhole", None, None
+
+    def match(hashes: DataFrame, state: DataFrame | None, n: int) -> DataFrame:
+        how, bands, bits = route(n)
+        if how == "pigeonhole":
             pairs = phash_candidates(hashes, "doc_id", max_hamming=max_hamming)
         else:
             pairs = phash_candidates_banded(
                 hashes, "doc_id", bands=bands, bits_per_band=bits
             )
-        comp = dup_components(pairs.filter(F.col("hamming") <= max_hamming))
-        losers = comp.filter(F.col("rep") != F.col("doc_id")).select("doc_id")
-        within = hashes.join(losers, "doc_id", "left_anti")
-
-        if state is not None:
-            if method == "auto":
-                cross_method, bands, bits = resolve_phash_method(
-                    max_hamming, n_batch, n_b=n_state
-                )
-            else:
-                cross_method = method
-                if method == "banded":
-                    bands, bits = auto_banded_params(
-                        n_batch, max_hamming, n_b=n_state
-                    )
-            if cross_method == "pigeonhole":
-                cross = blocked_hamming_matches(within, state, max_hamming)
-            else:
-                cross = banded_hamming_matches(
-                    within, state, max_hamming,
-                    bands=bands, bits_per_band=bits,
-                )
-            hits = cross.select(F.col("id_a").alias("doc_id")).distinct()
-            fresh = within.join(hits, "doc_id", "left_anti")
+        kept = _drop_dups(
+            hashes, pairs.filter(F.col("hamming") <= max_hamming), "doc_id"
+        )
+        if state is None:
+            return kept
+        how, bands, bits = route(
+            n, state.count() if method != "pigeonhole" else None
+        )
+        if how == "pigeonhole":
+            cross = blocked_hamming_matches(kept, state, max_hamming)
         else:
-            fresh = within
+            cross = banded_hamming_matches(
+                kept, state, max_hamming, bands=bands, bits_per_band=bits
+            )
+        hits = cross.select(F.col("id_a").alias("doc_id")).distinct()
+        return kept.join(hits, "doc_id", "left_anti")
 
-        q_md5s = None
-        if on_error == "quarantine":
-            corrupt_ids = hashes.filter(
-                F.col("phash").isNull()
-            ).select("doc_id")
-            # cheap probe over the persisted 16-byte hash rows: the
-            # common all-clean batch skips the identity plan entirely
-            if not corrupt_ids.isEmpty():
-                q_md5s, q_rejected = _quarantine_identity(
-                    spark, state_dir, batch, id_col, binary_col, corrupt_ids
-                )
-                fresh = fresh.join(q_rejected, "doc_id", "left_anti")
-
-        # 1) stage survivors BEFORE any state mutation
-        batch.join(
-            fresh.select(F.col("doc_id").alias(id_col)), id_col
-        ).write.mode("overwrite").parquet(staged_dir)
-        accepted = _staged(batch.schema)
-
-        # 2) commit hashes keyed by the STAGED doc ids — joining the
-        #    persisted hash table against the staged files keeps the
-        #    durability property (state records only staged docs:
-        #    pHash is a pure function of the payload and staged
-        #    payloads ARE the batch payloads) without re-decoding and
-        #    re-DCT-ing every accepted image (review-found: the
-        #    second with_phash pass doubled the dominant per-batch
-        #    cost)
-        hashes.join(
-            accepted.select(F.col(id_col).alias("doc_id")), "doc_id"
-        ).select(
+    return _ingest(
+        spark, batch, state_dir, batch_id, maintain_max_batch_dirs,
+        table="phashes", id_col=id_col, key="doc_id",
+        sign=lambda frame, cache: cache(
+            with_phash(frame, id_col, binary_col, on_error=on_error)
+        ),
+        match=match,
+        commit_cols=(
             "phash",
-            F.lower(F.hex(F.shiftrightunsigned(F.col("phash"), 60)))
-            .alias("fp_prefix"),
-            F.col("doc_id"),
-        ).write.mode("overwrite").partitionBy("fp_prefix").parquet(ph_dir)
-        if q_md5s is not None:
-            _commit_quarantine(
-                spark, state_dir, bid, q_md5s, accepted, id_col
-            )
-        if maintain_max_batch_dirs is not None:
-            maintain_state(
-                spark, state_dir, maintain_max_batch_dirs,
-                ("phashes", "quarantine_md5s"),
-                exclude_bid=bid,
-            )
-        return accepted
-    finally:
-        hashes.unpersist()
+            F.lower(F.hex(F.shiftrightunsigned(F.col("phash"), 60))).alias(
+                "fp_prefix"
+            ),
+            "doc_id",
+        ),
+        on_error=on_error,
+        binary_col=binary_col,
+        decoded=F.col("phash").isNotNull(),
+    )
 
 
 # ------------------------------------------ incremental AUDIO ingest
-
-
-def read_audio_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The accepted audio-fingerprint table (committed batches only),
-    or None before the first successful audio ingest. One
-    (doc_id, fp array<int>) row per accepted clip."""
-    root = posixpath.join(state_dir, "audio_fps")
-    dirs = _committed_batch_dirs(spark, root)
-    if not dirs:
-        return None
-    return spark.read.option("basePath", root).parquet(*dirs)
 
 
 def _audio_word_count_dir(state_dir: str, rate_inv: int, bid: str) -> str:
@@ -1708,205 +1696,81 @@ def ingest_audio_batch(
     maintain_max_batch_dirs: int | None = MAINTAIN_MAX_BATCH_DIRS,
     on_error: str = "raise",
 ) -> DataFrame:
-    """Incremental near-duplicate AUDIO ingest — the Haitsma–Kalker
-    generalization of :func:`ingest_batch` / :func:`ingest_image_batch`,
-    under the SAME two-dir crash-consistency protocol (stage
-    survivors first, commit fingerprints second, ``_SUCCESS``-gated
-    state reads):
-
-    * within the batch: near-dup clusters (probe-vote + aligned-BER,
-      operators/audio_fp.py) collapse to the min-id survivor;
-    * against history: a new clip matching ANY accepted clip's
-      fingerprint sequence is rejected — the cross-table chain with
-      ``broadcast_b=False``: a daily batch's probe-word explode is
-      itself megabytes (~110 words × 20 B per clip), so BOTH sides
-      ride the keyed equi-join on the 32-bit word value instead of a
-      broadcast; history always wins, exactly the ``ingest_batch``
-      semantics.
-
-    State stores one (fp sequence, id) row per accepted clip —
-    ~4 bytes per fingerprint frame (≈0.5 KB for a 2 s clip, and
-    linear in duration), orders smaller than the payloads but NOT
-    the 16-byte-per-row image state: the honest audio-state cost is
-    the fingerprint sequence, because near-dup matching needs the
-    aligned frames, not just a scalar hash.
+    """Near-duplicate AUDIO ingest (Haitsma–Kalker fingerprints).
+    Within the batch, probe-vote + aligned-BER near-dup clusters
+    (operators/audio_fp.py) collapse to the min id; against history, a
+    clip matching ANY accepted clip's fingerprint sequence is rejected
+    — the cross-table chain with ``broadcast_b=False``, because a
+    daily batch's probe-word explode is itself megabytes (~110 words ×
+    20 B per clip), so both sides ride a keyed equi-join on the 32-bit
+    word. State: ``audio_fps``, one (doc_id, fp) row per accepted clip
+    — ~4 bytes per fingerprint frame (≈0.5 KB for a 2 s clip): near-dup
+    matching needs the aligned frames, not a scalar hash.
 
     ``max_word_df`` defaults ON at ``dedup_audio``'s cap, applied to
-    BOTH joins: ingest is the incremental form of DEDUP (a dropped
-    hub word costs at most a duplicate slipping through — the same
-    accepted tradeoff as the one-shot default, pinned recall-neutral
-    on the planted corpus), not decontamination, and the
-    batch-squared within join plus an ever-growing state side carry
-    exactly the hub exposure the guard exists for. Pass ``None`` to
-    disable, same knob as the one-shot. The STATE side's hub
-    detection is INCREMENTAL (r12 ADVICE): each committed batch
-    persists a tiny pre-aggregated sampled word-count table
+    both joins (ingest is the incremental form of dedup: a dropped hub
+    word costs at most a duplicate slipping through); ``None``
+    disables. The STATE side's hubs are incremental: each commit also
+    writes a tiny sampled word-count table
     (``word_counts/rate=<rate_inv>/batch=<id>``) and
-    :func:`read_audio_hubs` sums those — per-ingest guard cost is
-    O(batch + distinct sampled words), flat in accepted history,
-    instead of a groupBy over the full state explode; the hub SET is
-    bit-identical (deterministic per-(clip, frame) sampling sums
-    across batches).
-
-    Same resumability contract as :func:`ingest_batch`: pass a
-    stable ``batch_id`` to make a crashed run resumable; omit it for
-    pure content semantics.
-
-    ``maintain_max_batch_dirs`` (default 16): same inline state
-    maintenance as :func:`ingest_batch` — after the commit,
-    :func:`maintain_state` compacts THIS table iff its committed-dir
-    count reached the threshold; ``None`` disables."""
+    :func:`read_audio_hubs` sums those, so the guard costs O(batch +
+    distinct sampled words), flat in accepted history, with a
+    bit-identical hub set. Other arguments: see the module
+    docstring."""
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.audio_fp import (
         audio_candidates,
         audio_candidates_cross,
+        hub_sampling_params,
+        sampled_word_counts,
         with_audio_fingerprint,
     )
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
-        dup_components,
+
+    knobs = dict(
+        min_probe_frames=min_probe_frames, ber_max=ber_max, max_word_df=max_word_df
     )
 
-    _validate_batch_columns(batch)
-    bid = batch_id if batch_id is not None else uuid.uuid4().hex
-    staged_dir = posixpath.join(state_dir, "accepted", f"batch={bid}")
-    fp_dir = posixpath.join(state_dir, "audio_fps", f"batch={bid}")
-
-    def _staged(schema: StructType) -> DataFrame:
-        return spark.read.schema(schema).parquet(staged_dir)
-
-    if batch_id is not None and _batch_committed(
-        spark, state_dir, "audio_fps", bid
-    ):
-        # resume — staged dir, or the accepted-compaction that folded it
-        acc = _read_staged_resume(spark, state_dir, bid, batch.schema)
-        if on_error == "quarantine" and not _batch_committed(
-            spark, state_dir, "quarantine_md5s", bid
-        ):
-            state = read_audio_state(spark, state_dir)
-            if state is not None:
-                corrupt = (
-                    state.filter(F.col("fp").isNull())
-                    .select("doc_id")
-                    .join(
-                        acc.select(F.col(id_col).alias("doc_id")), "doc_id"
-                    )
-                    .distinct()
-                )
-                _backfill_quarantine(
-                    spark, state_dir, bid, acc, id_col, binary_col, corrupt
-                )
-        return acc
-
-    # fingerprint once, persist: the within-batch self-join reads both
-    # sides and the cross-state join reads it again (same rationale as
-    # dedup_audio; dup_components' convergence actions materialize it)
-    fps = with_audio_fingerprint(
-        batch, id_col, binary_col, on_error=on_error
-    ).persist()
-    try:
-        # eager cache materialization before the self-join's two map
-        # sides can race it into a duplicate FFT pass (r13)
-        fps.count()
-        pairs = audio_candidates(
-            fps,
-            "doc_id",
-            min_probe_frames=min_probe_frames,
-            ber_max=ber_max,
-            max_word_df=max_word_df,
+    def match(fps: DataFrame, state: DataFrame | None, _n) -> DataFrame:
+        kept = _drop_dups(fps, audio_candidates(fps, "doc_id", **knobs), "doc_id")
+        if state is None:
+            return kept
+        hits = audio_candidates_cross(
+            kept, state, "doc_id", broadcast_b=False,
+            hubs_b=read_audio_hubs(spark, state_dir, max_word_df), **knobs,
         )
-        comp = dup_components(pairs)
-        losers = comp.filter(F.col("rep") != F.col("doc_id")).select("doc_id")
-        within = fps.join(losers, "doc_id", "left_anti")
+        return kept.join(
+            hits.select(F.col("id_a").alias("doc_id")).distinct(),
+            "doc_id",
+            "left_anti",
+        )
 
-        state = read_audio_state(spark, state_dir)
-        if state is not None:
-            # state-side hubs come from the MAINTAINED per-batch
-            # count tables (read_audio_hubs) — identical hub set to
-            # inline detection (deterministic sampling sums across
-            # batches), without re-exploding the ever-growing state
-            # per ingest (r12 ADVICE)
-            hits = audio_candidates_cross(
-                within,
-                state,
-                "doc_id",
-                min_probe_frames=min_probe_frames,
-                ber_max=ber_max,
-                max_word_df=max_word_df,
-                broadcast_b=False,
-                hubs_b=read_audio_hubs(spark, state_dir, max_word_df),
-            )
-            rejected = hits.select(F.col("id_a").alias("doc_id")).distinct()
-            fresh = within.join(rejected, "doc_id", "left_anti")
-        else:
-            fresh = within
+    def word_counts(bid: str) -> None:
+        # crash windows self-heal: read_audio_hubs backfills any
+        # committed fp batch missing its counts
+        rate_inv, _ = hub_sampling_params(max_word_df)
+        sampled_word_counts(
+            spark.read.parquet(posixpath.join(state_dir, "audio_fps", f"batch={bid}")),
+            "doc_id",
+            max_word_df,
+        ).write.mode("overwrite").parquet(
+            _audio_word_count_dir(state_dir, rate_inv, bid)
+        )
 
-        q_md5s = None
-        if on_error == "quarantine":
-            corrupt_ids = fps.filter(F.col("fp").isNull()).select("doc_id")
-            if not corrupt_ids.isEmpty():
-                q_md5s, q_rejected = _quarantine_identity(
-                    spark, state_dir, batch, id_col, binary_col, corrupt_ids
-                )
-                fresh = fresh.join(q_rejected, "doc_id", "left_anti")
-
-        # 1) stage survivors BEFORE any state mutation
-        batch.join(
-            fresh.select(F.col("doc_id").alias(id_col)), id_col
-        ).write.mode("overwrite").parquet(staged_dir)
-        accepted = _staged(batch.schema)
-
-        # 2) commit fingerprints keyed by the STAGED doc ids — the
-        #    persisted fingerprint table joins against the staged
-        #    files, so state records only durable docs and the FFT
-        #    never re-runs (the image path's review-found doctrine)
-        fps.join(
-            accepted.select(F.col(id_col).alias("doc_id")), "doc_id"
-        ).select("doc_id", "fp").write.mode("overwrite").parquet(fp_dir)
-        # 3) maintain the hub-guard count table for THIS batch (tiny,
-        #    pre-aggregated) so the next ingest never re-explodes the
-        #    state; crash windows self-heal — read_audio_hubs
-        #    backfills any committed fp batch missing its counts
-        if max_word_df is not None:
-            from sensorstream_scalable_sensor_data_pipeline_spark.operators.audio_fp import (
-                hub_sampling_params,
-                sampled_word_counts,
-            )
-
-            rate_inv, _ = hub_sampling_params(max_word_df)
-            sampled_word_counts(
-                spark.read.parquet(fp_dir), "doc_id", max_word_df
-            ).write.mode("overwrite").parquet(
-                _audio_word_count_dir(state_dir, rate_inv, bid)
-            )
-        if q_md5s is not None:
-            _commit_quarantine(
-                spark, state_dir, bid, q_md5s, accepted, id_col
-            )
-        if maintain_max_batch_dirs is not None:
-            maintain_state(
-                spark, state_dir, maintain_max_batch_dirs,
-                ("audio_fps", "quarantine_md5s"),
-                exclude_bid=bid,
-            )
-        return accepted
-    finally:
-        fps.unpersist()
+    return _ingest(
+        spark, batch, state_dir, batch_id, maintain_max_batch_dirs,
+        table="audio_fps", id_col=id_col, key="doc_id",
+        sign=lambda frame, cache: cache(
+            with_audio_fingerprint(frame, id_col, binary_col, on_error=on_error)
+        ),
+        match=match,
+        commit_cols=("doc_id", "fp"),
+        on_error=on_error,
+        binary_col=binary_col,
+        decoded=F.col("fp").isNotNull(),
+        after_commit=word_counts if max_word_df is not None else None,
+    )
 
 
 # ------------------------------------------ incremental VIDEO ingest
-
-
-def read_video_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The accepted frame-hash table (committed batches only), or
-    None before the first successful video ingest. One
-    (doc_id, frame_idx, phash) row per SAMPLED frame of each accepted
-    clip — NULL-hash rows (degenerate constant frames) are stored
-    too: they never join, but they keep the match_frac denominator at
-    the full sampled count."""
-    root = posixpath.join(state_dir, "frame_phashes")
-    dirs = _committed_batch_dirs(spark, root)
-    if not dirs:
-        return None
-    return spark.read.option("basePath", root).parquet(*dirs)
 
 
 def ingest_video_batch(
@@ -1922,179 +1786,57 @@ def ingest_video_batch(
     maintain_max_batch_dirs: int | None = MAINTAIN_MAX_BATCH_DIRS,
     on_error: str = "raise",
 ) -> DataFrame:
-    """Incremental near-duplicate VIDEO ingest — the frame-sampled
-    generalization of :func:`ingest_batch`, completing the
-    incremental family across modalities (text / image / audio /
-    video), under the SAME two-dir crash-consistency protocol (stage
-    survivors first, commit frame hashes second, ``_SUCCESS``-gated
-    state reads):
-
-    * within the batch: offset-consistent near-dup clusters
-      (operators/video_dedup.py) collapse to the min-id survivor;
-    * against history: a new clip whose frames match ANY accepted
-      clip at one consistent offset covering ≥ ``min_match_frac`` of
-      the shorter clip is rejected — the cross-table chain with
-      ``broadcast_b=False`` (the state's frame table is corpus-sized;
-      both sides ride the keyed equi-join on the 8-byte frame hash);
-      history always wins.
-
-    State stores the SAMPLED frame hashes per accepted clip —
-    ~8 bytes per sampled frame plus the NULL degenerate rows, linear
-    in footage; pixels never enter state and never shuffle. Same
-    resumability contract as :func:`ingest_batch`.
-
-    ``maintain_max_batch_dirs`` (default 16): same inline state
-    maintenance as :func:`ingest_batch` — after the commit,
-    :func:`maintain_state` compacts THIS table iff its committed-dir
-    count reached the threshold; ``None`` disables."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
-        dup_components,
-    )
+    """Near-duplicate VIDEO ingest (pHashes of every ``every_n``-th
+    frame). Within the batch, offset-consistent near-dup clusters
+    (operators/video_dedup.py) collapse to the min id; against
+    history, a clip whose frames match ANY accepted clip at one
+    consistent offset covering ≥ ``min_match_frac`` of the shorter
+    clip is rejected — the cross-table chain with ``broadcast_b=False``
+    (the state's frame table is corpus-sized; both sides ride a keyed
+    equi-join on the 8-byte frame hash). State: ``frame_phashes``, the
+    sampled (doc_id, frame_idx, phash) rows of each accepted clip —
+    ~8 bytes per sampled frame; pixels never enter state. A corrupt
+    clip emits NO frame rows, so under quarantine a batch id absent
+    from the frame table is exactly the corrupt set. Other arguments:
+    see the module docstring."""
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.video_dedup import (
         video_candidates,
         video_candidates_cross,
         with_frame_phashes,
     )
 
-    _validate_batch_columns(batch)
-    bid = batch_id if batch_id is not None else uuid.uuid4().hex
-    staged_dir = posixpath.join(state_dir, "accepted", f"batch={bid}")
-    fh_dir = posixpath.join(state_dir, "frame_phashes", f"batch={bid}")
+    knobs = dict(min_match_frac=min_match_frac, max_hamming=max_hamming)
 
-    def _staged(schema: StructType) -> DataFrame:
-        return spark.read.schema(schema).parquet(staged_dir)
-
-    if batch_id is not None and _batch_committed(
-        spark, state_dir, "frame_phashes", bid
-    ):
-        # resume — staged dir, or the accepted-compaction that folded it
-        acc = _read_staged_resume(spark, state_dir, bid, batch.schema)
-        if on_error == "quarantine" and not _batch_committed(
-            spark, state_dir, "quarantine_md5s", bid
-        ):
-            # corrupt clips have NO frame rows, so the accepted-
-            # corrupt set is the staged ids absent from frame state
-            state = read_video_state(spark, state_dir)
-            if state is not None:
-                corrupt = (
-                    acc.select(F.col(id_col).alias("doc_id"))
-                    .distinct()
-                    .join(
-                        state.select("doc_id").distinct(),
-                        "doc_id",
-                        "left_anti",
-                    )
-                )
-                _backfill_quarantine(
-                    spark, state_dir, bid, acc, id_col, binary_col, corrupt
-                )
-        return acc
-
-    # hash frames once, persist: the within-batch self-join reads both
-    # sides and the cross-state join reads it again (decode is the
-    # expensive stage; dup_components' convergence actions materialize)
-    fh = with_frame_phashes(
-        batch, id_col, binary_col, every_n, on_error=on_error
-    ).persist()
-    try:
-        # eager cache materialization before the frame-count and
-        # frame-match branches can race it into a duplicate decode
-        fh.count()
-        pairs = video_candidates(
-            fh, "doc_id",
-            min_match_frac=min_match_frac, max_hamming=max_hamming,
+    def match(fh: DataFrame, state: DataFrame | None, _n) -> DataFrame:
+        kept = _drop_dups(fh, video_candidates(fh, "doc_id", **knobs), "doc_id")
+        if state is None:
+            return kept
+        hits = video_candidates_cross(
+            kept, state.select("doc_id", "frame_idx", "phash"), "doc_id",
+            broadcast_b=False, **knobs,
         )
-        comp = dup_components(pairs)
-        losers = comp.filter(F.col("rep") != F.col("doc_id")).select("doc_id")
-        within = fh.join(losers, "doc_id", "left_anti")
+        return kept.join(
+            hits.select(F.col("id_a").alias("doc_id")).distinct(),
+            "doc_id",
+            "left_anti",
+        )
 
-        state = read_video_state(spark, state_dir)
-        if state is not None:
-            hits = video_candidates_cross(
-                within,
-                state.select("doc_id", "frame_idx", "phash"),
-                "doc_id",
-                min_match_frac=min_match_frac,
-                max_hamming=max_hamming,
-                broadcast_b=False,
+    return _ingest(
+        spark, batch, state_dir, batch_id, maintain_max_batch_dirs,
+        table="frame_phashes", id_col=id_col, key="doc_id",
+        sign=lambda frame, cache: cache(
+            with_frame_phashes(
+                frame, id_col, binary_col, every_n, on_error=on_error
             )
-            rejected = hits.select(F.col("id_a").alias("doc_id")).distinct()
-            fresh_ids = (
-                within.select("doc_id").distinct()
-                .join(rejected, "doc_id", "left_anti")
-            )
-        else:
-            fresh_ids = within.select("doc_id").distinct()
-
-        q_md5s = None
-        if on_error == "quarantine":
-            # corrupt clips emit NO frame rows (the video quarantine
-            # shape), so deriving acceptance from the frame table
-            # would silently DROP them — contract divergence vs the
-            # image/audio ingests, whose NULL-signature rows survive
-            # (review-found r14). A batch id absent from the frame
-            # table is exactly the quarantine set (a valid clip
-            # always has >= 1 sampled frame; frameless AVIs raise in
-            # decode); its md5-identity representatives (r15) join
-            # the survivors, within-batch dups and re-deliveries
-            # reject.
-            decoded = fh.select("doc_id").distinct()
-            corrupt_ids = (
-                batch.select(F.col(id_col).alias("doc_id")).distinct()
-                .join(decoded, "doc_id", "left_anti")
-            )
-            if not corrupt_ids.isEmpty():
-                q_md5s, _q_rejected = _quarantine_identity(
-                    spark, state_dir, batch, id_col, binary_col, corrupt_ids
-                )
-                fresh_ids = fresh_ids.unionByName(
-                    q_md5s.select("doc_id")
-                )
-
-        # 1) stage survivors BEFORE any state mutation
-        batch.join(
-            fresh_ids.select(F.col("doc_id").alias(id_col)), id_col
-        ).write.mode("overwrite").parquet(staged_dir)
-        accepted = _staged(batch.schema)
-
-        # 2) commit frame hashes keyed by the STAGED doc ids — the
-        #    persisted frame table joins against the staged files, so
-        #    state records only durable clips and the decode+DCT
-        #    never re-runs
-        fh.join(
-            accepted.select(F.col(id_col).alias("doc_id")), "doc_id"
-        ).select("doc_id", "frame_idx", "phash").write.mode(
-            "overwrite"
-        ).parquet(fh_dir)
-        if q_md5s is not None:
-            _commit_quarantine(
-                spark, state_dir, bid, q_md5s, accepted, id_col
-            )
-        if maintain_max_batch_dirs is not None:
-            maintain_state(
-                spark, state_dir, maintain_max_batch_dirs,
-                ("frame_phashes", "quarantine_md5s"),
-                exclude_bid=bid,
-            )
-        return accepted
-    finally:
-        fh.unpersist()
+        ),
+        match=match,
+        commit_cols=("doc_id", "frame_idx", "phash"),
+        on_error=on_error,
+        binary_col=binary_col,
+    )
 
 
 # ------------------------------------- incremental FUZZY TEXT ingest
-
-
-def read_fuzzy_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The accepted MinHash-signature table (committed batches only),
-    or None before the first successful fuzzy ingest. One
-    (doc_id, sig array<string>) row per accepted document."""
-    root = posixpath.join(state_dir, "minhash_sigs")
-    dirs = _committed_batch_dirs(spark, root)
-    if not dirs:
-        return None
-    return spark.read.option("basePath", root).parquet(*dirs).select(
-        "doc_id", "sig"
-    )
 
 
 def fuzzy_state_hits(
@@ -2163,127 +1905,63 @@ def ingest_fuzzy_batch(
     batch_id: str | None = None,
     maintain_max_batch_dirs: int | None = MAINTAIN_MAX_BATCH_DIRS,
 ) -> DataFrame:
-    """Incremental NEAR-duplicate text ingest — the MinHash-LSH
-    generalization of :func:`ingest_batch`, completing the family
-    symmetry (image/audio/video ingests are already near-dup; text
-    was exact-only), under the SAME two-dir crash-consistency
-    protocol (stage survivors first, commit signatures second,
-    ``_SUCCESS``-gated state reads):
-
-    * within the batch: the full batch operator — banded candidates
-      (operators/dedup_fuzzy.py), EXACT shingle-Jaccard ≥ ``tau``
-      verification (texts are at hand), connected-component closure,
-      min-id survivor — exactly ``plans.dedup.dedup_minhash_lsh``'s
-      semantics;
-    * against history: batch band keys equi-join the state side's
-      band keys (re-derived from the persisted signatures with
-      codegen expressions — state stores no band table), and a
-      candidate is rejected when the SIGNATURE agreement (fraction of
-      equal MinHash elements — the standard unbiased Jaccard
-      estimator) reaches ``tau_sig``. History always wins.
+    """Near-duplicate TEXT ingest (MinHash-LSH). Within the batch, the
+    full batch operator — banded candidates (operators/dedup_fuzzy.py),
+    EXACT shingle-Jaccard ≥ ``tau`` verification, closure, min-id
+    survivor — exactly ``plans.dedup.dedup_minhash_lsh``'s semantics.
+    Against history, batch band keys equi-join band keys re-derived
+    from the state's signatures, and a candidate is rejected when the
+    signature agreement (:func:`fuzzy_state_hits`) reaches
+    ``tau_sig``. State: ``minhash_sigs``, one (doc_id, sig) row per
+    accepted document, ~100 bytes regardless of document length.
 
     The cross-state verifier is the signature estimate DELIBERATELY:
-    exact Jaccard needs both texts, and fetching the state side's
-    text would join the candidate set against the accepted CORPUS —
-    an O(corpus) scan per ingest. Signatures are ~100 bytes per
-    accepted document regardless of document length, so at any
-    corpus scale the state side stays orders smaller than the
-    payloads and the cross join is a uniform keyed shuffle.
-    ``tau_sig`` defaults below ``tau`` (9 of 12 elements) because the
-    12-permutation estimator is coarse; near ``tau``-Jaccard pairs
-    concentrate well above it and unrelated pairs far below.
-
-    Near-dup rejection is transitive-free by design (the same
-    asymmetry every incremental dedup here has). Same resumability
-    and inline-maintenance contracts as :func:`ingest_batch`."""
+    exact Jaccard needs both texts, and fetching the state side's text
+    would scan the accepted corpus per ingest. ``tau_sig`` defaults
+    below ``tau`` (9 of 12 elements) because the 12-permutation
+    estimator is coarse; near-``tau`` pairs concentrate well above it
+    and unrelated pairs far below. Other arguments: see the module
+    docstring."""
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
         bands_from_sigs,
-        dup_components,
         minhash_lsh_candidates,
         minhash_signatures,
         shingle_jaccard,
         with_shingles,
     )
 
-    _validate_batch_columns(batch)
-    bid = batch_id if batch_id is not None else uuid.uuid4().hex
-    staged_dir = posixpath.join(state_dir, "accepted", f"batch={bid}")
-    sig_dir = posixpath.join(state_dir, "minhash_sigs", f"batch={bid}")
+    sh = None
 
-    def _staged(schema: StructType) -> DataFrame:
-        return spark.read.schema(schema).parquet(staged_dir)
+    def sign(frame: DataFrame, cache) -> DataFrame:
+        # shingles feed the band table AND the exact within-batch
+        # verify; sigs feed the cross-state join and the commit. The
+        # protocol's ONE eager count on sigs fills both caches (sigs → sh
+        # is a linear lineage); bands stay a pure projection of the
+        # cached sigs, recomputed per consumer instead of a third cache
+        nonlocal sh
+        sh = cache(with_shingles(frame, id_col, text_col))
+        return cache(minhash_signatures(frame, id_col, text_col, shingle_df=sh))
 
-    if batch_id is not None and _batch_committed(
-        spark, state_dir, "minhash_sigs", bid
-    ):
-        return _read_staged_resume(spark, state_dir, bid, batch.schema)
-
-    # shingle + sign once, persist: shingles feed the band table AND
-    # the exact within-batch verify; sigs feed the cross-state join
-    # and the state commit (the dedup_minhash_lsh cache doctrine)
-    sh = with_shingles(batch, id_col, text_col).persist()
-    sigs = minhash_signatures(
-        batch, id_col, text_col, shingle_df=sh
-    ).persist()
-    # ONE eager count materializes both caches (r17): sigs → sh is a
-    # linear lineage, so this single job fills sh's cache on the way —
-    # the r13 race doctrine needs warm caches before the MULTI-branch
-    # consumers below (candidates, verify, commit join), not one job
-    # per cache. One fewer job = one fewer ~2 s whole-stage-codegen
-    # compile round per ingest (this head's measured bound, r16 §6).
-    sigs.count()
-    # bands are a PURE PROJECTION of the persisted sigs (md5 over the
-    # band slice — no shuffle, no tokenization), so each consumer
-    # recomputes them from the sig cache instead of holding a third
-    # persist: the r13 race doctrine protects expensive shared
-    # lineage, and the expensive lineage here is already pinned by
-    # the sigs cache. Dropping the persist+eager-count removes one
-    # job (and its whole-stage codegen compile, ~2 s of every cold
-    # JVM's wall — the r16 profile measured this head
-    # codegen-latency-bound: uniform ~2 s task blocks at ~10 ms task
-    # CPU across its protocol jobs).
-    bands = bands_from_sigs(sigs, id_col)
-    try:
-        # within-batch: candidates -> exact Jaccard -> closure
+    def match(sigs: DataFrame, state: DataFrame | None, _n) -> DataFrame:
+        bands = bands_from_sigs(sigs, id_col)
         cands = minhash_lsh_candidates(
             batch, id_col, text_col, shingle_df=sh, bands_df=bands
         )
         verified = shingle_jaccard(
             cands, batch, id_col, text_col, shingle_df=sh
         ).filter(F.col("jaccard") >= tau)
-        comp = dup_components(verified.select("id_a", "id_b"))
-        losers = comp.filter(F.col("rep") != F.col("doc_id")).select(
-            F.col("doc_id").alias(id_col)
+        kept = _drop_dups(sigs, verified.select("id_a", "id_b"), id_col)
+        if state is None:
+            return kept
+        hits = fuzzy_state_hits(
+            bands, sigs, state.select("doc_id", "sig"), id_col, tau_sig
         )
-        within = sigs.join(losers, id_col, "left_anti")
+        return kept.join(hits, id_col, "left_anti")
 
-        state = read_fuzzy_state(spark, state_dir)
-        if state is not None:
-            hits = fuzzy_state_hits(bands, sigs, state, id_col, tau_sig)
-            fresh = within.join(hits, id_col, "left_anti")
-        else:
-            fresh = within
-
-        # 1) stage survivors BEFORE any state mutation
-        batch.join(fresh.select(F.col(id_col)), id_col).write.mode(
-            "overwrite"
-        ).parquet(staged_dir)
-        accepted = _staged(batch.schema)
-
-        # 2) commit signatures keyed by the STAGED doc ids — joining
-        #    the persisted sig table against the staged files keeps
-        #    the durability property without re-tokenizing
-        sigs.join(
-            accepted.select(F.col(id_col)), id_col
-        ).select(F.col(id_col).alias("doc_id"), "sig").write.mode(
-            "overwrite"
-        ).parquet(sig_dir)
-        if maintain_max_batch_dirs is not None:
-            maintain_state(
-                spark, state_dir, maintain_max_batch_dirs,
-                ("minhash_sigs",), exclude_bid=bid,
-            )
-        return accepted
-    finally:
-        sh.unpersist()
-        sigs.unpersist()
+    return _ingest(
+        spark, batch, state_dir, batch_id, maintain_max_batch_dirs,
+        table="minhash_sigs", id_col=id_col, key=id_col,
+        sign=sign,
+        match=match,
+        commit_cols=(F.col(id_col).alias("doc_id"), "sig"),
+    )

@@ -384,3 +384,103 @@ def test_corpus_growth_attribution_survives_compaction(spark, tmp_path):
         for r in corpus_growth(spark, sdir).collect()
     }
     assert after == sizes
+
+
+def test_crash_left_folded_compact_stays_hidden_across_merges(
+    spark, tmp_path
+):
+    """A compaction that crashed after its provenance rename but
+    before deleting its sources leaves folded dirs on disk: here first
+    a plain dir, later a compact. Both must stay out of read_accepted,
+    and the next compact_accepted sweep deletes them before listing
+    its sources. For the compact this is more than hygiene: provenance
+    names compact dirs only directly, so once its folder is itself
+    folded nothing would name it any more."""
+    import os
+    import shutil
+
+    sdir = str(tmp_path / "state")
+    root = posixpath.join(sdir, "accepted")
+
+    def ingest(i):
+        ingest_batch(
+            spark, _docs(spark, i * 20, (i + 1) * 20), sdir,
+            batch_id=f"c{i}", maintain_max_batch_dirs=None,
+        ).collect()
+
+    def corpus_ids():
+        return sorted(r["doc_id"] for r in read_accepted(spark, sdir).collect())
+
+    def crash_left(path, fold):
+        # run the fold, then put back the source dir it deleted
+        shutil.copytree(path, str(tmp_path / "saved"))
+        folded_n = fold()
+        shutil.move(str(tmp_path / "saved"), path)
+        return folded_n
+
+    for i in range(2):
+        ingest(i)
+    plain_c0 = posixpath.join(root, "batch=c0")
+    assert crash_left(plain_c0, lambda: compact_accepted(spark, sdir)) == 2
+    assert corpus_ids() == list(range(40))
+    for i in range(2, 4):
+        ingest(i)
+    assert compact_accepted(spark, sdir) == 2
+    assert not os.path.exists(plain_c0)
+    folded = posixpath.join(
+        root, min(d for d in os.listdir(root) if d.startswith("batch=compact-"))
+    )
+    assert crash_left(
+        folded, lambda: compact_accepted(spark, sdir, fold_compacts=True)
+    ) == 2
+    assert corpus_ids() == list(range(80))
+
+    for i in range(4, 6):
+        ingest(i)
+    # sources: two plain dirs + the merged compact — never the dead dir
+    assert compact_accepted(spark, sdir, fold_compacts=True) == 3
+    assert corpus_ids() == list(range(120))
+    plain, compacts = _accepted_listing(spark, sdir)
+    assert plain == [] and len(compacts) == 1
+    assert not os.path.exists(folded)
+
+
+def test_invalid_arguments_rejected_before_any_state_mutation(
+    spark, tmp_path
+):
+    """An ingest whose arguments are invalid raises BEFORE it stages or
+    commits anything — a ValueError must never report an ingest that
+    durably happened — and an invalid on_error raises on the resume
+    path too, not only where the signer checks it."""
+    import os
+
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators.codecs import (
+        encode_png,
+    )
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
+        ingest_image_batch,
+    )
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators.phash import (
+        synth_image,
+    )
+
+    sdir = str(tmp_path / "state")
+    with pytest.raises(ValueError, match="max_batch_dirs must be >= 2"):
+        ingest_batch(
+            spark, _docs(spark, 0, 10), sdir, batch_id="v1",
+            maintain_max_batch_dirs=1,
+        )
+    assert not os.path.exists(posixpath.join(sdir, "accepted"))
+    assert not os.path.exists(posixpath.join(sdir, "fingerprints"))
+
+    imgs = spark.createDataFrame(
+        [(0, encode_png(synth_image(0, h=32, w=32)))],
+        "doc_id long, payload binary",
+    )
+    with pytest.raises(ValueError, match="on_error"):
+        ingest_image_batch(spark, imgs, sdir, batch_id="v2", on_error="skip")
+    assert not os.path.exists(posixpath.join(sdir, "accepted"))
+    assert not os.path.exists(posixpath.join(sdir, "phashes"))
+    assert ingest_image_batch(spark, imgs, sdir, batch_id="v2").count() == 1
+    with pytest.raises(ValueError, match="on_error"):
+        ingest_image_batch(spark, imgs, sdir, batch_id="v2", on_error="skip")

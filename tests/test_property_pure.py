@@ -327,3 +327,34 @@ def test_provenance_parse_is_unambiguous(run, e):
         if bid.startswith(r + "-") and bid[len(r) + 1 :].isdigit()
     ]
     assert len(hits) == 1 and hits[0] == run
+
+
+def test_provenance_fold_stays_bounded_over_thousands_of_epochs():
+    """Replay of the compaction fold (threshold 16, every committed
+    dir folds, as in compact_state) over 4000 streaming epochs: epochs
+    compress to the run's interval and a compact keeps only the
+    compact names it folded directly, so the provenance stays one
+    interval plus one name — a transitive name list would grow by one
+    per compaction — and every folded epoch stays a member."""
+    runs = {"s"}
+    dirs: list[tuple[str, _Provenance | None]] = []
+    sizes = []
+    for e in range(4000):
+        dirs.append((f"s-{e}", None))
+        if len(dirs) < 16:
+            continue
+        prov = _Provenance()
+        for name, src in dirs:
+            if src is None:
+                prov.add(name, runs)
+            else:
+                prov = prov.absorb(name, src)
+        sizes.append(len(prov.to_json()))
+        dirs = [(f"compact-{len(sizes):012x}", prov)]
+        last = e
+    final = dirs[0][1]
+    assert len(sizes) > 250
+    assert final.runs == {"s": (0, last)}
+    assert final.ids == {f"compact-{len(sizes) - 1:012x}"}
+    assert max(sizes) < 100
+    assert all(f"s-{e}" in final for e in range(0, last + 1, 7))

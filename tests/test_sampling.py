@@ -5,6 +5,7 @@ pytest-carried)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.sampling import (
@@ -659,76 +660,111 @@ def test_curation_scrub_repairs_dedup_recall(spark, tmp_path):
     assert cm.isEmpty(), "scrubbed curation leaked persisted frames"
 
 
-def test_incremental_dedup_crash_consistency(spark, sf_dir, tmp_path):
-    """Every crash window re-runs to the one-shot result: state can
-    never record documents the downstream corpus does not durably
-    hold.  Simulated by re-running from the on-disk artifacts each
-    failure point leaves behind."""
+def _crash_case(spark, modality):
+    """(ingest, kwargs, state table, state reader, batch 1, batch 2)
+    for one modality: small in-test payloads where batch 1 holds a
+    within-batch duplicate (ids 1 = 2) and batch 2 re-delivers
+    accepted content (id 4 = 1), so the one-shot survivors are
+    {1, 3} then {5}."""
+    import numpy as np
+
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators import (
+        dedup_incremental as di,
+    )
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators.audio_fp import (
+        synth_clip,
+    )
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators.codecs import (
+        encode_avi,
+        encode_png,
+        encode_wav,
+    )
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators.phash import (
+        synth_image,
+    )
+
+    def text(seed):
+        return " ".join(f"w{seed}x{k}" for k in range(30))
+
+    def video(seed):
+        return encode_avi(
+            np.stack([synth_image(seed * 1000 + i, h=32, w=32) for i in range(6)])
+        )
+
+    payload, schema, ingest, kw, table, reader = {
+        "text": (text, "doc_id long, text string", di.ingest_batch, {},
+                 "fingerprints", di.read_state),
+        "fuzzy": (text, "doc_id long, text string", di.ingest_fuzzy_batch,
+                  {}, "minhash_sigs", di.read_fuzzy_state),
+        "image": (lambda s: encode_png(synth_image(s, h=32, w=32)),
+                  "doc_id long, payload binary", di.ingest_image_batch, {},
+                  "phashes", di.read_image_state),
+        "audio": (lambda s: encode_wav(synth_clip(70 + s), 8000),
+                  "doc_id long, payload binary", di.ingest_audio_batch, {},
+                  "audio_fps", di.read_audio_state),
+        "video": (video, "doc_id long, payload binary",
+                  di.ingest_video_batch, {"every_n": 2}, "frame_phashes",
+                  di.read_video_state),
+    }[modality]
+    b1 = spark.createDataFrame(
+        [(1, payload(1)), (2, payload(1)), (3, payload(3))], schema
+    )
+    b2 = spark.createDataFrame([(4, payload(1)), (5, payload(5))], schema)
+    return ingest, kw, table, reader, b1, b2
+
+
+@pytest.mark.parametrize("modality", ["text", "fuzzy", "image", "audio", "video"])
+def test_incremental_dedup_crash_consistency(spark, tmp_path, modality):
+    """Every crash window re-runs to the one-shot result, for every
+    ingest modality: state can never record documents the downstream
+    corpus does not durably hold. Simulated by re-running from the
+    on-disk artifacts each failure point leaves behind."""
     import shutil
 
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
-        fingerprint_docs,
-        ingest_batch,
-        read_state,
+        read_accepted,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    b1 = docs.filter(F.col("doc_id") % 2 == 0)
-    b2 = docs.filter(F.col("doc_id") % 2 == 1)
+    ingest, kw, table, reader, b1, b2 = _crash_case(spark, modality)
     sdir = str(tmp_path / "state")
+    tdir = tmp_path / "state" / table
 
-    a1 = ingest_batch(spark, b1, sdir, batch_id="b1")
-    n1 = a1.count()
-    assert n1 > 0
+    def run(batch, bid):
+        out = ingest(spark, batch, sdir, batch_id=bid, **kw)
+        return sorted(r["doc_id"] for r in out.collect())
 
-    # Crash window A: died AFTER the fingerprint commit, before the
-    # caller consumed the output. Re-run with the same batch_id must
-    # return the staged survivors (NOT the empty set the anti-join
-    # alone would yield — the pre-round-6 data-loss window).
-    again = ingest_batch(spark, b1, sdir, batch_id="b1")
-    assert again.count() == n1
-    assert {r["fp"] for r in fingerprint_docs(again, "doc_id", "text").collect()} == {
-        r["fp"] for r in fingerprint_docs(a1, "doc_id", "text").collect()
-    }
+    assert run(b1, "b1") == [1, 3]
+    n1 = reader(spark, sdir).count()
 
-    # Crash window B: batch 2 died BETWEEN staging and the state
-    # append — survivors staged, fingerprints dir missing entirely.
-    a2 = ingest_batch(spark, b2, sdir, batch_id="b2")
-    n2 = a2.count()
-    shutil.rmtree(tmp_path / "state" / "fingerprints" / "batch=b2")
-    assert read_state(spark, sdir).count() == n1  # b2 rolled back
-    redo = ingest_batch(spark, b2, sdir, batch_id="b2")
-    assert redo.count() == n2
-    assert read_state(spark, sdir).count() == n1 + n2
+    # Crash window A: died AFTER the signature commit, before the
+    # caller consumed the output. Re-running the batch id returns the
+    # staged survivors (NOT the empty set the cross-state match alone
+    # would yield) and appends no state.
+    assert run(b1, "b1") == [1, 3]
+    assert reader(spark, sdir).count() == n1
 
-    # Crash window C: a partial (uncommitted) state append — part
-    # files present, no _SUCCESS. read_state must not see it.
-    junk = tmp_path / "state" / "fingerprints" / "batch=junk" / "fp_prefix=0"
-    junk.mkdir(parents=True)
-    src = next(
-        p
-        for p in (tmp_path / "state" / "fingerprints" / "batch=b1").rglob(
-            "*.parquet"
-        )
-    )
-    shutil.copy(src, junk / "part-junk.parquet")
-    assert read_state(spark, sdir).count() == n1 + n2  # unchanged
+    # Crash window B: batch 2 died BETWEEN staging and the signature
+    # commit — survivors staged, signature dir missing entirely.
+    assert run(b2, "b2") == [5]
+    n2 = reader(spark, sdir).count()
+    shutil.rmtree(tdir / "batch=b2")
+    assert reader(spark, sdir).count() == n1  # b2 rolled back
+    assert run(b2, "b2") == [5]
+    assert reader(spark, sdir).count() == n2
 
-    # Net result across all recoveries == one-shot content set.
-    got = {
-        r["fp"]
-        for r in fingerprint_docs(
-            again.unionByName(redo), "doc_id", "text"
-        ).select("fp").collect()
-    }
-    want = {
-        r["fp"]
-        for r in fingerprint_docs(docs, "doc_id", "text")
-        .select("fp")
-        .distinct()
-        .collect()
-    }
-    assert got == want
+    # Crash window C: a partial (uncommitted) signature append — part
+    # files present, no _SUCCESS. No state read may see it.
+    b1_dir = tdir / "batch=b1"
+    src = next(b1_dir.rglob("*.parquet"))
+    junk = tdir / "batch=junk" / src.relative_to(b1_dir)
+    junk.parent.mkdir(parents=True)
+    shutil.copy(src, junk)
+    assert reader(spark, sdir).count() == n2  # unchanged
+
+    # Net result across all recoveries == the one-shot survivor set.
+    assert sorted(
+        r["doc_id"] for r in read_accepted(spark, sdir).collect()
+    ) == [1, 3, 5]
 
 
 def test_sketches_respect_error_bounds(spark, sf_dir):

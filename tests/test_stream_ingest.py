@@ -162,20 +162,22 @@ def test_accepted_corpus_requires_committed_batches(spark, tmp_path):
 
 
 def test_stream_ingest_provenance_stays_bounded(spark, tmp_path):
-    """r16 (r15 watch #2): a stream_ingest run registers its run_id,
-    so the inline maintenance sweeps that fire under continuous
-    micro-batching record folded epochs as ONE per-run [lo, hi]
-    interval in _sources.json — provenance cost is independent of
-    how many epochs ever ingested — and the corpus stays exact."""
+    """A stream_ingest run registers its run_id, so the inline
+    maintenance sweeps that fire under continuous micro-batching
+    record folded epochs as ONE per-run [lo, hi] interval in
+    _sources.json, and a compact names only the compact dirs it
+    folded itself — so no provenance file grows with the number of
+    epochs ever ingested — while the corpus stays exact."""
     import json
     import os
 
+    n_epochs = 12
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     src = str(tmp_path / "incoming")
-    for i in range(4):
+    for i in range(n_epochs):
         docs.filter(
-            f"doc_id >= {i * 100} AND doc_id < {(i + 1) * 100}"
-        ).coalesce(1).write.parquet(src + f"/f={i}")
+            f"doc_id >= {i * 40} AND doc_id < {(i + 1) * 40}"
+        ).coalesce(1).write.parquet(src + f"/f={i:02d}")
     sdir = str(tmp_path / "state")
     stream = (
         spark.readStream.schema("doc_id long, text string")
@@ -186,11 +188,13 @@ def test_stream_ingest_provenance_stays_bounded(spark, tmp_path):
         stream_ingest(
             spark, stream, sdir, str(tmp_path / "ckpt"),
             run_id="b", maintain_max_batch_dirs=2,
-        )
+        ),
+        seconds=600,
     )
-    assert accepted_corpus(spark, sdir).count() == 400
+    assert accepted_corpus(spark, sdir).count() == n_epochs * 40
     # every committed compact dir under the state tables carries
-    # interval-form provenance with zero per-epoch ids
+    # interval-form provenance with zero per-epoch ids, and at most
+    # the two compact names a threshold-2 tier merge folds directly
     found = 0
     for table in ("accepted", "fingerprints"):
         root = f"{sdir}/{table}"
@@ -208,7 +212,8 @@ def test_stream_ingest_provenance_stays_bounded(spark, tmp_path):
             assert not any(
                 i.startswith("b-") for i in prov["ids"]
             ), prov
-    assert found >= 1, "maintenance never compacted at threshold 2"
+            assert len(prov["ids"]) <= 2, (table, prov)
+    assert found >= 2, "maintenance never compacted at threshold 2"
 
 
 def test_stream_corrupt_rate_per_epoch(spark, tmp_path):
