@@ -49,6 +49,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -59,11 +60,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from sensorstream_scalable_sensor_data_pipeline_spark.operators.caching import (
+    cached,
+)
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.codecs import (
-    MALFORMED_PAYLOAD_ERRORS,
+    decode_policy,
 )
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
-    drop_near_duplicates,
+    drop_signed_duplicates,
     vote_best_offset,
 )
 
@@ -167,38 +171,22 @@ def with_audio_fingerprint(
     ``mapInPandas`` — same scale shape as the image/audio feature
     extractors (whole record batches per worker; the FFT is the only
     per-payload Python work, and it is numpy-vectorized across the
-    clip's frames).
-
-    ``on_error="quarantine"`` (r14) emits a NULL fingerprint for any
-    payload whose decode throws instead of failing the task: a NULL
-    sequence explodes to zero probe words and never reaches the BER
-    verify, so the clip flows through dedup/decontamination as a
-    can't-match-anything survivor and ``WHERE fp IS NULL`` recovers
-    the quarantine set. Default ``"raise"`` keeps exact-pipeline
-    semantics (see :func:`~...phash.with_phash` for the doctrine)."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(
-            f"on_error must be 'raise' or 'quarantine' (got {on_error!r})"
-        )
-    quarantine = on_error == "quarantine"
+    clip's frames). ``on_error`` follows
+    :func:`~...codecs.decode_policy`: a quarantined clip gets a NULL
+    fingerprint, which explodes to zero probe words, so the clip
+    survives dedup and ``WHERE fp IS NULL`` recovers the quarantine
+    set."""
+    decode = decode_policy(fingerprint_wav, on_error)
 
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
-            fps = []
-            for p in pdf[binary_col]:
-                if quarantine:
-                    try:
-                        fps.append(fingerprint_wav(p).tolist())
-                    except MALFORMED_PAYLOAD_ERRORS:
-                        fps.append(None)
-                else:
-                    fps.append(fingerprint_wav(p).tolist())
+            fps = [decode(p) for p in pdf[binary_col]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf[id_col].astype("int64").to_numpy(),
-                    "fp": fps,
+                    "fp": [None if f is None else f.tolist() for f in fps],
                 }
             )
 
@@ -264,7 +252,9 @@ def audio_candidates(
     sits at ≈0.5, so the 0.25 default splits cleanly (the paper uses
     0.35 on 3-second blocks).
 
-    Returns (id_a, id_b, ber, offset, overlap_frames).
+    The self-join form of :func:`audio_candidates_cross`: one table on
+    both sides, pairs ordered ``id_a < id_b`` before the vote. Returns
+    (id_a, id_b, ber, offset, overlap_frames).
 
     Scale shape: probe buckets are tiny for real audio — and
     degenerate values (digital silence → constant words 0/-1) are
@@ -312,20 +302,7 @@ def audio_candidates(
     would only spend the vote's recall margin; keep it for
     vote-volume control on pathological corpora. The cross shape
     still saves ~1/k of the probe side alone."""
-    if min_probe_frames < 1:
-        raise ValueError("min_probe_frames must be positive")
-    if not (0.0 < ber_max < 0.5):
-        raise ValueError("ber_max must be in (0, 0.5)")
-    if max_word_df is not None and max_word_df < 1:
-        raise ValueError("max_word_df must be positive (or None to disable)")
-    if probe_stride < 1:
-        raise ValueError("probe_stride must be >= 1")
-    from pyspark import StorageLevel
-
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.caching import (
-        materialize_and_release,
-    )
-
+    _check_audio_knobs(min_probe_frames, ber_max, max_word_df, probe_stride)
     # Past the broadcast regime, shuffle the exploded word table ONCE
     # by value, cache it partitioned, and derive BOTH self-join sides
     # from the cache (r13): a plain a.join(b, "v") plans one exchange
@@ -348,59 +325,78 @@ def audio_candidates(
         n_words = fps.agg(F.sum(F.size("fp"))).collect()[0][0] or 0
         cache_probe_words = n_words >= PROBE_CACHE_MIN_WORDS
     ex = _exploded_words(fps, id_col, max_word_df)
-    if cache_probe_words:
-        nparts = int(
-            fps.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    knobs = (id_col, min_probe_frames, ber_max, min_overlap_frames, probe_stride)
+    if not cache_probe_words:
+        return _probe_vote_verify(ex, ex, fps, fps, *knobs, self_join=True)
+    nparts = int(fps.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    ex = ex.repartition(nparts, "v")
+    with cached(ex, level=StorageLevel.MEMORY_AND_DISK):
+        return _probe_vote_verify(
+            ex, ex, fps, fps, *knobs, self_join=True
+        ).localCheckpoint(eager=True)
+
+
+def _check_audio_knobs(
+    min_probe_frames: int,
+    ber_max: float,
+    max_word_df: int | None,
+    probe_stride: int = 1,
+) -> None:
+    """The knob checks of the audio family, run before any decode."""
+    if min_probe_frames < 1:
+        raise ValueError("min_probe_frames must be positive")
+    if not (0.0 < ber_max < 0.5):
+        raise ValueError("ber_max must be in (0, 0.5)")
+    if max_word_df is not None and max_word_df < 1:
+        raise ValueError("max_word_df must be positive (or None to disable)")
+    if probe_stride < 1:
+        raise ValueError("probe_stride must be >= 1")
+
+
+def _probe_vote_verify(
+    ex_a: DataFrame,
+    ex_b: DataFrame,
+    fps_a: DataFrame,
+    fps_b: DataFrame,
+    id_col: str,
+    min_probe_frames: int,
+    ber_max: float,
+    min_overlap_frames: int,
+    probe_stride: int,
+    broadcast_b: bool = False,
+    self_join: bool = False,
+) -> DataFrame:
+    """The probe → vote → verify chain between two probe-word tables
+    (``ex_a``/``ex_b``, exploded from ``fps_a``/``fps_b``): equi-join
+    on the word, vote the best offset per pair, keep pairs with ≥
+    ``min_probe_frames`` hits, aligned-BER verify. ``probe_stride``
+    thins the a (probe) side only, so arbitrary offsets still vote.
+    ``self_join`` (both sides are one table) orders pairs
+    ``id_a < id_b`` before the vote; ``broadcast_b`` marks the b side
+    broadcast-small through both joins."""
+    if probe_stride > 1:
+        ex_a = ex_a.filter(F.col("idx") % probe_stride == 0)
+    a = ex_a.select(
+        F.col("v"), F.col(id_col).alias("id_a"), F.col("idx").alias("idx_a")
+    )
+    b = ex_b.select(
+        F.col("v"), F.col(id_col).alias("id_b"), F.col("idx").alias("idx_b")
+    )
+    matched = a.join(F.broadcast(b) if broadcast_b else b, "v")
+    if self_join:
+        matched = matched.filter(F.col("id_a") < F.col("id_b"))
+    # best offset per pair: max probe hits, ties to the smallest
+    # offset (shared vote, operators/dedup_fuzzy.py)
+    best = vote_best_offset(
+        matched.select(
+            "id_a", "id_b", (F.col("idx_a") - F.col("idx_b")).alias("off")
         )
-        ex = ex.repartition(nparts, "v").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    # Any failure between persist() and materialize_and_release —
-    # the eager count, the vote/verify plan build — must still
-    # release the ~hundreds-of-MB cache (r13 ADVICE); hence the
-    # whole consumer-plan construction sits in one try/except.
-    try:
-        if cache_probe_words:
-            ex.count()  # eager: populate before the join's map sides race
-        ex_a = ex if probe_stride == 1 else ex.filter(
-            F.col("idx") % probe_stride == 0
-        )
-        a = ex_a.select(
-            F.col("v"),
-            F.col(id_col).alias("id_a"),
-            F.col("idx").alias("idx_a"),
-        )
-        b = ex.select(
-            F.col("v"),
-            F.col(id_col).alias("id_b"),
-            F.col("idx").alias("idx_b"),
-        )
-        matched = (
-            a.join(b, "v")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_a", "id_b", (F.col("idx_a") - F.col("idx_b")).alias("off")
-            )
-        )
-        # best offset per pair: max probe hits, ties to the smallest
-        # offset (shared vote, operators/dedup_fuzzy.py)
-        best = vote_best_offset(matched).filter(
-            F.col("n_match") >= min_probe_frames
-        )
-        fa = fps.select(
-            F.col(id_col).alias("id_a"), F.col("fp").alias("fp_a")
-        )
-        fb = fps.select(
-            F.col(id_col).alias("id_b"), F.col("fp").alias("fp_b")
-        )
-        verified = _ber_verify(best, fa, fb, ber_max, min_overlap_frames)
-        if cache_probe_words:
-            verified = materialize_and_release(verified, ex)
-    except BaseException:
-        if cache_probe_words:
-            ex.unpersist()
-        raise
-    return verified
+    ).filter(F.col("n_match") >= min_probe_frames)
+    fa = fps_a.select(F.col(id_col).alias("id_a"), F.col("fp").alias("fp_a"))
+    fb = fps_b.select(F.col(id_col).alias("id_b"), F.col("fp").alias("fp_b"))
+    return _ber_verify(
+        best, fa, fb, ber_max, min_overlap_frames, broadcast_b=broadcast_b
+    )
 
 
 def hub_sampling_params(max_word_df: int) -> tuple[int, int]:
@@ -568,40 +564,14 @@ def audio_candidates_cross(
     detects inline (a batch is small). ``probe_stride`` strides the
     a (probe) side's frames like :func:`audio_candidates` — the b
     (index) side stays complete so arbitrary offsets still vote."""
-    if min_probe_frames < 1:
-        raise ValueError("min_probe_frames must be positive")
-    if not (0.0 < ber_max < 0.5):
-        raise ValueError("ber_max must be in (0, 0.5)")
-    if max_word_df is not None and max_word_df < 1:
-        raise ValueError("max_word_df must be positive (or None to disable)")
-    if probe_stride < 1:
-        raise ValueError("probe_stride must be >= 1")
-    ex_a0 = _exploded_words(fps_a, id_col, max_word_df)
-    if probe_stride > 1:
-        ex_a0 = ex_a0.filter(F.col("idx") % probe_stride == 0)
-    ex_a = ex_a0.select(
-        F.col("v"), F.col(id_col).alias("id_a"), F.col("idx").alias("idx_a")
-    )
-    ex_b = _exploded_words(
-        fps_b,
-        id_col,
-        max_word_df,
-        hubs=hubs_b if max_word_df is not None else None,
-    ).select(
-        F.col("v"), F.col(id_col).alias("id_b"), F.col("idx").alias("idx_b")
-    )
-    matched = ex_a.join(
-        F.broadcast(ex_b) if broadcast_b else ex_b, "v"
-    ).select(
-        "id_a", "id_b", (F.col("idx_a") - F.col("idx_b")).alias("off")
-    )
-    best = vote_best_offset(matched).filter(
-        F.col("n_match") >= min_probe_frames
-    )
-    fa = fps_a.select(F.col(id_col).alias("id_a"), F.col("fp").alias("fp_a"))
-    fb = fps_b.select(F.col(id_col).alias("id_b"), F.col("fp").alias("fp_b"))
-    return _ber_verify(
-        best, fa, fb, ber_max, min_overlap_frames, broadcast_b=broadcast_b
+    _check_audio_knobs(min_probe_frames, ber_max, max_word_df, probe_stride)
+    hubs = hubs_b if max_word_df is not None else None
+    return _probe_vote_verify(
+        _exploded_words(fps_a, id_col, max_word_df),
+        _exploded_words(fps_b, id_col, max_word_df, hubs=hubs),
+        fps_a, fps_b,
+        id_col, min_probe_frames, ber_max, min_overlap_frames, probe_stride,
+        broadcast_b=broadcast_b,
     )
 
 
@@ -616,79 +586,33 @@ def decontaminate_audio(
     broadcast_ids: bool = True,
     on_error: str = "raise",
 ) -> DataFrame:
-    """Drop corpus clips that are near-duplicates of any EVAL-set
-    clip — the audio twin of phash.decontaminate_images: training on
-    benchmark audio contaminates every evaluation that uses it, and
-    re-gained / padded / re-encoded copies evade exact-hash checks.
+    """Drop corpus clips that match any EVAL-set clip under the
+    probe-vote-verify rule of :func:`audio_candidates_cross` (aligned
+    BER ≤ ``ber_max`` after ≥ ``min_probe_frames`` bit-exact probe
+    hits at one offset) — the audio twin of
+    phash.decontaminate_images. Returns the clean corpus rows
+    (lifecycle: :func:`~...dedup_fuzzy.drop_signed_duplicates`).
 
-    The eval side is broadcast-small by contract, so the probe join
-    is bilinear in the SMALL side (corpus words × eval words per
-    shared value) and the corpus payloads never shuffle — only their
-    fingerprints probe, and only contaminated IDs come back to the
-    anti-join. The ``max_word_df`` hub guard defaults OFF (a dropped
-    probe word can only cost recall — a silent benchmark leak — and
-    the cross shape's buckets are already bounded by the eval side);
-    the degenerate silence words are still dropped, they carry no
-    identity. Returns the clean corpus rows.
-
-    Lifecycle: both fingerprint tables feed TWO joins (probe +
-    verify), so both persist — fingerprints only, ~2 KB/clip, never
-    the payloads — and the contaminated-ID set (post-aggregation,
-    orders smaller) is materialized through
-    ``materialize_and_release`` so the session cache is left clean
-    (there is no ``dup_components`` action inside this pass to force
-    the plan the way the dedup path's closure does)."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.caching import (
-        materialize_and_release,
+    Recall first: the ``max_word_df`` hub guard defaults OFF, because
+    a dropped probe word can only cost recall (a silent benchmark
+    leak) and the cross shape's buckets are already bounded by the
+    small eval side; the degenerate silence words are still dropped.
+    ``on_error`` quarantines CORPUS clips only: a quarantined eval
+    clip would probe nothing and let its corpus near-duplicates leak,
+    so a corrupt eval set raises."""
+    _check_audio_knobs(min_probe_frames, ber_max, max_word_df)
+    return drop_signed_duplicates(
+        corpus, id_col,
+        [with_audio_fingerprint(corpus, id_col, binary_col, on_error=on_error),
+         with_audio_fingerprint(eval_clips, id_col, binary_col)],
+        lambda fps_c, fps_e, *_counts: audio_candidates_cross(
+            fps_c, fps_e, "doc_id",
+            min_probe_frames=min_probe_frames,
+            ber_max=ber_max,
+            max_word_df=max_word_df,
+        ),
+        broadcast_ids=broadcast_ids,
     )
-
-    # corpus-side quarantine only — a quarantined EVAL clip would
-    # silently disable its own protection (NULL fp probes nothing;
-    # every corpus near-dup of it leaks); eval sets are curated, so
-    # a corrupt one raises (review-found r14, same rule as the image
-    # twin)
-    fps_c = with_audio_fingerprint(
-        corpus, id_col, binary_col, on_error=on_error
-    ).persist()
-    fps_e = with_audio_fingerprint(eval_clips, id_col, binary_col).persist()
-    # eager cache materialization: the probe explode and the BER
-    # verify's frame-table scan are independent map stages of one
-    # action; scheduled concurrently against an unpopulated cache
-    # they EACH run the FFT chain (the video twin measured the
-    # duplicate decode at 2-5x CPU — see decontaminate_videos)
-    fps_c.count()
-    fps_e.count()
-    hits = audio_candidates_cross(
-        fps_c,
-        fps_e,
-        id_col=id_col,
-        min_probe_frames=min_probe_frames,
-        ber_max=ber_max,
-        max_word_df=max_word_df,
-    )
-    contaminated = materialize_and_release(
-        hits.select(F.col("id_a").alias(id_col)).distinct(), fps_c, fps_e
-    )
-    # BROADCAST the contaminated-ID set (r13; same doctrine as
-    # dedup_phash/drop_near_duplicates): the r12 plain anti-join
-    # assumed AQE would broadcast the small side, but the measured
-    # plan SHUFFLED the corpus WITH its payload column — 321 MB at
-    # sf0.1, i.e. the exact byte volume this family exists to avoid.
-    # The ID set is bounded by the eval-match count (≤ corpus rows,
-    # ≪ in any sane decontamination); at a scale where it outgrows
-    # broadcast, pass ``broadcast_ids=False`` — the plain anti-join
-    # accepts the AQE-planned shuffle instead of a driver OOM (r14).
-    # THRESHOLD (r15, measured — scripts/decontam_broadcast_rung.py
-    # at sf0.1, 10 %/50 % contamination): keep the default True until
-    # the contaminated-ID set approaches broadcast/driver limits
-    # (~10⁷-10⁸ 8-byte ids); below that the escape costs ~nothing
-    # anyway (AQE re-planned the post-distinct tiny id side back to a
-    # broadcast at runtime: identical survivors, ≤0.4 MB shuffle,
-    # wall ±10 %), and beyond it the worst case is ONE payload-
-    # bearing corpus shuffle — the measured 321 MB/sf0.1 class —
-    # instead of an OOM.
-    ids = F.broadcast(contaminated) if broadcast_ids else contaminated
-    return corpus.join(ids, id_col, "left_anti")
 
 
 def dedup_audio(
@@ -701,32 +625,21 @@ def dedup_audio(
     probe_stride: int = 1,
     on_error: str = "raise",
 ) -> DataFrame:
-    """End-to-end near-duplicate AUDIO dedup: fingerprint every WAV
-    payload, probe-vote candidates, aligned-BER verify, transitive
-    closure, keep the min-id canonical per cluster. The fingerprint
-    table persists across the probe self-join and the BER join (same
-    rationale as :func:`~...phash.dedup_phash` — the FFT is the
-    expensive stage and the joins reference it repeatedly) and the
-    loser-ID anti-join broadcasts so the wide audio payloads never
-    shuffle."""
-    fps = with_audio_fingerprint(
-        clips, id_col, binary_col, on_error=on_error
-    ).persist()
-    try:
-        # eager cache materialization — the probe explode's two join
-        # sides are independent map stages that race an unpopulated
-        # cache into a duplicate FFT pass (see decontaminate_audio)
-        fps.count()
-        pairs = audio_candidates(
-            fps,
-            "doc_id",
+    """Near-duplicate AUDIO dedup: clips matched by
+    :func:`audio_candidates` (aligned BER ≤ ``ber_max`` after ≥
+    ``min_probe_frames`` bit-exact probe hits at one offset) form
+    clusters, and the min id of each survives (lifecycle:
+    :func:`~...dedup_fuzzy.drop_signed_duplicates`). ``max_word_df``
+    and ``probe_stride`` are the probe guards documented there."""
+    _check_audio_knobs(min_probe_frames, ber_max, max_word_df, probe_stride)
+    return drop_signed_duplicates(
+        clips, id_col,
+        [with_audio_fingerprint(clips, id_col, binary_col, on_error=on_error)],
+        lambda fps, _n: audio_candidates(
+            fps, "doc_id",
             min_probe_frames=min_probe_frames,
             ber_max=ber_max,
             max_word_df=max_word_df,
             probe_stride=probe_stride,
-        )
-        return drop_near_duplicates(
-            clips, pairs, id_col=id_col, broadcast_losers=True
-        )
-    finally:
-        fps.unpersist()
+        ),
+    )

@@ -30,6 +30,10 @@ shared store — same lifecycle, different durability.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
@@ -46,3 +50,30 @@ def materialize_and_release(out: DataFrame, *persisted: DataFrame) -> DataFrame:
         except Exception:
             pass
     return out
+
+
+@contextmanager
+def cached(
+    *frames: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
+) -> Iterator[list[int]]:
+    """Persist ``frames`` (``level`` defaults to ``DataFrame.persist``'s),
+    fill each with ONE eager count, yield the counts, and unpersist
+    every frame on exit, on every path — a failing count or consumer
+    included.
+
+    Why the eager count: a cached frame read by two map stages of one
+    action (the two sides of a self-join, a count branch beside a
+    match branch) is filled by neither before both start, and each
+    recomputes it — measured on the video decontaminator as warm-rep
+    CPU alternating 90 vs 450 CPU-s on identical inputs, i.e. the
+    whole corpus decoded twice, nondeterministically. One count per
+    frame pins one computation. Consumers that must outlive the block
+    materialize their result inside it (``localCheckpoint``, or an
+    action such as the dedup closure)."""
+    try:
+        for f in frames:
+            f.persist(level)
+        yield [f.count() for f in frames]
+    finally:
+        for f in frames:
+            f.unpersist()

@@ -65,12 +65,40 @@ class OversizedPayloadError(ValueError):
 #: The untrusted-bytes exception contract every public decoder
 #: guarantees via :func:`_normalizes_malformed`: an unsupported or
 #: malformed payload raises exactly one of these. Quarantine mode
-#: (``on_error="quarantine"`` across phash/audio_fp/video_dedup/
+#: (:func:`decode_policy`, shared by phash/audio_fp/video_dedup/
 #: multimodal) swallows ONLY this tuple — a MemoryError, executor
 #: kill, or genuine code bug still fails the task instead of
 #: silently degrading a good row to a NULL signature (r14 ADVICE:
 #: a transient OOM must not become a can't-match-anything survivor).
 MALFORMED_PAYLOAD_ERRORS = (ValueError, NotImplementedError)
+
+
+def decode_policy(decode, on_error: str):
+    """The ``on_error`` policy of every media decode loop, in one
+    place. ``"raise"`` returns ``decode`` itself: exact-pipeline
+    semantics, one corrupt payload fails its task. ``"quarantine"``
+    returns a wrapper that maps a malformed payload — exactly
+    :data:`MALFORMED_PAYLOAD_ERRORS` — to ``None``: at corpus scale
+    corrupt payloads are a certainty, and the caller turns ``None``
+    into a signature that can never match (a NULL hash, a NULL
+    fingerprint, no frame rows), so the row survives dedup and the
+    quarantine set is one filter away. Everything else propagates in
+    both modes. Raises ``ValueError`` for any other ``on_error``, when
+    the plan is built and before any job runs."""
+    if on_error not in ("raise", "quarantine"):
+        raise ValueError(
+            f"on_error must be 'raise' or 'quarantine' (got {on_error!r})"
+        )
+    if on_error == "raise":
+        return decode
+
+    def quarantined(payload):
+        try:
+            return decode(payload)
+        except MALFORMED_PAYLOAD_ERRORS:
+            return None
+
+    return quarantined
 
 
 def _normalizes_malformed(fmt: str, extra: tuple = ()):

@@ -31,9 +31,13 @@ Scale design, common to all four:
 
 from __future__ import annotations
 
+import contextlib
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sensorstream_scalable_sensor_data_pipeline_spark.operators.caching import cached
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.text import tokenize_lower
 
 # Default MinHash geometry: 12 permutations in 4 bands of 3 — catches
@@ -569,6 +573,73 @@ def drop_near_duplicates(
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.enrich import anti_filter
 
     return anti_filter(docs, losers, id_col, broadcast_keys=broadcast_losers)
+
+
+def drop_matched(
+    docs: DataFrame,
+    hits: DataFrame,
+    id_col: str = "doc_id",
+    broadcast_ids: bool = False,
+    materialize: bool = False,
+) -> DataFrame:
+    """``docs`` minus every ``id_a`` of the cross-table ``hits`` — the
+    tail of decontamination and of the incremental ingests' check
+    against history (the other table always wins). ``materialize``
+    checkpoints the id set eagerly, so the caches behind ``hits`` can
+    be released before the caller reads the result."""
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators.enrich import anti_filter
+
+    ids = hits.select(F.col("id_a").alias(id_col)).distinct()
+    if materialize:
+        ids = ids.localCheckpoint(eager=True)
+    return anti_filter(docs, ids, id_col, broadcast_keys=broadcast_ids)
+
+
+def drop_signed_duplicates(
+    docs: DataFrame,
+    id_col: str,
+    signatures: list[DataFrame],
+    pairs: Callable[..., DataFrame],
+    broadcast_ids: bool = True,
+    cache: bool = True,
+    while_cached: Callable[..., DataFrame] | None = None,
+) -> DataFrame | tuple[DataFrame, DataFrame]:
+    """The sign → pair → drop lifecycle shared by the image, audio and
+    video dedup and decontamination entry points.
+
+    ``signatures`` holds one table for dedup or two for
+    decontamination (corpus, then eval set). With ``cache`` each is
+    persisted and filled by one eager count
+    (:func:`~...caching.cached`), and released on every path. ``pairs``
+    receives the tables, then their counts when cached, and returns
+    the verified ``(id_a, id_b, ...)`` pairs. Dedup drops every
+    non-minimal member of each cluster of pairs
+    (:func:`drop_near_duplicates`); decontamination drops every corpus
+    ``id_a`` (:func:`drop_matched`). ``while_cached(*tables)`` runs
+    before the release; with it, the call returns ``(survivors, its
+    result)``.
+
+    The id set to drop is broadcast into the final anti-join so the
+    wide payload column of ``docs`` never shuffles: a plain anti-join
+    measured 113 MB of image payload shuffle on the pHash bench
+    corpus and 321 MB of audio payload at sf0.1, where the broadcast
+    moves ~0. ``broadcast_ids=False`` (decontamination only) is the
+    escape for an id set near the broadcast or driver limits
+    (~10⁷-10⁸ 8-byte ids): the anti-join then shuffles the corpus
+    once instead of OOMing the driver. Below that limit the escape
+    costs ~nothing — at sf0.1 with 10 % and 50 % contamination AQE
+    re-planned the tiny id side back to a broadcast at runtime
+    (identical survivors, ≤0.4 MB shuffle, wall within ±10 %;
+    ``scripts/decontam_broadcast_rung.py``)."""
+    with cached(*signatures) if cache else contextlib.nullcontext([]) as counts:
+        found = pairs(*signatures, *counts)
+        if len(signatures) == 1:
+            out = drop_near_duplicates(
+                docs, found, id_col=id_col, broadcast_losers=broadcast_ids
+            )
+        else:
+            out = drop_matched(docs, found, id_col, broadcast_ids, cache)
+        return out if while_cached is None else (out, while_cached(*signatures))
 
 
 # ------------------------------------- shared Hamming/sequence helpers

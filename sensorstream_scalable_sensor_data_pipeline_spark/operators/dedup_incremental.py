@@ -125,6 +125,17 @@ from sensorstream_scalable_sensor_data_pipeline_spark.operators.audio_fp import 
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup import (
     key_dedup_deterministic,
 )
+from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
+    NUM_PERMS,
+    bands_from_sigs,
+    blocked_hamming_matches,
+    drop_matched,
+    drop_near_duplicates,
+    minhash_lsh_candidates,
+    minhash_signatures,
+    shingle_jaccard,
+    with_shingles,
+)
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.text import (
     tokenize_lower,
 )
@@ -606,21 +617,6 @@ def read_quarantine_state(spark: SparkSession, state_dir: str) -> DataFrame | No
 
 
 # ------------------------------------------------ the ingest protocol
-
-
-def _drop_dups(sigs: DataFrame, pairs: DataFrame, key: str) -> DataFrame:
-    """``sigs`` minus the non-representatives of every within-batch
-    duplicate cluster: the connected components of the ``(id_a,
-    id_b)`` pairs collapse to their min id."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
-        dup_components,
-    )
-
-    comp = dup_components(pairs)
-    losers = comp.filter(F.col("rep") != F.col("doc_id")).select(
-        F.col("doc_id").alias(key)
-    )
-    return sigs.join(losers, key, "left_anti")
 
 
 def _ingest(
@@ -1541,10 +1537,8 @@ def ingest_image_batch(
     and banded LSH beyond; ``"pigeonhole"`` / ``"banded"`` force one,
     banded sized from the same counts. Other arguments: see the module
     docstring."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
-        blocked_hamming_matches,
-    )
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.phash import (
+        _check_image_knobs,
         auto_banded_params,
         banded_hamming_matches,
         phash_candidates,
@@ -1553,10 +1547,7 @@ def ingest_image_batch(
         with_phash,
     )
 
-    if method not in ("auto", "pigeonhole", "banded"):
-        raise ValueError(
-            f"method must be 'auto', 'pigeonhole' or 'banded' (got {method!r})"
-        )
+    _check_image_knobs(method, max_hamming)
 
     def route(n_a: int, n_b: int | None = None):
         # (method, bands, bits) for one candidate join
@@ -1574,7 +1565,7 @@ def ingest_image_batch(
             pairs = phash_candidates_banded(
                 hashes, "doc_id", bands=bands, bits_per_band=bits
             )
-        kept = _drop_dups(
+        kept = drop_near_duplicates(
             hashes, pairs.filter(F.col("hamming") <= max_hamming), "doc_id"
         )
         if state is None:
@@ -1583,13 +1574,12 @@ def ingest_image_batch(
             n, state.count() if method != "pigeonhole" else None
         )
         if how == "pigeonhole":
-            cross = blocked_hamming_matches(kept, state, max_hamming)
+            hits = blocked_hamming_matches(kept, state, max_hamming)
         else:
-            cross = banded_hamming_matches(
+            hits = banded_hamming_matches(
                 kept, state, max_hamming, bands=bands, bits_per_band=bits
             )
-        hits = cross.select(F.col("id_a").alias("doc_id")).distinct()
-        return kept.join(hits, "doc_id", "left_anti")
+        return drop_matched(kept, hits)
 
     return _ingest(
         spark, batch, state_dir, batch_id, maintain_max_batch_dirs,
@@ -1730,18 +1720,15 @@ def ingest_audio_batch(
     )
 
     def match(fps: DataFrame, state: DataFrame | None, _n) -> DataFrame:
-        kept = _drop_dups(fps, audio_candidates(fps, "doc_id", **knobs), "doc_id")
+        kept = drop_near_duplicates(
+            fps, audio_candidates(fps, "doc_id", **knobs), "doc_id"
+        )
         if state is None:
             return kept
-        hits = audio_candidates_cross(
+        return drop_matched(kept, audio_candidates_cross(
             kept, state, "doc_id", broadcast_b=False,
             hubs_b=read_audio_hubs(spark, state_dir, max_word_df), **knobs,
-        )
-        return kept.join(
-            hits.select(F.col("id_a").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_anti",
-        )
+        ))
 
     def word_counts(bid: str) -> None:
         # crash windows self-heal: read_audio_hubs backfills any
@@ -1808,18 +1795,15 @@ def ingest_video_batch(
     knobs = dict(min_match_frac=min_match_frac, max_hamming=max_hamming)
 
     def match(fh: DataFrame, state: DataFrame | None, _n) -> DataFrame:
-        kept = _drop_dups(fh, video_candidates(fh, "doc_id", **knobs), "doc_id")
+        kept = drop_near_duplicates(
+            fh, video_candidates(fh, "doc_id", **knobs), "doc_id"
+        )
         if state is None:
             return kept
-        hits = video_candidates_cross(
+        return drop_matched(kept, video_candidates_cross(
             kept, state.select("doc_id", "frame_idx", "phash"), "doc_id",
             broadcast_b=False, **knobs,
-        )
-        return kept.join(
-            hits.select(F.col("id_a").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_anti",
-        )
+        ))
 
     return _ingest(
         spark, batch, state_dir, batch_id, maintain_max_batch_dirs,
@@ -1856,11 +1840,6 @@ def fuzzy_state_hits(
     engine cliff) — reaches ``tau_sig``. Two keyed equi-joins plus a
     candidate-sized verify projection: no cartesian anywhere, and the
     plan shape is pinned (tests/test_ingest_fuzzy.py)."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
-        NUM_PERMS,
-        bands_from_sigs,
-    )
-
     state_bands = bands_from_sigs(
         state.withColumnRenamed("doc_id", id_col), id_col
     )
@@ -1922,14 +1901,6 @@ def ingest_fuzzy_batch(
     estimator is coarse; near-``tau`` pairs concentrate well above it
     and unrelated pairs far below. Other arguments: see the module
     docstring."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
-        bands_from_sigs,
-        minhash_lsh_candidates,
-        minhash_signatures,
-        shingle_jaccard,
-        with_shingles,
-    )
-
     sh = None
 
     def sign(frame: DataFrame, cache) -> DataFrame:
@@ -1950,7 +1921,7 @@ def ingest_fuzzy_batch(
         verified = shingle_jaccard(
             cands, batch, id_col, text_col, shingle_df=sh
         ).filter(F.col("jaccard") >= tau)
-        kept = _drop_dups(sigs, verified.select("id_a", "id_b"), id_col)
+        kept = drop_near_duplicates(sigs, verified.select("id_a", "id_b"), id_col)
         if state is None:
             return kept
         hits = fuzzy_state_hits(

@@ -26,6 +26,7 @@ memory.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
@@ -39,7 +40,7 @@ from pyspark.sql.types import (
 )
 
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.codecs import (
-    MALFORMED_PAYLOAD_ERRORS,
+    decode_policy,
 )
 
 #: Bytes-per-frame for the deterministic fake video framer.
@@ -130,34 +131,20 @@ def extract_features(
     batches; the per-payload decode is the only Python loop, which is
     exactly the part that is genuinely non-vectorizable (codec calls).
 
-    ``on_error="quarantine"`` (r14) emits NULL feature columns for a
-    payload whose decode throws instead of failing the task —
-    ``WHERE byte_sum IS NULL`` recovers the quarantine set. Default
-    ``"raise"`` keeps exact semantics (doctrine in
-    :func:`~...phash.with_phash`).
+    ``on_error`` follows :func:`~...codecs.decode_policy`: a
+    quarantined payload gets NULL feature columns, and
+    ``WHERE byte_sum IS NULL`` recovers the quarantine set.
     """
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(
-            f"on_error must be 'raise' or 'quarantine' (got {on_error!r})"
-        )
-    quarantine = on_error == "quarantine"
-    _NULL_FEATS = {
-        "n_bytes": None, "byte_sum": None, "byte_mean": None, "n_frames": None
-    }
+    decode = decode_policy(
+        functools.partial(decode_image, fake=fake_decoder), on_error
+    )
+    null_feats = dict.fromkeys(("n_bytes", "byte_sum", "byte_mean", "n_frames"))
 
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
-            feats = []
-            for p in pdf[binary_col]:
-                if quarantine:
-                    try:
-                        feats.append(decode_image(p, fake=fake_decoder))
-                    except MALFORMED_PAYLOAD_ERRORS:
-                        feats.append(dict(_NULL_FEATS))
-                else:
-                    feats.append(decode_image(p, fake=fake_decoder))
+            feats = [decode(p) or null_feats for p in pdf[binary_col]]
             out = pd.DataFrame(feats)
             # nullable integer columns: plain int64 cannot hold the
             # quarantined Nones (pandas would silently float them and

@@ -49,10 +49,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.codecs import (
-    MALFORMED_PAYLOAD_ERRORS,
+    decode_policy,
 )
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
-    drop_near_duplicates,
+    blocked_hamming_matches,
+    drop_signed_duplicates,
     simhash_candidates,
 )
 
@@ -213,45 +214,26 @@ def with_phash(
     ``mapInPandas`` — whole record batches per python worker, the
     per-payload decode is the only Python loop (same scale shape as
     operators/multimodal.py::extract_features). ``algo`` picks
-    ``"phash"`` (DCT) or ``"dhash"`` (gradient).
-
-    ``on_error`` (r14): at corpus scale corrupt payloads are a
-    CERTAINTY, and one undecodable image under the default
-    ``"raise"`` fails its task 4 times and kills the whole job.
-    ``"quarantine"`` emits a NULL hash for any payload whose decode
-    throws — NULL never equi-joins, so the row flows through every
-    downstream candidate join / dedup / anti-join as a
-    can't-match-anything survivor, and ``WHERE phash IS NULL``
-    recovers the quarantine set for inspection. The catch is
-    deliberately broad (any ``Exception``): quarantine's contract is
-    that payload CONTENT can never fail the job — code bugs still
-    surface in ``"raise"`` runs and the test suite."""
+    ``"phash"`` (DCT) or ``"dhash"`` (gradient). ``on_error`` follows
+    :func:`~...codecs.decode_policy`: a quarantined payload gets a NULL
+    hash, which never equi-joins, so the row survives every candidate
+    join and ``WHERE phash IS NULL`` recovers the quarantine set."""
     if algo not in ("phash", "dhash"):
         raise ValueError(f"algo must be 'phash' or 'dhash' (got {algo!r})")
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(
-            f"on_error must be 'raise' or 'quarantine' (got {on_error!r})"
-        )
-    fn = phash64_bytes if algo == "phash" else dhash64_bytes
-    quarantine = on_error == "quarantine"
+    decode = decode_policy(
+        phash64_bytes if algo == "phash" else dhash64_bytes, on_error
+    )
 
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
-            hs = []
-            for p in pdf[binary_col]:
-                if quarantine:
-                    try:
-                        hs.append(fn(p))
-                    except MALFORMED_PAYLOAD_ERRORS:
-                        hs.append(None)
-                else:
-                    hs.append(fn(p))
             yield pd.DataFrame(
                 {
                     "doc_id": pdf[id_col].astype("int64").to_numpy(),
-                    "phash": pd.array(hs, dtype="Int64"),
+                    "phash": pd.array(
+                        [decode(p) for p in pdf[binary_col]], dtype="Int64"
+                    ),
                 }
             )
 
@@ -445,28 +427,6 @@ def resolve_phash_method(
     return "banded", bands, bits
 
 
-def _banded_block_specs(
-    hash_col: str, bands: int, bits_per_band: int, seed: int
-):
-    """The shared banded-LSH key construction: ``bands`` struct
-    expressions, each packing ``bits_per_band`` deterministically
-    sampled bit positions of ``hash_col`` into a long key."""
-    import random
-
-    rng = random.Random(seed)
-    specs = []
-    for bi in range(bands):
-        pos = rng.sample(range(64), bits_per_band)
-        key = F.lit(0).cast("long")
-        for j, p in enumerate(pos):
-            key = key + F.shiftleft(
-                F.shiftrightunsigned(F.col(hash_col), p).bitwiseAND(F.lit(1)),
-                j,
-            )
-        specs.append(F.struct(F.lit(bi).alias("blk"), key.alias("val")))
-    return specs
-
-
 def phash_candidates_banded(
     hashes: DataFrame,
     id_col: str = "doc_id",
@@ -498,31 +458,14 @@ def phash_candidates_banded(
     rows than the b=8 pigeonhole at 200 k images. ``bits_per_band``
     is the knob that scales with log₂(n) — :func:`auto_banded_params`
     sizes both knobs analytically; the exact verifier downstream
-    keeps precision exact either way."""
-    if not (1 <= bits_per_band <= 62):
-        raise ValueError("bits_per_band must be in [1, 62]")
-    specs = _banded_block_specs(hash_col, bands, bits_per_band, seed)
-    blocked = hashes.select(
-        F.col(id_col), F.col(hash_col), F.explode(F.array(*specs)).alias("b")
-    ).select(
-        id_col,
-        hash_col,
-        F.col("b.blk").alias("blk"),
-        F.col("b.val").alias("val"),
-    )
-    a = blocked.select(
-        "blk", "val", F.col(id_col).alias("id_a"), F.col(hash_col).alias("h_a")
-    )
-    b = blocked.select(
-        "blk", "val", F.col(id_col).alias("id_b"), F.col(hash_col).alias("h_b")
-    )
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return (
-        a.join(b, ["blk", "val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", ham.alias("hamming"))
-        .distinct()
-    )
+    keeps precision exact either way.
+
+    The self-join form of :func:`banded_hamming_matches`: the same
+    keys over one table, pairs ordered ``id_a < id_b``, and no
+    Hamming bound (the caller filters). Returns (id_a, id_b, hamming)."""
+    return banded_hamming_matches(
+        hashes, hashes, 64, bands, bits_per_band, seed, hash_col, id_col
+    ).filter(F.col("id_a") < F.col("id_b"))
 
 
 def banded_hamming_matches(
@@ -535,17 +478,31 @@ def banded_hamming_matches(
     hash_col: str = "phash",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Cross-table twin of :func:`phash_candidates_banded` — banded
-    sampled-bit LSH keys on BOTH sides, equi-join, exact Hamming
-    verify ≤ the bound. The subquadratic form of
-    :func:`~...dedup_fuzzy.blocked_hamming_matches` for when both
-    sides are large (e.g. a big ingest batch against a billion-hash
-    state table, where the pigeonhole bilinear term n_a·n_b·(b+1)/2^w
-    explodes). Precision exact, recall = the banded collision
-    probability at the bound. Returns (id_a, id_b, hamming)."""
+    """Cross-table banded sampled-bit LSH (see
+    :func:`phash_candidates_banded`): each of ``bands`` keys packs
+    ``bits_per_band`` bit positions of ``hash_col`` sampled
+    deterministically from ``seed``, both sides equi-join on the keys,
+    and the exact Hamming verify keeps pairs ≤ ``max_hamming``. The
+    subquadratic form of :func:`~...dedup_fuzzy.blocked_hamming_matches`
+    for when both sides are large (a big ingest batch against a
+    billion-hash state table, where the pigeonhole bilinear term
+    n_a·n_b·(b+1)/2^w explodes). Precision exact, recall = the banded
+    collision probability at the bound. Returns (id_a, id_b,
+    hamming)."""
+    import random
+
     if not (1 <= bits_per_band <= 62):
         raise ValueError("bits_per_band must be in [1, 62]")
-    specs = _banded_block_specs(hash_col, bands, bits_per_band, seed)
+    rng = random.Random(seed)
+    specs = []
+    for bi in range(bands):
+        key = F.lit(0).cast("long")
+        for j, p in enumerate(rng.sample(range(64), bits_per_band)):
+            key = key + F.shiftleft(
+                F.shiftrightunsigned(F.col(hash_col), p).bitwiseAND(F.lit(1)),
+                j,
+            )
+        specs.append(F.struct(F.lit(bi).alias("blk"), key.alias("val")))
 
     def blocked(df: DataFrame, side: str) -> DataFrame:
         return df.select(
@@ -570,6 +527,16 @@ def banded_hamming_matches(
     )
 
 
+def _check_image_knobs(method: str, max_hamming: int) -> None:
+    """The knob checks of the image family, run before any decode."""
+    if method not in ("auto", "pigeonhole", "banded"):
+        raise ValueError(
+            f"method must be 'auto', 'pigeonhole' or 'banded' (got {method!r})"
+        )
+    if not 0 <= max_hamming < 64:
+        raise ValueError(f"max_hamming must be in [0, 63] (got {max_hamming})")
+
+
 def dedup_phash(
     images: DataFrame,
     id_col: str,
@@ -584,112 +551,66 @@ def dedup_phash(
     on_error: str = "raise",
     return_quarantined: bool = False,
 ) -> DataFrame:
-    """End-to-end near-duplicate IMAGE dedup: hash every payload,
-    generate blocked candidates, verify exact Hamming ≤ bound, resolve
-    transitive clusters, keep the min-id canonical per cluster.
-
-    Every stage is the proven dedup shape: scan-side hashing, keyed
-    equi-join candidates (no-cartesian plan-pinned in tests),
-    xor+bit_count verify, shared
-    :func:`~...dedup_fuzzy.drop_near_duplicates` closure. Returns the
+    """Near-duplicate IMAGE dedup: images whose hashes lie within
+    ``max_hamming`` bits form clusters, and the min id of each
+    cluster survives (lifecycle:
+    :func:`~...dedup_fuzzy.drop_signed_duplicates`). Returns the
     surviving rows of ``images``.
-
-    The final anti-join BROADCASTS the loser-ID set so the wide
-    payload column never shuffles (losers are verified-pairs-bounded
-    — orders smaller than the payload bytes; measured: 113 MB of
-    payload shuffle → ~0 on the bench corpus). At a scale where the
-    loser set itself outgrows broadcast, call the stages directly
-    with ``drop_near_duplicates(broadcast_losers=False)``.
 
     ``method`` picks the candidate generator: ``"pigeonhole"`` is
     :func:`phash_candidates` — recall GUARANTEED 1.0 at the bound,
-    cost ~n²(b+1)/2^(64/(b+1)) from the narrow block keys (right up
-    to ~10⁵ images); ``"banded"`` is :func:`phash_candidates_banded`
-    — sampled-bit LSH, recall ≥ the sized target at the bound but
-    subquadratic, the 100 TB path. ``"auto"`` (default) makes the
-    written doctrine SELF-EXECUTING: one count() of the persisted
-    hash table (a pre-flight the persist pays for anyway) feeds
-    :func:`choose_phash_method`, so a default-knob caller on a
-    10⁸-image corpus gets the subquadratic path instead of the
-    measured quadratic wall (r11: 6.2× wall at 10×, 1.4 G
-    intermediate rows at 200 k images). When banded LSH cannot reach
-    the recall target at the radius (``max_hamming ≥ 11`` on 64-bit
-    codes), auto falls back to pigeonhole — correct but quadratic —
-    instead of raising; only an EXPLICIT ``method="banded"`` raises
-    there. Precision is exact under every method (the Hamming verify
-    runs on candidates).
+    cost ~n²(b+1)/2^(64/(b+1)) (right up to ~10⁵ images);
+    ``"banded"`` is :func:`phash_candidates_banded` — recall ≥ the
+    sized target at the bound but subquadratic. ``"auto"`` (default)
+    feeds the eager count of the hash table to
+    :func:`resolve_phash_method` (r11: the pigeonhole ran 6.2× wall at
+    10× data, 1.4 G intermediate rows at 200 k images), falling back
+    to pigeonhole where banded cannot reach the recall target
+    (``max_hamming ≥ 11``); only an EXPLICIT ``method="banded"``
+    raises there. Precision is exact under every method.
 
-    ``bands`` / ``bits_per_band`` tune the banded generator
-    (``bits_per_band`` must scale with log₂(n)); left ``None`` they
-    are sized analytically from the measured corpus count by
-    :func:`auto_banded_params` at a 0.95 recall target AT THE BOUND.
+    ``bands`` / ``bits_per_band`` tune the banded generator; left
+    ``None`` they are sized by :func:`auto_banded_params` at a 0.95
+    recall target AT THE BOUND.
 
-    The hash table PERSISTS across the candidate self-join: hashing
-    is the expensive stage (a codec decode per payload), the blocked
-    self-join references it on BOTH sides, and the closure evaluates
-    the pair set once more — uncached, the decode ran 3×. The cached
-    frame is 16 bytes/row — at 10⁹ images ~16 GB cluster-wide, noise
-    next to the payloads — and is released before returning (the
-    closure has materialized the pairs by then).
+    ``return_quarantined=True`` (with ``on_error="quarantine"``)
+    returns ``(survivors, quarantined_ids)``: the (doc_id) frame of
+    the payloads whose decode failed, checkpointed while the hash
+    cache is still hot, so reading it costs no re-decode."""
+    _check_image_knobs(method, max_hamming)
 
-    ``return_quarantined=True`` (r15, only meaningful with
-    ``on_error="quarantine"``): returns ``(survivors,
-    quarantined_ids)`` where ``quarantined_ids`` is a (doc_id) frame
-    of the payloads whose decode failed — materialized via an eager
-    ``localCheckpoint`` while the hash cache is still hot, so reading
-    it later costs no re-decode. Quarantined rows are the rare
-    exception by doctrine, so the checkpointed frame is tiny (the
-    same boundedness class as the broadcast loser set)."""
-    if method not in ("auto", "pigeonhole", "banded"):
-        raise ValueError(
-            f"method must be 'auto', 'pigeonhole' or 'banded' (got {method!r})"
-        )
-    hashes = with_phash(
-        images, id_col, binary_col, algo=algo, on_error=on_error
-    ).persist()
-    try:
-        # eager cache materialization on EVERY path (auto needs the
-        # count anyway): the candidate self-join references the hash
-        # table on both sides, and two concurrently-scheduled map
-        # stages over an unpopulated cache each run the decode+DCT
-        # scan (the race measured at 2-5x CPU on the video twin, r13)
-        n = hashes.count()
-        resolved = method
+    def pairs(hashes: DataFrame, n: int) -> DataFrame:
+        how, auto_bands, auto_bits = method, None, None
         if method == "auto":
-            resolved, auto_bands, auto_bits = resolve_phash_method(
+            how, auto_bands, auto_bits = resolve_phash_method(
                 max_hamming, n, row_budget=row_budget
             )
-            bands = bands if bands is not None else auto_bands
-            bits_per_band = (
-                bits_per_band if bits_per_band is not None else auto_bits
-            )
-        if resolved == "pigeonhole":
+        elif method == "banded" and (bands is None or bits_per_band is None):
+            auto_bands, auto_bits = auto_banded_params(n, max_hamming)
+        if how == "pigeonhole":
             cand = phash_candidates(hashes, "doc_id", max_hamming=max_hamming)
         else:
-            if bands is None or bits_per_band is None:
-                auto_bands, auto_bits = auto_banded_params(n, max_hamming)
-                bands = bands if bands is not None else auto_bands
-                bits_per_band = (
-                    bits_per_band if bits_per_band is not None else auto_bits
-                )
             cand = phash_candidates_banded(
                 hashes, "doc_id",
-                bands=bands, bits_per_band=bits_per_band, seed=band_seed,
+                bands=auto_bands if bands is None else bands,
+                bits_per_band=auto_bits if bits_per_band is None else bits_per_band,
+                seed=band_seed,
             )
-        pairs = cand.filter(F.col("hamming") <= max_hamming)
-        surv = drop_near_duplicates(
-            images, pairs, id_col=id_col, broadcast_losers=True
-        )
-        if not return_quarantined:
-            return surv
-        q_ids = (
+        return cand.filter(F.col("hamming") <= max_hamming)
+
+    def quarantined(hashes: DataFrame) -> DataFrame:
+        return (
             hashes.filter(F.col("phash").isNull())
             .select("doc_id")
             .localCheckpoint(eager=True)
         )
-        return surv, q_ids
-    finally:
-        hashes.unpersist()
+
+    return drop_signed_duplicates(
+        images, id_col,
+        [with_phash(images, id_col, binary_col, algo=algo, on_error=on_error)],
+        pairs,
+        while_cached=quarantined if return_quarantined else None,
+    )
 
 
 def decontaminate_images(
@@ -702,76 +623,43 @@ def decontaminate_images(
     broadcast_ids: bool = True,
     on_error: str = "raise",
 ) -> DataFrame:
-    """Drop corpus images that are near-duplicates of any EVAL-set
+    """Drop corpus images within ``max_hamming`` bits of any EVAL-set
     image — the image twin of the n-gram text decontaminator
-    (operators/decontaminate.py): training on benchmark images
-    contaminates every evaluation that uses them, and re-encoded /
-    rescaled copies evade exact-hash checks.
+    (operators/decontaminate.py). Returns the clean corpus rows.
 
-    Both sides hash executor-side; candidates come from the
-    pigeonhole blocked join by DELIBERATE default — recall 1.0 at the
-    bound is the property a DECONTAMINATION pass actually needs (a
-    missed eval twin is a silent benchmark leak), and unlike dedup's
-    corpus-squared self-join the cost here is BILINEAR in the small
-    eval side (n_corpus × n_eval × (b+1) / 2^w: at 10⁹ corpus ×
-    10⁴ eval / b=8 that is ~7e11 key-bucket rows spread across the
-    cluster — heavy but shuffle-linear per corpus row, and the price
-    of guaranteed recall). This is why ``method="auto"`` here means
-    "pigeonhole unless told otherwise" rather than the dedup
-    estimator: the quadratic wall :func:`choose_phash_method` guards
-    against does not exist in the bilinear shape, and trading silent
-    eval leaks for candidate rows is the wrong default. Pass
-    ``method="banded"`` explicitly for an eval set so large the
-    bilinear term is unpayable, accepting ~0.95 recall at the bound.
-    Matches anti-join away with the eval-side hash table
-    broadcast-friendly small. Returns the clean corpus rows."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
-        blocked_hamming_matches,
-    )
+    Recall first: the pigeonhole join is the DELIBERATE default
+    (recall 1.0 at the bound; a missed eval twin is a silent benchmark
+    leak), and ``"auto"`` means pigeonhole here. Its cost is BILINEAR
+    in the small eval side (n_corpus × n_eval × (b+1) / 2^w), not the
+    corpus-squared wall that dedup's auto guards against. Pass
+    ``method="banded"`` for an eval set so large the bilinear term is
+    unpayable, accepting ~0.95 recall at the bound.
 
-    if method not in ("auto", "pigeonhole", "banded"):
-        raise ValueError(
-            f"method must be 'auto', 'pigeonhole' or 'banded' (got {method!r})"
-        )
-    # quarantine applies to the CORPUS side only (review-found r14):
-    # a corrupt EVAL payload under quarantine would get a NULL hash,
-    # NULL never joins, and every corpus near-duplicate of that eval
-    # item would silently LEAK into the training set — the exact
-    # failure this operator exists to prevent, with no recoverable
-    # signal (the eval hash table is internal). Eval sets are small
-    # and curated; a corrupt one is a configuration error and raises.
-    c_hash = with_phash(corpus, id_col, binary_col, on_error=on_error)
-    e_hash = with_phash(eval_images, id_col, binary_col)
-    if method == "banded":
-        # size from BOTH sides (the candidate row term is bilinear,
-        # n_corpus·n_eval·L/2^k — k picked from the eval count alone
-        # under-sizes by orders at corpus scale) and count the RAW
-        # inputs: counting the hash frames would run the decode+DCT
-        # scan once for the count and again for the join
-        # (review-found)
+    ``on_error`` quarantines CORPUS payloads only: a quarantined eval
+    image would match nothing, and every corpus near-duplicate of it
+    would silently leak. Eval sets are small and curated, so a corrupt
+    one raises. The hash tables are not cached: each feeds one join."""
+    _check_image_knobs(method, max_hamming)
+
+    def pairs(c_hash: DataFrame, e_hash: DataFrame) -> DataFrame:
+        if method != "banded":
+            return blocked_hamming_matches(
+                c_hash, e_hash, max_hamming, broadcast_b=True
+            )
+        # size from BOTH sides (the candidate row term is bilinear) and
+        # count the RAW inputs: counting the hash frames would run the
+        # decode scan once for the count and again for the join
         n_corpus, n_eval = corpus.count(), eval_images.count()
         bands, bits = auto_banded_params(n_eval, max_hamming, n_b=n_corpus)
-        hits = banded_hamming_matches(
+        return banded_hamming_matches(
             c_hash, e_hash, max_hamming, bands=bands, bits_per_band=bits
         )
-    else:
-        hits = blocked_hamming_matches(
-            c_hash, e_hash, max_hamming, broadcast_b=True
-        )
-    contaminated = hits.select(F.col("id_a").alias(id_col)).distinct()
-    # broadcast the ID set (r13): the audio/video twins measured the
-    # plain anti-join shuffling the corpus WITH payloads — broadcast
-    # keeps pixels on the scan side. ``broadcast_ids=False`` is the
-    # escape for pathological contamination (a corpus-sized ID set
-    # would hit the broadcast/driver limit): the plain anti-join
-    # degrades to an AQE-planned shuffle instead of an OOM (r14).
-    # THRESHOLD (r15, measured — scripts/decontam_broadcast_rung.py
-    # at sf0.1, 10 %/50 % contamination): default True until the id
-    # set nears broadcast/driver limits (~10⁷-10⁸ 8-byte ids). Below
-    # that the escape is ~free — AQE re-planned the post-distinct id
-    # side back to a broadcast at runtime (identical survivors,
-    # ≤0.4 MB shuffle, wall within ±10 % of explicit broadcast) —
-    # and beyond it the worst case is one payload-bearing corpus
-    # shuffle instead of a driver OOM.
-    ids = F.broadcast(contaminated) if broadcast_ids else contaminated
-    return corpus.join(ids, id_col, "left_anti")
+
+    return drop_signed_duplicates(
+        corpus, id_col,
+        [with_phash(corpus, id_col, binary_col, on_error=on_error),
+         with_phash(eval_images, id_col, binary_col)],
+        pairs,
+        broadcast_ids=broadcast_ids,
+        cache=False,
+    )

@@ -48,11 +48,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.codecs import (
-    MALFORMED_PAYLOAD_ERRORS,
+    decode_avi_frames,
+    decode_policy,
 )
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
     blocked_hamming_matches,
-    drop_near_duplicates,
+    drop_signed_duplicates,
     vote_best_offset,
 )
 
@@ -84,29 +85,25 @@ def with_frame_phashes(
     counts toward the clip's frame total (the match_frac denominator
     must stay the FULL sampled count so mostly-constant clips can't
     qualify on their few live frames), but NULL never joins.
-
-    ``on_error="quarantine"`` (r14) emits NO frame rows for a clip
-    whose container decode throws instead of failing the task: absent
-    from the frame table, the clip can never vote or match and flows
-    through dedup/decontamination as a survivor; recover the
-    quarantine set by anti-joining clip ids against the frame table.
-    Default ``"raise"`` keeps exact-pipeline semantics (doctrine in
-    :func:`~...phash.with_phash`)."""
+    ``on_error`` follows :func:`~...codecs.decode_policy`: a
+    quarantined clip emits NO frame rows, so it can never vote or
+    match and survives dedup; anti-join the clip ids against the frame
+    table to recover the quarantine set."""
     if every_n <= 0:
         raise ValueError("every_n must be positive")
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(
-            f"on_error must be 'raise' or 'quarantine' (got {on_error!r})"
-        )
-    quarantine = on_error == "quarantine"
+    # frame_step pushes the every_n sampling INTO the container decode
+    # (r16 optimization round): unsampled MJPEG frames skip their
+    # Huffman/IDCT work outright, so decode cost is proportional to
+    # frames hashed, not frames stored. Sampled indices are j*every_n.
+    decode = decode_policy(
+        lambda payload: decode_avi_frames(payload, frame_step=every_n)[0],
+        on_error,
+    )
 
     def run(batches: Iterator) -> Iterator:
         import numpy as np
         import pandas as pd
 
-        from sensorstream_scalable_sensor_data_pipeline_spark.operators.codecs import (
-            decode_avi_frames,
-        )
         from sensorstream_scalable_sensor_data_pipeline_spark.operators.phash import (
             _to_gray,
             phash64_pixels,
@@ -117,23 +114,9 @@ def with_frame_phashes(
             for doc_id, payload in zip(
                 pdf[id_col].astype("int64"), pdf[binary_col]
             ):
-                # frame_step pushes the every_n sampling INTO the
-                # container decode (r16 optimization round): unsampled
-                # MJPEG frames skip their Huffman/IDCT work outright,
-                # so decode cost is proportional to frames hashed, not
-                # frames stored. Sampled indices are j*every_n — the
-                # same fi sequence the old full-decode loop emitted.
-                if quarantine:
-                    try:
-                        frames, _fps = decode_avi_frames(
-                            payload, frame_step=every_n
-                        )
-                    except MALFORMED_PAYLOAD_ERRORS:
-                        continue  # quarantined: no frame rows
-                else:
-                    frames, _fps = decode_avi_frames(
-                        payload, frame_step=every_n
-                    )
+                frames = decode(payload)
+                if frames is None:
+                    continue  # quarantined: no frame rows
                 for j in range(frames.shape[0]):
                     ids.append(int(doc_id))
                     idxs.append(j * every_n)
@@ -156,97 +139,66 @@ def with_frame_phashes(
     )
 
 
-def video_candidates(
-    frame_hashes: DataFrame,
-    id_col: str = "doc_id",
-    min_match_frac: float = 0.5,
-    max_hamming: int = 0,
-) -> DataFrame:
-    """Near-dup video pairs from (id, frame_idx, phash) rows: blocked
-    equi-join on the frame hash (exact by default; pigeonhole blocks
-    when ``max_hamming > 0``), most-common frame-offset vote, keep
-    pairs whose vote covers ≥ ``min_match_frac`` of the shorter
-    clip's sampled frames. Returns (id_a, id_b, match_frac, offset).
-    """
+def _check_video_knobs(min_match_frac: float, max_hamming: int) -> None:
+    """The knob checks of the video family, run before any decode."""
     if not (0.0 < min_match_frac <= 1.0):
         raise ValueError("min_match_frac must be in (0, 1]")
-    if max_hamming < 0:
-        raise ValueError("max_hamming must be non-negative")
-    lens = frame_hashes.groupBy(F.col(id_col)).agg(
-        F.count(F.lit(1)).alias("n_frames")
-    )
-    matched = _frame_matches(
-        frame_hashes, frame_hashes, max_hamming, id_col
-    ).filter(F.col("id_a") < F.col("id_b"))
-    return _score_offset_votes(matched, lens, lens, id_col, min_match_frac)
+    if not 0 <= max_hamming < 64:
+        raise ValueError(f"max_hamming must be in [0, 63] (got {max_hamming})")
 
 
-def _frame_matches(
+def _offset_votes(
     frames_a: DataFrame,
     frames_b: DataFrame,
-    max_hamming: int,
-    id_col: str,
-    broadcast_b: bool = False,
-) -> DataFrame:
-    """Frame-level matches between two frame-hash tables as
-    UNORDERED (id_a, id_b, off) rows — exact-value equi-join at
-    ``max_hamming == 0``, the shared blocked-pigeonhole match
-    otherwise. Self-join callers apply ``id_a < id_b`` on top; the
-    cross-table path keeps every pair (two distinct tables may reuse
-    numeric ids, so no id comparison is meaningful there).
-
-    Constant (black/white/gray) frames were sentinel-marked NULL at
-    hash time (pixel-variance check — see ``_DEGENERATE_PTP``); drop
-    them here, AFTER callers have taken their n_frames counts, so
-    the match_frac denominator keeps the FULL sampled count and a
-    clip that is mostly constant frames cannot reach the threshold
-    on its few live frames."""
-    frames_a = frames_a.filter(F.col("phash").isNotNull())
-    frames_b = frames_b.filter(F.col("phash").isNotNull())
-    if max_hamming == 0:
-        a = frames_a.select(
-            F.col("phash").alias("v"),
-            F.col(id_col).alias("id_a"),
-            F.col("frame_idx").alias("idx_a"),
-        )
-        b = frames_b.select(
-            F.col("phash").alias("v"),
-            F.col(id_col).alias("id_b"),
-            F.col("frame_idx").alias("idx_b"),
-        )
-        return (
-            a.join(F.broadcast(b) if broadcast_b else b, "v")
-            .select(
-                "id_a", "id_b",
-                (F.col("idx_a") - F.col("idx_b")).alias("off"),
-            )
-        )
-    # shared blocked-pigeonhole match (range-validated, per-frame-
-    # pair deduped inside the helper)
-    return blocked_hamming_matches(
-        frames_a,
-        frames_b,
-        max_hamming,
-        id_col=id_col,
-        carry_cols=("frame_idx",),
-        broadcast_b=broadcast_b,
-    ).select(
-        "id_a", "id_b",
-        (F.col("frame_idx_a") - F.col("frame_idx_b")).alias("off"),
-    )
-
-
-def _score_offset_votes(
-    matched: DataFrame,
-    lens_a: DataFrame,
-    lens_b: DataFrame,
     id_col: str,
     min_match_frac: float,
+    max_hamming: int,
+    broadcast_b: bool = False,
+    self_join: bool = False,
 ) -> DataFrame:
-    """Most-common-offset vote over frame matches, scored against the
-    shorter clip's FULL sampled frame count. Returns
-    (id_a, id_b, match_frac, offset) above the threshold."""
-    best = vote_best_offset(matched)
+    """Frame match → offset vote → shorter-clip fraction between two
+    frame-hash tables; see :func:`video_candidates_cross`.
+    ``self_join`` (both sides are one table) orders pairs
+    ``id_a < id_b`` before the vote and counts frames once."""
+    _check_video_knobs(min_match_frac, max_hamming)
+    # degenerate frames (NULL hash, see _DEGENERATE_PTP) never match,
+    # but they stay in the n_frames counts below, so a clip that is
+    # mostly constant frames cannot qualify on its few live frames
+    live_a = frames_a.filter(F.col("phash").isNotNull())
+    live_b = frames_b.filter(F.col("phash").isNotNull())
+    if max_hamming == 0:
+        a = live_a.select(
+            F.col("phash").alias("v"),
+            F.col(id_col).alias("id_a"),
+            F.col("frame_idx").alias("frame_idx_a"),
+        )
+        b = live_b.select(
+            F.col("phash").alias("v"),
+            F.col(id_col).alias("id_b"),
+            F.col("frame_idx").alias("frame_idx_b"),
+        )
+        matched = a.join(F.broadcast(b) if broadcast_b else b, "v")
+    else:
+        matched = blocked_hamming_matches(
+            live_a, live_b, max_hamming, id_col=id_col,
+            carry_cols=("frame_idx",), broadcast_b=broadcast_b,
+        )
+    if self_join:
+        matched = matched.filter(F.col("id_a") < F.col("id_b"))
+    best = vote_best_offset(
+        matched.select(
+            "id_a", "id_b",
+            (F.col("frame_idx_a") - F.col("frame_idx_b")).alias("off"),
+        )
+    )
+
+    def lengths(frames: DataFrame) -> DataFrame:
+        return frames.groupBy(F.col(id_col)).agg(
+            F.count(F.lit(1)).alias("n_frames")
+        )
+
+    lens_a = lengths(frames_a)
+    lens_b = lens_a if self_join else lengths(frames_b)
     la = lens_a.select(
         F.col(id_col).alias("id_a"), F.col("n_frames").alias("n_a")
     )
@@ -269,6 +221,22 @@ def _score_offset_votes(
     )
 
 
+def video_candidates(
+    frame_hashes: DataFrame,
+    id_col: str = "doc_id",
+    min_match_frac: float = 0.5,
+    max_hamming: int = 0,
+) -> DataFrame:
+    """Near-dup video pairs within one (id, frame_idx, phash) table:
+    the self-join form of :func:`video_candidates_cross`, pairs
+    ordered ``id_a < id_b`` before the vote. Returns (id_a, id_b,
+    match_frac, offset)."""
+    return _offset_votes(
+        frame_hashes, frame_hashes, id_col, min_match_frac, max_hamming,
+        self_join=True,
+    )
+
+
 def video_candidates_cross(
     frames_a: DataFrame,
     frames_b: DataFrame,
@@ -277,31 +245,21 @@ def video_candidates_cross(
     max_hamming: int = 0,
     broadcast_b: bool = True,
 ) -> DataFrame:
-    """Cross-table near-dup video pairs: the same frame-match →
-    offset-vote → shorter-clip-fraction chain as
-    :func:`video_candidates`, but between TWO frame-hash tables
-    (id_a from ``frames_a``, id_b from ``frames_b``). No
-    ``id_a < id_b`` ordering: the sides are distinct tables and
-    every (a, b) hit matters. ``broadcast_b`` (default on) marks
-    ``frames_b`` as the small side — the eval set in decontamination
-    — broadcasting it through the frame join; pass False when
-    neither side is broadcast-small (accepted-state tables ride the
-    keyed shuffle instead)."""
-    if not (0.0 < min_match_frac <= 1.0):
-        raise ValueError("min_match_frac must be in (0, 1]")
-    if max_hamming < 0:
-        raise ValueError("max_hamming must be non-negative")
-    lens_a = frames_a.groupBy(F.col(id_col)).agg(
-        F.count(F.lit(1)).alias("n_frames")
-    )
-    lens_b = frames_b.groupBy(F.col(id_col)).agg(
-        F.count(F.lit(1)).alias("n_frames")
-    )
-    matched = _frame_matches(
-        frames_a, frames_b, max_hamming, id_col, broadcast_b=broadcast_b
-    )
-    return _score_offset_votes(
-        matched, lens_a, lens_b, id_col, min_match_frac
+    """Near-dup video pairs between two frame-hash tables (id_a from
+    ``frames_a``, id_b from ``frames_b``): frames match on the exact
+    hash value (the shared blocked-pigeonhole match within
+    ``max_hamming`` bits when it is > 0), each pair votes its most
+    common frame offset, and a pair qualifies when that vote covers ≥
+    ``min_match_frac`` of the shorter clip's sampled frames. No
+    ``id_a < id_b`` ordering: two distinct tables may reuse numeric
+    ids, and every (a, b) hit matters. ``broadcast_b`` (default on)
+    marks ``frames_b`` as the small side — the eval set in
+    decontamination; pass False when neither side is broadcast-small
+    (accepted-state tables ride the keyed shuffle instead). Returns
+    (id_a, id_b, match_frac, offset)."""
+    return _offset_votes(
+        frames_a, frames_b, id_col, min_match_frac, max_hamming,
+        broadcast_b=broadcast_b,
     )
 
 
@@ -316,75 +274,29 @@ def decontaminate_videos(
     broadcast_ids: bool = True,
     on_error: str = "raise",
 ) -> DataFrame:
-    """Drop corpus clips that are near-duplicates of any EVAL-set
-    video — the video twin of phash.decontaminate_images /
-    audio_fp.decontaminate_audio: training on benchmark footage
-    contaminates every evaluation that uses it, and re-encoded /
-    head-trimmed copies evade exact-hash checks.
+    """Drop corpus clips that match any EVAL-set clip under
+    :func:`video_candidates_cross` — the video twin of
+    phash.decontaminate_images. Returns the clean corpus rows
+    (lifecycle: :func:`~...dedup_fuzzy.drop_signed_duplicates`).
 
-    ``max_hamming`` defaults to 2 HERE, unlike the dedup path's 0:
-    recall is the one property a decontamination pass exists for,
-    and exact-value frame matching is measured NOT recall-1.0
-    against lossy re-encodes (per-seed bit-exact-frame tails fall
-    under the vote threshold — see :func:`dedup_videos`); the
-    radius-2 pigeonhole absorbs the 1-2 bit codec noise at near-zero
-    cost. The same deliberate recall-first asymmetry as
-    ``decontaminate_images``' pigeonhole default.
-
-    Pixels never leave the executors on either side — only 8-byte
-    frame hashes join, with the eval side broadcast. Same lifecycle
-    as the audio twin: both frame-hash tables feed two consumers
-    (the n_frames count and the match join), so both persist and the
-    contaminated-ID set is materialized through
-    ``materialize_and_release``, leaving the session cache clean.
-    Returns the clean corpus rows."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.caching import (
-        materialize_and_release,
+    Recall first: ``max_hamming`` defaults to 2 HERE, unlike the
+    dedup path's 0, because exact-value frame matching is measured
+    NOT recall-1.0 against lossy re-encodes (see :func:`dedup_videos`)
+    and the radius-2 pigeonhole absorbs the 1-2 bit codec noise at
+    near-zero cost. ``on_error`` quarantines CORPUS clips only: a
+    quarantined eval clip emits no frame rows and would let its
+    corpus near-duplicates leak, so a corrupt eval set raises."""
+    _check_video_knobs(min_match_frac, max_hamming)
+    return drop_signed_duplicates(
+        corpus, id_col,
+        [with_frame_phashes(corpus, id_col, binary_col, every_n, on_error=on_error),
+         with_frame_phashes(eval_videos, id_col, binary_col, every_n)],
+        lambda fh_c, fh_e, *_counts: video_candidates_cross(
+            fh_c, fh_e, "doc_id",
+            min_match_frac=min_match_frac, max_hamming=max_hamming,
+        ),
+        broadcast_ids=broadcast_ids,
     )
-
-    # corpus-side quarantine only — a quarantined EVAL clip emits no
-    # frame rows and can protect nothing (every corpus near-dup of it
-    # leaks silently); eval sets are curated, so a corrupt one raises
-    # (review-found r14, same rule as the image/audio twins)
-    fh_c = with_frame_phashes(
-        corpus, id_col, binary_col, every_n, on_error=on_error
-    ).persist()
-    fh_e = with_frame_phashes(
-        eval_videos, id_col, binary_col, every_n
-    ).persist()
-    # materialize the caches EAGERLY before building the consumer
-    # plan: the per-clip frame count and the match join are parallel
-    # branches of one action, and two concurrently-scheduled stages
-    # reading a not-yet-populated cache EACH recompute it — i.e. the
-    # full corpus decodes twice, nondeterministically (r13 found:
-    # warm-rep CPU on this path alternated 90 vs 450 CPU-s on
-    # identical inputs; stage-level REST attribution showed the
-    # duplicate decode). One count() per table pins one decode.
-    fh_c.count()
-    fh_e.count()
-    hits = video_candidates_cross(
-        fh_c,
-        fh_e,
-        id_col=id_col,
-        min_match_frac=min_match_frac,
-        max_hamming=max_hamming,
-    )
-    contaminated = materialize_and_release(
-        hits.select(F.col("id_a").alias(id_col)).distinct(), fh_c, fh_e
-    )
-    # BROADCAST the contaminated-ID set — same r13 finding as the
-    # audio twin: the plain anti-join shuffled the corpus payloads
-    # (300 MB at sf0.1); the broadcast keeps pixels on the scan
-    # side. ``broadcast_ids=False`` escapes to a plain anti-join for
-    # contamination so extreme the ID set outgrows the broadcast /
-    # driver limits (r14). THRESHOLD (r15, measured on the image twin
-    # — scripts/decontam_broadcast_rung.py): default True until the
-    # id set nears broadcast limits (~10⁷-10⁸ ids); the escape then
-    # trades one payload-bearing corpus shuffle for the OOM, and
-    # below that AQE re-broadcasts the tiny id side at runtime
-    # (identical survivors, ≤0.4 MB shuffle at sf0.1).
-    ids = F.broadcast(contaminated) if broadcast_ids else contaminated
-    return corpus.join(ids, id_col, "left_anti")
 
 
 def dedup_videos(
@@ -396,40 +308,28 @@ def dedup_videos(
     max_hamming: int = 0,
     on_error: str = "raise",
 ) -> DataFrame:
-    """End-to-end near-duplicate VIDEO dedup: sample+hash frames,
-    offset-consistent vote, transitive closure, keep the min-id
-    canonical per cluster. Frame-hash table persists across the
-    self-join (the decode is the expensive stage); the loser-ID
-    anti-join broadcasts so video payloads never shuffle.
+    """Near-duplicate VIDEO dedup: clips matched by
+    :func:`video_candidates` (one frame offset covering ≥
+    ``min_match_frac`` of the shorter clip's sampled frames) form
+    clusters, and the min id of each survives (lifecycle:
+    :func:`~...dedup_fuzzy.drop_signed_duplicates`).
 
-    Choosing ``max_hamming`` — a WORKLOAD property, not a scale one
-    (contrast the image family's ``method="auto"``, which a corpus
-    count can size): exact-value frame matching (the 0 default) is
-    the scan-cheap setting for byte-preserving duplicates (container
-    remux, head/tail trims, re-wraps), but it is NOT recall-1.0
-    against lossy re-encodes — measured (r12): an MJPEG-q85 copy's
-    bit-exact frame rate is ~83 % on AVERAGE with per-seed tails
-    below the 0.5 vote (one sf0.01 planted variant kept only 2 of 6
-    sampled frames exact and survived). Codec noise is a 1-2 bit
-    per-frame phenomenon, so ``max_hamming=2`` restores recall at
-    the small-radius pigeonhole's near-free cost (3 blocks × 21-bit
-    keys, measured 1.6× at 10× data — no quadratic term at this
-    radius). Rule: re-encoded inputs → 2; byte-preserving inputs →
-    0; radii ≥ 8 would inherit the image family's banded doctrine."""
-    fh = with_frame_phashes(
-        videos, id_col, binary_col, every_n, on_error=on_error
-    ).persist()
-    try:
-        # eager cache materialization — the frame-count and
-        # frame-match branches race an unpopulated cache into a
-        # duplicate decode otherwise (see decontaminate_videos)
-        fh.count()
-        pairs = video_candidates(
+    Choosing ``max_hamming`` is a WORKLOAD decision, not a scale one:
+    exact-value frame matching (the 0 default) is the scan-cheap
+    setting for byte-preserving duplicates (remux, trims, re-wraps),
+    but it is NOT recall-1.0 against lossy re-encodes — measured
+    (r12): an MJPEG-q85 copy keeps ~83 % of frames bit-exact ON
+    AVERAGE, with per-seed tails below the 0.5 vote (one sf0.01
+    planted variant kept 2 of 6 sampled frames). ``max_hamming=2``
+    restores recall at the small-radius pigeonhole's near-free cost
+    (3 blocks × 21-bit keys, measured 1.6× at 10× data). Rule:
+    re-encoded inputs → 2; byte-preserving inputs → 0."""
+    _check_video_knobs(min_match_frac, max_hamming)
+    return drop_signed_duplicates(
+        videos, id_col,
+        [with_frame_phashes(videos, id_col, binary_col, every_n, on_error=on_error)],
+        lambda fh, _n: video_candidates(
             fh, "doc_id",
             min_match_frac=min_match_frac, max_hamming=max_hamming,
-        )
-        return drop_near_duplicates(
-            videos, pairs, id_col=id_col, broadcast_losers=True
-        )
-    finally:
-        fh.unpersist()
+        ),
+    )

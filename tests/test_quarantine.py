@@ -9,10 +9,14 @@ quarantine set is recoverable with one filter."""
 
 from __future__ import annotations
 
+import contextlib
+import uuid
+
 import numpy as np
 import pytest
 
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.audio_fp import (
+    decontaminate_audio,
     dedup_audio,
     synth_clip,
     with_audio_fingerprint,
@@ -26,11 +30,13 @@ from sensorstream_scalable_sensor_data_pipeline_spark.operators.multimodal impor
     extract_features,
 )
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.phash import (
+    decontaminate_images,
     dedup_phash,
     synth_image,
     with_phash,
 )
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.video_dedup import (
+    decontaminate_videos,
     dedup_videos,
     with_frame_phashes,
 )
@@ -371,27 +377,193 @@ def test_quarantine_contract_excludes_runtime_failures():
     MemoryError / executor failure must still fail the task, not
     silently degrade a good row to a can't-match-anything NULL
     signature. All four decode loops (phash, audio_fp, video_dedup,
-    multimodal) catch exactly this tuple."""
+    multimodal) route their decode through ``codecs.decode_policy``,
+    which catches exactly this tuple."""
     import inspect
 
     from sensorstream_scalable_sensor_data_pipeline_spark.operators import (
         audio_fp,
+        codecs,
         multimodal,
         phash,
         video_dedup,
     )
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.codecs import (
         MALFORMED_PAYLOAD_ERRORS,
+        decode_policy,
     )
 
     assert MALFORMED_PAYLOAD_ERRORS == (ValueError, NotImplementedError)
     for exc in (MemoryError, RuntimeError, OSError, KeyboardInterrupt):
         assert not issubclass(exc, MALFORMED_PAYLOAD_ERRORS)
-    # no decode loop regresses to a bare `except Exception`
+    # no decode loop regresses to a bare `except Exception`, and each
+    # decodes through the one policy
     for mod in (audio_fp, multimodal, phash, video_dedup):
         src = inspect.getsource(mod)
         assert "except Exception" not in src, mod.__name__
-        assert "except MALFORMED_PAYLOAD_ERRORS" in src, mod.__name__
+        assert "decode_policy(" in src, mod.__name__
+    policy_src = inspect.getsource(codecs.decode_policy)
+    assert "except MALFORMED_PAYLOAD_ERRORS" in policy_src
+    assert "except Exception" not in policy_src
+
+    # behaviour: the policy maps exactly the malformed tuple to None
+    def raising(exc):
+        def decode(payload):
+            raise exc("boom")
+
+        return decode
+
+    quarantined = decode_policy(lambda p: p * 2, "quarantine")
+    assert quarantined(21) == 42
+    for exc in (ValueError, NotImplementedError):
+        assert decode_policy(raising(exc), "quarantine")(b"") is None
+        with pytest.raises(exc):
+            decode_policy(raising(exc), "raise")(b"")
+    for exc in (MemoryError, RuntimeError, OSError):
+        with pytest.raises(exc):
+            decode_policy(raising(exc), "quarantine")(b"")
+        with pytest.raises(exc):
+            decode_policy(raising(exc), "raise")(b"")
+    with pytest.raises(ValueError, match="on_error"):
+        decode_policy(lambda p: p, "skip")
+
+
+@contextlib.contextmanager
+def _job_group(spark):
+    """Collect the ids of every Spark job the block runs, on a cleared
+    session cache."""
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    gid = f"lifecycle-{uuid.uuid4().hex}"
+    jobs: list[int] = []
+    sc.setJobGroup(gid, gid)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _eval_rows(spark, kind):
+    payload = {
+        "images": encode_png(synth_image(1, h=48, w=48)),
+        "clips": encode_wav(synth_clip(51), RATE),
+        "vids": encode_avi(
+            np.stack([synth_image(10 + i, h=16, w=16) for i in range(4)]),
+            codec="dib",
+        ),
+    }[kind]
+    return spark.createDataFrame([(500, payload)], "doc_id long, payload binary")
+
+
+_BAD_KNOBS = [
+    pytest.param(
+        lambda s: dedup_phash(
+            _images(s, True), "doc_id", "payload", max_hamming=-1,
+            on_error="quarantine",
+        ),
+        "max_hamming", id="dedup_phash",
+    ),
+    pytest.param(
+        lambda s: decontaminate_images(
+            _images(s, True), _eval_rows(s, "images"), max_hamming=64,
+            on_error="quarantine",
+        ),
+        "max_hamming", id="decontaminate_images",
+    ),
+    pytest.param(
+        lambda s: dedup_audio(
+            _clips(s, True), "doc_id", "payload", min_probe_frames=0,
+            on_error="quarantine",
+        ),
+        "min_probe_frames", id="dedup_audio",
+    ),
+    pytest.param(
+        lambda s: decontaminate_audio(
+            _clips(s, True), _eval_rows(s, "clips"), min_probe_frames=0,
+            on_error="quarantine",
+        ),
+        "min_probe_frames", id="decontaminate_audio",
+    ),
+    pytest.param(
+        lambda s: dedup_videos(
+            _vids(s, True), "doc_id", "payload", every_n=1,
+            min_match_frac=0.0, on_error="quarantine",
+        ),
+        "min_match_frac", id="dedup_videos",
+    ),
+    pytest.param(
+        lambda s: decontaminate_videos(
+            _vids(s, True), _eval_rows(s, "vids"), every_n=1,
+            min_match_frac=0.0, on_error="quarantine",
+        ),
+        "min_match_frac", id="decontaminate_videos",
+    ),
+]
+
+
+@pytest.mark.parametrize("call, knob", _BAD_KNOBS)
+def test_invalid_knob_rejected_before_any_decode(spark, call, knob):
+    """Every media dedup and decontamination entry point rejects an
+    invalid knob before its signer runs: no Spark job, and nothing
+    left in the session cache."""
+    with _job_group(spark) as jobs, pytest.raises(ValueError, match=knob):
+        call(spark)
+    assert jobs == []
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        pytest.param(
+            lambda s: decontaminate_audio(
+                _clips(s, True), _eval_rows(s, "clips")
+            ),
+            id="decontaminate_audio",
+        ),
+        pytest.param(
+            lambda s: decontaminate_videos(
+                _vids(s, True), _eval_rows(s, "vids"), every_n=1
+            ),
+            id="decontaminate_videos",
+        ),
+    ],
+)
+def test_decontaminate_releases_cache_on_corrupt_corpus(spark, call):
+    """Under the default ``on_error="raise"`` a corrupt corpus payload
+    fails the call, and both cached signature tables are released."""
+    spark.catalog.clearCache()
+    with pytest.raises(Exception):
+        call(spark).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize(
+    "decontaminate, corpus, kind, kw",
+    [
+        pytest.param(decontaminate_images, _images, "images", {}, id="images"),
+        pytest.param(decontaminate_audio, _clips, "clips", {}, id="audio"),
+        pytest.param(
+            decontaminate_videos, _vids, "vids", {"every_n": 1}, id="videos"
+        ),
+    ],
+)
+def test_decontaminate_custom_id_col(spark, decontaminate, corpus, kind, kw):
+    """A corpus keyed by a column other than ``doc_id`` decontaminates
+    like the default: the signature tables are always keyed
+    ``doc_id``, and only the final anti-join speaks ``id_col``."""
+
+    def keyed(df):
+        return df.withColumnRenamed("doc_id", "clip_id")
+
+    spark.catalog.clearCache()
+    kept = decontaminate(
+        keyed(corpus(spark, True)), keyed(_eval_rows(spark, kind)),
+        id_col="clip_id", on_error="quarantine", **kw,
+    )
+    assert {r["clip_id"] for r in kept.collect()} == {0, 2, 100, 900, 901}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_quarantine_identity_within_batch_and_firehose(spark, tmp_path):
