@@ -157,10 +157,10 @@ def choose_bucket_seconds(
     by their burst factor, which is exactly the residual the hatch
     tolerates (a 10× burst still sorts 5 M rows, not the key's whole
     history). If NO key exceeds the target the data's full span is
-    returned — one bucket, i.e. the decomposition degenerates to the
-    plain join plus one tiny summary pass, which is the correct
-    no-skew behavior (don't pay split overhead for skew that isn't
-    there).
+    returned — one bucket; :func:`asof_join_bucketed` with
+    ``bucket_seconds="auto"`` does not run that one-bucket plan but
+    routes to :func:`asof_join`, which is the correct no-skew behavior
+    (don't pay split overhead for skew that isn't there).
 
     At 100 TB this pre-flight is one map-side-combined aggregate over
     the join's own input — cheap relative to the join, and the
@@ -177,23 +177,27 @@ def choose_bucket_seconds(
     pre-flight re-evaluates them once — ``.cache()`` the inputs or
     pin an int ``bucket_seconds`` to skip it."""
     keys = [on] if isinstance(on, str) else list(on)
+    bucket, span = _hot_bucket_and_span(df, keys, time_col, target_rows, right)
+    return bucket if bucket is not None else max(1, int(span or 0) + 1)
+
+
+def _hot_bucket_and_span(
+    df: DataFrame,
+    keys: list[str],
+    time_col: str,
+    target_rows: int,
+    right: DataFrame | None = None,
+) -> tuple[int | None, float | None]:
+    """ONE fused aggregate over the (key, time) projection of ``df``,
+    unioned with ``right``'s when given. Returns (the bucket seconds
+    that put ~``target_rows`` rows in each bucket of the densest key
+    over ``target_rows``, or None when no key is over it; the global
+    span in seconds), so no sizing entry point scans its input twice
+    (review-found: an unfused span fallback made the common no-skew
+    'auto' path pay a second full pass)."""
     proj = df.select(*keys, time_col)
     if right is not None:
         proj = proj.unionByName(right.select(*keys, time_col))
-    density, span = _hot_density_and_span(proj, keys, time_col, target_rows)
-    if density is not None:
-        return max(1, int(target_rows / density))
-    return max(1, int(span or 0) + 1)
-
-
-def _hot_density_and_span(
-    proj: DataFrame, keys: list[str], time_col: str, target_rows: int
-) -> tuple:
-    """ONE fused aggregate over the (key, time) projection returning
-    (hottest-qualifying-key rows/s or None, global span seconds) — so
-    neither sizing entry point scans its input twice (review-found:
-    an unfused span fallback made the common no-skew 'auto' path pay
-    a second full pass)."""
     per_key = proj.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("_n"),
         (
@@ -212,7 +216,9 @@ def _hot_density_and_span(
         ).alias("_hot_density"),
         ((F.max("_hi") - F.min("_lo")) / F.lit(1_000_000.0)).alias("_span_s"),
     ).first()
-    return stats["_hot_density"], stats["_span_s"]
+    density = stats["_hot_density"]
+    bucket = None if density is None else max(1, int(target_rows / density))
+    return bucket, stats["_span_s"]
 
 
 def hot_key_bucket_seconds(
@@ -229,12 +235,7 @@ def hot_key_bucket_seconds(
     operators (:func:`~...funnel.funnel_match`) use it directly as a
     plain-vs-bucketed ROUTE decision."""
     keys = [on] if isinstance(on, str) else list(on)
-    density, _span = _hot_density_and_span(
-        df.select(*keys, time_col), keys, time_col, target_rows
-    )
-    if density is None:
-        return None
-    return max(1, int(target_rows / density))
+    return _hot_bucket_and_span(df, keys, time_col, target_rows)[0]
 
 
 def asof_join_bucketed(
@@ -275,11 +276,14 @@ def asof_join_bucketed(
     should hold ~10⁵-10⁶ rows — big enough that per-bucket task
     overhead is noise, small enough that no single sort dominates.
     The default ``"auto"`` (r10) measures it: one pre-flight aggregate
-    over ``left`` picks the size from the hottest key's observed
-    rows-per-second density (:func:`choose_bucket_seconds`), and
-    degenerates to a single bucket when no key is hot enough to need
-    splitting — the hand-tuned constant was exactly the knob that
-    goes stale as traffic grows. Pass an int to pin it.
+    over the union of both sides picks the size from the hottest key's
+    observed rows-per-second density (:func:`choose_bucket_seconds`),
+    and routes to :func:`asof_join` when no key holds more than
+    :data:`AUTO_BUCKET_TARGET_ROWS` rows — there the three stages
+    split nothing and ran 14 Spark jobs against the plain join's 4.
+    The hand-tuned constant was exactly the knob that goes stale as
+    traffic grows. Pass an int to pin it; an int always runs the
+    bucketed plan.
 
     Measured (single 8 M-row hot key, 16 buckets, local[8], values
     consumed): plain 5.3-6.8 s → bucketed 2.8-3.1 s, identical
@@ -295,7 +299,11 @@ def asof_join_bucketed(
     boundaries) is pinned in tests/test_asof.py.
     """
     if bucket_seconds == "auto":
-        bucket_seconds = choose_bucket_seconds(left, on, time_col, right=right)
+        bucket_seconds = _hot_bucket_and_span(
+            left, [on], time_col, AUTO_BUCKET_TARGET_ROWS, right
+        )[0]
+        if bucket_seconds is None:
+            return asof_join(left, right, on, time_col, value_cols)
     us = 1_000_000 * int(bucket_seconds)
     bucket = F.floor(F.unix_micros(F.col(time_col)) / F.lit(us))
     r = _dedup_state_rows(right, [on], time_col, value_cols)

@@ -719,7 +719,29 @@ def blocked_hamming_matches(
     ``(id_a, id_b[, <carry>_a, <carry>_b], hamming)`` for every
     (a-row, b-row) pair within the bound; callers apply their own
     ``id_a < id_b`` filter for self-joins. ``broadcast_b`` marks the
-    b side broadcast-joinable (e.g. a small eval set)."""
+    b side broadcast-joinable (e.g. a small eval set).
+    ``max_hamming=0`` is the exact-hash equi-join: one key, so a pair
+    meets once and needs neither the verify nor the dedup."""
+    out_cols = (
+        ["id_a", "id_b"]
+        + [f"{c}_a" for c in carry_cols]
+        + [f"{c}_b" for c in carry_cols]
+    )
+    if max_hamming == 0:
+
+        def exact(df: DataFrame, side: str) -> DataFrame:
+            return df.select(
+                F.col(hash_col).alias("_v"),
+                F.col(id_col).alias(f"id_{side}"),
+                *[F.col(c).alias(f"{c}_{side}") for c in carry_cols],
+            )
+
+        rhs = exact(b, "b")
+        return (
+            exact(a, "a")
+            .join(F.broadcast(rhs) if broadcast_b else rhs, "_v")
+            .select(*out_cols, F.lit(0).alias("hamming"))
+        )
     specs = hamming_block_specs(hash_col, bits, max_hamming)
 
     def blocked(df: DataFrame, side: str) -> DataFrame:
@@ -740,11 +762,6 @@ def blocked_hamming_matches(
     rhs = blocked(b, "b")
     if broadcast_b:
         rhs = F.broadcast(rhs)
-    out_cols = (
-        ["id_a", "id_b"]
-        + [f"{c}_a" for c in carry_cols]
-        + [f"{c}_b" for c in carry_cols]
-    )
     ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     return (
         blocked(a, "a")

@@ -254,7 +254,13 @@ def phash_candidates(
     operators/dedup_fuzzy.py::simhash_candidates, reused verbatim:
     the blocking is a property of 64-bit Hamming space, not of the
     hash that produced the code). Returns (id_a, id_b, hamming);
-    filter on hamming to taste — pHash practice: ≤10 near-dup."""
+    filter on hamming to taste — pHash practice: ≤10 near-dup.
+    ``max_hamming=0`` is exact-duplicate matching, one equi-join on
+    the hash."""
+    if max_hamming == 0:
+        return blocked_hamming_matches(
+            hashes, hashes, 0, hash_col=hash_col, id_col=id_col
+        ).filter(F.col("id_a") < F.col("id_b"))
     return simhash_candidates(
         hashes.select(F.col(id_col), F.col(hash_col).alias("simhash")),
         id_col,

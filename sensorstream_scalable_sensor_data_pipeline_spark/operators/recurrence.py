@@ -4,48 +4,66 @@ scale (§2.12 custom operators: a running recurrence y_i = α·x_i +
 cannot express — `avg over rows between` is a different statistic,
 and a naive per-key loop doesn't distribute).
 
-The decomposition is the module family's standard two-level split
-(`asof_join_bucketed`, `resample_locf`): a first-order linear
-recurrence composed over any row range is itself linear in the
-incoming state — a chunk of rows reduces to ``y_end = A + B·carry``
-with ``A`` the fold from zero state and ``B = (1−α)^len`` — so:
+Both forms are one recurrence, ``y_i = (1−d_i)·x_i + d_i·y_{i−1}``
+with per-row decay ``d_i = exp(−λ·Δc_i)`` over a clock ``c``: event
+time for :func:`ewma_irregular`, the row number for :func:`ewma`
+(``λ = −ln(1−α)``, so ``d = 1−α``; ``α = 1`` is the identity).
+Unrolled over a run of rows with incoming state ``carry``,
+``y_i = A_i + P_i·carry`` with
+``A_i = e^{−λ(c_i−r)} · Σ_{j≤i} (1−d_j)·x_j·e^{λ(c_j−r)}`` for any
+reference clock ``r``, and ``P_i = e^{−λ(c_i−c_prev)}``, where
+``c_prev`` is the clock of the row before the run. One shared core,
+zero UDFs, O(1) work per row and no array that grows with a chunk:
 
-1. *Within-chunk pass* (embarrassingly parallel): per (key, chunk of
-   ``chunk_rows`` ordered rows), one Catalyst ``aggregate`` fold
-   computes the running constant terms ``A_i`` for every row and the
-   chunk summary ``(A_end, B)``. Executor-local, zero UDFs; the fold
-   appends to an array accumulator, so in-chunk work is O(len²)
-   element copies — bounded by ``chunk_rows`` (the knob), ~512² ≈
-   260k double copies per chunk, microseconds.
-2. *Carry pass*: per key, the chunk summaries (rows/chunk_rows of
-   them — the collected array is the documented per-key bound; raise
-   ``chunk_rows`` for pathologically hot keys) fold into the carry
-   chain ``c_{k+1} = A_k + B_k·c_k``.
-3. *Stitch*: ``y_i = A_i + (1−α)^{pos+1} · c_chunk`` per row.
+1. *Key window* (partitioned by key, ordered by time): row number,
+   previous clock, the key's first value. A chunk is at most
+   ``chunk_rows`` consecutive rows inside one exponent bucket
+   ``floor(λ·(c − c_key0) / _MAX_EXPONENT)``; the bucket's start
+   is ``r``, so ``e^{λ(c_j−r)}`` stays below ``e^600`` and never
+   overflows (constant α = 0.9 alone would reach ``e^1179`` over 512
+   rows).
+2. *Chunk window*: ``A_i`` is one running window sum, ordered by the
+   key-level row number (never by the timestamp, so ties resolve as
+   in the key window); ``P_i`` is a plain column.
+3. *Carry pass*: one aggregate per chunk gives its summary
+   ``(A_end, B = P_end)``; per key, the summaries fold into the carry
+   chain ``c_{k+1} = A_k + B_k·c_k``, and the carries join back per
+   row on (key, chunk): ``y_i = A_i + P_i·c_chunk``.
+
+The per-key bound is the carry fold: one summary per chunk, at most
+``rows/chunk_rows + λ·span/_MAX_EXPONENT + 1`` of them, and the
+fold copies its array at every step, so it costs O(chunks²) per key.
+The chunk window's partitions hold at most ``chunk_rows`` rows.
 
 Initialization folds in for free: pandas' ``ewm(adjust=False)`` sets
-``y_0 = x_0``, and ``x_0 = α·x_0 + (1−α)·x_0`` — i.e. the standard
-recurrence with ``carry_0 = x_0`` — so the key's first value IS the
-initial carry and every row follows one uniform rule.
+``y_0 = x_0``; the key's first row has ``d_0 = 1`` (its previous clock
+is its own), so with ``carry_0 = x_0`` every row follows one rule.
 
-NUMERICS, stated honestly: the chunk-boundary linear form reorders
-floating-point operations relative to the strict sequential fold, so
-results match pandas to ~machine epsilon per boundary (tests pin
-``rtol 1e-9``), NOT bit-exactly — unlike the grid-exact aggregates
-elsewhere in this repo, which is why this module does not ship a
-hash-level oracle. Chunk-size invariance is pinned the same way.
+NUMERICS, stated honestly: the rebased sums and the chunk-boundary
+linear form reorder floating-point operations relative to the strict
+sequential fold, so results match the sequential replay to float
+tolerance (tests pin ``rtol 1e-9`` for α up to 0.999, α = 1, and
+halflife-1 s bursts broken by gaps of 10³ halflives), NOT bit-exactly
+— unlike the grid-exact aggregates elsewhere in this repo, which is
+why this module does not ship a hash-level oracle. Chunk-size
+invariance is pinned the same way. A rebased term is at most
+``e^600·|x|``, so ``|x|`` must stay below ~1e45.
 
-SKEW: the row_number window partitions by the bare key (a recurrence
-cannot be split by value, only by position), so one task orders one
-key's rows — the same funnel note as `operators/asof.py`; the heavy
-per-row WORK here is already chunk-parallel, which is the part that
-matters.
+SKEW: the key window partitions by the bare key (a recurrence cannot
+be split by value, only by position), so one task orders one key's
+rows — the same funnel note as `operators/asof.py`; the per-row work
+after it is chunk-parallel.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import math
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+#: Largest decay exponent inside one chunk: e^600 ≈ 4e260 < 1.8e308.
+_MAX_EXPONENT = 600.0
 
 
 def ewma(
@@ -66,90 +84,13 @@ def ewma(
         raise ValueError("alpha must be in (0, 1]")
     if chunk_rows < 2:
         raise ValueError("chunk_rows must be at least 2")
-    a, b = float(alpha), 1.0 - float(alpha)
-    L = int(chunk_rows)
-
-    w = Window.partitionBy(on).orderBy(time_col)
-    rows = df.select(
-        F.col(on),
-        F.col(time_col),
-        F.col(value_col).cast("double").alias("_x"),
-        (F.row_number().over(w) - 1).alias("_rn"),
-        F.first(value_col).over(w).cast("double").alias("_x0"),
-    ).select(
-        "*",
-        (F.col("_rn") / L).cast("long").alias("_ck"),
-        (F.col("_rn") % L).alias("_pos"),
-    )
-
-    # 1) within-chunk fold: running constant terms A_i (zero incoming
-    # state) + the chunk summary (A_end, B = (1-a)^len)
-    chunks = rows.groupBy(on, "_ck").agg(
-        F.array_sort(
-            F.collect_list(F.struct("_pos", time_col, "_x"))
-        ).alias("_items"),
-        F.min("_x0").alias("_x0"),
-    )
-    fold = F.expr(
-        f"""aggregate(
-              _items,
-              struct(cast(array() as array<double>) as arr,
-                     cast(0.0 as double) as last),
-              (acc, it) -> struct(
-                  concat(acc.arr, array({a}d * it._x + {b}d * acc.last)),
-                  {a}d * it._x + {b}d * acc.last)
-            )"""
-    )
-    chunks = chunks.select(
-        on, "_ck", "_items", "_x0",
-        fold.getField("arr").alias("_A"),
-        F.pow(F.lit(b), F.size("_items")).alias("_B"),
-    ).select(
-        "*", F.element_at("_A", F.size("_A")).alias("_A_end")
-    )
-
-    # 2) carry chain per key: c_0 = x_0 (the init-folds-in trick),
-    # c_{k+1} = A_k + B_k * c_k; carries[k] = incoming state of chunk k
-    summaries = chunks.groupBy(on).agg(
-        F.array_sort(
-            F.collect_list(F.struct("_ck", "_A_end", "_B"))
-        ).alias("_sum"),
-        F.min("_x0").alias("_x0"),
-    )
-    carry_fold = F.expr(
-        """aggregate(
-             _sum,
-             struct(cast(array() as array<double>) as arr,
-                    cast(_x0 as double) as last),
-             (acc, s) -> struct(
-                 concat(acc.arr, array(acc.last)),
-                 s._A_end + s._B * acc.last)
-           )"""
-    )
-    carries = summaries.select(
-        on, carry_fold.getField("arr").alias("_carries")
-    )
-
-    # 3) stitch: y_i = A_i + (1-a)^(pos+1) * carry(chunk)
-    out = (
-        chunks.join(carries, on)
-        .select(
-            on,
-            F.element_at("_carries", F.col("_ck").cast("int") + 1).alias(
-                "_c"
-            ),
-            F.arrays_zip("_items", "_A").alias("_z"),
-        )
-        .select(on, "_c", F.explode("_z").alias("_e"))
-    )
-    return out.select(
-        F.col(on),
-        F.col(f"_e._items.{time_col}").alias(time_col),
-        F.col("_e._items._x").alias(value_col),
-        (
-            F.col("_e._A")
-            + F.pow(F.lit(b), F.col("_e._items._pos") + 1) * F.col("_c")
-        ).alias(out_col),
+    if alpha == 1.0:  # d = 0: no smoothing
+        x = F.col(value_col).cast("double")
+        return df.select(on, time_col, x.alias(value_col), x.alias(out_col))
+    rn = F.row_number().over(Window.partitionBy(on).orderBy(time_col)) - 1
+    return _ewma(
+        df, on, time_col, value_col, -math.log1p(-float(alpha)), chunk_rows,
+        out_col, clock=rn, prev=F.greatest(rn - 1, F.lit(0)),
     )
 
 
@@ -168,85 +109,75 @@ def ewma_irregular(
     back weighs exponentially less *in time*, not in row count:
     ``y_i = (1−d_i)·x_i + d_i·y_{i−1}``, ``y_0 = x_0``. A constant
     sampling interval Δt reduces this exactly to :func:`ewma` with
-    ``α = 1 − exp(−ln2·Δt/halflife)``.
-
-    Same decomposition as :func:`ewma` — per-row decay changes
-    nothing structural, because a first-order recurrence with ANY
-    per-step coefficients is still linear in the incoming state:
-    the chunk summary becomes ``(A_end, B = ∏ d_i)``, and the per-row
-    stitch multiplier is the RUNNING decay product (folded alongside
-    ``A_i``). Zero UDFs; the oracle is a sequential numpy replay
-    (tests), float-tolerance like :func:`ewma`."""
+    ``α = 1 − exp(−ln2·Δt/halflife)``; both run through one core (the
+    module docstring), with event-time µs as the clock. Zero UDFs; the
+    oracle is a sequential numpy replay (tests)."""
     if halflife_seconds <= 0:
         raise ValueError("halflife_seconds must be positive")
     if chunk_rows < 2:
         raise ValueError("chunk_rows must be at least 2")
-    L = int(chunk_rows)
     # ln 2 / halflife, in 1/µs — decay exponent per event-time µs
-    import math
-
     lam = math.log(2.0) / (float(halflife_seconds) * 1_000_000.0)
-
     w = Window.partitionBy(on).orderBy(time_col)
+    us = F.unix_micros(F.col(time_col))
+    t0 = F.first(us).over(w)
+    return _ewma(
+        df, on, time_col, value_col, lam, chunk_rows, out_col,
+        clock=us - t0, prev=F.coalesce(F.lag(us).over(w), us) - t0,
+    )
+
+
+def _ewma(
+    df: DataFrame,
+    on: str,
+    time_col: str,
+    value_col: str,
+    lam: float,
+    chunk_rows: int,
+    out_col: str,
+    clock: Column,
+    prev: Column,
+) -> DataFrame:
+    """The shared core: ``clock``/``prev`` are the row's clock and the
+    previous row's (its own on the key's first row), both long, both
+    counted from the key's first row and computed over the key window
+    ordered by ``time_col``."""
+    w = Window.partitionBy(on).orderBy(time_col)
+    x = F.col(value_col).cast("double")
     rows = df.select(
         F.col(on),
-        F.unix_micros(F.col(time_col)).alias("_tus"),
         F.col(time_col),
-        F.col(value_col).cast("double").alias("_x"),
+        x.alias("_x"),
         (F.row_number().over(w) - 1).alias("_rn"),
-        F.first(value_col).over(w).cast("double").alias("_x0"),
-        F.lag(F.unix_micros(F.col(time_col))).over(w).alias("_prev_tus"),
-    ).select(
+        F.first(x).over(w).alias("_x0"),
+        clock.alias("_c"),
+        prev.alias("_pc"),
+    )
+    # exponent bucket and row chunk; the bucket's start (in clock
+    # units) is the rebase reference, so every e^{λ(c−r)} ≤ e^600
+    eb = F.floor(F.lit(lam) * F.col("_c") / _MAX_EXPONENT)
+    rows = rows.select(
         "*",
-        # d_i = exp(-λ·Δt); the key's FIRST row keeps d from its
-        # virtual carry: any d works there since carry_0 = x_0 is a
-        # fixed point — use d=1-α-style exp(0)=1? No: y_0 must equal
-        # x_0 = (1-d)x_0 + d·x_0 for EVERY d, so d_0 is arbitrary;
-        # pick 1.0 (pure carry) for chunk algebra simplicity.
-        F.when(
-            F.col("_prev_tus").isNull(), F.lit(1.0)
-        )
-        .otherwise(
-            F.exp(-F.lit(lam) * (F.col("_tus") - F.col("_prev_tus")))
-        )
-        .alias("_d"),
-        (F.col("_rn") / L).cast("long").alias("_ck"),
-        (F.col("_rn") % L).alias("_pos"),
+        eb.alias("_eb"),
+        F.floor(F.col("_rn") / F.lit(int(chunk_rows))).alias("_rb"),
+    ).withColumn(
+        "_h",
+        F.lit(lam)
+        * (F.col("_c") - F.floor(F.col("_eb") * _MAX_EXPONENT / lam)),
     )
+    chunk = [on, "_eb", "_rb"]
+    gain = -F.expm1(-F.lit(lam) * (F.col("_c") - F.col("_pc")))  # 1 − d
+    term = gain * F.col("_x") * F.exp("_h")
 
-    chunks = rows.groupBy(on, "_ck").agg(
-        F.array_sort(
-            F.collect_list(F.struct("_pos", time_col, "_x", "_d"))
-        ).alias("_items"),
+    # carry chain per key over the chunk summaries (A_end, B): c_0 = x_0
+    # (the init-folds-in trick), c_{k+1} = A_k + B_k * c_k
+    summaries = rows.groupBy(*chunk).agg(
+        (F.exp(-F.max("_h")) * F.sum(term)).alias("_A"),
+        F.exp(-F.lit(lam) * (F.max("_c") - F.min("_pc"))).alias("_B"),
         F.min("_x0").alias("_x0"),
-    )
-    # fold: A_i running constant term, P_i running decay product
-    fold = F.expr(
-        """aggregate(
-             _items,
-             struct(cast(array() as array<double>) as arr,
-                    cast(array() as array<double>) as prods,
-                    cast(0.0 as double) as last,
-                    cast(1.0 as double) as prod),
-             (acc, it) -> struct(
-                 concat(acc.arr,
-                        array((1.0d - it._d) * it._x + it._d * acc.last)),
-                 concat(acc.prods, array(acc.prod * it._d)),
-                 (1.0d - it._d) * it._x + it._d * acc.last,
-                 acc.prod * it._d)
-           )"""
-    )
-    chunks = chunks.select(
-        on, "_ck", "_items", "_x0",
-        fold.getField("arr").alias("_A"),
-        fold.getField("prods").alias("_P"),
-        fold.getField("last").alias("_A_end"),
-        fold.getField("prod").alias("_B"),
-    )
-
-    summaries = chunks.groupBy(on).agg(
+    ).groupBy(on).agg(
         F.array_sort(
-            F.collect_list(F.struct("_ck", "_A_end", "_B"))
+            F.collect_list(F.struct("_eb", "_rb", "_A", "_B"))
         ).alias("_sum"),
         F.min("_x0").alias("_x0"),
     )
@@ -257,27 +188,26 @@ def ewma_irregular(
                     cast(_x0 as double) as last),
              (acc, s) -> struct(
                  concat(acc.arr, array(acc.last)),
-                 s._A_end + s._B * acc.last)
+                 s._A + s._B * acc.last)
            )"""
     )
     carries = summaries.select(
-        on, carry_fold.getField("arr").alias("_carries")
-    )
+        on,
+        F.explode(
+            F.arrays_zip("_sum", carry_fold.getField("arr").alias("_carry"))
+        ).alias("_z"),
+    ).select(on, "_z._sum._eb", "_z._sum._rb", "_z._carry")
 
-    out = (
-        chunks.join(carries, on)
-        .select(
-            on,
-            F.element_at("_carries", F.col("_ck").cast("int") + 1).alias(
-                "_c"
-            ),
-            F.arrays_zip("_items", "_A", "_P").alias("_z"),
-        )
-        .select(on, "_c", F.explode("_z").alias("_e"))
+    wc = Window.partitionBy(*chunk).orderBy("_rn")
+    a = F.exp(-F.col("_h")) * F.sum(term).over(
+        wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return out.select(
-        F.col(on),
-        F.col(f"_e._items.{time_col}").alias(time_col),
-        F.col("_e._items._x").alias(value_col),
-        (F.col("_e._A") + F.col("_e._P") * F.col("_c")).alias(out_col),
+    p = F.exp(-F.lit(lam) * (F.col("_c") - F.first("_pc").over(wc)))
+    return rows.select(*chunk, time_col, "_x", a.alias("_A"), p.alias("_P")).join(
+        carries, chunk
+    ).select(
+        on,
+        time_col,
+        F.col("_x").alias(value_col),
+        (F.col("_A") + F.col("_P") * F.col("_carry")).alias(out_col),
     )

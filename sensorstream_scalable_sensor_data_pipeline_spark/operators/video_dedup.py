@@ -166,23 +166,10 @@ def _offset_votes(
     # mostly constant frames cannot qualify on its few live frames
     live_a = frames_a.filter(F.col("phash").isNotNull())
     live_b = frames_b.filter(F.col("phash").isNotNull())
-    if max_hamming == 0:
-        a = live_a.select(
-            F.col("phash").alias("v"),
-            F.col(id_col).alias("id_a"),
-            F.col("frame_idx").alias("frame_idx_a"),
-        )
-        b = live_b.select(
-            F.col("phash").alias("v"),
-            F.col(id_col).alias("id_b"),
-            F.col("frame_idx").alias("frame_idx_b"),
-        )
-        matched = a.join(F.broadcast(b) if broadcast_b else b, "v")
-    else:
-        matched = blocked_hamming_matches(
-            live_a, live_b, max_hamming, id_col=id_col,
-            carry_cols=("frame_idx",), broadcast_b=broadcast_b,
-        )
+    matched = blocked_hamming_matches(
+        live_a, live_b, max_hamming, id_col=id_col,
+        carry_cols=("frame_idx",), broadcast_b=broadcast_b,
+    )
     if self_join:
         matched = matched.filter(F.col("id_a") < F.col("id_b"))
     best = vote_best_offset(

@@ -471,6 +471,69 @@ def test_asof_join_bucketed_null_state_across_buckets(spark):
     assert got[13] == (None, "b")
 
 
+def _run_in_job_group(spark, fn):
+    """``fn()`` and the number of Spark jobs it submitted."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"asof-route-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_asof_join_bucketed_auto_routes_by_hot_key(spark, monkeypatch):
+    """``bucket_seconds="auto"`` pays for the bucketed plan only when
+    the pre-flight finds a hot key. With none (900 rows on the busiest
+    key, under the default target), the call submits no more jobs than
+    the pre-flight plus plain :func:`asof_join`, and no ``_bk`` window
+    is planned. With the target lowered under that key's row count,
+    the same call runs the ``_bk`` plan. Both equal the plain join."""
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators import asof
+
+    left = spark.range(1_000).select(
+        F.col("id"),
+        F.when(F.col("id") % 10 == 0, F.col("id") % 3 + 2).otherwise(1).alias("k"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id")).alias("ts"),
+    )
+    right = spark.range(0, 1_000, 7).select(
+        F.when(F.col("id") % 2 == 0, 1).otherwise(F.col("id") % 3 + 2).alias("k"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id")).alias("ts"),
+        F.col("id").cast("double").alias("v"),
+    )
+
+    def run(how):
+        def go():
+            df = how(left, right, "k", "ts", ["v"])
+            rows = sorted((r["id"], r["v"]) for r in df.collect())
+            return rows, _executed_plan(df)
+
+        return _run_in_job_group(spark, go)
+
+    (want, _), plain_jobs = run(asof.asof_join)
+    _, preflight_jobs = _run_in_job_group(
+        spark, lambda: asof.choose_bucket_seconds(left, "k", "ts", right=right)
+    )
+    (got, plan), auto_jobs = run(asof.asof_join_bucketed)
+    assert got == want
+    assert auto_jobs <= plain_jobs + preflight_jobs, (
+        auto_jobs, plain_jobs, preflight_jobs
+    )
+    assert "_bk" not in plan
+
+    monkeypatch.setattr(asof, "AUTO_BUCKET_TARGET_ROWS", 100)
+    (got, plan), _ = run(asof.asof_join_bucketed)
+    assert got == want
+    assert "_bk" in plan
+
+
 def test_asof_join_hot_key_skew_correctness(spark):
     """One hot key carrying 2M readings (every other key's volume is
     negligible): the keyed-window sort serializes in a single task —

@@ -235,7 +235,8 @@ def test_bucketed_asof_plan_shape(spark, sf_dir):
     """The range-split as-of must keep its designed decomposition:
     exactly two Window operators (the (key,bucket) within pass + the
     per-key spine carry over bucket SUMMARIES), keyed joins only —
-    never a cartesian/nested-loop fallback."""
+    never a cartesian/nested-loop fallback. The bucket size is pinned:
+    ``"auto"`` on this unskewed input routes to the plain join."""
     from pyspark.sql import functions as F
 
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.asof import (
@@ -250,7 +251,7 @@ def test_bucketed_asof_plan_shape(spark, sf_dir):
         "user_id", "ts", F.col("value").alias("calib_value")
     )
     plan = (
-        asof_join_bucketed(ev, st, "user_id", "ts", ["calib_value"])
+        asof_join_bucketed(ev, st, "user_id", "ts", ["calib_value"], bucket_seconds=86_400)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -513,6 +513,24 @@ def test_invalid_knob_rejected_before_any_decode(spark, call, knob):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_max_hamming_zero_matches_exact_hashes_on_every_route(spark):
+    """``max_hamming=0`` passes the knob check, and both candidate
+    routes then match exact hashes only: the lossless re-encode 100
+    collapses into 0 and the eval image's twin 1 is dropped, while the
+    quarantined rows survive. (``"auto"`` resolves to one of the two.)"""
+    for method in ("pigeonhole", "banded"):
+        surv = dedup_phash(
+            _images(spark, True), "doc_id", "payload", max_hamming=0,
+            method=method, on_error="quarantine",
+        )
+        assert {r["doc_id"] for r in surv.collect()} == {0, 1, 2, 900, 901}, method
+    clean = decontaminate_images(
+        _images(spark, True), _eval_rows(spark, "images"), max_hamming=0,
+        on_error="quarantine",
+    )
+    assert {r["doc_id"] for r in clean.collect()} == {0, 2, 100, 900, 901}
+
+
 @pytest.mark.parametrize(
     "call",
     [

@@ -193,3 +193,94 @@ def test_ewma_plan_no_python(spark, sf_dir):
     )
     assert "EvalPython" not in plan
     assert "CartesianProduct" not in plan
+
+
+def _sequential_replay(rows, decay):
+    """y_i = (1 − d_i)·x_i + d_i·y_{i−1}, y_0 = x_0, per key in clock
+    order; ``decay(prev_clock, clock)`` gives d_i."""
+    out, last = {}, {}
+    for key, clock, x in sorted(rows):
+        if key in last:
+            prev_clock, y = last[key]
+            d = decay(prev_clock, clock)
+            x = (1.0 - d) * x + d * y
+        last[key] = (clock, x)
+        out[(key, clock)] = x
+    return out
+
+
+def _extreme_series(n_keys=2, n=700, seed=11):
+    """Per key: sub-second bursts (0.05-0.9 s apart) broken every ~40
+    rows by a gap of 10³-3·10³ s, with signed values of mixed size."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for key in range(n_keys):
+        us = 1_700_000_000_000_000 + key * 7
+        for i in range(n):
+            if i and i % 40 == 0:
+                us += int(rng.uniform(1_000, 3_000) * 1_000_000)
+            else:
+                us += int(rng.uniform(0.05, 0.9) * 1_000_000)
+            rows.append((key, us, float(rng.normal(0, 50) * rng.choice([1, 1e3]))))
+    return rows
+
+
+def _assert_matches_replay(got, want):
+    assert set(got) == set(want)
+    ks = sorted(want)
+    g = np.array([got[k] for k in ks])
+    w = np.array([want[k] for k in ks])
+    assert np.all(np.isfinite(g))
+    assert np.allclose(g, w, rtol=1e-9, atol=1e-12), (
+        f"max rel err {np.max(np.abs(g - w) / np.maximum(np.abs(w), 1e-12))}"
+    )
+
+
+@pytest.mark.parametrize("chunk_rows", [7, 512])
+def test_ewma_irregular_extreme_decays_match_replay(spark, chunk_rows):
+    """Halflife 1 s: inside a burst d is near 1, across a gap of ≥10³
+    halflives it is below 1e-300, and the series' decay exponent runs
+    far past what one double can hold as e^x. Outputs stay finite and
+    match the sequential replay at both chunk sizes."""
+    import math
+
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators.recurrence import (
+        ewma_irregular,
+    )
+
+    rows = _extreme_series()
+    df = spark.createDataFrame(rows, "user_id long, us long, value double").select(
+        "user_id", F.timestamp_micros("us").alias("ts"), "value"
+    )
+    got = {
+        (r["user_id"], r["us"]): r["ewma"]
+        for r in ewma_irregular(
+            df, on="user_id", time_col="ts", value_col="value",
+            halflife_seconds=1.0, chunk_rows=chunk_rows,
+        ).select("user_id", F.unix_micros("ts").alias("us"), "ewma").collect()
+    }
+    lam = math.log(2.0) / 1_000_000.0
+    want = _sequential_replay(rows, lambda p, c: math.exp(-lam * (c - p)))
+    _assert_matches_replay(got, want)
+
+
+@pytest.mark.parametrize("alpha", [0.9, 0.999, 1.0])
+def test_ewma_alpha_near_one_matches_replay(spark, alpha):
+    """Constant α close to 1 decays by |ln(1−α)| per row: 512 rows of
+    α = 0.999 span an exponent of ~3.5·10³, beyond e^709. Outputs stay
+    finite and match the sequential replay; α = 1 is the identity."""
+    rows = [(k, us, x) for k, us, x in _extreme_series(seed=12)]
+    df = spark.createDataFrame(rows, "user_id long, us long, value double").select(
+        "user_id", F.timestamp_micros("us").alias("ts"), "value"
+    )
+    got = {
+        (r["user_id"], r["us"]): r["ewma"]
+        for r in ewma(
+            df, on="user_id", time_col="ts", value_col="value",
+            alpha=alpha, chunk_rows=512,
+        ).select("user_id", F.unix_micros("ts").alias("us"), "ewma").collect()
+    }
+    want = _sequential_replay(rows, lambda p, c: 1.0 - alpha)
+    _assert_matches_replay(got, want)
+    if alpha == 1.0:
+        assert got == {(k, us): x for k, us, x in rows}
