@@ -32,7 +32,9 @@ arguments exclude. pyarrow's pools remain lazily created.
 
 r17: the daemon also swaps ``pyspark.zip`` sys.path entries for their
 unzipped sibling directory (``$SPARK_HOME/python``) before anything
-heavy loads — see :func:`_prefer_unzipped_pyspark`. Workers call
+heavy loads — see :func:`_prefer_unzipped_pyspark`. That rewrite, the
+preload imports and ``manager()`` all run under ``__main__`` only, so
+importing this module (tests, tooling) changes nothing. Workers call
 ``importlib.invalidate_caches()`` once per task
 (pyspark/worker_util.py::setup_spark_files), and since Python 3.10
 that re-reads every cached zipimporter's central directory;
@@ -86,17 +88,19 @@ def _prefer_unzipped_pyspark() -> None:
                     paths[i] = os.path.join(root, en[len(z) + 1 :])
 
 
-_prefer_unzipped_pyspark()
-
-import numpy  # noqa: F401,E402  (preload: every Arrow scorer / decode path)
-import pyarrow  # noqa: F401,E402  (preload: Arrow batch serialization)
-
-try:  # pandas is the heaviest worker import (mapInPandas paths)
-    import pandas  # noqa: F401,E402
-except ImportError:  # pragma: no cover - pandas ships with pyspark
-    pass
-
-from pyspark.daemon import manager  # noqa: E402
-
 if __name__ == "__main__":
+    # Spark starts the daemon as ``python -m <module>``; importing this
+    # module anywhere else has no side effects
+    _prefer_unzipped_pyspark()
+
+    import numpy  # noqa: F401  (preload: every Arrow scorer / decode path)
+    import pyarrow  # noqa: F401  (preload: Arrow batch serialization)
+
+    try:  # pandas is the heaviest worker import (mapInPandas paths)
+        import pandas  # noqa: F401
+    except ImportError:  # pragma: no cover - pandas ships with pyspark
+        pass
+
+    from pyspark.daemon import manager
+
     manager()

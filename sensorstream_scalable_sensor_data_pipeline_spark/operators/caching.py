@@ -30,7 +30,7 @@ shared store — same lifecycle, different durability.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 from pyspark import StorageLevel
@@ -77,3 +77,14 @@ def cached(
     finally:
         for f in frames:
             f.unpersist()
+
+
+def cached_result(build: Callable[..., DataFrame], *frames: DataFrame) -> DataFrame:
+    """``build(*frames)`` run over ``frames`` held in :func:`cached`
+    (persisted, each filled by one eager count) and materialized with
+    an executor-local checkpoint before the caches are released: the
+    composition-root form of :func:`cached` plus
+    :func:`materialize_and_release`, for a result built from frames
+    that several branches of one plan read."""
+    with cached(*frames):
+        return build(*frames).localCheckpoint(eager=True)

@@ -20,15 +20,33 @@ its within-batch + cross-state match and its signature table:
 * :func:`ingest_video_batch` — sampled frame pHashes,
   ``frame_phashes``.
 
+The state dir and its manifest. Every table — the signature tables
+of :data:`_STATE_TABLES` and ``accepted/``, the staged corpus — is a
+set of ``<table>/batch=<name>/`` dirs, and ONE append-only log says
+which of them are live: ``<state_dir>/_manifest/<version>.json``
+(zero-padded). A version lists each table's live dirs, the
+:class:`_Provenance` of every live compact dir and the registered
+stream runs. It is written to a temp file and renamed to its final
+name without overwrite, so it appears whole or not at all; a reader
+takes the highest version and reads exactly the dirs it names. The
+single rule: nothing is visible until a manifest version names it.
+A dir the latest version does not name is garbage — never read, and
+deleted by the next compaction sweep of its table. ``word_counts/``
+is a derived cache keyed by the live ``audio_fps`` names, not a
+table. This is Structured Streaming's recovery shape (an epoch-keyed
+commit log, never a listing of output dirs). A state dir holding
+table dirs but no ``_manifest/`` was written by the pre-manifest
+layout: every ingest, compaction and reader refuses it with
+``ValueError`` before writing anything.
+
 The protocol, in order (:func:`_ingest` owns every step):
 
 1. validate the batch schema (reserved columns), ``on_error`` and the
-   maintenance threshold — before anything touches disk — then take
-   the caller's ``batch_id`` or a fresh uuid;
-2. resume: if ``<table>/batch=<id>`` committed (its own ``_SUCCESS``,
-   or a compaction's provenance), return the staged survivors without
-   recomputing; under quarantine, first backfill a missing
-   quarantine-identity commit;
+   maintenance threshold, and read the manifest — before anything
+   touches disk — then take the caller's ``batch_id`` or a fresh uuid;
+2. resume: if the manifest records the batch as committed (a live dir
+   of its table, or a live compact's provenance), return the staged
+   survivors without recomputing;
 3. sign the batch once, persist the signatures and run ONE eager
    count (the within-batch self-join's two map sides must not race an
    expensive decode twice); a cheap signer (the text md5) skips the
@@ -37,27 +55,30 @@ The protocol, in order (:func:`_ingest` owns every step):
    original columns, the artifact downstream consumes — and read them
    back with the batch's explicit schema (an empty survivor set writes
    a part-file-less dir that inference cannot read);
-5. commit the signatures of the STAGED ids to ``<table>/batch=<id>``,
-   partitioned per :data:`_STATE_TABLES` — state can only ever record
-   documents that are already durable. This ``_SUCCESS`` is the
-   batch's single commit point;
-6. commit the quarantine identity (media ingests, ``on_error=
-   "quarantine"``);
+5. write the signatures of the STAGED ids to ``<table>/batch=<id>``,
+   partitioned per :data:`_STATE_TABLES`, and (media ingests,
+   ``on_error="quarantine"``) the quarantine identity rows to
+   ``quarantine_md5s/batch=<id>``;
+6. commit: ONE manifest version adds the staged dir, the signature dir
+   and the quarantine dir together — the batch's single commit point,
+   so state can only ever record documents that are already durable;
 7. run :func:`maintain_state` on the touched tables, then unpersist.
 
-Crash windows — the ordering makes every one safe:
+Crash windows — each re-runs clean, because nothing before step 6 is
+visible:
 
-* die before/while staging: state unchanged, staging overwritten on
-  re-run — clean recompute;
-* die while committing signatures: the batch dir has no ``_SUCCESS``,
-  so every state read (:func:`_committed_batch_dirs`) excludes it;
-  re-run overwrites both dirs — clean;
-* die between the signature and quarantine commits: the batch counts
-  as committed; its resume recomputes the identity rows from the
-  staged payloads (:func:`_backfill_quarantine`);
-* die after: the accepted rows are durable in ``accepted/batch=<id>``
-  (or in the accepted compaction that folded it); re-running with the
-  same ``batch_id`` short-circuits and returns them.
+* die anywhere before the manifest rename: the previous version is
+  still the latest, so every reader sees the previous corpus and
+  state; the dirs written so far are garbage, and re-running the same
+  ``batch_id`` overwrites them;
+* die after it: the batch committed as a whole; re-running the same
+  ``batch_id`` short-circuits and returns the staged survivors (from
+  the accepted compaction that folded them, if one did).
+
+A compaction obeys the same rule: write the compact dir, commit a
+version that swaps it in for its sources, then delete the sources. A
+crash before the rename leaves the sources live; after it, they are
+garbage. Readers never see a source and its compact at once.
 
 Common arguments and result of every ``ingest_*``: it returns the
 surviving rows (all original columns, read back from the staged
@@ -66,7 +87,7 @@ batches. A stable ``batch_id`` makes a crashed run resumable; omitted,
 a fresh id is generated and the call has pure content semantics.
 ``maintain_max_batch_dirs`` (default :data:`MAINTAIN_MAX_BATCH_DIRS`,
 at least 2) compacts the touched tables inline once one holds that
-many committed batch dirs — a no-op 15 of 16 ingests, one amortized
+many live batch dirs — a no-op 15 of 16 ingests, one amortized
 rewrite otherwise; ``None`` disables (callers running their own
 maintenance cadence). ``on_error`` (media ingests): ``"raise"``
 (default) keeps the exact contract, ``"quarantine"`` accepts corrupt
@@ -89,12 +110,15 @@ bytes reject against the identity table.
 Scale notes: every match is a keyed join on a signature or band key
 (never all-pairs); at 100 TB the state side is the small one by
 construction. Concurrent ingests must serialize through the run lock
-(schedule.py), same as the reference's ``max_active_runs=1``.
+(schedule.py), same as the reference's ``max_active_runs=1``. The
+compaction sweep relies on that lock: it deletes every dir the
+manifest does not name, so a compaction running beside an ingest
+that has not committed yet deletes that ingest's in-flight dirs.
 
 Maintenance: :func:`maintain_state` runs inline after every ingest —
 :func:`compact_state` bounds each signature table's batch dirs and
 :func:`compact_accepted` folds the staged corpus itself (tiered,
-resume-safe via ``_src_batch`` + ``_sources.json`` provenance).
+resume-safe via the ``_src_batch`` column + manifest provenance).
 
 Reserved column names: the accepted-corpus layout claims ``batch``
 (the staging partition column) and ``_src_batch`` (the compaction
@@ -105,9 +129,11 @@ either with a clear ``ValueError``.
 from __future__ import annotations
 
 import hashlib
+import json
 import posixpath
 import uuid
 from collections.abc import Callable
+from dataclasses import dataclass, field
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -163,102 +189,64 @@ def _fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
-def _committed_batch_dirs(spark: SparkSession, root: str) -> list[str]:
-    """Batch subdirs of ``root`` whose Spark write committed (has the
-    ``_SUCCESS`` marker). Partial part-files from a crashed append
-    live in an unmarked dir and are excluded — the reader-side half of
-    the per-batch atomic commit."""
-    fs, jroot = _fs(spark, root)
-    if not fs.exists(jroot):
-        return []
-    out = []
-    for st in fs.listStatus(jroot):
-        if not st.isDirectory():
-            continue
-        p = st.getPath()
-        if p.getName().startswith("batch=") and fs.exists(
-            p.suffix("/_SUCCESS")
-        ):
-            out.append(p.toString())
-    return sorted(out)
+def _dir(state_dir: str, table: str, name: str) -> str:
+    """The batch dir ``name`` of ``table``."""
+    return posixpath.join(state_dir, table, f"batch={name}")
 
 
-#: Name of the provenance file a compacted batch dir carries. Its
-#: invariant: ORIGINAL batch ids (and streaming run intervals) are
-#: transitive — re-compacting a compact dir carries its originals
-#: over — while ``compact-*`` names are DIRECT only: a compact records
-#: the compact dirs it folded itself, never the ones those folded.
-#: Direct names suffice because a crash-left compact is always gone
-#: by the next compaction (compact_state folds every committed dir;
-#: compact_accepted's sweep deletes every dir a live compact folds),
-#: and they keep the file from growing by one name per compaction
-#: forever. Written after the parquet commit and before source
-#: deletion, so at every crash point a folded batch id is
-#: discoverable either by its own ``_SUCCESS`` (sources not yet
-#: deleted) or here.
-#:
-#: Two on-disk forms (r16, closing the r15 continuous-regime watch):
-#: the legacy JSON list of ids, and — whenever any folded id belongs
-#: to a REGISTERED streaming run — ``{"v": 2, "ids": [...], "runs":
-#: {"<run_id>": <max_epoch>}}``. Epoch ids from
-#: ``streaming/ingest.py`` (``f"{run_id}-{epoch}"``) compress to one
-#: per-run high-water integer, which is EXACT under foreachBatch's
-#: sequential-epoch contract (epoch k+1 never starts before epoch
-#: k's commit returned; an empty epoch commits nothing, and its
-#: resume correctly reads zero staged rows). This bounds provenance
-#: at O(#runs + #batch-mode-ids) instead of O(total epochs ever) —
-#: a year at one epoch/minute is one integer, not ~525k ids.
-_PROVENANCE_FILE = "_sources.json"
+# ------------------------------------------------- state tables
 
-#: Marker directory under ``state_dir`` naming the streaming run ids
-#: whose ``<run_id>-<epoch>`` batch ids follow the sequential-epoch
-#: contract (one empty marker dir per run; mkdirs is idempotent and
-#: race-free). Only REGISTERED runs' ids are high-water-compressed —
-#: a user batch id that merely LOOKS like ``name-123`` stays in the
-#: exact id list, because nothing guarantees its epochs commit in
-#: order. Registered run ids are therefore a reserved namespace:
-#: never hand-issue ``<run_id>-<n>`` batch ids against a state dir
-#: whose ``<run_id>`` is registered.
-_STREAM_RUNS_DIR = "_stream_runs"
+#: Signature/identity state tables: table name → partition columns
+#: its batch dirs carry (preserved through compaction so
+#: prefix-co-located readers keep working).
+_STATE_TABLES = {
+    "fingerprints": ["fp_prefix"],
+    "phashes": ["fp_prefix"],
+    "audio_fps": [],
+    "frame_phashes": [],
+    # MinHash signatures of accepted docs (r16): the near-dup TEXT
+    # ingest's state — ~100 B/doc regardless of document length,
+    # unpartitioned (candidate generation re-derives band keys from
+    # the sig arrays with codegen expressions)
+    "minhash_sigs": [],
+    # exact content_md5 of ACCEPTED quarantined payloads (r15): the
+    # corrupt rows' identity table — tiny (corrupt rows are the
+    # exception), unpartitioned, with the src_batch attribution
+    # data column
+    "quarantine_md5s": [],
+}
 
-
-def _register_stream_run(
-    spark: SparkSession, state_dir: str, run_id: str
-) -> None:
-    """Record that ``run_id``'s epoch batches follow the
-    sequential-commit contract (called by streaming/ingest.py before
-    the query starts; idempotent)."""
-    if "/" in run_id or run_id.startswith("_") or not run_id:
-        raise ValueError(f"invalid stream run_id {run_id!r}")
-    if run_id == "compact":
-        # a "compact" run would let compact dir names (compact-<hex12>,
-        # which CAN be all digits) parse as epochs of the run and be
-        # absorbed into an interval — silently breaking the
-        # re-compaction crash-window skip rule
-        raise ValueError("'compact' is a reserved stream run_id")
-    fs, jdir = _fs(
-        spark, posixpath.join(state_dir, _STREAM_RUNS_DIR, run_id)
-    )
-    fs.mkdirs(jdir)
+#: Explicit read schemas for state tables whose commits can be
+#: part-file-less (inference cannot read those). ``batch`` is the
+#: partition column — included so the explicit-schema basePath read
+#: still surfaces it.
+_STATE_TABLE_SCHEMAS = {
+    "quarantine_md5s": StructType(
+        [
+            StructField("content_md5", StringType()),
+            StructField("doc_id", LongType()),
+            StructField("src_batch", StringType()),
+            StructField("batch", StringType()),
+        ]
+    ),
+}
 
 
-def _stream_run_ids(spark: SparkSession, state_dir: str) -> set[str]:
-    """Registered sequential-epoch streaming run ids (empty set for
-    pure batch-mode state dirs — provenance then stays in the legacy
-    list form)."""
-    fs, jdir = _fs(spark, posixpath.join(state_dir, _STREAM_RUNS_DIR))
-    if not fs.exists(jdir):
-        return set()
-    return {
-        st.getPath().getName()
-        for st in fs.listStatus(jdir)
-        if st.isDirectory()
-    }
+# ---------------------------------------------------- the manifest
+
+#: The manifest log dir under ``state_dir``: one ``<version>.json``
+#: file per committed version, version zero-padded to 20 digits.
+_MANIFEST_DIR = "_manifest"
+
+#: Versions kept behind the latest; older ones are never read and are
+#: deleted as new versions commit (bounded like Structured Streaming's
+#: ``minBatchesToRetain`` log cleanup).
+_MANIFEST_RETAIN = 10
 
 
 class _Provenance:
-    """The folded-batch-id set a compact dir's provenance records,
-    with streaming epochs compressed to per-run ``[lo, hi]`` epoch
+    """The original batch ids a live compact dir folded, with
+    streaming epochs compressed to per-run ``[lo, hi]`` epoch
     intervals.
 
     ``ids`` holds exact (batch-mode / pre-registration) ids;
@@ -272,8 +260,10 @@ class _Provenance:
     contract: each sweep folds a contiguous run of committed epochs
     (an absent number inside the range was an empty epoch that
     committed nothing, whose resume correctly reads zero staged
-    rows). Membership, union, and (de)serialization are the only
-    operations any consumer needs."""
+    rows). This bounds the manifest at O(#runs + #batch-mode-ids)
+    instead of O(total epochs ever) — a year at one epoch/minute is
+    one interval, not ~525k ids. Membership, union, and
+    (de)serialization are the only operations any consumer needs."""
 
     __slots__ = ("ids", "runs")
 
@@ -311,15 +301,6 @@ class _Provenance:
             out.runs[run] = (min(plo, lo), max(phi, hi))
         return out
 
-    def absorb(self, name: str, prov: "_Provenance") -> "_Provenance":
-        """Fold compact source ``name`` whose provenance is ``prov``:
-        its original ids and run intervals carry over, and of the
-        compact names only its own (see :data:`_PROVENANCE_FILE`)."""
-        originals = {i for i in prov.ids if not i.startswith("compact-")}
-        out = self.union(_Provenance(originals, prov.runs))
-        out.ids.add(name)
-        return out
-
     def __contains__(self, bid: str) -> bool:
         if bid in self.ids:
             return True
@@ -329,152 +310,237 @@ class _Provenance:
         lo, hi = self.runs[hit[0]]
         return lo <= hit[1] <= hi
 
-    def __bool__(self) -> bool:
-        return bool(self.ids) or bool(self.runs)
+    def to_obj(self) -> dict:
+        return {
+            "ids": sorted(self.ids),
+            "runs": {r: list(iv) for r, iv in self.runs.items()},
+        }
+
+    @staticmethod
+    def from_obj(obj: dict) -> "_Provenance":
+        return _Provenance(
+            set(obj["ids"]),
+            {run: (int(iv[0]), int(iv[1])) for run, iv in obj["runs"].items()},
+        )
+
+
+def _fold(
+    sources: dict[str, "_Provenance | None"], stream_runs: set[str]
+) -> "_Provenance":
+    """The provenance of a compaction of ``sources`` (dir name → its
+    provenance, None for a plain batch dir): a plain source
+    contributes its batch id (a registered run's epoch widens that
+    run's interval), a compact source its own provenance."""
+    out = _Provenance()
+    for name, prov in sources.items():
+        if prov is None:
+            out.add(name, stream_runs)
+        else:
+            out = out.union(prov)
+    return out
+
+
+@dataclass
+class _Manifest:
+    """One version of a state dir's manifest: per table, the live dir
+    names, each mapped to its :class:`_Provenance` (a compact dir) or
+    None (a plain batch dir, whose name is its batch id); plus the
+    registered stream run ids, whose ``<run_id>-<epoch>`` batch ids
+    follow the sequential-epoch contract and compress to intervals.
+    Only REGISTERED runs compress — a user batch id that merely LOOKS
+    like ``name-123`` stays exact, because nothing guarantees its
+    epochs commit in order. Registered run ids are therefore a
+    reserved namespace: never hand-issue ``<run_id>-<n>`` batch ids
+    against a state dir whose ``<run_id>`` is registered."""
+
+    version: int = 0
+    tables: dict[str, dict[str, _Provenance | None]] = field(default_factory=dict)
+    stream_runs: set[str] = field(default_factory=set)
+
+    def live(self, table: str) -> dict[str, _Provenance | None]:
+        return self.tables.get(table, {})
+
+    def names(self, table: str, compact: bool | None = None) -> list[str]:
+        """Sorted live dir names of ``table``; ``compact`` selects one
+        tier (True: compact dirs, False: plain batch dirs)."""
+        return sorted(
+            n for n, p in self.live(table).items()
+            if compact is None or (p is not None) == compact
+        )
+
+    def committed(self, table: str, bid: str) -> bool:
+        """Has batch ``bid`` committed to ``table`` — a live plain dir,
+        or folded into a live compact dir."""
+        return any(
+            bid == n if p is None else bid in p for n, p in self.live(table).items()
+        )
 
     def to_json(self) -> str:
-        import json
-
-        if not self.runs:  # legacy list form — format-stable for
-            return json.dumps(sorted(self.ids))  # batch-mode dirs
+        tables = {
+            t: {n: None if p is None else p.to_obj() for n, p in live.items()}
+            for t, live in self.tables.items()
+        }
+        stream_runs = sorted(self.stream_runs)
         return json.dumps(
-            {
-                "v": 2,
-                "ids": sorted(self.ids),
-                "runs": {r: list(iv) for r, iv in self.runs.items()},
-            }
+            {"version": self.version, "stream_runs": stream_runs, "tables": tables},
+            sort_keys=True,
         )
 
     @staticmethod
-    def from_json(data: str) -> "_Provenance":
-        import json
-
+    def from_json(data: str) -> "_Manifest":
         obj = json.loads(data)
-        if isinstance(obj, list):
-            return _Provenance(set(obj))
-        return _Provenance(
-            set(obj["ids"]),
-            {
-                run: (int(iv[0]), int(iv[1]))
-                for run, iv in obj["runs"].items()
-            },
-        )
+        tables = {
+            t: {n: None if p is None else _Provenance.from_obj(p) for n, p in live.items()}
+            for t, live in obj["tables"].items()
+        }
+        return _Manifest(obj["version"], tables, set(obj["stream_runs"]))
 
 
-def _write_provenance(
-    spark: SparkSession, out_dir: str, prov: "_Provenance"
-) -> None:
-    """Write the provenance file ATOMICALLY (temp + overwrite-rename):
-    a crash mid-write must not leave a committed compact dir with
-    truncated JSON — that would make every later state operation raise
-    out of :func:`_read_provenance` with no self-heal path
-    (review-found r14). The rename is ``FileContext.rename(...,
-    Options.Rename.OVERWRITE)`` — a single atomic step even when the
-    destination exists — because the earlier delete-then-rename pair
-    left a window on idempotent re-runs where a crash between the two
-    stranded a committed compact dir with NO provenance, silently
-    reopening the hub double-count transient until the next compaction
-    (r14 ADVICE). With it, the final path either holds the previous
-    complete JSON, the new complete JSON, or does not exist (crash
-    before any rename → sources still exist, every id still
-    discoverable by its own ``_SUCCESS``)."""
-    final = posixpath.join(out_dir, _PROVENANCE_FILE)
-    tmp = final + ".tmp"
-    fs, jtmp = _fs(spark, tmp)
-    stream = fs.create(jtmp, True)
+def _version_file(state_dir: str, version: int) -> str:
+    return posixpath.join(state_dir, _MANIFEST_DIR, f"{version:020d}.json")
+
+
+def _read_manifest(spark: SparkSession, state_dir: str) -> _Manifest:
+    """The latest manifest version of ``state_dir`` (an empty version 0
+    for a state dir nothing committed to yet). Raises ValueError on a
+    pre-manifest state dir: one holding table dirs but no log."""
+    fs, jdir = _fs(spark, posixpath.join(state_dir, _MANIFEST_DIR))
+    if not fs.exists(jdir):
+        legacy = [
+            t for t in (*_STATE_TABLES, "accepted")
+            if fs.exists(_fs(spark, posixpath.join(state_dir, t))[1])
+        ]
+        if legacy:
+            raise ValueError(
+                f"{state_dir} holds state tables {legacy} but no {_MANIFEST_DIR}/ "
+                "log: it was written by the pre-manifest layout, which is "
+                "neither read nor adopted"
+            )
+        return _Manifest()
+    names = [st.getPath().getName() for st in fs.listStatus(jdir)]
+    versions = [int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()]
+    if not versions:
+        return _Manifest()
+    stream = fs.open(_fs(spark, _version_file(state_dir, max(versions)))[1])
     try:
-        stream.write(bytearray(prov.to_json().encode("utf-8")))
+        data = bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
     finally:
         stream.close()
-    jfinal = _fs(spark, final)[1]
+    return _Manifest.from_json(data.decode("utf-8"))
+
+
+def _rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` to ``dst`` in one step that fails if ``dst``
+    exists (``FileContext.rename`` with ``Options.Rename.NONE``; void,
+    it raises instead of returning False)."""
     jvm = spark._jvm
+    jdst = _fs(spark, dst)[1]
     fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-        jfinal.toUri(), spark._jsc.hadoopConfiguration()
+        jdst.toUri(), spark._jsc.hadoopConfiguration()
     )
-    overwrite = spark.sparkContext._gateway.new_array(
+    opts = spark.sparkContext._gateway.new_array(
         jvm.org.apache.hadoop.fs.Options.Rename, 1
     )
-    overwrite[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-    # void + atomic: raises on failure instead of returning False
-    fc.rename(jtmp, jfinal, overwrite)
+    opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.NONE
+    fc.rename(_fs(spark, src)[1], jdst, opts)
 
 
-def _read_provenance(spark: SparkSession, batch_dir: str) -> "_Provenance":
-    """Folded batch ids recorded in ``batch_dir``'s provenance file
-    (empty for ordinary ingest dirs and pre-provenance compact dirs),
-    as a :class:`_Provenance` (exact ids + per-run high-waters)."""
-    path = posixpath.join(batch_dir, _PROVENANCE_FILE)
-    fs, jpath = _fs(spark, path)
-    if not fs.exists(jpath):
-        return _Provenance()
-    stream = fs.open(jpath)
+def _publish(
+    spark: SparkSession,
+    state_dir: str,
+    m: _Manifest,
+    add: dict[str, dict[str, _Provenance | None]] | None = None,
+    drop: dict[str, list[str]] | None = None,
+    run: str | None = None,
+) -> _Manifest:
+    """Commit the version after ``m``: ``drop`` removes live names per
+    table, ``add`` adds entries, ``run`` registers a stream run. The
+    version is written to a temp file of its own (a unique name, so a
+    racing writer cannot replace its content), then renamed to its
+    final name without overwrite — the commit point: of two writers
+    racing one version, the second rename raises. Returns the new
+    version."""
+    tables = {t: dict(live) for t, live in m.tables.items()}
+    for t, names in (drop or {}).items():
+        for n in names:
+            del tables[t][n]
+    for t, entries in (add or {}).items():
+        tables.setdefault(t, {}).update(entries)
+    new = _Manifest(m.version + 1, tables, m.stream_runs | ({run} if run else set()))
+    final = _version_file(state_dir, new.version)
+    tmp = f"{final}.{uuid.uuid4().hex}.tmp"
+    fs, jtmp = _fs(spark, tmp)
+    stream = fs.create(jtmp, False)
     try:
-        data = bytes(
-            spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        )
+        stream.write(bytearray(new.to_json().encode("utf-8")))
     finally:
         stream.close()
-    return _Provenance.from_json(data.decode("utf-8"))
+    try:
+        _rename(spark, tmp, final)
+    except Exception:
+        fs.delete(jtmp, False)
+        raise
+    old = _version_file(state_dir, new.version - _MANIFEST_RETAIN)
+    fs.delete(_fs(spark, old)[1], False)
+    return new
 
 
-def _folded_batch_ids(spark: SparkSession, root: str) -> "_Provenance":
-    """Every original batch id that a COMMITTED compacted dir under
-    ``root`` has folded — the resume-check complement to a batch's
-    own ``_SUCCESS`` marker: after compaction deletes the source dir,
-    this is the only durable record that the batch committed. Without
-    it, re-running a compacted-away ``batch_id`` would recompute,
-    anti-join everything against state, and OVERWRITE the staged
-    survivors with empty rows (r14 review-found; the hazard predates
-    in-ingest maintenance but automatic compaction widens it).
-    Streaming epochs arrive compressed as per-run high-waters — the
-    driver-side cost of this set is O(#runs + #batch-mode-ids), not
-    O(total epochs ever) (r15 watch #2)."""
-    out = _Provenance()
-    for d in _committed_batch_dirs(spark, root):
-        name = d.rsplit("batch=", 1)[1]
-        if name.startswith("compact-"):
-            out = out.union(_read_provenance(spark, d))
-    return out
-
-
-def _fold_sources(
-    spark: SparkSession, state_dir: str, dirs: list[str]
-) -> "_Provenance":
-    """The provenance a compaction of ``dirs`` writes — the one fold
-    both :func:`compact_state` and :func:`compact_accepted` use. A
-    plain source contributes its batch id (a registered run's epoch
-    widens that run's interval); a compact source is absorbed."""
-    stream_runs = _stream_run_ids(spark, state_dir)
-    out = _Provenance()
-    for d in dirs:
-        name = d.rsplit("batch=", 1)[1]
-        if name.startswith("compact-"):
-            out = out.absorb(name, _read_provenance(spark, d))
-        else:
-            out.add(name, stream_runs)
-    return out
-
-
-def _batch_committed(
-    spark: SparkSession, state_dir: str, table: str, bid: str
-) -> bool:
-    """Has batch ``bid``'s state for ``table`` committed durably —
-    either its own ``batch=<bid>/_SUCCESS`` still exists, or a
-    committed compacted dir's provenance records it (the dir itself
-    was folded and deleted by :func:`compact_state`). The resume
-    check every ingest uses; the provenance half is what makes
-    resume-by-``batch_id`` safe under automatic state maintenance."""
-    root = posixpath.join(state_dir, table)
-    fs, marker = _fs(
-        spark, posixpath.join(root, f"batch={bid}", "_SUCCESS")
+def _swap_in(
+    spark: SparkSession,
+    state_dir: str,
+    m: _Manifest,
+    table: str,
+    sources: list[str],
+    cid: str,
+) -> _Manifest:
+    """Commit compact dir ``cid`` of ``table`` in place of ``sources``;
+    its provenance folds theirs."""
+    live = m.live(table)
+    prov = _fold({n: live[n] for n in sources}, m.stream_runs)
+    return _publish(
+        spark, state_dir, m, add={table: {cid: prov}}, drop={table: sources}
     )
-    if fs.exists(marker):
-        return True
-    return bid in _folded_batch_ids(spark, root)
+
+
+def _compact_id(sources: list[str]) -> str:
+    """A compact dir's name: a hash of its source names, so a re-run of
+    a crashed compaction overwrites the crashed attempt's dir."""
+    return "compact-" + hashlib.sha256("|".join(sorted(sources)).encode()).hexdigest()[:12]
+
+
+def _sweep(spark: SparkSession, root: str, live: set[str]) -> None:
+    """Delete every ``batch=*`` dir under ``root`` whose name is not in
+    ``live``: superseded compaction sources and crash garbage alike.
+    Relies on the run lock: an uncommitted ingest's dirs are unnamed
+    too, and a concurrent sweep would delete them."""
+    fs, jroot = _fs(spark, root)
+    if not fs.exists(jroot):
+        return
+    for st in fs.listStatus(jroot):
+        name = st.getPath().getName()
+        if name.startswith("batch=") and name[6:] not in live:
+            fs.delete(st.getPath(), True)
+
+
+def _register_stream_run(
+    spark: SparkSession, state_dir: str, run_id: str
+) -> None:
+    """Record in the manifest that ``run_id``'s epoch batches follow
+    the sequential-commit contract (called by streaming/ingest.py
+    before the query starts; idempotent)."""
+    if "/" in run_id or run_id.startswith("_") or not run_id:
+        raise ValueError(f"invalid stream run_id {run_id!r}")
+    if run_id == "compact":
+        # its epoch ids compact-<n> could name a live compact dir
+        # (compact-<hex12>, which CAN be all digits)
+        raise ValueError("'compact' is a reserved stream run_id")
+    m = _read_manifest(spark, state_dir)
+    if run_id not in m.stream_runs:
+        _publish(spark, state_dir, m, run=run_id)
 
 
 #: Default state-maintenance threshold: an ingest that leaves this
-#: many committed batch dirs in its state table triggers an inline
+#: many live batch dirs in its state table triggers an inline
 #: :func:`compact_state` — bounded fragmentation BY DEFAULT (r13
 #: verdict task #5: "bounded state should be the default, not a
 #: docstring instruction"), at one amortized rewrite per
@@ -509,57 +575,23 @@ def _validate_batch_columns(batch: DataFrame) -> None:
         )
 
 
-# ------------------------------------------------- state tables
-
-#: Signature/identity state tables: table name → partition columns
-#: its batch dirs carry (preserved through compaction so
-#: prefix-co-located readers keep working).
-_STATE_TABLES = {
-    "fingerprints": ["fp_prefix"],
-    "phashes": ["fp_prefix"],
-    "audio_fps": [],
-    "frame_phashes": [],
-    # MinHash signatures of accepted docs (r16): the near-dup TEXT
-    # ingest's state — ~100 B/doc regardless of document length,
-    # unpartitioned (candidate generation re-derives band keys from
-    # the sig arrays with codegen expressions)
-    "minhash_sigs": [],
-    # exact content_md5 of ACCEPTED quarantined payloads (r15): the
-    # corrupt rows' identity table — tiny (corrupt rows are the
-    # exception), unpartitioned; r16 adds the src_batch attribution
-    # data column
-    "quarantine_md5s": [],
-}
-
-#: Explicit read schemas for state tables whose column set changed
-#: across releases (schema inference must not pick a pre-change
-#: footer and silently drop the newer column; an absent column reads
-#: as NULL), or whose commits can be part-file-less (inference cannot
-#: read those). ``batch`` is the partition column — included so the
-#: explicit-schema basePath read still surfaces it.
-_STATE_TABLE_SCHEMAS = {
-    "quarantine_md5s": StructType(
-        [
-            StructField("content_md5", StringType()),
-            StructField("doc_id", LongType()),
-            StructField("src_batch", StringType()),  # r16
-            StructField("batch", StringType()),
-        ]
-    ),
-}
-
-
 def _read_table(
-    spark: SparkSession, state_dir: str, table: str, *cols: str
+    spark: SparkSession,
+    state_dir: str,
+    table: str,
+    *cols: str,
+    m: _Manifest | None = None,
 ) -> DataFrame | None:
-    """``table``'s committed batches (a basePath read, so ``batch``
-    surfaces as a column; projected to ``cols`` when given), or None
-    before its first commit."""
-    root = posixpath.join(state_dir, table)
-    dirs = _committed_batch_dirs(spark, root)
+    """``table``'s live batch dirs per the manifest ``m`` (read when not
+    given) — a basePath read, so ``batch`` surfaces as a column;
+    projected to ``cols`` when given — or None before its first
+    commit."""
+    if m is None:
+        m = _read_manifest(spark, state_dir)
+    dirs = [_dir(state_dir, table, n) for n in m.names(table)]
     if not dirs:
         return None
-    reader = spark.read.option("basePath", root)
+    reader = spark.read.option("basePath", posixpath.join(state_dir, table))
     if table in _STATE_TABLE_SCHEMAS:
         reader = reader.schema(_STATE_TABLE_SCHEMAS[table])
     frame = reader.parquet(*dirs)
@@ -608,9 +640,8 @@ def read_quarantine_state(spark: SparkSession, state_dir: str) -> DataFrame | No
     re-delivered corrupt bytes — a NULL decode signature has no
     content identity, so without it a firehose of the same corrupt
     blob would grow the accepted set without bound. Empty commits
-    (every corrupt row a re-delivery) are part-file-less dirs whose
-    ``_SUCCESS`` still marks the identity committed; the explicit
-    schema reads them."""
+    (every corrupt row a re-delivery) are part-file-less dirs the
+    manifest still names; the explicit schema reads them."""
     return _read_table(
         spark, state_dir, "quarantine_md5s", "content_md5", "doc_id"
     )
@@ -635,7 +666,7 @@ def _ingest(
     on_error: str = "raise",
     binary_col: str | None = None,
     decoded: Column | None = None,
-    after_commit: Callable[[str], None] | None = None,
+    before_commit: Callable[[str], None] | None = None,
 ) -> DataFrame:
     """The ingest protocol of the module docstring, steps 1-7, for
     every modality. The modality's part:
@@ -653,8 +684,8 @@ def _ingest(
     * ``commit_cols`` — what ``table`` stores per accepted row.
     * ``decoded`` — under quarantine, the predicate of a decoded
       signature row; None when a corrupt payload emits no row at all.
-    * ``after_commit(bid)`` — a write that follows the signature
-      commit (audio's hub-guard word counts)."""
+    * ``before_commit(bid)`` — a derived write that follows the
+      signature write (audio's hub-guard word counts)."""
     _validate_batch_columns(batch)
     if on_error not in ("raise", "quarantine"):
         raise ValueError(
@@ -662,35 +693,11 @@ def _ingest(
         )
     if maintain_max_batch_dirs is not None and maintain_max_batch_dirs < 2:
         raise ValueError("maintain_max_batch_dirs must be >= 2 or None")
+    m = _read_manifest(spark, state_dir)
     quarantine = on_error == "quarantine"
     bid = batch_id if batch_id is not None else uuid.uuid4().hex
-
-    def undecoded(frame: DataFrame, sigs: DataFrame) -> DataFrame:
-        # ids of `frame` with no decoded row in `sigs`
-        ids = frame.select(F.col(id_col).alias("doc_id"))
-        if decoded is None:
-            return ids.distinct().join(
-                sigs.select("doc_id").distinct(), "doc_id", "left_anti"
-            )
-        return (
-            sigs.filter(~decoded).select("doc_id").join(ids, "doc_id").distinct()
-        )
-
-    if batch_id is not None and _batch_committed(spark, state_dir, table, bid):
-        acc = _read_staged_resume(spark, state_dir, bid, batch.schema)
-        if quarantine and not _batch_committed(
-            spark, state_dir, "quarantine_md5s", bid
-        ):
-            # crash between the signature and quarantine commits: the
-            # staged rows without a decoded state row ARE the accepted
-            # corrupt set the original run decided
-            state = _read_table(spark, state_dir, table)
-            if state is not None:
-                _backfill_quarantine(
-                    spark, state_dir, bid, acc, id_col, binary_col,
-                    undecoded(acc, state),
-                )
-        return acc
+    if batch_id is not None and m.committed(table, bid):
+        return _read_staged_resume(spark, state_dir, m, bid, batch.schema)
 
     cached: list[DataFrame] = []
 
@@ -703,7 +710,7 @@ def _ingest(
         # ONE eager count fills every cache before the match's
         # multi-branch consumers can race it into a duplicate decode
         n = sigs.count() if cached else None
-        state = _read_table(spark, state_dir, table)
+        state = _read_table(spark, state_dir, table, m=m)
         clean = sigs
         if quarantine and decoded is not None:
             clean = sigs.filter(decoded)
@@ -715,40 +722,57 @@ def _ingest(
             corrupt = (
                 sigs.filter(~decoded).select("doc_id")
                 if decoded is not None
-                else undecoded(batch, sigs)
+                else batch.select(F.col(id_col).alias("doc_id"))
+                .distinct()
+                .join(sigs.select("doc_id").distinct(), "doc_id", "left_anti")
             )
             if not corrupt.isEmpty():
-                q_md5s, _ = _quarantine_identity(
-                    spark, state_dir, batch, id_col, binary_col, corrupt
+                q_md5s = _quarantine_identity(
+                    spark, state_dir, m, batch, id_col, binary_col, corrupt
                 )
                 fresh = fresh.unionByName(
                     q_md5s.select(F.col("doc_id").alias(key))
                 )
 
-        # stage BEFORE any state mutation; overwrite makes re-running a
-        # crashed attempt clean. A semi join: survivor ids may repeat
-        # (one row per sampled video frame)
-        staged_dir = posixpath.join(state_dir, "accepted", f"batch={bid}")
+        # the first write marks the state dir as manifest-layout, so a
+        # crash before the first commit cannot read as pre-manifest
+        fs, jlog = _fs(spark, posixpath.join(state_dir, _MANIFEST_DIR))
+        fs.mkdirs(jlog)
+        # stage; overwrite makes re-running a crashed attempt clean. A
+        # semi join: survivor ids may repeat (one row per sampled
+        # video frame)
+        staged_dir = _dir(state_dir, "accepted", bid)
         batch.join(
             fresh.withColumnRenamed(key, id_col), id_col, "left_semi"
         ).write.mode("overwrite").parquet(staged_dir)
         accepted = spark.read.schema(batch.schema).parquet(staged_dir)
 
-        # the commit point: signatures of the STAGED ids only
+        # signatures of the STAGED ids only
         rows = (
             sigs.join(accepted.select(F.col(id_col).alias(key)), key)
             if cached
             else sign(accepted, cache)
         )
-        sig_dir = posixpath.join(state_dir, table, f"batch={bid}")
         writer = rows.select(*commit_cols).write.mode("overwrite")
         if _STATE_TABLES[table]:
             writer = writer.partitionBy(*_STATE_TABLES[table])
-        writer.parquet(sig_dir)
-        if after_commit is not None:
-            after_commit(bid)
+        writer.parquet(_dir(state_dir, table, bid))
+        if before_commit is not None:
+            before_commit(bid)
+        tables = ["accepted", table]
         if q_md5s is not None:
-            _commit_quarantine(spark, state_dir, bid, q_md5s, accepted, id_col)
+            # keyed by the STAGED doc ids; src_batch pins the
+            # originating batch so attribution survives compaction
+            q_md5s.join(
+                accepted.select(F.col(id_col).alias("doc_id")), "doc_id"
+            ).select(
+                "content_md5", "doc_id", F.lit(bid).alias("src_batch")
+            ).write.mode("overwrite").parquet(
+                _dir(state_dir, "quarantine_md5s", bid)
+            )
+            tables.append("quarantine_md5s")
+        # the commit point
+        _publish(spark, state_dir, m, add={t: {bid: None} for t in tables})
         if maintain_max_batch_dirs is not None:
             maintain_state(
                 spark, state_dir, maintain_max_batch_dirs,
@@ -796,120 +820,60 @@ def ingest_batch(
 
 
 def compact_state(spark: SparkSession, state_dir: str, table: str) -> int:
-    """Rewrite every committed batch dir of one state table into a
-    SINGLE batch dir and remove the superseded dirs (r12 verdict task
-    #5). ``read_*_state`` unions every committed batch, so a
-    daily-cadence deployment accumulates O(batches) parquet fragments
-    — at 1000 batches the image path's 16 B/row state becomes a
-    small-files scan problem, the reference's own X4 listing lesson
+    """Rewrite every live batch dir of one state table into a SINGLE
+    batch dir and remove the superseded dirs (r12 verdict task #5).
+    ``read_*_state`` unions every live batch, so a daily-cadence
+    deployment accumulates O(batches) parquet fragments — at 1000
+    batches the image path's 16 B/row state becomes a small-files
+    scan problem, the reference's own X4 listing lesson
     (main_pipeline.py:226-230) applied to state. Run this at
     maintenance cadence (e.g. every N ingests), UNDER THE SAME RUN
     LOCK as ingests (schedule.py) — the module contract already
     serializes state writers.
 
-    Crash consistency, same _SUCCESS-gated reasoning as ingest:
+    Write the compact dir, then commit one manifest version that swaps
+    it in for its sources, with their folded batch ids as its
+    provenance (so a crashed ingest whose dir was folded still resumes
+    by id). Every call, folding or not, ends by deleting each dir of
+    the table the latest version does not name: the superseded
+    sources and any crash garbage. A crash before the rename leaves
+    the sources live and the partial compact unnamed (the re-run's
+    compact hashes the same source names and overwrites it); a crash
+    after it leaves the sources unnamed until the re-run's sweep.
+    Either way no reader counts a row twice, so the audio hub guard's
+    word counts never double.
 
-    * die mid-write: the compacted dir lacks ``_SUCCESS`` → invisible;
-      sources intact. Re-run overwrites the partial.
-    * die after the compacted dir commits, before/while deleting
-      sources: readers see DUPLICATE state rows — harmless for
-      matching (state is a set: anti-joins ignore duplicates, the
-      fuzzy paths collapse them in their pair aggregations) and never
-      a loss; the next compaction's ``distinct()`` collapses them
-      permanently (self-healing, so compaction is idempotent at any
-      crash point). One audio-path caveat in this window (r13
-      ADVICE): with both copies visible, sampled word counts would
-      double and the hub guard's effective cut would halve —
-      transiently over-dropping probe words (recall-only: a dropped
-      probe word can only miss a candidate, never invent one). Since
-      r14 the provenance file closes this exactly —
-      :func:`read_audio_hubs` skips source dirs a committed
-      compact dir's ``_sources.json`` already folds — leaving the
-      transient only for pre-provenance compact dirs; the
-      "duplicates are harmless" claim above is about MATCH
-      correctness, not hub-cut calibration.
-
-    The compacted dir's name hashes its source listing, so a crashed
-    attempt that partially deleted sources produces a NEW compaction
-    id on re-run (the stale compacted dir is just another source).
-    For ``audio_fps``, count tables under ``word_counts/`` whose
-    batch no longer exists are removed too; the compacted batch's
-    counts regenerate on the next :func:`read_audio_hubs` call from
-    its durable fingerprints (the backfill path).
+    For ``audio_fps``, the sources' sampled word-count tables are
+    summed into the compact dir's table before the commit, and count
+    tables of names no longer live are deleted with the sources (a
+    rate the roll-up could not sum regenerates on the next
+    :func:`read_audio_hubs` call from the durable fingerprints).
 
     Returns the number of source batch dirs rewritten (0 = nothing to
-    do: fewer than two committed dirs)."""
+    do: fewer than two live dirs)."""
     if table not in _STATE_TABLES:
         raise ValueError(
             f"table must be one of {sorted(_STATE_TABLES)} (got {table!r})"
         )
-    root = posixpath.join(state_dir, table)
-    dirs = _committed_batch_dirs(spark, root)
-    if len(dirs) < 2:
-        return 0
-    cid = "compact-" + hashlib.sha256(
-        "|".join(dirs).encode()
-    ).hexdigest()[:12]
-    out_dir = posixpath.join(root, f"batch={cid}")
-    # drop the batch= partition column the basePath read surfaces —
-    # it is dir metadata, not state, and keeping it would defeat the
-    # self-healing distinct (a row duplicated across a crashed
-    # compaction's old and new dirs differs ONLY in batch). Tables in
-    # _STATE_TABLE_SCHEMAS read with their explicit schema: mixed-era
-    # dirs would otherwise depend on WHICH footer inference samples.
-    df = _read_table(spark, state_dir, table).drop("batch").distinct()
-    parts = _STATE_TABLES[table]
-    writer = df.write.mode("overwrite")
-    if parts:
-        writer = writer.partitionBy(*parts)
-    writer.parquet(out_dir)
-
-    # Provenance BEFORE deletion: a crashed ingest whose fp dir
-    # was compacted away can still resume by id instead of
-    # recomputing-to-empty and destroying its staged survivors. The
-    # compact sources' own names let read_audio_hubs skip them in a
-    # re-compaction crash window. Crash between the parquet commit
-    # and this write: sources still exist, so every id is still
-    # discoverable via its own _SUCCESS — no window.
-    _write_provenance(
-        spark, out_dir,
-        _fold_sources(spark, state_dir, [d for d in dirs if d != out_dir]),
-    )
-
+    m = _read_manifest(spark, state_dir)
+    names = m.names(table)
+    if len(names) >= 2:
+        cid = _compact_id(names)
+        # drop the batch= partition column the basePath read surfaces
+        # — it is dir metadata, not state
+        writer = _read_table(spark, state_dir, table, m=m).drop("batch").write
+        if _STATE_TABLES[table]:
+            writer = writer.partitionBy(*_STATE_TABLES[table])
+        writer.mode("overwrite").parquet(_dir(state_dir, table, cid))
+        if table == "audio_fps":
+            _roll_up_word_counts(spark, state_dir, names, cid)
+        m = _swap_in(spark, state_dir, m, table, names, cid)
+    live = set(m.names(table))
+    _sweep(spark, posixpath.join(state_dir, table), live)
     if table == "audio_fps":
-        # Roll the sources' sampled word-count tables up into the
-        # compact dir's table BEFORE deleting anything (review-found
-        # r14): without it, the next read_audio_hubs backfill
-        # re-explodes the ENTIRE accepted state (O(history) — the
-        # exact cost the r12 incremental-count design exists to
-        # avoid) every time maintenance compacts. Summing the tiny
-        # per-batch tables is O(distinct sampled words) and exact.
-        per_dir_prov = {
-            d: _read_provenance(spark, d)
-            for d in dirs
-            if d != out_dir
-        }
-        contributing = [
-            d.rsplit("batch=", 1)[1]
-            for d in per_dir_prov
-            # exclude sources another source already folds (the
-            # re-compaction crash window) — their rows are duplicates
-            # of the folding compact dir's and would double the sum
-            if not any(
-                d.rsplit("batch=", 1)[1] in p
-                for o, p in per_dir_prov.items()
-                if o != d
-            )
-        ]
-        _roll_up_word_counts(spark, state_dir, contributing, cid)
-
-    fs, _ = _fs(spark, state_dir)
-    for d in dirs:
-        if d != out_dir:  # a prior crashed compaction can be a source
-            fs.delete(_fs(spark, d)[1], True)
-    if table == "audio_fps":
-        _prune_stale_word_counts(spark, state_dir)
-    return len(dirs)
+        for rate_dir in _rate_dirs(spark, state_dir):
+            _sweep(spark, rate_dir, live)
+    return len(names) if len(names) >= 2 else 0
 
 
 def maintain_state(
@@ -920,8 +884,8 @@ def maintain_state(
     exclude_bid: str | None = None,
 ) -> dict[str, int]:
     """Threshold-driven maintenance sweep over every state table
-    under ``state_dir``: compact any table whose committed batch-dir
-    count reached ``max_batch_dirs`` (the operational face of
+    under ``state_dir``: compact any table whose live batch-dir count
+    reached ``max_batch_dirs`` (the operational face of
     :func:`compact_state`). Since r14 every ``ingest_*`` calls this
     INLINE on its own table after each commit (r13 verdict task #5 —
     bounded state is the default, not a docstring instruction), so
@@ -944,23 +908,17 @@ def maintain_state(
     that compacted (empty dict = nothing fragmented enough)."""
     if max_batch_dirs < 2:
         raise ValueError("max_batch_dirs must be >= 2")
+    m = _read_manifest(spark, state_dir)
     out: dict[str, int] = {}
     for table in tables if tables is not None else tuple(_STATE_TABLES):
-        dirs = _committed_batch_dirs(
-            spark, posixpath.join(state_dir, table)
-        )
-        if len(dirs) >= max_batch_dirs:
+        if len(m.names(table)) >= max_batch_dirs:
             out[table] = compact_state(spark, state_dir, table)
-    plain, compacts = _accepted_listing(spark, state_dir)
-    if exclude_bid is not None:
-        plain = [
-            d for d in plain if d.rsplit("batch=", 1)[1] != exclude_bid
-        ]
+    plain = [n for n in m.names("accepted", compact=False) if n != exclude_bid]
     if len(plain) >= max_batch_dirs:
         out["accepted"] = compact_accepted(
             spark, state_dir, exclude_bid=exclude_bid
         )
-    if len(compacts) >= max_batch_dirs:
+    if len(m.names("accepted", compact=True)) >= max_batch_dirs:
         out["accepted_compacts"] = compact_accepted(
             spark, state_dir, fold_compacts=True, exclude_bid=exclude_bid
         )
@@ -978,93 +936,6 @@ _SRC_BATCH_COL = "_src_batch"
 #: Target output file size for accepted-corpus compaction (the S5
 #: sized-files lesson applied to the corpus itself).
 _ACCEPTED_TARGET_FILE_BYTES = 512 << 20
-
-
-def _committed_ingest_bids(
-    spark: SparkSession, state_dir: str
-) -> "_Provenance":
-    """Every ORIGINAL ingest batch id whose state committed — its own
-    signature dir still standing, or a committed compaction's
-    provenance recording it — across all state tables, as a
-    membership-testable :class:`_Provenance` (streaming epochs stay
-    compressed as per-run high-waters)."""
-    out = _Provenance()
-    for table in _STATE_TABLES:
-        troot = posixpath.join(state_dir, table)
-        for d in _committed_batch_dirs(spark, troot):
-            bid = d.rsplit("batch=", 1)[1]
-            if not bid.startswith("compact-"):
-                out.ids.add(bid)
-        out = out.union(_folded_batch_ids(spark, troot))
-    return out
-
-
-def _accepted_dirs(
-    spark: SparkSession, state_dir: str
-) -> tuple[list[str], list[str], list[str]]:
-    """(plain_dirs, compact_dirs, dead_dirs) under ``accepted/``:
-
-    * ``plain_dirs`` — per-ingest staged dirs whose batch COMMITTED (an
-      uncommitted dir is in-flight staging, untouchable) and that no
-      committed compaction has already folded;
-    * ``compact_dirs`` — committed accepted-compaction dirs that are
-      LIVE: carrying provenance and not folded by a later compaction;
-    * ``dead_dirs`` — what crashed compactions left behind. An ORPHAN
-      compact (committed, no ``_sources.json``: the compaction died
-      before its provenance rename) is dead because deletion strictly
-      follows the provenance write, so its sources still carry every
-      row; counting it would duplicate the corpus, and with a
-      different cid on the next sweep the duplication would never
-      self-heal. A committed dir, plain or compact, that a committed
-      compact's provenance folds is dead too (that compaction died
-      before deleting it); since provenance names compacts only
-      directly, such a compact must go before its folder is itself
-      folded, or nothing would name it any more.
-
-    Dead dirs are never read; the next :func:`compact_accepted`
-    deletes them."""
-    root = posixpath.join(state_dir, "accepted")
-    fs, jroot = _fs(spark, root)
-    if not fs.exists(jroot):
-        return [], [], []
-    compacts: list[str] = []
-    dead: list[str] = []
-    plain: dict[str, str] = {}
-    for st in fs.listStatus(jroot):
-        name = st.getPath().getName()
-        if not st.isDirectory() or not name.startswith("batch="):
-            continue
-        bid, path = name[6:], st.getPath().toString()
-        if not bid.startswith("compact-"):
-            plain[bid] = path
-        elif fs.exists(st.getPath().suffix("/_SUCCESS")):
-            if fs.exists(st.getPath().suffix("/" + _PROVENANCE_FILE)):
-                compacts.append(path)
-            else:
-                dead.append(path)
-    folded = _Provenance()
-    for d in compacts:
-        folded = folded.union(_read_provenance(spark, d))
-    committed = _committed_ingest_bids(spark, state_dir)
-    live: list[str] = []
-    for d in compacts:
-        (dead if d.rsplit("batch=", 1)[1] in folded else live).append(d)
-    plain_dirs: list[str] = []
-    for b, p in sorted(plain.items()):
-        if b in folded:
-            dead.append(p)
-        elif b in committed:
-            plain_dirs.append(p)
-    return plain_dirs, live, dead
-
-
-def _accepted_listing(
-    spark: SparkSession, state_dir: str
-) -> tuple[list[str], list[str]]:
-    """(plain_dirs, compact_dirs): the live part of
-    :func:`_accepted_dirs`."""
-    plain, compacts, _ = _accepted_dirs(spark, state_dir)
-    return plain, compacts
 
 
 def _part_file_bytes(spark: SparkSession, d: str) -> tuple[int, int]:
@@ -1085,15 +956,17 @@ def _accepted_frame(
     compacts: list[str],
     attributed: bool,
 ) -> DataFrame | None:
-    """One frame over the readable (part-file-holding) dirs of both
-    accepted tiers, or None when every dir is survivor-less. The tiers
-    read separately: a single multi-dir read would need mergeSchema (a
-    footer read per file — the small-files cost again) to see the
-    compact tier's ``_src_batch`` column. ``attributed`` keeps
-    ``_src_batch``; plain dirs take it from their ``batch`` value."""
+    """One frame over the readable (part-file-holding) dirs among the
+    named accepted dirs of both tiers, or None when every dir is
+    survivor-less. The tiers read separately: a single multi-dir read
+    would need mergeSchema (a footer read per file — the small-files
+    cost again) to see the compact tier's ``_src_batch`` column.
+    ``attributed`` keeps ``_src_batch``; plain dirs take it from their
+    ``batch`` value."""
     root = posixpath.join(state_dir, "accepted")
     frames = []
-    for dirs, compact in ((plain, False), (compacts, True)):
+    for names, compact in ((plain, False), (compacts, True)):
+        dirs = [_dir(state_dir, "accepted", n) for n in names]
         readable = [d for d in dirs if _part_file_bytes(spark, d)[0] > 0]
         if not readable:
             continue
@@ -1115,12 +988,12 @@ def compact_accepted(
     fold_compacts: bool = False,
     exclude_bid: str | None = None,
 ) -> int:
-    """Fold committed per-ingest staged dirs into ONE sized compact
-    dir — the accepted CORPUS's answer to :func:`compact_state`:
-    under continuous micro-batching (streaming/ingest.py) every epoch
-    leaves its own ``accepted/batch=*`` dir, and at 10k epochs the
-    corpus read is a small-files wall even though every signature
-    table stays compacted.
+    """Fold live per-ingest staged dirs into ONE sized compact dir —
+    the accepted CORPUS's answer to :func:`compact_state`: under
+    continuous micro-batching (streaming/ingest.py) every epoch leaves
+    its own ``accepted/batch=*`` dir, and at 10k epochs the corpus
+    read is a small-files wall even though every signature table
+    stays compacted.
 
     TIERED deliberately, because the accepted table is THE DATA: by
     default only the plain per-ingest dirs fold (write cost bounded
@@ -1133,12 +1006,10 @@ def compact_accepted(
     bytes never cross the wire, the compaction is a read-merge-write.
     Folded rows keep their origin in the ``_src_batch`` column so a
     resumed ``batch_id`` can still find its staged survivors
-    (:func:`_read_staged_resume`); ``_sources.json`` provenance is
-    written before any deletion, exactly the compact_state protocol
-    (crash windows self-heal: a committed-but-undeleted source is
-    skipped by the folded-set rule on every read, and the first step
-    here deletes it along with orphan compacts — see
-    :func:`_accepted_dirs`).
+    (:func:`_read_staged_resume`), routed by the compact's manifest
+    provenance. Same commit order and sweep as compact_state: write,
+    commit the swap, then delete every dir under ``accepted/`` the
+    latest version does not name.
 
     ``exclude_bid`` keeps one batch out of this sweep — the inline
     maintenance path excludes the batch it just committed, because
@@ -1148,70 +1019,63 @@ def compact_accepted(
     modality (accepted schemas must union), and run under the
     schedule.py run lock. Returns the number of source dirs folded
     (0 = nothing to do)."""
-    plain, compacts, dead = _accepted_dirs(spark, state_dir)
-    fs, _ = _fs(spark, state_dir)
-    for d in dead:  # safe under the run lock: dead dirs are never read
-        fs.delete(_fs(spark, d)[1], True)
-    if exclude_bid is not None:
-        plain = [
-            d for d in plain if d.rsplit("batch=", 1)[1] != exclude_bid
-        ]
-    folding = compacts if fold_compacts else []
+    m = _read_manifest(spark, state_dir)
+    plain = [n for n in m.names("accepted", False) if n != exclude_bid]
+    folding = m.names("accepted", True) if fold_compacts else []
     sources = plain + folding
-    if len(sources) < 2:
-        return 0
-    out = _accepted_frame(spark, state_dir, plain, folding, attributed=True)
-    if out is None:
-        return 0  # only survivor-less dirs: nothing to write
-    total_bytes = sum(_part_file_bytes(spark, d)[1] for d in sources)
-    target = max(1, total_bytes // _ACCEPTED_TARGET_FILE_BYTES + 1)
-    cid = "compact-" + hashlib.sha256(
-        "|".join(sorted(sources)).encode()
-    ).hexdigest()[:12]
-    out_dir = posixpath.join(state_dir, "accepted", f"batch={cid}")
-    (
-        out.coalesce(int(target))
-        .sortWithinPartitions(_SRC_BATCH_COL)
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    _write_provenance(spark, out_dir, _fold_sources(spark, state_dir, sources))
-    for d in sources:
-        if d != out_dir:
-            fs.delete(_fs(spark, d)[1], True)
-    return len(sources)
+    # None when there is nothing to fold, or only survivor-less dirs
+    out = None
+    if len(sources) >= 2:
+        out = _accepted_frame(spark, state_dir, plain, folding, attributed=True)
+    if out is not None:
+        total_bytes = sum(
+            _part_file_bytes(spark, _dir(state_dir, "accepted", n))[1]
+            for n in sources
+        )
+        target = max(1, total_bytes // _ACCEPTED_TARGET_FILE_BYTES + 1)
+        cid = _compact_id(sources)
+        (
+            out.coalesce(int(target))
+            .sortWithinPartitions(_SRC_BATCH_COL)
+            .write.mode("overwrite")
+            .parquet(_dir(state_dir, "accepted", cid))
+        )
+        m = _swap_in(spark, state_dir, m, "accepted", sources, cid)
+    _sweep(spark, posixpath.join(state_dir, "accepted"), set(m.names("accepted")))
+    return len(sources) if out is not None else 0
 
 
 def _read_staged_resume(
-    spark: SparkSession, state_dir: str, bid: str, schema: StructType
+    spark: SparkSession,
+    state_dir: str,
+    m: _Manifest,
+    bid: str,
+    schema: StructType,
 ) -> DataFrame:
     """Staged survivors of a COMMITTED batch, for the resume path:
-    the batch's own staged dir when it still stands, else the rows a
-    committed accepted-compaction folded (filtered on
+    the batch's own staged dir while it is live, else the rows of the
+    live accepted compaction whose provenance holds it (filtered on
     ``_src_batch`` — parquet row groups are clustered on it by the
     compaction's within-partition sort, so the filter prunes on
     min/max stats instead of scanning the corpus)."""
-    staged_dir = posixpath.join(state_dir, "accepted", f"batch={bid}")
-    fs, jdir = _fs(spark, staged_dir)
-    if fs.exists(jdir):
-        return spark.read.schema(schema).parquet(staged_dir)
+    if bid in m.names("accepted", compact=False):
+        return spark.read.schema(schema).parquet(
+            _dir(state_dir, "accepted", bid)
+        )
     folded_schema = StructType(
         list(schema.fields) + [StructField(_SRC_BATCH_COL, StringType())]
     )
-    _, compacts = _accepted_listing(spark, state_dir)
-    for d in compacts:
-        if bid in _read_provenance(spark, d):
+    for name, prov in m.live("accepted").items():
+        if prov is not None and bid in prov:
             return (
                 spark.read.schema(folded_schema)
-                .parquet(d)
+                .parquet(_dir(state_dir, "accepted", name))
                 .filter(F.col(_SRC_BATCH_COL) == bid)
                 .select(*[f.name for f in schema.fields])
             )
     raise IOError(
-        f"batch {bid} committed its state but its staged survivors are "
-        f"missing from {staged_dir} and from every accepted-compaction "
-        "provenance — the accepted table was modified outside the "
-        "compaction protocol"
+        f"batch {bid} committed its state but manifest version "
+        f"{m.version} of {state_dir} names no accepted dir holding it"
     )
 
 
@@ -1220,7 +1084,8 @@ def read_accepted(spark: SparkSession, state_dir: str) -> DataFrame:
     — plain staged dirs and accepted-compaction dirs alike (the
     streaming face's corpus read; streaming/ingest.py::accepted_corpus
     delegates here). Raises ValueError before the first commit."""
-    plain, compacts = _accepted_listing(spark, state_dir)
+    m = _read_manifest(spark, state_dir)
+    plain, compacts = m.names("accepted", False), m.names("accepted", True)
     frame = _accepted_frame(spark, state_dir, plain, compacts, attributed=False)
     if frame is None:
         if not plain and not compacts:
@@ -1239,9 +1104,9 @@ def read_accepted_attributed(spark: SparkSession, state_dir: str) -> DataFrame:
     the compact dirs' ``_src_batch`` data column; plain dirs carry it
     as the ``batch`` partition value). The name is one of the two
     RESERVED columns, so it can never collide with a user schema."""
-    frame = _accepted_frame(
-        spark, state_dir, *_accepted_listing(spark, state_dir), attributed=True
-    )
+    m = _read_manifest(spark, state_dir)
+    plain, compacts = m.names("accepted", False), m.names("accepted", True)
+    frame = _accepted_frame(spark, state_dir, plain, compacts, attributed=True)
     if frame is None:
         raise ValueError(
             f"no committed ingest batches with survivors under {state_dir}"
@@ -1289,10 +1154,18 @@ def read_quarantine_payloads(
     )
 
 
+def _rate_dirs(spark: SparkSession, state_dir: str) -> list[str]:
+    """The per-rate ``word_counts/rate=*`` dirs."""
+    fs, jroot = _fs(spark, posixpath.join(state_dir, "word_counts"))
+    if not fs.exists(jroot):
+        return []
+    return [st.getPath().toString() for st in fs.listStatus(jroot)]
+
+
 def _roll_up_word_counts(
     spark: SparkSession,
     state_dir: str,
-    contributing_bids: list[str],
+    source_bids: list[str],
     cid: str,
 ) -> None:
     """Derive the compacted batch's per-rate sampled word-count
@@ -1300,62 +1173,22 @@ def _roll_up_word_counts(
     instead of the O(state) full re-explode the read_audio_hubs
     backfill would otherwise pay after every compaction (review-found
     r14). Exact because deterministic per-(clip, frame) sampling
-    makes counts over DISJOINT row sets sum to the union's counts;
-    the caller excludes crash-window duplicate sources via
-    provenance. A rate where any contributing source lacks a
+    makes counts over DISJOINT row sets sum to the union's counts,
+    and live sources are disjoint. A rate where any source lacks a
     committed table is skipped entirely — the backfill regenerates
     that rate exactly from the durable fingerprints (the correctness
     path is never the sum, only the cheapness)."""
-    wc_root = posixpath.join(state_dir, "word_counts")
-    fs, jroot = _fs(spark, wc_root)
-    if not fs.exists(jroot):
-        return
-    for rate_st in fs.listStatus(jroot):
-        name = rate_st.getPath().getName()
-        if not rate_st.isDirectory() or not name.startswith("rate="):
-            continue
-        rate_dir = rate_st.getPath().toString()
-        srcs = []
-        for bid in contributing_bids:
-            d = posixpath.join(rate_dir, f"batch={bid}")
-            if fs.exists(_fs(spark, posixpath.join(d, "_SUCCESS"))[1]):
-                srcs.append(d)
-            else:
-                srcs = None
-                break
-        if not srcs:
-            continue
-        (
-            spark.read.parquet(*srcs)
-            .groupBy("v")
-            .agg(F.sum("n_sampled").alias("n_sampled"))
-            .write.mode("overwrite")
-            .parquet(posixpath.join(rate_dir, f"batch={cid}"))
-        )
-
-
-def _prune_stale_word_counts(spark: SparkSession, state_dir: str) -> None:
-    """Remove ``word_counts/rate=*/batch=*`` dirs whose fingerprint
-    batch no longer exists (superseded by compaction) — they are
-    never read (read_audio_hubs maps FROM the fp listing), this is
-    pure small-files hygiene."""
-    live = {
-        d.rsplit("batch=", 1)[1]
-        for d in _committed_batch_dirs(
-            spark, posixpath.join(state_dir, "audio_fps")
-        )
-    }
-    wc_root = posixpath.join(state_dir, "word_counts")
-    fs, jroot = _fs(spark, wc_root)
-    if not fs.exists(jroot):
-        return
-    for rate_st in fs.listStatus(jroot):
-        if not rate_st.isDirectory():
-            continue
-        for batch_st in fs.listStatus(rate_st.getPath()):
-            name = batch_st.getPath().getName()
-            if name.startswith("batch=") and name[6:] not in live:
-                fs.delete(batch_st.getPath(), True)
+    fs, _ = _fs(spark, state_dir)
+    for rate_dir in _rate_dirs(spark, state_dir):
+        srcs = [posixpath.join(rate_dir, f"batch={b}") for b in source_bids]
+        if all(fs.exists(_fs(spark, f"{d}/_SUCCESS")[1]) for d in srcs):
+            (
+                spark.read.parquet(*srcs)
+                .groupBy("v")
+                .agg(F.sum("n_sampled").alias("n_sampled"))
+                .write.mode("overwrite")
+                .parquet(posixpath.join(rate_dir, f"batch={cid}"))
+            )
 
 
 # -------------------------------------- quarantine content identity
@@ -1368,47 +1201,36 @@ def quarantine_report(spark: SparkSession, state_dir: str) -> DataFrame | None:
     that admitted it — the frame an operator groups per-batch to
     watch corrupt-rate trends, or joins back to the staged payloads
     to pull the bytes for offline triage. Attribution SURVIVES
-    compaction (r16): commits carry the originating batch in a
-    ``src_batch`` data column, which folding preserves, and the
-    report coalesces it over the partition value (pre-r16 rows read
-    the column as NULL and fall back to the dir name — for those,
-    folded attribution degrades to the compact id as before, with
-    the original ids in the compact dir's ``_sources.json``).
-    Returns None before any quarantined acceptance. The explicit
-    table schema keeps ``batch`` even when every commit is
-    part-file-less (nothing for partition discovery to find)."""
+    compaction: every identity row carries its originating batch in
+    the ``src_batch`` data column, which folding preserves. Returns
+    None before any quarantined acceptance; the explicit table schema
+    reads even a table whose every commit is part-file-less."""
     frame = _read_table(spark, state_dir, "quarantine_md5s")
     if frame is None:
         return None
     return frame.select(
-        F.coalesce(
-            F.col("src_batch"), F.col("batch").cast("string")
-        ).alias("batch"),
-        "content_md5",
-        "doc_id",
+        F.col("src_batch").alias("batch"), "content_md5", "doc_id"
     )
 
 
 def _quarantine_identity(
     spark: SparkSession,
     state_dir: str,
+    m: _Manifest,
     batch: DataFrame,
     id_col: str,
     binary_col: str,
     corrupt_ids: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Exact content identity for this batch's quarantined rows: a
     corrupt payload is fingerprinted by ``md5(raw bytes)`` —
     decode-free, one built-in hash — because its decode signature is
-    NULL by definition. Returns ``(accepted_md5s, rejected_ids)``:
-
-    * ``accepted_md5s`` — (content_md5, doc_id), the min-id
-      representative per DISTINCT corrupt payload that is not already
-      recorded in quarantine state (within-batch exact dedup + the
-      same history-always-wins anti-join the clean rows get);
-    * ``rejected_ids`` — every other corrupt id: a within-batch
-      duplicate of a representative, or a re-delivery of
-      already-quarantined bytes.
+    NULL by definition. Returns ``(content_md5, doc_id)``: the min-id
+    representative per DISTINCT corrupt payload that is not already
+    recorded in quarantine state (within-batch exact dedup + the same
+    history-always-wins anti-join the clean rows get). Every other
+    corrupt id — a within-batch duplicate of a representative, or a
+    re-delivery of already-quarantined bytes — is rejected.
 
     Both joins are keyed equi-joins on the 16-byte md5 — corrupt rows
     are the rare case, so the state side stays tiny at any corpus
@@ -1427,78 +1249,10 @@ def _quarantine_identity(
         )
     )
     reps = bad.groupBy("content_md5").agg(F.min("doc_id").alias("doc_id"))
-    state = read_quarantine_state(spark, state_dir)
+    state = _read_table(spark, state_dir, "quarantine_md5s", "content_md5", m=m)
     if state is not None:
-        reps = reps.join(
-            state.select("content_md5"), "content_md5", "left_anti"
-        )
-    rejected = corrupt_ids.join(
-        reps.select("doc_id"), "doc_id", "left_anti"
-    )
-    return reps.select("content_md5", "doc_id"), rejected
-
-
-def _commit_quarantine(
-    spark: SparkSession,
-    state_dir: str,
-    bid: str,
-    accepted_md5s: DataFrame,
-    accepted: DataFrame,
-    id_col: str,
-) -> None:
-    """Commit the batch's accepted-quarantine identity rows, keyed by
-    the STAGED doc ids (state records only durable docs — the same
-    doctrine as the signature commits). Runs AFTER the signature
-    commit so the signature ``_SUCCESS`` stays the single commit
-    point: a crash in between leaves the batch committed with its
-    quarantine rows missing, which the resume path backfills
-    (:func:`_backfill_quarantine`).
-
-    ``src_batch`` (r16) pins the ORIGINATING batch as a data column
-    so per-epoch attribution survives compaction — folded rows no
-    longer report the compact dir's id (quarantine_report coalesces
-    ``src_batch`` over the partition value; pre-r16 rows read as
-    NULL and fall back to the partition)."""
-    accepted_md5s.join(
-        accepted.select(F.col(id_col).alias("doc_id")), "doc_id"
-    ).select(
-        "content_md5", "doc_id", F.lit(bid).alias("src_batch")
-    ).write.mode("overwrite").parquet(
-        posixpath.join(state_dir, "quarantine_md5s", f"batch={bid}")
-    )
-
-
-def _backfill_quarantine(
-    spark: SparkSession,
-    state_dir: str,
-    bid: str,
-    accepted: DataFrame,
-    id_col: str,
-    binary_col: str,
-    corrupt_staged_ids: DataFrame,
-) -> None:
-    """Resume-path self-heal: the batch's signatures committed but
-    its quarantine identity rows did not (crash between the two
-    writes, or a pre-r15 batch resumed under r15). Recompute the
-    md5s from the staged payloads — the staged corrupt rows ARE the
-    accepted set the original run decided — and commit them. No
-    state anti-join here: a later batch may have accepted the same
-    md5 in the window, and duplicate md5 rows are harmless to the
-    anti-join (set semantics, collapsed at the next compaction)."""
-    (
-        accepted.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(binary_col).alias("_q_payload"),
-        )
-        .join(corrupt_staged_ids, "doc_id")
-        .select(
-            F.md5(F.col("_q_payload")).alias("content_md5"),
-            "doc_id",
-            F.lit(bid).alias("src_batch"),
-        )
-        .write.mode("overwrite")
-        .parquet(posixpath.join(state_dir, "quarantine_md5s", f"batch={bid}"))
-    )
+        reps = reps.join(state, "content_md5", "left_anti")
+    return reps.select("content_md5", "doc_id")
 
 
 # ------------------------------------------ incremental IMAGE ingest
@@ -1626,13 +1380,14 @@ def read_audio_hubs(
     per-(clip, frame) sampling makes per-batch counts SUM exactly to
     the full-state counts), and hub detection reads those.
 
-    Self-healing: any committed fingerprint batch lacking its count
-    table at the CURRENT rate — a crash between the fp commit and the
-    count write, a resume short-circuit, or a ``max_word_df`` change
-    — gets its counts recomputed from the durable fingerprints and
+    Self-healing: any live fingerprint batch lacking its count table
+    at the CURRENT rate — a ``max_word_df`` change, an ingest run with
+    the guard off, or a compaction whose roll-up skipped the rate —
+    gets its counts recomputed from the durable fingerprints and
     rewritten here (a pure function of one batch, idempotent
-    overwrite). Returns None when state is empty or the guard is
-    off."""
+    overwrite). Only the dirs the manifest names are counted, so a
+    source and its compact are never summed together. Returns None
+    when state is empty or the guard is off."""
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.audio_fp import (
         hub_sampling_params,
         hubs_from_counts,
@@ -1641,33 +1396,20 @@ def read_audio_hubs(
 
     if max_word_df is None:
         return None
-    root = posixpath.join(state_dir, "audio_fps")
-    fp_dirs = _committed_batch_dirs(spark, root)
-    if not fp_dirs:
+    names = _read_manifest(spark, state_dir).names("audio_fps")
+    if not names:
         return None
-    # Compaction crash window (compacted dir committed, sources not
-    # yet deleted): counting BOTH copies would double every folded
-    # word and halve the hub cut (transient recall-only over-drop —
-    # r13 ADVICE). Provenance (r14) closes it exactly: skip source
-    # dirs a committed compact dir already folds. Pre-provenance
-    # compact dirs (r13-era state) keep the documented transient
-    # behavior until their next compaction.
-    folded = _folded_batch_ids(spark, root)
-    if folded:
-        fp_dirs = [
-            d for d in fp_dirs
-            if d.rsplit("batch=", 1)[1] not in folded
-        ]
     rate_inv, _ = hub_sampling_params(max_word_df)
     fs, _ = _fs(spark, state_dir)
     count_dirs = []
-    for d in fp_dirs:
-        bid = d.rsplit("batch=", 1)[1]
+    for bid in names:
         wdir = _audio_word_count_dir(state_dir, rate_inv, bid)
         wsuccess = _fs(spark, posixpath.join(wdir, "_SUCCESS"))[1]
         if not fs.exists(wsuccess):
             sampled_word_counts(
-                spark.read.parquet(d), "doc_id", max_word_df
+                spark.read.parquet(_dir(state_dir, "audio_fps", bid)),
+                "doc_id",
+                max_word_df,
             ).write.mode("overwrite").parquet(wdir)
         count_dirs.append(wdir)
     return hubs_from_counts(spark.read.parquet(*count_dirs), max_word_df)
@@ -1731,11 +1473,11 @@ def ingest_audio_batch(
         ))
 
     def word_counts(bid: str) -> None:
-        # crash windows self-heal: read_audio_hubs backfills any
-        # committed fp batch missing its counts
+        # written before the commit, so a committed batch has its
+        # counts at this rate; read_audio_hubs backfills the rest
         rate_inv, _ = hub_sampling_params(max_word_df)
         sampled_word_counts(
-            spark.read.parquet(posixpath.join(state_dir, "audio_fps", f"batch={bid}")),
+            spark.read.parquet(_dir(state_dir, "audio_fps", bid)),
             "doc_id",
             max_word_df,
         ).write.mode("overwrite").parquet(
@@ -1753,7 +1495,7 @@ def ingest_audio_batch(
         on_error=on_error,
         binary_col=binary_col,
         decoded=F.col("fp").isNotNull(),
-        after_commit=word_counts if max_word_df is not None else None,
+        before_commit=word_counts if max_word_df is not None else None,
     )
 
 

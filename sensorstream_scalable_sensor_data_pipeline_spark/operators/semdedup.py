@@ -48,6 +48,9 @@ from sensorstream_scalable_sensor_data_pipeline_spark.functions.vectors import (
     grid_cosine,
     grid_dot,
 )
+from sensorstream_scalable_sensor_data_pipeline_spark.operators.caching import (
+    cached_result,
+)
 
 #: Default cosine threshold: SemDeDup's operating range for web text
 #: is ~0.95-0.99; duplicates-by-meaning, not just by bytes.
@@ -146,54 +149,48 @@ def semdedup_pairs(
             spark, emb, k, sample_per_mille=sample_per_mille, probes=probes
         )
     assigned = assigned.select("vec_id", "j")
-    # Norms once per row; persist so training's lineage and the norm
+    # Norms once per row; cached so training's lineage and the norm
     # pass run once, not once per self-join side.
-    side = (
-        assigned.join(emb.select("vec_id", "embedding"), "vec_id")
-        .select(
-            "j",
-            "vec_id",
-            "embedding",
-            grid_dot(F.col("embedding"), F.col("embedding")).alias("n2"),
-        )
-        .persist()
-    )
-    # eager cache materialization (r13 doctrine, see the modality
-    # dedup paths): the self-join's two map sides are independent
-    # stages; scheduled concurrently against an unpopulated cache
-    # they EACH run the assignment + norm lineage
-    side.count()
-    a = side.select(
+    side = assigned.join(emb.select("vec_id", "embedding"), "vec_id").select(
         "j",
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("e_a"),
-        F.col("n2").alias("n2_a"),
-    )
-    b = side.select(
-        "j",
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("e_b"),
-        F.col("n2").alias("n2_b"),
-    )
-    cos = grid_cosine(
-        F.col("e_a"), F.col("e_b"), F.col("n2_a"), F.col("n2_b")
-    )
-    pairs = (
-        a.join(b, "j")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= F.lit(tau))
-    )
-    if probes > 1:
-        # A pair sharing several probes would emit once per shared
-        # cluster; max_by keeps one row (cosine is pair-determined, so
-        # any survivor carries the same value — max_by for determinism).
-        pairs = pairs.groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine"))
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.caching import (
-        materialize_and_release,
+        "vec_id",
+        "embedding",
+        grid_dot(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
 
-    return materialize_and_release(pairs, side)
+    def cosine_pairs(side: DataFrame) -> DataFrame:
+        a = side.select(
+            "j",
+            F.col("vec_id").alias("id_a"),
+            F.col("embedding").alias("e_a"),
+            F.col("n2").alias("n2_a"),
+        )
+        b = side.select(
+            "j",
+            F.col("vec_id").alias("id_b"),
+            F.col("embedding").alias("e_b"),
+            F.col("n2").alias("n2_b"),
+        )
+        cos = grid_cosine(
+            F.col("e_a"), F.col("e_b"), F.col("n2_a"), F.col("n2_b")
+        )
+        pairs = (
+            a.join(b, "j")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", cos.alias("cosine"))
+            .filter(F.col("cosine") >= F.lit(tau))
+        )
+        if probes > 1:
+            # A pair sharing several probes would emit once per shared
+            # cluster; max_by keeps one row (cosine is pair-determined,
+            # so any survivor carries the same value — max_by for
+            # determinism).
+            pairs = pairs.groupBy("id_a", "id_b").agg(
+                F.max("cosine").alias("cosine")
+            )
+        return pairs
+
+    return cached_result(cosine_pairs, side)
 
 
 #: Survivor policies for :func:`semantic_dedup`. ``min_id`` keeps the
@@ -248,33 +245,34 @@ def semantic_dedup(
             sample_per_mille=sample_per_mille, probes=probes,
         )
         return drop_near_duplicates(docs, pairs, id_col=id_col)
-    assigned = assign_clusters(
-        spark, emb, k, sample_per_mille=sample_per_mille, with_dist=True
-    ).persist()
-    # eager materialization: consumed by semdedup_pairs' side build
-    # AND the ranked join — parallel branches race an empty cache
-    assigned.count()
-    pairs = semdedup_pairs(
-        spark, emb, k, tau=tau,
-        sample_per_mille=sample_per_mille, assigned=assigned,
-    )
-    comp = dup_components(pairs)
-    ranked = comp.join(
-        assigned.select(F.col("vec_id").alias("doc_id"), "dist"), "doc_id"
-    )
-    pick = F.struct(F.col("dist"), F.col("doc_id"))
-    agg = (
-        F.max_by("doc_id", pick) if keep == "centroid_far" else F.min_by("doc_id", pick)
-    )
-    survivors = ranked.groupBy("rep").agg(agg.alias("keep_id"))
-    losers = (
-        comp.join(survivors, "rep")
-        .filter(F.col("doc_id") != F.col("keep_id"))
-        .select(F.col("doc_id").alias(id_col))
-    )
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.caching import (
-        materialize_and_release,
-    )
 
-    out = anti_filter(docs, losers, id_col, broadcast_keys=False)
-    return materialize_and_release(out, assigned)
+    def keep_one(assigned: DataFrame) -> DataFrame:
+        pairs = semdedup_pairs(
+            spark, emb, k, tau=tau,
+            sample_per_mille=sample_per_mille, assigned=assigned,
+        )
+        comp = dup_components(pairs)
+        ranked = comp.join(
+            assigned.select(F.col("vec_id").alias("doc_id"), "dist"), "doc_id"
+        )
+        pick = F.struct(F.col("dist"), F.col("doc_id"))
+        agg = (
+            F.max_by("doc_id", pick)
+            if keep == "centroid_far"
+            else F.min_by("doc_id", pick)
+        )
+        survivors = ranked.groupBy("rep").agg(agg.alias("keep_id"))
+        losers = (
+            comp.join(survivors, "rep")
+            .filter(F.col("doc_id") != F.col("keep_id"))
+            .select(F.col("doc_id").alias(id_col))
+        )
+        return anti_filter(docs, losers, id_col, broadcast_keys=False)
+
+    # the assignment feeds semdedup_pairs' side build AND the ranked join
+    return cached_result(
+        keep_one,
+        assign_clusters(
+            spark, emb, k, sample_per_mille=sample_per_mille, with_dist=True
+        ),
+    )

@@ -218,34 +218,34 @@ def dedup_ngram_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact, MinHash-LSH, embedding-cosine) plus span-level substring;
     this query stays locally oracle-pinned in the rotated-slot suite;
     the freed slot carries the TRUE stream-stream as-of join."""
-    docs = load_table(spark, sf_dir, "documents")
-    keyed = (
-        with_shingles(docs, "doc_id", "text", out="ds", distinct=True)
-        .select(
-            F.col("doc_id"),
-            F.col("ds"),
-            F.array_min(F.transform(F.col("ds"), F.md5)).alias("block"),
-        )
-        .persist()  # feeds both self-join sides
-    )
-    keyed.count()  # eager: two map sides race an unpopulated cache (r13)
-    a = keyed.select(
-        F.col("block"), F.col("doc_id").alias("id_a"), F.col("ds").alias("ds_a")
-    )
-    b = keyed.select(
-        F.col("block"), F.col("doc_id").alias("id_b"), F.col("ds").alias("ds_b")
-    )
-    pairs = a.join(b, "block").filter(F.col("id_a") < F.col("id_b"))
-    inter = F.size(F.array_intersect(F.col("ds_a"), F.col("ds_b")))
-    union = F.size(F.array_union(F.col("ds_a"), F.col("ds_b")))
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.caching import (
-        materialize_and_release,
+        cached_result,
     )
 
-    out = pairs.select(
-        "id_a", "id_b", (inter.cast("double") / union).alias("jaccard")
+    docs = load_table(spark, sf_dir, "documents")
+    keyed = with_shingles(docs, "doc_id", "text", out="ds", distinct=True).select(
+        F.col("doc_id"),
+        F.col("ds"),
+        F.array_min(F.transform(F.col("ds"), F.md5)).alias("block"),
     )
-    return materialize_and_release(out, keyed)
+
+    def jaccard_pairs(keyed: DataFrame) -> DataFrame:
+        a = keyed.select(
+            F.col("block"), F.col("doc_id").alias("id_a"), F.col("ds").alias("ds_a")
+        )
+        b = keyed.select(
+            F.col("block"), F.col("doc_id").alias("id_b"), F.col("ds").alias("ds_b")
+        )
+        inter = F.size(F.array_intersect(F.col("ds_a"), F.col("ds_b")))
+        union = F.size(F.array_union(F.col("ds_a"), F.col("ds_b")))
+        return (
+            a.join(b, "block")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", (inter.cast("double") / union).alias("jaccard"))
+        )
+
+    # keyed feeds both self-join sides
+    return cached_result(jaccard_pairs, keyed)
 
 
 #: simhash's oracle, kept importable for the rotated-slot local suite
@@ -289,30 +289,32 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     locally oracle-pinned in tests/test_queries_vs_oracle.py's
     rotated-slot suite; the freed slot carries span-level
     exact-substring dedup, the most user-load-bearing r8 addition."""
-    docs = load_table(spark, sf_dir, "documents")
-    sh = simhash_md5(docs, "doc_id", "text", bits=60)
-    # (doc_id, simhash) is 16 bytes/doc; persist so the hash pipeline
-    # runs once, not once per self-join side.
-    blocked = sh.withColumn("block", F.shiftright(F.col("simhash"), 44)).persist()
-    blocked.count()  # eager: two map sides race an unpopulated cache (r13)
-    a = blocked.select(
-        F.col("block"), F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a")
-    )
-    b = blocked.select(
-        F.col("block"), F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b")
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.caching import (
-        materialize_and_release,
+        cached_result,
     )
 
-    out = (
-        a.join(b, "block")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= 3)
-    )
-    return materialize_and_release(out, blocked)
+    docs = load_table(spark, sf_dir, "documents")
+    sh = simhash_md5(docs, "doc_id", "text", bits=60)
+    blocked = sh.withColumn("block", F.shiftright(F.col("simhash"), 44))
+
+    def near_pairs(blocked: DataFrame) -> DataFrame:
+        a = blocked.select(
+            F.col("block"), F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a")
+        )
+        b = blocked.select(
+            F.col("block"), F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b")
+        )
+        ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+        return (
+            a.join(b, "block")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", ham.alias("hamming"))
+            .filter(F.col("hamming") <= 3)
+        )
+
+    # (doc_id, simhash) is 16 bytes/doc; cached so the hash pipeline
+    # runs once, not once per self-join side
+    return cached_result(near_pairs, blocked)
 
 
 #: Span length for the registered query — matches the bench head:

@@ -10,15 +10,15 @@ engine is built on:
   foreachBatch contract);
 * :mod:`operators.dedup_incremental`'s ingests are idempotent by
   ``batch_id``: a batch whose state already committed returns its
-  staged survivors without recomputing or double-appending
-  (``_batch_committed``, the two-dir staging/commit protocol).
+  staged survivors without recomputing or double-appending (the
+  state dir's manifest log records every committed batch).
 
 Keying the ingest's ``batch_id`` on ``(run_id, epoch)`` therefore
 makes the at-least-once redelivery a no-op: a micro-batch that
 crashed mid-ingest re-runs cleanly (overwrite staging), and one that
-committed is skipped. The accepted corpus IS the state dir's durable
-``accepted/batch=*`` tables — there is no second sink to keep
-consistent.
+committed is skipped. The accepted corpus IS the state dir's
+``accepted/batch=*`` dirs that the latest manifest version names —
+there is no second sink to keep consistent.
 
 Works for all four modalities by passing the matching ``ingest_fn``
 (text :func:`~...dedup_incremental.ingest_batch` by default; image /
@@ -36,11 +36,11 @@ the per-epoch state append is survivor-sized, not input-sized.
 Serialize writers per state_dir exactly as in batch mode
 (schedule.py's run lock): one streaming query per state dir.
 Provenance stays bounded too (r16, closing the r15 watch):
-``stream_ingest`` registers its ``run_id`` as a sequential-epoch
-run, so compaction provenance records its folded epochs as ONE
-per-run ``[lo, hi]`` interval instead of one id per epoch — a year
-at one epoch/minute is two integers in ``_sources.json``, not ~525k
-ids, and the driver-side resume/listing sets are O(#runs +
+``stream_ingest`` registers its ``run_id`` in the manifest as a
+sequential-epoch run, so compaction provenance records its folded
+epochs as ONE per-run ``[lo, hi]`` interval instead of one id per
+epoch — a year at one epoch/minute is two integers in the manifest,
+not ~525k ids, and the driver-side resume set is O(#runs +
 #batch-mode-ids) regardless of total epochs ever ingested.
 Registered run ids are a reserved namespace: never hand-issue
 ``<run_id>-<n>`` batch ids against a state dir whose ``run_id`` is
@@ -88,14 +88,15 @@ def stream_ingest(
     :class:`StreamingQuery`; callers own ``awaitTermination``.
 
     Empty micro-batches are skipped entirely (availableNow commonly
-    emits one; an empty ingest would append an empty-but-committed
-    state dir per epoch for nothing)."""
+    emits one; an empty ingest would commit an empty state dir per
+    epoch for nothing). Raises ValueError before starting the query
+    when ``state_dir`` was written by the pre-manifest layout."""
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
         _register_stream_run,
     )
 
-    # Registering BEFORE the query starts makes every compaction
-    # sweep compress this run's folded epochs to one [lo, hi]
+    # Registering in the manifest BEFORE the query starts makes every
+    # compaction compress this run's folded epochs to one [lo, hi]
     # interval (bounded provenance under continuous micro-batching).
     _register_stream_run(spark, state_dir, run_id)
 
@@ -142,12 +143,10 @@ def stream_corrupt_rate(
     jump in both is upstream corruption drift.
 
     One groupBy over the tiny identity table (corrupt rows are the
-    exception at any scale). Attribution SURVIVES compaction (r16):
-    the identity commits carry their originating batch in a
-    ``src_batch`` data column that folding preserves, so folded
-    epochs stay in this view (only pre-r16 rows degrade to the
-    compact id and drop out). Returns None before any quarantined
-    acceptance."""
+    exception at any scale). Attribution SURVIVES compaction: every
+    identity row carries its originating batch in a ``src_batch``
+    data column that folding preserves, so folded epochs stay in
+    this view. Returns None before any quarantined acceptance."""
     import re
 
     from pyspark.sql import functions as F

@@ -29,6 +29,24 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture
+def commit_state(spark):
+    """``commit_state(state_dir, table, bid, frame)`` lays a hand-made
+    frame out as one live state batch dir: it writes
+    ``<state_dir>/<table>/batch=<bid>`` and commits a manifest version
+    naming it, as an ingest's commit does."""
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators import (
+        dedup_incremental as di,
+    )
+
+    def commit(state_dir, table, bid, frame):
+        m = di._read_manifest(spark, state_dir)
+        frame.write.parquet(di._dir(state_dir, table, bid))
+        di._publish(spark, state_dir, m, add={table: {bid: None}})
+
+    return commit
+
+
 def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """Mirror the driver's oracle setup: each parquet registered as a view."""
     con = duckdb.connect()

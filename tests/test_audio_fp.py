@@ -395,7 +395,9 @@ def test_decontaminate_audio_empty_eval_keeps_all(spark):
     )
     assert kept == [0, 1]
 
-def test_read_audio_hubs_matches_inline_detection(spark, tmp_path):
+def test_read_audio_hubs_matches_inline_detection(
+    spark, tmp_path, commit_state
+):
     """The maintained per-batch word-count state (r12 ADVICE fix)
     yields the BIT-IDENTICAL hub set to inline detection over the
     unioned state: deterministic per-(clip, frame) sampling makes
@@ -417,8 +419,8 @@ def test_read_audio_hubs_matches_inline_detection(spark, tmp_path):
     rows2 = [(10 + i, [777] * 6 + [555] + list(range(400 + i * 50, 440 + i * 50))) for i in range(3)]
     b1 = spark.createDataFrame(rows1[:2], "doc_id long, fp array<int>")
     b2 = spark.createDataFrame([rows1[2], *rows2], "doc_id long, fp array<int>")
-    b1.write.parquet(f"{sdir}/audio_fps/batch=h1")
-    b2.write.parquet(f"{sdir}/audio_fps/batch=h2")
+    commit_state(sdir, "audio_fps", "h1", b1)
+    commit_state(sdir, "audio_fps", "h2", b2)
 
     for cap in (10, 1024):  # exact path (rate_inv=1) and sampled (64)
         state = spark.read.parquet(
@@ -447,11 +449,13 @@ def test_read_audio_hubs_matches_inline_detection(spark, tmp_path):
     assert read_audio_hubs(spark, sdir, None) is None
 
 
-def test_read_audio_hubs_backfills_after_count_loss(spark, tmp_path):
-    """Self-healing: a committed fingerprint batch whose count table
-    is missing (crash between fp commit and count write, resume
-    short-circuit, rate change) gets its counts recomputed from the
-    durable fingerprints — same hub set, dirs restored."""
+def test_read_audio_hubs_backfills_after_count_loss(
+    spark, tmp_path, commit_state
+):
+    """Self-healing: a live fingerprint batch whose count table is
+    missing (a rate change, an ingest run with the guard off) gets its
+    counts recomputed from the durable fingerprints — same hub set,
+    dirs restored."""
     import shutil
 
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
@@ -460,8 +464,9 @@ def test_read_audio_hubs_backfills_after_count_loss(spark, tmp_path):
 
     sdir = str(tmp_path / "healstate")
     rows = [(i, [42] * 8 + list(range(100 + i * 30, 120 + i * 30))) for i in range(2)]
-    spark.createDataFrame(rows, "doc_id long, fp array<int>").write.parquet(
-        f"{sdir}/audio_fps/batch=only"
+    commit_state(
+        sdir, "audio_fps", "only",
+        spark.createDataFrame(rows, "doc_id long, fp array<int>"),
     )
     before = {r["v"] for r in read_audio_hubs(spark, sdir, 10).collect()}
     assert before == {42}  # 16 occurrences > cap 10, exact path

@@ -6,13 +6,19 @@ rejection, and the corpus read all stay exact."""
 
 from __future__ import annotations
 
+import json
+import os
 import posixpath
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from sensorstream_scalable_sensor_data_pipeline_spark.operators import (
+    dedup_incremental as di,
+)
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
-    _accepted_listing,
+    _read_manifest,
     compact_accepted,
     ingest_batch,
     read_accepted,
@@ -28,6 +34,20 @@ def _docs(spark, lo, hi):
         .select("doc_id", "text")
         .filter(f"doc_id >= {lo} AND doc_id < {hi}")
     )
+
+
+def _tiers(spark, sdir):
+    """(plain, compact) live accepted dir names."""
+    m = _read_manifest(spark, sdir)
+    return m.names("accepted", compact=False), m.names("accepted", compact=True)
+
+
+def _manifest_json(sdir):
+    """The latest manifest version, as written on disk."""
+    log = os.path.join(sdir, "_manifest")
+    latest = max(f for f in os.listdir(log) if f.endswith(".json"))
+    with open(os.path.join(log, latest)) as fh:
+        return json.load(fh)
 
 
 def test_compact_accepted_preserves_corpus_resume_and_rejection(
@@ -49,7 +69,7 @@ def test_compact_accepted_preserves_corpus_resume_and_rejection(
 
     n = compact_accepted(spark, sdir)
     assert n == 4
-    plain, compacts = _accepted_listing(spark, sdir)
+    plain, compacts = _tiers(spark, sdir)
     assert plain == [] and len(compacts) == 1
     # corpus read identical through the fold
     assert {
@@ -119,7 +139,7 @@ def test_compact_accepted_tiers_merge_and_empty_batches_fold(
         maintain_max_batch_dirs=None,
     ).collect()
     assert compact_accepted(spark, sdir) == 2  # dup (empty) + a2
-    _, compacts = _accepted_listing(spark, sdir)
+    _, compacts = _tiers(spark, sdir)
     assert len(compacts) == 2
     # resume of the folded EMPTY batch returns empty
     assert (
@@ -131,7 +151,7 @@ def test_compact_accepted_tiers_merge_and_empty_batches_fold(
     )
     # tier 2: merge the compact dirs
     assert compact_accepted(spark, sdir, fold_compacts=True) == 2
-    plain, compacts = _accepted_listing(spark, sdir)
+    plain, compacts = _tiers(spark, sdir)
     assert plain == [] and len(compacts) == 1
     assert read_accepted(spark, sdir).count() == 90
     # resume still resolves through the MERGED provenance
@@ -158,10 +178,15 @@ def test_inline_maintenance_bounds_accepted_dirs(spark, tmp_path):
         # consuming the returned frame AFTER the inline sweep must
         # work — the sweep excluded this batch's dir
         assert acc.count() == 20
-    plain, compacts = _accepted_listing(spark, sdir)
+    plain, compacts = _tiers(spark, sdir)
     assert len(plain) < 3 + 1  # bounded by the threshold (+ current)
     assert compacts, "nothing ever compacted"
     assert read_accepted(spark, sdir).count() == 140
+    # the manifest log is bounded too: old versions are deleted
+    m = _read_manifest(spark, sdir)
+    versions = [f for f in os.listdir(f"{sdir}/_manifest") if f.endswith(".json")]
+    assert m.version > di._MANIFEST_RETAIN
+    assert len(versions) == di._MANIFEST_RETAIN
 
 
 def test_read_accepted_raises_before_any_commit(spark, tmp_path):
@@ -178,22 +203,16 @@ def test_compact_accepted_skips_when_nothing_to_fold(spark, tmp_path):
     assert compact_accepted(spark, sdir) == 0  # one dir: nothing to do
     # the solo dir is untouched
     root = posixpath.join(sdir, "accepted", "batch=solo")
-    import os
-
     assert os.path.exists(root)
 
 
 def test_orphan_compact_not_live_and_swept(spark, tmp_path):
-    """r15 ADVICE (medium): a compaction that crashed after its
-    parquet _SUCCESS but before the _sources.json rename leaves a
-    committed-looking compact dir with NO provenance. By the
-    protocol's invariant its sources were never deleted, so treating
-    the orphan as live would duplicate every folded row — and, with
-    a different cid on the next sweep, PERMANENTLY. The orphan must
-    be (a) invisible to the corpus read and (b) deleted by the next
+    """An unnamed dir is never read and is swept: a compaction that
+    crashed before its manifest rename leaves a complete compact dir
+    (here a full copy of the corpus) that no version names. Treating
+    it as live would duplicate every folded row. It must be (a)
+    invisible to the corpus read and (b) deleted by the next
     compact_accepted run."""
-    import os
-
     sdir = str(tmp_path / "state")
     for i in range(3):
         ingest_batch(
@@ -206,9 +225,9 @@ def test_orphan_compact_not_live_and_swept(spark, tmp_path):
     before = {r["doc_id"] for r in read_accepted(spark, sdir).collect()}
     assert len(before) == 90
 
-    # Simulate the crash state: a committed compact dir holding a
-    # full copy of the corpus, with no _sources.json (the provenance
-    # rename never ran), while all three source dirs still stand.
+    # the crash state: a committed-looking compact dir holding a full
+    # copy of the corpus that no manifest version names, while all
+    # three source dirs stay live
     root = posixpath.join(sdir, "accepted")
     orphan = posixpath.join(root, "batch=compact-0000deadbeef")
     (
@@ -220,10 +239,9 @@ def test_orphan_compact_not_live_and_swept(spark, tmp_path):
         .parquet(orphan)
     )
     assert os.path.exists(posixpath.join(orphan, "_SUCCESS"))
-    assert not os.path.exists(posixpath.join(orphan, "_sources.json"))
 
-    # (a) the orphan is not live: no duplication, listing skips it
-    plain, compacts = _accepted_listing(spark, sdir)
+    # (a) the orphan is not live: no duplication, the manifest skips it
+    plain, compacts = _tiers(spark, sdir)
     assert len(plain) == 3 and compacts == []
     dup_check = read_accepted(spark, sdir).groupBy("doc_id").count()
     assert dup_check.filter("count > 1").count() == 0
@@ -237,8 +255,9 @@ def test_orphan_compact_not_live_and_swept(spark, tmp_path):
     assert {
         r["doc_id"] for r in read_accepted(spark, sdir).collect()
     } == before
-    plain, compacts = _accepted_listing(spark, sdir)
+    plain, compacts = _tiers(spark, sdir)
     assert plain == [] and len(compacts) == 1
+    assert sorted(os.listdir(root)) == [f"batch={compacts[0]}"]
 
 
 def test_reserved_batch_columns_rejected_at_ingest(spark, tmp_path):
@@ -260,26 +279,24 @@ def test_reserved_batch_columns_rejected_at_ingest(spark, tmp_path):
 
 def test_stream_epoch_provenance_compresses_and_routes(spark, tmp_path):
     """r16 (r15 watch #2): folded epochs of a REGISTERED streaming
-    run compress to one per-run [lo, hi] interval in _sources.json —
+    run compress to one per-run [lo, hi] interval in the manifest —
     provenance stays O(#runs), not O(total epochs ever) — while
     resume-by-epoch still routes to the exact compact that folded it
     (the interval keeps the LOWER bound precisely so a later compact
     cannot claim an earlier epoch). Unregistered lookalike ids stay
     in the exact list (nothing guarantees their commit order)."""
-    import json
-    import os
+    import glob
 
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
-        _batch_committed,
         _register_stream_run,
-        _stream_run_ids,
         compact_state,
     )
 
     sdir = str(tmp_path / "state")
     _register_stream_run(spark, sdir, "runa")
     _register_stream_run(spark, sdir, "runa")  # idempotent
-    assert _stream_run_ids(spark, sdir) == {"runa"}
+    assert _manifest_json(sdir)["stream_runs"] == ["runa"]
+    assert _read_manifest(spark, sdir).version == 1
 
     per_epoch = {}
     for e in range(4):
@@ -291,16 +308,14 @@ def test_stream_epoch_provenance_compresses_and_routes(spark, tmp_path):
         ).collect()
     assert compact_accepted(spark, sdir) == 4
 
-    def _prov(root):
-        cdirs = [
-            d for d in os.listdir(root) if d.startswith("batch=compact-")
-        ]
-        assert len(cdirs) == 1, cdirs
-        with open(f"{root}/{cdirs[0]}/_sources.json") as fh:
-            return json.load(fh)
+    def _prov(table):
+        live = _manifest_json(sdir)["tables"][table]
+        compacts = [p for p in live.values() if p is not None]
+        assert len(compacts) == 1, live
+        return compacts[0]
 
-    prov = _prov(f"{sdir}/accepted")
-    assert prov == {"v": 2, "ids": [], "runs": {"runa": [0, 3]}}
+    prov = _prov("accepted")
+    assert prov == {"ids": [], "runs": {"runa": [0, 3]}}
 
     # second tier-1 sweep: disjoint interval, no claim on epochs 0-3
     for e in (4, 5):
@@ -319,16 +334,17 @@ def test_stream_epoch_provenance_compresses_and_routes(spark, tmp_path):
 
     # signature-table compaction compresses the same way
     assert compact_state(spark, sdir, "fingerprints") == 7
-    fp_prov = _prov(f"{sdir}/fingerprints")
+    fp_prov = _prov("fingerprints")
     assert fp_prov["runs"] == {"runa": [0, 5]}
     assert fp_prov["ids"] == ["other-7"]
 
     # epoch-0's fp dir is gone, yet resume-by-id routes through the
     # interval to the exact compact that folded its staged rows
     assert not os.path.exists(f"{sdir}/fingerprints/batch=runa-0")
-    assert _batch_committed(spark, sdir, "fingerprints", "runa-0")
-    assert not _batch_committed(spark, sdir, "fingerprints", "runa-6")
-    assert not _batch_committed(spark, sdir, "fingerprints", "runb-0")
+    m = _read_manifest(spark, sdir)
+    assert m.committed("fingerprints", "runa-0")
+    assert not m.committed("fingerprints", "runa-6")
+    assert not m.committed("fingerprints", "runb-0")
     resumed = ingest_batch(
         spark, _docs(spark, 0, 20), sdir, batch_id="runa-0"
     )
@@ -339,13 +355,15 @@ def test_stream_epoch_provenance_compresses_and_routes(spark, tmp_path):
     assert {r["doc_id"] for r in resumed5.collect()} == per_epoch[5]
     # corpus intact through compression + resumes
     assert read_accepted(spark, sdir).count() == 130
+    # the manifest replaced the per-dir provenance and run markers
+    assert not os.path.exists(f"{sdir}/_stream_runs")
+    assert not glob.glob(f"{sdir}/**/_sources.json", recursive=True)
 
 
 def test_reserved_stream_run_ids_rejected(spark, tmp_path):
     """'compact' cannot be a stream run_id: compact dir names
-    (compact-<hex12>) can be all digits, so a 'compact' run would
-    absorb them into an epoch interval and break the re-compaction
-    crash-window skip rule."""
+    (compact-<hex12>) can be all digits, so a 'compact' run's epoch
+    ids could name a live compact dir."""
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
         _register_stream_run,
     )
@@ -386,65 +404,6 @@ def test_corpus_growth_attribution_survives_compaction(spark, tmp_path):
     assert after == sizes
 
 
-def test_crash_left_folded_compact_stays_hidden_across_merges(
-    spark, tmp_path
-):
-    """A compaction that crashed after its provenance rename but
-    before deleting its sources leaves folded dirs on disk: here first
-    a plain dir, later a compact. Both must stay out of read_accepted,
-    and the next compact_accepted sweep deletes them before listing
-    its sources. For the compact this is more than hygiene: provenance
-    names compact dirs only directly, so once its folder is itself
-    folded nothing would name it any more."""
-    import os
-    import shutil
-
-    sdir = str(tmp_path / "state")
-    root = posixpath.join(sdir, "accepted")
-
-    def ingest(i):
-        ingest_batch(
-            spark, _docs(spark, i * 20, (i + 1) * 20), sdir,
-            batch_id=f"c{i}", maintain_max_batch_dirs=None,
-        ).collect()
-
-    def corpus_ids():
-        return sorted(r["doc_id"] for r in read_accepted(spark, sdir).collect())
-
-    def crash_left(path, fold):
-        # run the fold, then put back the source dir it deleted
-        shutil.copytree(path, str(tmp_path / "saved"))
-        folded_n = fold()
-        shutil.move(str(tmp_path / "saved"), path)
-        return folded_n
-
-    for i in range(2):
-        ingest(i)
-    plain_c0 = posixpath.join(root, "batch=c0")
-    assert crash_left(plain_c0, lambda: compact_accepted(spark, sdir)) == 2
-    assert corpus_ids() == list(range(40))
-    for i in range(2, 4):
-        ingest(i)
-    assert compact_accepted(spark, sdir) == 2
-    assert not os.path.exists(plain_c0)
-    folded = posixpath.join(
-        root, min(d for d in os.listdir(root) if d.startswith("batch=compact-"))
-    )
-    assert crash_left(
-        folded, lambda: compact_accepted(spark, sdir, fold_compacts=True)
-    ) == 2
-    assert corpus_ids() == list(range(80))
-
-    for i in range(4, 6):
-        ingest(i)
-    # sources: two plain dirs + the merged compact — never the dead dir
-    assert compact_accepted(spark, sdir, fold_compacts=True) == 3
-    assert corpus_ids() == list(range(120))
-    plain, compacts = _accepted_listing(spark, sdir)
-    assert plain == [] and len(compacts) == 1
-    assert not os.path.exists(folded)
-
-
 def test_invalid_arguments_rejected_before_any_state_mutation(
     spark, tmp_path
 ):
@@ -452,8 +411,6 @@ def test_invalid_arguments_rejected_before_any_state_mutation(
     commits anything — a ValueError must never report an ingest that
     durably happened — and an invalid on_error raises on the resume
     path too, not only where the signer checks it."""
-    import os
-
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.codecs import (
         encode_png,
     )
@@ -484,3 +441,199 @@ def test_invalid_arguments_rejected_before_any_state_mutation(
     assert ingest_image_batch(spark, imgs, sdir, batch_id="v2").count() == 1
     with pytest.raises(ValueError, match="on_error"):
         ingest_image_batch(spark, imgs, sdir, batch_id="v2", on_error="skip")
+
+
+def test_racing_manifest_writers_cannot_swap_content(spark, tmp_path, monkeypatch):
+    """Two writers commit on the same base version, interleaved so both
+    temp files exist before either rename: A writes, B writes, A
+    renames, B renames. A's version holds A's own content, B's rename
+    raises, and B's temp file is removed."""
+    sdir = str(tmp_path / "state")
+    base = _read_manifest(spark, sdir)
+    real_rename = di._rename
+    renames = []
+
+    def interleave(_spark, src, dst):
+        renames.append((src, dst))
+        if len(renames) == 1:  # A, between its temp write and rename
+            with pytest.raises(Exception, match="exists"):
+                di._publish(spark, sdir, base, add={"accepted": {"b": None}})
+        else:  # B, after its temp write: A renames first
+            real_rename(spark, *renames[0])
+            real_rename(spark, src, dst)
+
+    monkeypatch.setattr(di, "_rename", interleave)
+    di._publish(spark, sdir, base, add={"accepted": {"a": None}})
+    monkeypatch.undo()
+    m = _read_manifest(spark, sdir)
+    assert (m.version, m.names("accepted")) == (1, ["a"])
+    log = sorted(f for f in os.listdir(f"{sdir}/_manifest") if not f.startswith("."))
+    assert log == ["00000000000000000001.json"]
+
+
+def test_pre_manifest_state_dir_rejected_before_any_write(spark, tmp_path):
+    """A state dir written by the pre-manifest layout (table dirs, no
+    _manifest/ log) is neither read nor adopted: every ingest,
+    compaction and reader raises ValueError, and nothing is written."""
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
+        _register_stream_run,
+        compact_state,
+        corpus_growth,
+        maintain_state,
+        quarantine_report,
+        read_audio_hubs,
+        read_state,
+    )
+
+    sdir = tmp_path / "legacy"
+    legacy = sdir / "fingerprints" / "batch=x"
+    legacy.mkdir(parents=True)
+    (legacy / "_SUCCESS").write_text("")
+
+    def tree():
+        return sorted(str(p.relative_to(sdir)) for p in sdir.rglob("*"))
+
+    before = tree()
+    s = str(sdir)
+    for call in (
+        lambda: ingest_batch(spark, _docs(spark, 0, 5), s, batch_id="n1"),
+        lambda: compact_state(spark, s, "fingerprints"),
+        lambda: compact_accepted(spark, s),
+        lambda: maintain_state(spark, s, 2),
+        lambda: read_state(spark, s),
+        lambda: read_accepted(spark, s),
+        lambda: corpus_growth(spark, s),
+        lambda: quarantine_report(spark, s),
+        lambda: read_audio_hubs(spark, s, 10),
+        lambda: _register_stream_run(spark, s, "run"),
+    ):
+        with pytest.raises(ValueError, match="pre-manifest"):
+            call()
+    assert tree() == before
+
+
+# ---------------------------------------- crash at the manifest commit
+
+#: (operation, the module function the injected crash replaces):
+#: ``_rename`` is the manifest rename — the crash lands after every
+#: data write and before the commit — and ``_sweep`` the source
+#: delete that follows a compaction's commit.
+_CRASHES = [
+    ("ingest", "_rename"),
+    ("compact_state", "_rename"),
+    ("compact_state", "_sweep"),
+    ("compact_accepted", "_rename"),
+    ("compact_accepted", "_sweep"),
+]
+
+
+def _audio_batches(spark):
+    """Two quarantine-mode audio batches of a few rows. Batch 1 holds a
+    within-batch duplicate (2 = 1) and a corrupt clip; batch 2 a
+    re-delivery (4 = 1), a fresh clip and another corrupt clip."""
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators.audio_fp import (
+        synth_clip,
+    )
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators.codecs import (
+        encode_wav,
+    )
+
+    def clip(seed):
+        return encode_wav(synth_clip(70 + seed), 8000)
+
+    schema = "doc_id long, payload binary"
+    b1 = spark.createDataFrame(
+        [(1, clip(1)), (2, clip(1)), (3, clip(3)), (8, b"RIFF" + b"\x00" * 30)],
+        schema,
+    )
+    b2 = spark.createDataFrame(
+        [(4, clip(1)), (5, clip(5)), (9, b"RIFF" + b"\x01" * 30)], schema
+    )
+    return b1, b2
+
+
+def _ingest_audio(spark, sdir, batch, bid):
+    return sorted(
+        r["doc_id"]
+        for r in di.ingest_audio_batch(
+            spark, batch, sdir, batch_id=bid, on_error="quarantine",
+            maintain_max_batch_dirs=None,
+        ).collect()
+    )
+
+
+def _observe(spark, sdir):
+    """What readers see: corpus ids, audio state rows, quarantine
+    identity ids and the hub set at cap 1 (every word seen twice), which
+    a double-counted source would change."""
+    return (
+        sorted(r["doc_id"] for r in read_accepted(spark, sdir).collect()),
+        sorted(
+            (r["doc_id"], tuple(r["fp"] or ()))
+            for r in di.read_audio_state(spark, sdir).collect()
+        ),
+        sorted(
+            r["doc_id"] for r in di.read_quarantine_state(spark, sdir).collect()
+        ),
+        sorted(r["v"] for r in di.read_audio_hubs(spark, sdir, 1).collect()),
+    )
+
+
+@pytest.fixture(scope="module")
+def uncrashed(spark, tmp_path_factory):
+    """The two audio batches committed without a crash: copies of the
+    state dir after each batch (every case starts from one), what
+    readers see at the end, and each batch's accepted ids."""
+    root = tmp_path_factory.mktemp("uncrashed")
+    sdir = str(root / "state")
+    b1, b2 = _audio_batches(spark)
+    a1 = _ingest_audio(spark, sdir, b1, "b1")
+    shutil.copytree(sdir, root / "after_b1")
+    a2 = _ingest_audio(spark, sdir, b2, "b2")
+    shutil.copytree(sdir, root / "after_b2")
+    assert (a1, a2) == ([1, 3, 8], [5, 9])
+    return root, _observe(spark, sdir), (a1, a2)
+
+
+@pytest.mark.parametrize("op, point", _CRASHES)
+def test_crash_at_manifest_commit_reruns_to_uncrashed_result(
+    spark, tmp_path, monkeypatch, uncrashed, op, point
+):
+    """A crash at the manifest rename, or at the source delete after
+    it, of an ingest commit and of both compactions. Readers see the
+    previous corpus at the crash; a re-run gives the uncrashed corpus,
+    state, quarantine identity, hub set and resume result, and leaves
+    no dir the manifest does not name. The ingest's signature and
+    quarantine dirs commit together, so the crash loses both."""
+    root, want, want_accepted = uncrashed
+    sdir = str(tmp_path / "state")
+    shutil.copytree(root / ("after_b1" if op == "ingest" else "after_b2"), sdir)
+    b1, b2 = _audio_batches(spark)
+    run = {
+        "ingest": lambda: _ingest_audio(spark, sdir, b2, "b2"),
+        "compact_state": lambda: di.compact_state(spark, sdir, "audio_fps"),
+        "compact_accepted": lambda: compact_accepted(spark, sdir),
+    }[op]
+    before = _observe(spark, sdir)
+
+    def crash(*_args):
+        raise OSError(f"injected crash at {point}")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(di, point, crash)
+        with pytest.raises(OSError, match="injected crash"):
+            run()
+    assert _observe(spark, sdir) == before
+    run()
+    assert _observe(spark, sdir) == want
+    assert (
+        _ingest_audio(spark, sdir, b1, "b1"),
+        _ingest_audio(spark, sdir, b2, "b2"),
+    ) == want_accepted
+    m = _read_manifest(spark, sdir)
+    for table in ("accepted", "audio_fps", "quarantine_md5s"):
+        on_disk = sorted(
+            d[len("batch="):] for d in os.listdir(f"{sdir}/{table}")
+            if d.startswith("batch=")
+        )
+        assert on_disk == m.names(table), table

@@ -1,15 +1,17 @@
 """functions/preload_daemon.py — the worker-daemon preload module.
 
 The daemon body (numpy/pyarrow preload + pyspark.daemon.manager) only
-runs inside JVM-spawned worker daemons; what is unit-testable is the
-r17 sys.path surgery that keeps ``importlib.invalidate_caches()`` —
-called once per task by every Python worker — from re-parsing
-pyspark.zip's central directory (~98 ms/task measured on this host).
+runs inside JVM-spawned worker daemons; what is unit-testable is that
+importing the module runs none of it, and the r17 sys.path surgery
+that keeps ``importlib.invalidate_caches()`` — called once per task
+by every Python worker — from re-parsing pyspark.zip's central
+directory (~98 ms/task measured single-process).
 """
 
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 import types
 
@@ -94,3 +96,21 @@ def test_unrelated_entries_untouched(tmp_path):
         assert other in sys.path
         assert sys.path_importer_cache[other] is sentinel
         assert python_dir in sys.path
+
+
+def test_import_has_no_side_effects():
+    """Importing the module in a fresh interpreter loads neither the
+    preload deps nor the daemon: that work belongs to ``python -m``."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = (
+        "import sys\n"
+        "import sensorstream_scalable_sensor_data_pipeline_spark.functions"
+        ".preload_daemon\n"
+        "print(sorted(m for m in ('pandas', 'pyspark.daemon') if m in sys.modules))"
+    )
+    env = dict(os.environ, PYTHONPATH=repo)
+    out = subprocess.run(
+        [sys.executable, "-c", probe], env=env, cwd=repo,
+        capture_output=True, text=True, check=True,
+    )
+    assert out.stdout.strip() == "[]", out.stdout

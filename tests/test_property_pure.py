@@ -5,6 +5,7 @@ the example-based tests cannot)."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -253,6 +254,7 @@ def test_subfingerprint_gain_sign_exact(seed):
 # ------------------------------------------------- provenance (r16)
 
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (  # noqa: E402
+    _fold,
     _Provenance,
 )
 
@@ -279,7 +281,7 @@ def test_provenance_roundtrip_and_membership(stream_bids, plain):
         p.add(f"{r}-{e}", runs)
     for b in plain:
         p.add(b, runs)
-    q = _Provenance.from_json(p.to_json())
+    q = _Provenance.from_obj(json.loads(json.dumps(p.to_obj())))
     for r, e in stream_bids:
         assert f"{r}-{e}" in q
     for b in plain:
@@ -330,31 +332,26 @@ def test_provenance_parse_is_unambiguous(run, e):
 
 
 def test_provenance_fold_stays_bounded_over_thousands_of_epochs():
-    """Replay of the compaction fold (threshold 16, every committed
-    dir folds, as in compact_state) over 4000 streaming epochs: epochs
-    compress to the run's interval and a compact keeps only the
-    compact names it folded directly, so the provenance stays one
-    interval plus one name — a transitive name list would grow by one
-    per compaction — and every folded epoch stays a member."""
+    """Replay of the compaction fold (threshold 16, every live dir
+    folds, as in compact_state) over 4000 streaming epochs: epochs
+    compress to the run's interval and a compact's provenance carries
+    no dir names at all — the manifest, not the provenance, says which
+    dirs are live — so the provenance stays one interval, and every
+    folded epoch stays a member."""
     runs = {"s"}
-    dirs: list[tuple[str, _Provenance | None]] = []
+    dirs: dict[str, _Provenance | None] = {}
     sizes = []
     for e in range(4000):
-        dirs.append((f"s-{e}", None))
+        dirs[f"s-{e}"] = None
         if len(dirs) < 16:
             continue
-        prov = _Provenance()
-        for name, src in dirs:
-            if src is None:
-                prov.add(name, runs)
-            else:
-                prov = prov.absorb(name, src)
-        sizes.append(len(prov.to_json()))
-        dirs = [(f"compact-{len(sizes):012x}", prov)]
+        prov = _fold(dirs, runs)
+        sizes.append(len(json.dumps(prov.to_obj())))
+        dirs = {f"compact-{len(sizes):012x}": prov}
         last = e
-    final = dirs[0][1]
+    final = next(p for p in dirs.values() if p is not None)
     assert len(sizes) > 250
     assert final.runs == {"s": (0, last)}
-    assert final.ids == {f"compact-{len(sizes) - 1:012x}"}
+    assert final.ids == set()
     assert max(sizes) < 100
     assert all(f"s-{e}" in final for e in range(0, last + 1, 7))

@@ -636,61 +636,6 @@ def test_quarantine_identity_within_batch_and_firehose(spark, tmp_path):
     assert read_quarantine_state(spark, sdir).count() == 2
 
 
-def test_quarantine_identity_resume_backfills(spark, tmp_path):
-    """Crash window between the signature commit and the quarantine
-    commit (or a pre-r15 batch resumed under r15): the resume path
-    backfills the missing quarantine identity rows from the staged
-    payloads, so re-delivery rejects from then on."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.codecs import (
-        encode_png,
-    )
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
-        _fs,
-        ingest_image_batch,
-        read_quarantine_state,
-    )
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.phash import (
-        synth_image,
-    )
-
-    sdir = str(tmp_path / "rstate")
-    b1 = spark.createDataFrame(
-        [(0, encode_png(synth_image(0, h=32, w=32))), (900, CORRUPT_PNG)],
-        "doc_id long, payload binary",
-    )
-    ingest_image_batch(
-        spark, b1, sdir, batch_id="r1", on_error="quarantine"
-    ).collect()
-    # simulate the crash window: delete the committed quarantine dir
-    qdir = sdir + "/quarantine_md5s/batch=r1"
-    fs, jq = _fs(spark, qdir)
-    assert fs.exists(jq)
-    fs.delete(jq, True)
-    assert read_quarantine_state(spark, sdir) is None
-    # resume with the same batch_id: staged result identical, and the
-    # quarantine identity rows are back
-    acc = {
-        r["doc_id"]
-        for r in ingest_image_batch(
-            spark, b1, sdir, batch_id="r1", on_error="quarantine"
-        ).collect()
-    }
-    assert acc == {0, 900}
-    assert {
-        r["doc_id"] for r in read_quarantine_state(spark, sdir).collect()
-    } == {900}
-    # and the firehose now rejects
-    b2 = spark.createDataFrame(
-        [(901, CORRUPT_PNG)], "doc_id long, payload binary"
-    )
-    assert (
-        ingest_image_batch(
-            spark, b2, sdir, batch_id="r2", on_error="quarantine"
-        ).count()
-        == 0
-    )
-
-
 def test_curate_image_corpus_quarantine_end_to_end(spark, tmp_path):
     """r15 (r14 verdict #7): quarantine threads through the
     plan-level curation entry point. A valid-magic corrupt payload
@@ -712,10 +657,10 @@ def test_curate_image_corpus_quarantine_end_to_end(spark, tmp_path):
     sfd_clean = str(tmp_path / "sf_clean")
     spark.createDataFrame(
         clean_rows + [(900, corrupt)], "doc_id long, payload binary"
-    ).write.parquet(_corpus_cache_dir(sfd_dirty, "images"))
+    ).write.mode("overwrite").parquet(_corpus_cache_dir(sfd_dirty, "images"))
     spark.createDataFrame(
         clean_rows, "doc_id long, payload binary"
-    ).write.parquet(_corpus_cache_dir(sfd_clean, "images"))
+    ).write.mode("overwrite").parquet(_corpus_cache_dir(sfd_clean, "images"))
 
     out = curate_image_corpus(
         spark, sfd_dirty, on_error="quarantine"
@@ -739,13 +684,19 @@ def test_curate_image_corpus_quarantine_end_to_end(spark, tmp_path):
     assert "quarantined" not in curate_image_corpus(spark, sfd_clean).columns
 
 
-def test_quarantine_state_readable_after_empty_commits(spark, tmp_path):
-    """Review-found r15: an EMPTY quarantine commit (a raise-mode
-    batch backfilled on resume, or a batch whose corrupt rows were
-    all re-delivery-rejected) writes a part-file-less dir — which
-    must still exist (its _SUCCESS marks the identity committed) and
-    must not break the explicit-schema state read when it is the
-    ONLY committed dir."""
+#: The quarantine identity table's data columns, for hand-laid commits.
+_IDENTITY_SCHEMA = "content_md5 string, doc_id long, src_batch string"
+
+
+def test_quarantine_state_readable_after_empty_commits(
+    spark, tmp_path, commit_state
+):
+    """An EMPTY quarantine commit (a batch whose
+    corrupt rows were all re-deliveries) holds no rows, and must not
+    break the explicit-schema state read even when it is the ONLY
+    live identity dir. The protocol reaches an empty commit only
+    after a non-empty one, so the lone empty commit is laid out by
+    hand here, through the manifest."""
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.codecs import (
         encode_png,
     )
@@ -765,14 +716,10 @@ def test_quarantine_state_readable_after_empty_commits(spark, tmp_path):
     # clean batch under raise mode: no quarantine dir
     ingest_image_batch(spark, b1, sdir, batch_id="e1").collect()
     assert read_quarantine_state(spark, sdir) is None
-    # resume under quarantine mode: backfill writes the EMPTY dir
-    acc = {
-        r["doc_id"]
-        for r in ingest_image_batch(
-            spark, b1, sdir, batch_id="e1", on_error="quarantine"
-        ).collect()
-    }
-    assert acc == {0}
+    commit_state(
+        sdir, "quarantine_md5s", "e1",
+        spark.createDataFrame([], _IDENTITY_SCHEMA),
+    )
     qstate = read_quarantine_state(spark, sdir)
     assert qstate is not None and qstate.count() == 0
     # the empty dir must not break the next quarantine ingest's
@@ -836,15 +783,13 @@ def test_quarantine_report_attributes_batches(spark, tmp_path):
 
 
 def test_quarantine_report_empty_when_all_commits_part_file_less(
-    spark, tmp_path
+    spark, tmp_path, commit_state
 ):
-    """r15 ADVICE: when EVERY committed quarantine_md5s dir is
-    part-file-less (routine — resume backfill of a raise-mode batch,
-    duplicates-only batches), partition discovery finds no files and
-    the inferred `batch` column does not exist; quarantine_report
-    must return the empty (batch, content_md5, doc_id) frame instead
-    of raising AnalysisException (read_quarantine_state already
-    handles this shape)."""
+    """r15 ADVICE: when EVERY live quarantine_md5s dir is empty,
+    quarantine_report must return the empty (batch, content_md5,
+    doc_id) frame instead of raising AnalysisException
+    (read_quarantine_state already handles this shape). The empty
+    commit is laid out by hand, as in the test above."""
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.codecs import (
         encode_png,
     )
@@ -863,10 +808,10 @@ def test_quarantine_report_empty_when_all_commits_part_file_less(
     )
     ingest_image_batch(spark, b1, sdir, batch_id="e1").collect()
     assert quarantine_report(spark, sdir) is None
-    # resume under quarantine mode backfills an EMPTY identity dir
-    ingest_image_batch(
-        spark, b1, sdir, batch_id="e1", on_error="quarantine"
-    ).collect()
+    commit_state(
+        sdir, "quarantine_md5s", "e1",
+        spark.createDataFrame([], _IDENTITY_SCHEMA),
+    )
     rep = quarantine_report(spark, sdir)
     assert rep is not None and rep.count() == 0
     assert rep.columns == ["batch", "content_md5", "doc_id"]
@@ -930,12 +875,10 @@ def test_quarantine_report_attribution_survives_compaction(
 ):
     """r16: identity commits carry src_batch, so quarantine_report
     keeps the ORIGINAL per-batch attribution after compact_state
-    folds the identity dirs — and a pre-r16 dir (no src_batch
-    column) mixed into the same fold degrades to the compact id
-    instead of poisoning the read (explicit compaction schema)."""
-    import hashlib
-
+    folds the identity dirs, and the compact's manifest provenance
+    records exactly the folded batch ids."""
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
+        _read_manifest,
         compact_state,
         ingest_image_batch,
         quarantine_report,
@@ -951,30 +894,22 @@ def test_quarantine_report_attribution_survives_compaction(
             spark, b, sdir, batch_id=bid, on_error="quarantine",
             maintain_max_batch_dirs=None,
         ).collect()
-    # a PRE-r16 identity dir: (content_md5, doc_id) only
-    legacy = b"\x89PNG\r\n\x1a\n" + b"\x03" * 40
-    spark.createDataFrame(
-        [(hashlib.md5(legacy).hexdigest(), 902)],
-        "content_md5 string, doc_id long",
-    ).write.parquet(f"{sdir}/quarantine_md5s/batch=q0")
 
     before = {
         (r["batch"], r["doc_id"])
         for r in quarantine_report(spark, sdir).collect()
     }
-    assert before == {("q1", 900), ("q2", 901), ("q0", 902)}
+    assert before == {("q1", 900), ("q2", 901)}
 
-    assert compact_state(spark, sdir, "quarantine_md5s") == 3
+    assert compact_state(spark, sdir, "quarantine_md5s") == 2
     after = {
         (r["batch"], r["doc_id"])
         for r in quarantine_report(spark, sdir).collect()
     }
-    # r16 rows keep their origin; the legacy row degrades to the
-    # compact id (still present, still counted)
-    assert {("q1", 900), ("q2", 901)} <= after
-    legacy_rows = {b for b, d in after if d == 902}
-    assert len(legacy_rows) == 1 and next(iter(legacy_rows)).startswith(
-        "compact-"
-    )
-    # identity semantics intact: all three md5s still reject
-    assert read_quarantine_state(spark, sdir).count() == 3
+    assert after == before
+    live = _read_manifest(spark, sdir).live("quarantine_md5s")
+    assert len(live) == 1
+    (prov,) = live.values()
+    assert prov.ids == {"q1", "q2"} and not prov.runs
+    # identity semantics intact: both md5s still reject
+    assert read_quarantine_state(spark, sdir).count() == 2

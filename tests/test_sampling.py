@@ -714,13 +714,18 @@ def _crash_case(spark, modality):
 
 
 @pytest.mark.parametrize("modality", ["text", "fuzzy", "image", "audio", "video"])
-def test_incremental_dedup_crash_consistency(spark, tmp_path, modality):
+def test_incremental_dedup_crash_consistency(
+    spark, tmp_path, monkeypatch, modality
+):
     """Every crash window re-runs to the one-shot result, for every
     ingest modality: state can never record documents the downstream
     corpus does not durably hold. Simulated by re-running from the
     on-disk artifacts each failure point leaves behind."""
     import shutil
 
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators import (
+        dedup_incremental as di,
+    )
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
         read_accepted,
     )
@@ -743,17 +748,25 @@ def test_incremental_dedup_crash_consistency(spark, tmp_path, modality):
     assert run(b1, "b1") == [1, 3]
     assert reader(spark, sdir).count() == n1
 
-    # Crash window B: batch 2 died BETWEEN staging and the signature
+    # Crash window B: batch 2 died BETWEEN staging and the manifest
     # commit — survivors staged, signature dir missing entirely.
-    assert run(b2, "b2") == [5]
-    n2 = reader(spark, sdir).count()
+    def crash(*_args):
+        raise OSError("injected crash at the manifest rename")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(di, "_rename", crash)
+        with pytest.raises(OSError, match="injected"):
+            run(b2, "b2")
+    # the crashed attempt wrote exactly the rows the commit would add
+    n2 = n1 + spark.read.parquet(str(tdir / "batch=b2")).count()
     shutil.rmtree(tdir / "batch=b2")
     assert reader(spark, sdir).count() == n1  # b2 rolled back
     assert run(b2, "b2") == [5]
     assert reader(spark, sdir).count() == n2
 
     # Crash window C: a partial (uncommitted) signature append — part
-    # files present, no _SUCCESS. No state read may see it.
+    # files present, no manifest version naming it. No state read may
+    # see it.
     b1_dir = tdir / "batch=b1"
     src = next(b1_dir.rglob("*.parquet"))
     junk = tdir / "batch=junk" / src.relative_to(b1_dir)
@@ -1401,58 +1414,9 @@ def test_compact_state_text_preserves_semantics(spark, tmp_path):
         compact_state(spark, sdir, "nope")
 
 
-def test_compact_state_self_heals_crash_window(spark, tmp_path):
-    """Crash after the compacted dir commits but before the sources
-    delete: readers see duplicate rows (harmless for set semantics);
-    the NEXT compaction's distinct() collapses them and removes every
-    superseded dir."""
-    import os
-
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
-        compact_state,
-        ingest_batch,
-        read_state,
-    )
-
-    sdir = str(tmp_path / "crashstate")
-    for i in range(2):
-        b = spark.createDataFrame(
-            [(i * 10 + j, f"crash doc {i} {j}") for j in range(2)],
-            "doc_id long, text string",
-        )
-        ingest_batch(spark, b, sdir, batch_id=f"b{i}")
-    pre = {(r["fp"], r["doc_id"]) for r in read_state(spark, sdir).collect()}
-
-    # simulate the crash window: compact, then RESTORE one source dir
-    # (as if its delete never ran)
-    import shutil
-
-    src = f"{sdir}/fingerprints/batch=b0"
-    saved = str(tmp_path / "saved_b0")
-    shutil.copytree(src, saved)
-    compact_state(spark, sdir, "fingerprints")
-    shutil.copytree(saved, src)
-
-    # duplicate rows visible, but the SET is unchanged
-    dup_rows = read_state(spark, sdir).count()
-    assert dup_rows == len(pre) + 2
-    assert {
-        (r["fp"], r["doc_id"]) for r in read_state(spark, sdir).collect()
-    } == pre
-
-    # re-compaction collapses duplicates and removes superseded dirs
-    compact_state(spark, sdir, "fingerprints")
-    assert read_state(spark, sdir).count() == len(pre)
-    assert {
-        (r["fp"], r["doc_id"]) for r in read_state(spark, sdir).collect()
-    } == pre
-    assert (
-        len([d for d in os.listdir(f"{sdir}/fingerprints") if d.startswith("batch=")])
-        == 1
-    )
-
-
-def test_compact_state_audio_prunes_stale_word_counts(spark, tmp_path):
+def test_compact_state_audio_prunes_stale_word_counts(
+    spark, tmp_path, commit_state
+):
     """Compacting audio_fps removes count tables of superseded
     batches; the compacted batch's counts regenerate from its durable
     fingerprints on the next read_audio_hubs call, with the SAME hub
@@ -1471,8 +1435,9 @@ def test_compact_state_audio_prunes_stale_word_counts(spark, tmp_path):
             [(1, [42] * 8 + list(range(200, 220)))],
         ]
     ):
-        spark.createDataFrame(rows, "doc_id long, fp array<int>").write.parquet(
-            f"{sdir}/audio_fps/batch=a{i}"
+        commit_state(
+            sdir, "audio_fps", f"a{i}",
+            spark.createDataFrame(rows, "doc_id long, fp array<int>"),
         )
     before = {r["v"] for r in read_audio_hubs(spark, sdir, 10).collect()}
     assert before == {42}
@@ -1575,16 +1540,25 @@ def test_ingest_auto_maintains_bounded_state(spark, tmp_path):
 def test_ingest_resume_survives_compaction(spark, tmp_path):
     """Provenance resume (r14 review-found): a crashed ingest whose
     fingerprint dir was FOLDED AWAY by compaction must still resume
-    by batch_id — without _sources.json the re-run would recompute,
-    anti-join everything against state, and OVERWRITE the staged
-    survivors with empty rows (silent data loss)."""
-    import json
+    by batch_id — without the compact's manifest provenance the re-run
+    would recompute, anti-join everything against state, and
+    OVERWRITE the staged survivors with empty rows (silent data
+    loss)."""
     import os
 
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
+        _read_manifest,
         compact_state,
         ingest_batch,
     )
+
+    def folded_ids():
+        # the one live compact's provenance, read from the manifest
+        live = _read_manifest(spark, sdir).live("fingerprints")
+        assert len(live) == 1 and next(iter(live)).startswith("compact-")
+        prov = next(iter(live.values()))
+        assert not prov.runs
+        return sorted(prov.ids)
 
     sdir = str(tmp_path / "resumestate")
     batches = {}
@@ -1599,26 +1573,16 @@ def test_ingest_resume_survives_compaction(spark, tmp_path):
         )
         assert acc.count() == 2
     assert compact_state(spark, sdir, "fingerprints") == 3
-    # provenance file names every folded id
-    cdirs = [
-        d
-        for d in os.listdir(f"{sdir}/fingerprints")
-        if d.startswith("batch=compact-")
-    ]
-    assert len(cdirs) == 1
-    with open(f"{sdir}/fingerprints/{cdirs[0]}/_sources.json") as fh:
-        assert json.load(fh) == ["r0", "r1", "r2"]
+    # the provenance names every folded id
+    assert folded_ids() == ["r0", "r1", "r2"]
     # the original fp dirs are gone, yet a same-id re-run RESUMES —
     # returning the staged survivors, not recomputing to empty
     for bid, b in batches.items():
         assert not os.path.exists(f"{sdir}/fingerprints/batch={bid}")
         resumed = ingest_batch(spark, b, sdir, batch_id=bid)
         assert resumed.count() == 2, f"batch {bid} lost its staged rows"
-    # transitive provenance: more ingests + re-compaction unions ids
-    # AND records the folded compact source's own name (review-found
-    # r14 — read_audio_hubs needs it to skip a crash-surviving old
-    # compact dir)
-    c0_name = cdirs[0].split("batch=", 1)[1]
+    # transitive provenance: more ingests + re-compaction unions the
+    # original ids, and names no compact dir
     for i in (3, 4):
         b = spark.createDataFrame(
             [(i * 10, f"resume doc {i} 0")], "doc_id long, text string"
@@ -1627,105 +1591,55 @@ def test_ingest_resume_survives_compaction(spark, tmp_path):
             spark, b, sdir, batch_id=f"r{i}", maintain_max_batch_dirs=None
         )
     assert compact_state(spark, sdir, "fingerprints") == 3
-    cdirs = [
-        d
-        for d in os.listdir(f"{sdir}/fingerprints")
-        if d.startswith("batch=compact-")
-    ]
-    assert len(cdirs) == 1
-    with open(f"{sdir}/fingerprints/{cdirs[0]}/_sources.json") as fh:
-        assert json.load(fh) == sorted(
-            ["r0", "r1", "r2", "r3", "r4", c0_name]
-        )
+    assert folded_ids() == ["r0", "r1", "r2", "r3", "r4"]
 
 
-def test_read_audio_hubs_crash_window_no_double_count(spark, tmp_path):
-    """r13 ADVICE #4, closed by provenance: in the compaction crash
-    window (compacted dir committed, source dirs not yet deleted)
-    read_audio_hubs skips folded sources, so word counts do NOT
-    double and the hub cut does not transiently halve. Word 99 sits
-    at 8 occurrences (≤ cap 10): double-counted it would read 16 and
-    be falsely dropped as a hub; word 42 at 12 is a true hub either
-    way."""
-    import shutil
+def test_recompaction_crash_window_skips_old_compact_dir(
+    spark, tmp_path, monkeypatch, commit_state
+):
+    """A re-compaction that crashes after its manifest commit, before
+    deleting its sources, leaves the OLD compact dir on disk beside the
+    new one. Its rows are a subset of the new dir's; read_audio_hubs
+    must not count them twice (word 99 sits at 8 <= cap 10; doubled it
+    would falsely hub), and the next compaction call deletes it."""
+    import os
 
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
-        compact_state,
-        read_audio_hubs,
-    )
-
-    sdir = str(tmp_path / "hubcrash")
-    for i in range(2):
-        rows = [
-            (
-                i * 10,
-                [42] * 6 + [99] * 4 + list(range(1000 + i * 50, 1030 + i * 50)),
-            )
-        ]
-        spark.createDataFrame(rows, "doc_id long, fp array<int>").write.parquet(
-            f"{sdir}/audio_fps/batch=c{i}"
-        )
-    before = {r["v"] for r in read_audio_hubs(spark, sdir, 10).collect()}
-    assert before == {42}
-
-    # crash window: compact, then restore both source dirs
-    saved = []
-    for i in range(2):
-        src = f"{sdir}/audio_fps/batch=c{i}"
-        dst = str(tmp_path / f"saved_c{i}")
-        shutil.copytree(src, dst)
-        saved.append((src, dst))
-    assert compact_state(spark, sdir, "audio_fps") == 2
-    for src, dst in saved:
-        shutil.copytree(dst, src)
-
-    during = {r["v"] for r in read_audio_hubs(spark, sdir, 10).collect()}
-    assert during == {42}, (
-        "crash-window double count halved the hub cut "
-        f"(hubs={during})"
-    )
-
-
-def test_recompaction_crash_window_skips_old_compact_dir(spark, tmp_path):
-    """Review-found r14: provenance must record a compact SOURCE's own
-    name too — in a re-compaction crash window (new compact dir
-    committed, old compact source not yet deleted) read_audio_hubs
-    would otherwise count the old compact dir's rows twice (they are
-    a subset of the new dir's) and halve the hub cut. Word 99 sits at
-    8 ≤ cap 10; doubled it would falsely hub."""
-    import shutil
-
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
-        compact_state,
-        read_audio_hubs,
+    from sensorstream_scalable_sensor_data_pipeline_spark.operators import (
+        dedup_incremental as di,
     )
 
     sdir = str(tmp_path / "rehubcrash")
     for i in range(2):
         rows = [(i * 10, [42] * 6 + [99] * 4 + list(range(2000 + i * 50, 2030 + i * 50)))]
-        spark.createDataFrame(rows, "doc_id long, fp array<int>").write.parquet(
-            f"{sdir}/audio_fps/batch=d{i}"
+        commit_state(
+            sdir, "audio_fps", f"d{i}",
+            spark.createDataFrame(rows, "doc_id long, fp array<int>"),
         )
-    assert compact_state(spark, sdir, "audio_fps") == 2
-    import os
-
-    c0 = [d for d in os.listdir(f"{sdir}/audio_fps") if d.startswith("batch=compact-")][0]
-    # a third batch arrives, then a RE-compaction crashes mid-delete:
-    # the old compact dir survives beside the new one
+    assert di.compact_state(spark, sdir, "audio_fps") == 2
+    (c0,) = [d for d in os.listdir(f"{sdir}/audio_fps") if d.startswith("batch=")]
     rows = [(100, [42] * 6 + list(range(3000, 3030)))]
-    spark.createDataFrame(rows, "doc_id long, fp array<int>").write.parquet(
-        f"{sdir}/audio_fps/batch=d2"
+    commit_state(
+        sdir, "audio_fps", "d2",
+        spark.createDataFrame(rows, "doc_id long, fp array<int>"),
     )
-    saved = str(tmp_path / "saved_compact")
-    shutil.copytree(f"{sdir}/audio_fps/{c0}", saved)
-    assert compact_state(spark, sdir, "audio_fps") == 2
-    shutil.copytree(saved, f"{sdir}/audio_fps/{c0}")
 
-    hubs = {r["v"] for r in read_audio_hubs(spark, sdir, 10).collect()}
+    def crash(*_args):
+        raise OSError("injected crash before the source delete")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(di, "_sweep", crash)
+        with pytest.raises(OSError, match="injected"):
+            di.compact_state(spark, sdir, "audio_fps")
+    assert os.path.exists(f"{sdir}/audio_fps/{c0}")
+
+    hubs = {r["v"] for r in di.read_audio_hubs(spark, sdir, 10).collect()}
     assert hubs == {42}, f"old compact dir double-counted: {hubs}"
+    assert di.compact_state(spark, sdir, "audio_fps") == 0
+    assert not os.path.exists(f"{sdir}/audio_fps/{c0}")
+    assert not os.path.exists(f"{sdir}/word_counts/rate=1/{c0}")
 
 
-def test_compact_state_rolls_up_word_counts(spark, tmp_path):
+def test_compact_state_rolls_up_word_counts(spark, tmp_path, commit_state):
     """Review-found r14: compaction derives the compact dir's sampled
     word-count table by SUMMING the sources' tables (O(words)) instead
     of leaving the next read_audio_hubs to re-explode the full state
@@ -1743,8 +1657,9 @@ def test_compact_state_rolls_up_word_counts(spark, tmp_path):
     sdir = str(tmp_path / "rollup")
     for i in range(3):
         rows = [(i * 10, [7] * 4 + list(range(4000 + i * 50, 4030 + i * 50)))]
-        spark.createDataFrame(rows, "doc_id long, fp array<int>").write.parquet(
-            f"{sdir}/audio_fps/batch=r{i}"
+        commit_state(
+            sdir, "audio_fps", f"r{i}",
+            spark.createDataFrame(rows, "doc_id long, fp array<int>"),
         )
     before = {r["v"] for r in read_audio_hubs(spark, sdir, 10).collect()}
     assert before == {7}  # 12 occurrences > cap 10, cross-batch only

@@ -164,10 +164,10 @@ def test_accepted_corpus_requires_committed_batches(spark, tmp_path):
 def test_stream_ingest_provenance_stays_bounded(spark, tmp_path):
     """A stream_ingest run registers its run_id, so the inline
     maintenance sweeps that fire under continuous micro-batching
-    record folded epochs as ONE per-run [lo, hi] interval in
-    _sources.json, and a compact names only the compact dirs it
-    folded itself — so no provenance file grows with the number of
-    epochs ever ingested — while the corpus stays exact."""
+    record folded epochs as ONE per-run [lo, hi] interval in the
+    manifest, and a compact's provenance names no dirs — so the
+    manifest does not grow with the number of epochs ever ingested —
+    while the corpus stays exact."""
     import json
     import os
 
@@ -192,27 +192,21 @@ def test_stream_ingest_provenance_stays_bounded(spark, tmp_path):
         seconds=600,
     )
     assert accepted_corpus(spark, sdir).count() == n_epochs * 40
-    # every committed compact dir under the state tables carries
-    # interval-form provenance with zero per-epoch ids, and at most
-    # the two compact names a threshold-2 tier merge folds directly
+    # every live compact dir under the state tables carries
+    # interval-form provenance with zero per-epoch ids
+    log = f"{sdir}/_manifest"
+    latest = max(f for f in os.listdir(log) if f.endswith(".json"))
+    with open(f"{log}/{latest}") as fh:
+        manifest = json.load(fh)
+    assert manifest["stream_runs"] == ["b"]
     found = 0
     for table in ("accepted", "fingerprints"):
-        root = f"{sdir}/{table}"
-        for d in os.listdir(root):
-            if not d.startswith("batch=compact-"):
+        for prov in manifest["tables"][table].values():
+            if prov is None:
                 continue
-            pfile = f"{root}/{d}/_sources.json"
-            if not os.path.exists(pfile):
-                continue
-            with open(pfile) as fh:
-                prov = json.load(fh)
             found += 1
-            assert isinstance(prov, dict) and "runs" in prov, prov
             assert "b" in prov["runs"], prov
-            assert not any(
-                i.startswith("b-") for i in prov["ids"]
-            ), prov
-            assert len(prov["ids"]) <= 2, (table, prov)
+            assert prov["ids"] == [], (table, prov)
     assert found >= 2, "maintenance never compacted at threshold 2"
 
 
