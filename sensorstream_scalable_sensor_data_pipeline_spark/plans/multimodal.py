@@ -23,6 +23,10 @@ from sensorstream_scalable_sensor_data_pipeline_spark.operators.multimodal impor
 )
 from sensorstream_scalable_sensor_data_pipeline_spark.plans.registry import query
 from sensorstream_scalable_sensor_data_pipeline_spark.sources.tables import load_table
+from sensorstream_scalable_sensor_data_pipeline_spark.sources.writers import (
+    bench_cache_dir,
+    publish_once,
+)
 
 
 def _with_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -899,46 +903,24 @@ _CORPUS_LAYOUT_V = "v1"
 
 
 def _corpus_cache_dir(sf_dir: str, tag: str) -> str:
-    """Deterministic per-(sf_dir, recipe, user) parquet path for a
-    synthetic payload corpus, so the UNTIMED synthesis runs once per
-    bench run and every timed rep READS the corpus from storage —
-    which is both the prepare-child measurement discipline
-    (bench.py docstring) and the more honest workload: a real dedup
-    pass scans payloads from parquet, it does not synthesize them.
-    Same keyed-cache conventions as plans/ann_serving.py."""
-    import getpass
-    import hashlib
-    import tempfile
-
-    key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|{tag}|{_CORPUS_LAYOUT_V}".encode()
-    ).hexdigest()[:12]
-    try:
-        user = getpass.getuser()
-    except Exception:
-        user = f"uid{os.getuid()}"
-    return os.path.join(
-        tempfile.gettempdir(), f"spark_graft_bench_{user}_corpus_{tag}_{key}"
+    """Keyed parquet path for a synthetic payload corpus, so the
+    UNTIMED synthesis runs once per bench run and every timed rep
+    READS the corpus from storage — which is both the prepare-child
+    measurement discipline (bench.py docstring) and the more honest
+    workload: a real dedup pass scans payloads from parquet, it does
+    not synthesize them."""
+    return bench_cache_dir(
+        f"corpus_{tag}", os.path.abspath(sf_dir), tag, _CORPUS_LAYOUT_V
     )
 
 
 def _ensure_corpus(spark: SparkSession, sf_dir: str, tag: str, builder) -> str:
     """Build ``builder(spark, sf_dir)`` into the keyed cache once
-    (staged + atomic rename; _SUCCESS-gated) and return the path."""
-    import shutil
-
-    out = _corpus_cache_dir(sf_dir, tag)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    stage = f"{out}.tmp.{os.getpid()}"
-    builder(spark, sf_dir).write.mode("overwrite").parquet(stage)
-    try:
-        os.rename(stage, out)
-    except OSError:
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    return out
+    (``sources/writers.py::publish_once``) and return the path."""
+    return publish_once(
+        _corpus_cache_dir(sf_dir, tag),
+        lambda stage: builder(spark, sf_dir).write.parquet(stage),
+    )
 
 
 def _read_corpus(spark: SparkSession, sf_dir: str, tag: str, builder) -> DataFrame:
@@ -954,7 +936,7 @@ def _read_corpus(spark: SparkSession, sf_dir: str, tag: str, builder) -> DataFra
     sources/readers.py::read_binary_corpus remains available as the
     MEMORY knob for ≫100 KB payloads.)"""
     out = _corpus_cache_dir(sf_dir, tag)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
+    if os.path.exists(out):
         return spark.read.parquet(out)
     return builder(spark, sf_dir)
 

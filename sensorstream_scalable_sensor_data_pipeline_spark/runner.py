@@ -18,6 +18,12 @@ This runner is the same lifecycle, Spark-first:
   filtered writes;
 * read-back validation (S9).
 
+An overwrite run replaces ``series`` through
+``sources/writers.py::staged_swap``, whose module docstring gives the
+crash windows: a retry after a crash anywhere in the swap keeps the
+history. State without the ``(year, month)`` partition columns (the
+pre-partitioning layout) is refused before any write.
+
 Run it twice with the same inputs → byte-identical output (the
 idempotency property test in tests/test_runner.py).
 """
@@ -34,7 +40,10 @@ from sensorstream_scalable_sensor_data_pipeline_spark.config import PipelineConf
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup import (
     key_dedup_deterministic,
 )
-from sensorstream_scalable_sensor_data_pipeline_spark.operators.enrich import enrich
+from sensorstream_scalable_sensor_data_pipeline_spark.operators.enrich import (
+    anti_filter,
+    enrich,
+)
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.filters import (
     integrity_filter,
 )
@@ -44,6 +53,7 @@ from sensorstream_scalable_sensor_data_pipeline_spark.operators.incremental impo
 )
 from sensorstream_scalable_sensor_data_pipeline_spark.sources.tables import load_table
 from sensorstream_scalable_sensor_data_pipeline_spark.sources.writers import (
+    staged_swap,
     validate_output,
     write_partitioned,
 )
@@ -106,113 +116,87 @@ def run_pipeline(
     now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     out_data = os.path.join(cfg.output_dir, "series")
 
-    # 1. Cutoff from materialized state (A1/A4/X12): a MAX over the
-    # lookback months only — the (year, month) partition columns turn
-    # the filter into PartitionFilters, so the scan lists a handful of
-    # directories at any history size (plan-pinned in test_runner.py).
-    try:
-        existing: DataFrame | None = spark.read.parquet(out_data)
-    except Exception:
-        existing = None
-    # Legacy layout migration: state written before the (year, month)
-    # partitioning has no time-partition columns, so nothing can
-    # prune. Derive the columns on the fly for this run and force a
-    # full overwrite rewrite — one migration run re-lays the data out,
-    # and every subsequent run prunes.
-    legacy = existing is not None and not {"year", "month"} <= set(existing.columns)
-    if legacy:
-        existing = existing.withColumn("year", F.year("datetime")).withColumn(
-            "month", F.month("datetime")
-        )
-    cutoff = compute_cutoff_pruned(
-        existing,
-        "datetime",
-        now,
-        lookback_days=cfg.lookback_days,
-        default_start=dt.datetime.strptime(cfg.default_start_date, "%Y-%m-%d"),
-    )
-
-    # 2-3. Extract + transform (one lazy plan).
-    increment = build_series(spark, cfg, cutoff)
-
-    # 4. Idempotent merge + single partitioned write. Overwrite mode
-    # rewrites the full merged state. Append mode touches history only
-    # within the cutoff's months (partition-pruned), under the
-    # configured collision policy:
-    # * existing_wins: append ONLY rows whose (sensor_id, datetime)
-    #   key is not already materialized — the anti-join makes
-    #   re-running the same increment a no-op, and its build side is
-    #   partition-pruned to the cutoff months, so it stays small at
-    #   any history size. History is immutable.
-    # * keep_max: the reference's semantics (union existing with the
-    #   increment and dedup before writing, main_pipeline.py:321-328)
-    #   — a late corrected reading replaces history. Implemented as a
-    #   dynamic-partition-overwrite merge: only the lookback months'
-    #   partitions are rewritten, never the table.
-    keys = ["sensor_id", "datetime"]
-    deduped = key_dedup_deterministic(increment, keys, "sensor_value", keep="max")
-    dynamic = False
-    # A legacy store must be rewritten whole regardless of the
-    # configured mode: appending the new three-level partitioning next
-    # to tagpath-only directories leaves a mixed-depth layout Spark
-    # cannot read back.
-    write_mode = "overwrite" if legacy else cfg.write_mode
-    if existing is not None and write_mode == "overwrite":
-        deduped = key_dedup_deterministic(
-            existing.unionByName(deduped, allowMissingColumns=False),
-            keys,
-            "sensor_value",
-            keep="max",
-        )
-    elif existing is not None and cfg.append_conflict == "existing_wins":
-        from sensorstream_scalable_sensor_data_pipeline_spark.operators.enrich import (
-            anti_filter,
+    # Entering the swap heals a crashed earlier swap before the state
+    # is read; only an overwrite writes to the stage and swaps.
+    with staged_swap(out_data) as staging:
+        # 1. Cutoff from materialized state (A1/A4/X12): a MAX over the
+        # lookback months only — the (year, month) partition columns turn
+        # the filter into PartitionFilters, so the scan lists a handful of
+        # directories at any history size (plan-pinned in test_runner.py).
+        try:
+            existing: DataFrame | None = spark.read.parquet(out_data)
+        except Exception:
+            existing = None
+        if existing is not None and not {"year", "month"} <= set(existing.columns):
+            raise ValueError(
+                f"{out_data} has no (year, month) partition columns: it was "
+                "written by the pre-partitioning runner, which this runner "
+                "does not read; rebuild it from the sources into a new output_dir"
+            )
+        cutoff = compute_cutoff_pruned(
+            existing,
+            "datetime",
+            now,
+            lookback_days=cfg.lookback_days,
+            default_start=dt.datetime.strptime(cfg.default_start_date, "%Y-%m-%d"),
         )
 
-        recent_keys = (
-            existing.filter(partition_months_pred(cutoff))
-            .filter(F.col("datetime") >= F.lit(cutoff))
-            .select(*keys)
-        )
-        deduped = anti_filter(deduped, recent_keys, keys)
-    elif existing is not None:  # append + keep_max
-        # Materialize the (partition-pruned, lookback-sized) months
-        # before the write: the merge overwrites the very partitions it
-        # reads, so the read must complete first — localCheckpoint cuts
-        # the lineage back to materialized blocks (an object-store
-        # deployment with stricter durability uses checkpoint() to the
-        # cluster store; same O(lookback), never O(history), data).
-        recent = existing.filter(partition_months_pred(cutoff)).localCheckpoint(
-            eager=True
-        )
-        deduped = key_dedup_deterministic(
-            recent.unionByName(deduped), keys, "sensor_value", keep="max"
-        )
-        write_mode, dynamic = "overwrite", True
-    staging = out_data + "_staging" if write_mode == "overwrite" and not dynamic else out_data
-    write_partitioned(
-        deduped,
-        staging,
-        ["tagpath", "year", "month"],
-        mode=write_mode,
-        max_records_per_file=cfg.max_records_per_file,
-        dynamic_partition_overwrite=dynamic,
-    )
-    if staging != out_data:
-        # Atomic-ish swap so a failed overwrite never destroys state
-        # (object stores: write to a new prefix + flip a pointer).
-        # Crash-safe: clear any stale _old leftover from a run that
-        # died between renames (else os.rename onto a non-empty dir
-        # raises and wedges every subsequent run), and tolerate the
-        # window where out_data never existed.
-        import shutil
+        # 2-3. Extract + transform (one lazy plan).
+        increment = build_series(spark, cfg, cutoff)
 
-        tmp = out_data + "_old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        if os.path.exists(out_data):
-            os.rename(out_data, tmp)
-        os.rename(staging, out_data)
-        shutil.rmtree(tmp, ignore_errors=True)
+        # 4. Idempotent merge + single partitioned write. Overwrite mode
+        # rewrites the full merged state. Append mode touches history only
+        # within the cutoff's months (partition-pruned), under the
+        # configured collision policy:
+        # * existing_wins: append ONLY rows whose (sensor_id, datetime)
+        #   key is not already materialized — the anti-join makes
+        #   re-running the same increment a no-op, and its build side is
+        #   partition-pruned to the cutoff months, so it stays small at
+        #   any history size. History is immutable.
+        # * keep_max: the reference's semantics (union existing with the
+        #   increment and dedup before writing, main_pipeline.py:321-328)
+        #   — a late corrected reading replaces history. Implemented as a
+        #   dynamic-partition-overwrite merge: only the lookback months'
+        #   partitions are rewritten, never the table.
+        keys = ["sensor_id", "datetime"]
+        deduped = key_dedup_deterministic(increment, keys, "sensor_value", keep="max")
+        write_mode, dynamic = cfg.write_mode, False
+        if existing is not None and write_mode == "overwrite":
+            deduped = key_dedup_deterministic(
+                existing.unionByName(deduped, allowMissingColumns=False),
+                keys,
+                "sensor_value",
+                keep="max",
+            )
+        elif existing is not None and cfg.append_conflict == "existing_wins":
+            recent_keys = (
+                existing.filter(partition_months_pred(cutoff))
+                .filter(F.col("datetime") >= F.lit(cutoff))
+                .select(*keys)
+            )
+            deduped = anti_filter(deduped, recent_keys, keys)
+        elif existing is not None:  # append + keep_max
+            # Materialize the (partition-pruned, lookback-sized) months
+            # before the write: the merge overwrites the very partitions it
+            # reads, so the read must complete first — localCheckpoint cuts
+            # the lineage back to materialized blocks (an object-store
+            # deployment with stricter durability uses checkpoint() to the
+            # cluster store; same O(lookback), never O(history), data).
+            recent = existing.filter(partition_months_pred(cutoff)).localCheckpoint(
+                eager=True
+            )
+            deduped = key_dedup_deterministic(
+                recent.unionByName(deduped), keys, "sensor_value", keep="max"
+            )
+            write_mode, dynamic = "overwrite", True
+        write_partitioned(
+            deduped,
+            staging if write_mode == "overwrite" and not dynamic else out_data,
+            ["tagpath", "year", "month"],
+            mode=write_mode,
+            max_records_per_file=cfg.max_records_per_file,
+            dynamic_partition_overwrite=dynamic,
+        )
 
     # 5. Validate (S9).
     n = validate_output(spark, out_data)

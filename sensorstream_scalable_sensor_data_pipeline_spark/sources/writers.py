@@ -13,9 +13,39 @@ full scan per sink — we drop it.
 jobs) with a single ``partitionBy(key)`` job: one shuffle-free write
 that lays out ``key=.../part-*.parquet`` directories, with Catalyst
 partition pruning on read-back (X9).
+
+Every directory the engine publishes goes through one of two
+stage-and-rename protocols, both here:
+
+* :func:`staged_swap` replaces a live dir (the runner's overwrite,
+  :func:`compact_parquet_dir`, the streaming SCD2 dimension). The new
+  content is written to ``<live>_staging``; then ``live`` is renamed
+  to ``<live>_old``, the stage to ``live``, and ``_old`` is deleted.
+  Crash windows:
+
+  - *before the first rename*: ``live`` is intact; the retry deletes
+    the stale stage and redoes the work.
+  - *between the two renames*: ``live`` is gone and ``<live>_old``
+    holds the previous content. The retry renames ``_old`` back
+    before anything reads ``live``, then redoes the work. Without this
+    heal a retry would see no state and rebuild from scratch, and its
+    own swap would delete the history in ``_old``.
+  - *after the second rename*: the new content is live; the retry
+    deletes the leftover ``_old`` and runs against the new state.
+
+* :func:`publish_once` lands a keyed cache dir (the bench heads'
+  untimed fixtures, keyed by :func:`bench_cache_dir`): build into
+  ``<out>.tmp.<pid>``, rename into place. ``out`` exists only through
+  that rename, so its existence is its completeness; a crash leaves at
+  most a stage dir, never a partial ``out``.
 """
 
 from __future__ import annotations
+
+import contextlib
+import os
+import shutil
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -123,61 +153,118 @@ def compact_parquet_dir(
     layouts whose per-file open/footer overhead eventually dominates
     scans. Rewrites the dataset into ``ceil(rows/target)`` right-sized
     files (optionally range-sorted — compaction is the natural moment
-    to also fix clustering), then atomically swaps directories via the
-    same staging-rename protocol as runner.py (crash before the swap
-    leaves the original untouched; a stale ``_old`` from a prior
-    crash is cleared first).
+    to also fix clustering) and swaps them in through
+    :func:`staged_swap` (crash windows in the module docstring).
 
     Returns ``(files_before, files_after)``. Scale note: compaction
     reads and writes the data once, shuffling only when ``sort_col``
     asks for range clustering — schedule it off-peak per partition,
     not over the whole table at once."""
     import math
-    import os
-    import shutil
 
     if sort_col is not None and zorder_cols is not None:
         raise ValueError("pass sort_col OR zorder_cols, not both")
-    n_files_before = sum(
-        1
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    df = spark.read.parquet(path)
-    rows = df.count()
-    n_out = max(1, math.ceil(rows / target_records_per_file))
-    staging = path.rstrip("/") + "_compact_staging"
-    if zorder_cols is not None:
-        # multi-dimension recluster at compaction time — OPTIMIZE
-        # ZORDER semantics via write_zorder's staging write
-        write_zorder(
-            df, staging, zorder_cols, n_out,
-            bits=zorder_bits,
-            max_records_per_file=target_records_per_file,
-        )
-    else:
-        if sort_col is not None:
-            out = df.repartitionByRange(n_out, sort_col).sortWithinPartitions(
-                sort_col
+    with staged_swap(path) as staging:
+        n_files_before = _count_parquet_files(path)
+        df = spark.read.parquet(path)
+        rows = df.count()
+        n_out = max(1, math.ceil(rows / target_records_per_file))
+        if zorder_cols is not None:
+            # multi-dimension recluster at compaction time — OPTIMIZE
+            # ZORDER semantics via write_zorder's staging write
+            write_zorder(
+                df, staging, zorder_cols, n_out,
+                bits=zorder_bits,
+                max_records_per_file=target_records_per_file,
             )
         else:
-            out = df.coalesce(n_out)
-        out.write.mode("overwrite").option(
-            "maxRecordsPerFile", str(target_records_per_file)
-        ).parquet(staging)
-    tmp = path.rstrip("/") + "_old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.rename(path, tmp)
-    os.rename(staging, path)
-    shutil.rmtree(tmp, ignore_errors=True)
-    n_files_after = sum(
-        1
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
+            if sort_col is not None:
+                out = df.repartitionByRange(n_out, sort_col).sortWithinPartitions(
+                    sort_col
+                )
+            else:
+                out = df.coalesce(n_out)
+            out.write.mode("overwrite").option(
+                "maxRecordsPerFile", str(target_records_per_file)
+            ).parquet(staging)
+    n_files_after = _count_parquet_files(path)
     return n_files_before, n_files_after
+
+
+def _count_parquet_files(path: str) -> int:
+    return sum(
+        1 for _, _, files in os.walk(path) for f in files if f.endswith(".parquet")
+    )
+
+
+@contextlib.contextmanager
+def staged_swap(live: str) -> Iterator[str]:
+    """Replace the directory ``live`` with what the body writes to the
+    yielded stage path. Entering heals a previous swap that crashed
+    (see the module docstring), so open the block BEFORE reading
+    ``live``. A body that writes nothing to the stage (say, an append
+    straight into ``live``) swaps nothing. If the body raises, the
+    stage is deleted and ``live`` is untouched."""
+    live = live.rstrip("/")
+    stage, old = live + "_staging", live + "_old"
+    if os.path.exists(old):
+        if os.path.exists(live):
+            shutil.rmtree(old)  # crashed after the second rename
+        else:
+            os.rename(old, live)  # crashed between the renames
+    shutil.rmtree(stage, ignore_errors=True)
+    try:
+        yield stage
+        if os.path.exists(stage):
+            if os.path.exists(live):
+                os.rename(live, old)
+            os.rename(stage, live)
+            shutil.rmtree(old, ignore_errors=True)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def bench_cache_dir(tag: str, *inputs: object) -> str:
+    """Keyed path of an untimed bench fixture under the temp dir:
+    ``spark_graft_bench_<user>_<tag>_<sha12>``, the hash taken over
+    ``tag`` and every input that determines the content (sf dir,
+    layout version, build parameters), so a change to any of them
+    misses the old cache instead of serving it. The user keeps two
+    accounts on one host apart."""
+    import getpass
+    import hashlib
+    import tempfile
+
+    key = hashlib.sha256("|".join(map(str, (tag, *inputs))).encode()).hexdigest()
+    try:
+        user = getpass.getuser()
+    except (OSError, KeyError):  # no login name in the env or passwd
+        user = f"uid{os.getuid()}"
+    return os.path.join(
+        tempfile.gettempdir(), f"spark_graft_bench_{user}_{tag}_{key[:12]}"
+    )
+
+
+def publish_once(out: str, build: Callable[[str], None]) -> str:
+    """Return ``out``, first building it if it does not exist:
+    ``build(stage)`` writes ``<out>.tmp.<pid>``, which is renamed into
+    place. A concurrent builder that wins the rename leaves a complete
+    ``out``; the loser deletes its stage and uses the winner's copy. A
+    build that raises leaves no stage behind."""
+    if os.path.exists(out):
+        return out
+    stage = f"{out}.tmp.{os.getpid()}"
+    shutil.rmtree(stage, ignore_errors=True)
+    try:
+        build(stage)
+        try:
+            os.rename(stage, out)
+        except OSError:
+            if not os.path.exists(out):
+                raise
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return out
 
 
 def write_bucketed_table(

@@ -6,9 +6,9 @@ batch of attribute changes"; deployments get those changes as a
 STREAM (CDC feed, state events). This module runs the same pure
 transform inside a checkpointed ``foreachBatch``: each micro-batch is
 pre-collapsed to its latest row per key, applied to the current
-dimension, and the new dimension swapped in atomically (staging dir +
-rename — the runner.py crash protocol, so a failure mid-write leaves
-the previous dimension intact and the checkpoint replays the batch).
+dimension, and the new dimension swapped in through
+``sources/writers.py::staged_swap``, so a failure mid-write leaves
+the previous dimension intact and the checkpoint replays the batch.
 
 IDEMPOTENCY, the at-least-once requirement: ``scd2_apply`` is a
 fixpoint under replay BY CONSTRUCTION — a replayed batch's updates
@@ -38,6 +38,7 @@ from sensorstream_scalable_sensor_data_pipeline_spark.sources.merge import (
     scd2_apply,
     scd2_init,
 )
+from sensorstream_scalable_sensor_data_pipeline_spark.sources.writers import staged_swap
 
 
 def latest_per_key(
@@ -65,18 +66,6 @@ def latest_per_key(
     )
 
 
-def _recover_interrupted_swap(dim_dir: str) -> None:
-    """Heal a crash INSIDE a previous swap: if the dimension dir is
-    gone but its ``_old`` sibling survives, the crash hit between the
-    two renames — the history lives in ``_old``; restore it before
-    doing anything else. Without this, a replay would take the
-    bootstrap branch and delete the only surviving copy (the
-    reviewer-found data-loss window)."""
-    old = dim_dir.rstrip("/") + "_old"
-    if not os.path.exists(dim_dir) and os.path.exists(old):
-        os.rename(old, dim_dir)
-
-
 def apply_scd2_batch(
     spark: SparkSession,
     dim_dir: str,
@@ -85,35 +74,23 @@ def apply_scd2_batch(
     attr_cols: list[str],
     effective_col: str,
 ) -> None:
-    """One batch against the durable dimension: recover any
-    interrupted swap, read (or bootstrap), apply, swap. Exposed for
-    tests and for batch backfills — the streaming sink below is just
-    this per micro-batch.
+    """One batch against the durable dimension: read (or bootstrap),
+    apply, swap in through :func:`staged_swap`, which also heals an
+    interrupted earlier swap before the read. Exposed for tests and for
+    batch backfills — the streaming sink below is just this per
+    micro-batch.
 
-    Crash windows: before the first rename → old dimension intact,
-    replay redoes the batch; between the renames → healed by
-    :func:`_recover_interrupted_swap` on the next call; after the
-    second rename → the new dimension is live and replay is a no-op
-    (scd2_apply fixpoint). A stale ``_staging`` from any crash is
-    overwritten; a stale ``_old`` next to a LIVE dim_dir is a
-    completed swap's leftover and is cleared."""
-    import shutil
-
-    _recover_interrupted_swap(dim_dir)
-    collapsed = latest_per_key(batch, key_cols, attr_cols, effective_col)
-    if os.path.exists(dim_dir):
-        dim = spark.read.parquet(dim_dir)
-        updated = scd2_apply(dim, collapsed, key_cols, attr_cols, effective_col)
-    else:
-        updated = scd2_init(collapsed, key_cols, attr_cols, effective_col)
-    staging = dim_dir.rstrip("/") + "_staging"
-    updated.write.mode("overwrite").parquet(staging)
-    old = dim_dir.rstrip("/") + "_old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(dim_dir):
-        os.rename(dim_dir, old)
-    os.rename(staging, dim_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    Crash windows are those of :func:`staged_swap` (see
+    ``sources/writers.py``); a replay of the crashed batch is safe in
+    each, because scd2_apply is a fixpoint under replay."""
+    with staged_swap(dim_dir) as staging:
+        collapsed = latest_per_key(batch, key_cols, attr_cols, effective_col)
+        if os.path.exists(dim_dir):
+            dim = spark.read.parquet(dim_dir)
+            updated = scd2_apply(dim, collapsed, key_cols, attr_cols, effective_col)
+        else:
+            updated = scd2_init(collapsed, key_cols, attr_cols, effective_col)
+        updated.write.mode("overwrite").parquet(staging)
 
 
 def stream_scd2_maintain(

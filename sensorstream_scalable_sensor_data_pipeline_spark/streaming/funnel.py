@@ -43,6 +43,10 @@ from pyspark.sql import functions as F
 from sensorstream_scalable_sensor_data_pipeline_spark.functions.identifiers import (
     quote_ident,
 )
+from sensorstream_scalable_sensor_data_pipeline_spark.sources.writers import (
+    bench_cache_dir,
+    publish_once,
+)
 
 #: "no chain" sentinel for b_flat slots: Long.MIN_VALUE, unreachable by
 #: any Spark timestamp's epoch-micros (min representable instant is
@@ -219,33 +223,14 @@ _HEAD_LAYOUT_V = "v2"
 _FLUSH_KEY = -1
 
 
-def _head_landing_dir(sf_dir: str) -> str:
-    """Deterministic per-(sf_dir, layout, user) landing directory so
-    the UNTIMED split of events into micro-batch files runs once per
-    bench run, not once per cold-JVM rep (same keyed-cache discipline
-    as plans/ann_serving.py::_large_cache_dir)."""
-    import getpass
-    import hashlib
-    import tempfile
-
-    key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|b{_HEAD_BATCHES}|{_HEAD_LAYOUT_V}".encode()
-    ).hexdigest()[:12]
-    try:
-        user = getpass.getuser()
-    except Exception:
-        user = f"uid{os.getuid()}"
-    return os.path.join(
-        tempfile.gettempdir(), f"spark_graft_bench_{user}_sfunnel_{key}"
-    )
-
-
-def stream_funnel_head_setup(spark, sf_dir: str) -> None:
-    """Untimed fixture: land the events table as ``_HEAD_BATCHES``
-    interleaved parquet files (split by a row hash, so every
-    micro-batch spans the full time range — the cross-batch-disorder
-    worst case the operator exists for) plus one far-future flush
-    file. Staged + atomic-renamed so concurrent runs race safely."""
+def _head_landing(spark, sf_dir: str) -> str:
+    """The keyed landing dir of the events table, landed once per bench
+    run (``sources/writers.py::publish_once``), not once per cold-JVM
+    rep: ``_HEAD_BATCHES`` interleaved parquet files (split by a row
+    hash, so every micro-batch spans the full time range — the
+    cross-batch-disorder worst case the operator exists for) plus one
+    far-future flush file."""
+    import datetime as _dt
     import glob
     import shutil
 
@@ -253,52 +238,49 @@ def stream_funnel_head_setup(spark, sf_dir: str) -> None:
         load_table,
     )
 
-    landing = _head_landing_dir(sf_dir)
-    if os.path.exists(os.path.join(landing, "_COMPLETE")):
-        return
-    stage = f"{landing}.tmp.{os.getpid()}"
-    os.makedirs(stage, exist_ok=True)
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type"
-    )
-    mx = ev.agg(F.max("ts")).collect()[0][0]
-    import datetime as _dt
+    def land(stage: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select(
+            "user_id", "ts", "event_type"
+        )
+        mx = ev.agg(F.max("ts")).collect()[0][0]
+        flush = ev.sparkSession.createDataFrame(
+            [(_FLUSH_KEY, mx + _dt.timedelta(days=400), "view")], ev.schema
+        )
+        # pmod, not abs(hash) % n: hash() can return Int.MIN_VALUE, whose
+        # abs overflows under ANSI mode
+        parts = [
+            ev.filter(F.pmod(F.hash("user_id", "ts"), F.lit(_HEAD_BATCHES)) == i)
+            for i in range(_HEAD_BATCHES)
+        ] + [flush]
+        for i, df in enumerate(parts):
+            d = os.path.join(stage, f"_w{i}")
+            df.coalesce(1).write.mode("overwrite").parquet(d)
+            src = glob.glob(os.path.join(d, "part-*.parquet"))[0]
+            dst = os.path.join(stage, f"{i:03d}.parquet")
+            shutil.move(src, dst)
+            # FileStreamSource orders files by MODIFICATION TIME, not
+            # name; the flush batch must arrive LAST or its far-future
+            # timestamp advances the watermark immediately and every real
+            # event is dropped as late. Sequential writes happen to give
+            # it the newest mtime, but an mtime tie (coarse filesystem
+            # timestamps) would break that silently — pin the ordering
+            # explicitly instead of relying on write latency.
+            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+            shutil.rmtree(d)
 
-    flush = ev.sparkSession.createDataFrame(
-        [(_FLUSH_KEY, mx + _dt.timedelta(days=400), "view")], ev.schema
+    out = bench_cache_dir(
+        "sfunnel", os.path.abspath(sf_dir), f"b{_HEAD_BATCHES}", _HEAD_LAYOUT_V
     )
-    # pmod, not abs(hash) % n: hash() can return Int.MIN_VALUE, whose
-    # abs overflows under ANSI mode
-    parts = [
-        ev.filter(F.pmod(F.hash("user_id", "ts"), F.lit(_HEAD_BATCHES)) == i)
-        for i in range(_HEAD_BATCHES)
-    ] + [flush]
-    for i, df in enumerate(parts):
-        d = os.path.join(stage, f"_w{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        src = glob.glob(os.path.join(d, "part-*.parquet"))[0]
-        dst = os.path.join(stage, f"{i:03d}.parquet")
-        shutil.move(src, dst)
-        # FileStreamSource orders files by MODIFICATION TIME, not
-        # name; the flush batch must arrive LAST or its far-future
-        # timestamp advances the watermark immediately and every real
-        # event is dropped as late. Sequential writes happen to give
-        # it the newest mtime, but an mtime tie (coarse filesystem
-        # timestamps) would break that silently — pin the ordering
-        # explicitly instead of relying on write latency.
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        shutil.rmtree(d)
-    open(os.path.join(stage, "_COMPLETE"), "w").close()
-    try:
-        os.rename(stage, landing)
-    except OSError:
-        if not os.path.exists(os.path.join(landing, "_COMPLETE")):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
+    return publish_once(out, land)
+
+
+def stream_funnel_head_setup(spark, sf_dir: str) -> None:
+    """Untimed fixture: land the events table for the head's stream."""
+    _head_landing(spark, sf_dir)
 
 
 def _head_stream(spark, sf_dir: str):
-    landing = _head_landing_dir(sf_dir)
+    landing = _head_landing(spark, sf_dir)
     phys = spark.read.option("pathGlobFilter", "*.parquet").parquet(landing).schema
     return (
         spark.readStream.schema(phys)

@@ -47,6 +47,30 @@ def commit_state(spark):
     return commit
 
 
+@pytest.fixture
+def crash_mid_swap(monkeypatch):
+    """``with crash_mid_swap():`` makes the second ``os.rename`` in the
+    block raise OSError("injected ..."): a crash between the two
+    renames of a directory swap."""
+    import contextlib
+
+    @contextlib.contextmanager
+    def crash():
+        real_rename, calls = os.rename, []
+
+        def rename(src, dst):
+            calls.append(src)
+            if len(calls) == 2:
+                raise OSError("injected crash between the swap renames")
+            real_rename(src, dst)
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "rename", rename)
+            yield
+
+    return crash
+
+
 def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """Mirror the driver's oracle setup: each parquet registered as a view."""
     con = duckdb.connect()

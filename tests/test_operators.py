@@ -113,7 +113,28 @@ def test_compact_parquet_dir(spark, sf_dir, tmp_path):
         r["event_id"] for r in ev.select("event_id").collect()
     }
     assert not os.path.exists(out + "_old")
-    assert not os.path.exists(out + "_compact_staging")
+    assert not os.path.exists(out + "_staging")
+
+
+def test_compact_parquet_dir_crash_between_swap_renames(spark, tmp_path, crash_mid_swap):
+    """A compaction that dies between its two swap renames leaves the
+    data only in '<path>_old'; the re-run must restore it, compact
+    it and leave no '_old' or stage behind."""
+    from sensorstream_scalable_sensor_data_pipeline_spark.sources.writers import (
+        compact_parquet_dir,
+    )
+
+    out = str(tmp_path / "fragmented")
+    spark.range(40).repartition(4).write.parquet(out)
+    with crash_mid_swap(), pytest.raises(OSError, match="injected"):
+        compact_parquet_dir(spark, out)
+    assert not os.path.exists(out) and os.path.exists(out + "_old")
+
+    before, after = compact_parquet_dir(spark, out)
+    assert (before, after) == (4, 1)
+    assert sorted(r.id for r in spark.read.parquet(out).collect()) == list(range(40))
+    assert not os.path.exists(out + "_old")
+    assert not os.path.exists(out + "_staging")
 
 
 def test_write_partitioned_layout_and_pruning(spark, sf_dir, tmp_path):

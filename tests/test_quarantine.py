@@ -10,6 +10,7 @@ quarantine set is recoverable with one filter."""
 from __future__ import annotations
 
 import contextlib
+import shutil
 import uuid
 
 import numpy as np
@@ -655,33 +656,37 @@ def test_curate_image_corpus_quarantine_end_to_end(spark, tmp_path):
 
     sfd_dirty = str(tmp_path / "sf_dirty")
     sfd_clean = str(tmp_path / "sf_clean")
-    spark.createDataFrame(
-        clean_rows + [(900, corrupt)], "doc_id long, payload binary"
-    ).write.mode("overwrite").parquet(_corpus_cache_dir(sfd_dirty, "images"))
-    spark.createDataFrame(
-        clean_rows, "doc_id long, payload binary"
-    ).write.mode("overwrite").parquet(_corpus_cache_dir(sfd_clean, "images"))
-
-    out = curate_image_corpus(
-        spark, sfd_dirty, on_error="quarantine"
-    ).collect()
-    by_id = {r["doc_id"]: r for r in out}
-    ref = {
-        r["doc_id"]: r
-        for r in curate_image_corpus(spark, sfd_clean).collect()
-    }
-    # survivor set = clean-run survivors + the quarantined row
-    assert set(by_id) == set(ref) | {900}
-    assert by_id[900]["quarantined"] is True
-    for i in ref:
-        assert by_id[i]["quarantined"] is False
-        assert by_id[i]["split"] == ref[i]["split"]
-        assert by_id[i]["content_md5"] == ref[i]["content_md5"]
-    # default raise-mode: the gate-passing corrupt body is loud
-    with pytest.raises(Exception):
-        curate_image_corpus(spark, sfd_dirty).collect()
-    # raise-mode output carries no quarantined column
-    assert "quarantined" not in curate_image_corpus(spark, sfd_clean).columns
+    caches = [_corpus_cache_dir(sfd, "images") for sfd in (sfd_dirty, sfd_clean)]
+    try:
+        spark.createDataFrame(
+            clean_rows + [(900, corrupt)], "doc_id long, payload binary"
+        ).write.mode("overwrite").parquet(caches[0])
+        spark.createDataFrame(
+            clean_rows, "doc_id long, payload binary"
+        ).write.mode("overwrite").parquet(caches[1])
+        out = curate_image_corpus(
+            spark, sfd_dirty, on_error="quarantine"
+        ).collect()
+        by_id = {r["doc_id"]: r for r in out}
+        ref = {
+            r["doc_id"]: r
+            for r in curate_image_corpus(spark, sfd_clean).collect()
+        }
+        # survivor set = clean-run survivors + the quarantined row
+        assert set(by_id) == set(ref) | {900}
+        assert by_id[900]["quarantined"] is True
+        for i in ref:
+            assert by_id[i]["quarantined"] is False
+            assert by_id[i]["split"] == ref[i]["split"]
+            assert by_id[i]["content_md5"] == ref[i]["content_md5"]
+        # default raise-mode: the gate-passing corrupt body is loud
+        with pytest.raises(Exception):
+            curate_image_corpus(spark, sfd_dirty).collect()
+        # raise-mode output carries no quarantined column
+        assert "quarantined" not in curate_image_corpus(spark, sfd_clean).columns
+    finally:
+        for c in caches:
+            shutil.rmtree(c, ignore_errors=True)
 
 
 #: The quarantine identity table's data columns, for hand-laid commits.

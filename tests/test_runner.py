@@ -68,8 +68,9 @@ def test_run_pipeline_idempotent_append(spark, sf_dir, tmp_path):
 
 
 def test_run_pipeline_recovers_from_stale_old_dir(spark, sf_dir, tmp_path):
-    """A run that died between the overwrite swap renames leaves
-    '<out>_old' behind; the next run must clear it and proceed."""
+    """A run that died after the second overwrite swap rename (the new
+    series already live) leaves '<out>_old' behind; the next run must
+    clear it and proceed."""
     import os
 
     cfg = PipelineConfig(input_dir=sf_dir, output_dir=str(tmp_path / "out"))
@@ -158,13 +159,26 @@ def test_append_conflict_policies(spark, tmp_path):
         PipelineConfig(input_dir="x", output_dir="y", append_conflict="bogus")
 
 
-def test_legacy_layout_migrates(spark, sf_dir, tmp_path):
-    """State written by the pre-(year, month) engine (tagpath-only
-    partitioning) must not crash the new runner: the run derives the
-    time-partition columns, forces one full migrating rewrite (even in
-    append mode — mixed partition depths are unreadable), and the next
-    run prunes normally."""
+def _tree(root):
+    """Every file under ``root`` with its size and mtime."""
     import os
+
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), root), st.st_size, st.st_mtime_ns)
+        for d, _, files in os.walk(root)
+        for f in files
+        for st in [os.stat(os.path.join(d, f))]
+    )
+
+
+def test_legacy_layout_refused(spark, sf_dir, tmp_path):
+    """State written by the pre-(year, month) engine (tagpath-only
+    partitioning) is refused in either write mode: the run raises a
+    ValueError naming the series path before any write, and leaves
+    the file tree as it was."""
+    import os
+    import re
+    from dataclasses import replace
 
     out = str(tmp_path / "out")
     cfg = PipelineConfig(input_dir=sf_dir, output_dir=out, write_mode="append")
@@ -177,19 +191,43 @@ def test_legacy_layout_migrates(spark, sf_dir, tmp_path):
     legacy = build_series(spark, cfg, None).drop("year", "month")
     series = os.path.join(out, "series")
     write_partitioned(legacy, series, ["tagpath"])
-    n_legacy = spark.read.parquet(series).count()
-    assert "year=" not in str(sorted(os.listdir(os.path.join(series, os.listdir(series)[0]))))
+    before = _tree(out)
+    for mode in ("append", "overwrite"):
+        with pytest.raises(ValueError, match=re.escape(series)):
+            run_pipeline(spark, replace(cfg, write_mode=mode))
+        assert _tree(out) == before
 
-    r = run_pipeline(spark, cfg)
-    migrated = spark.read.parquet(r["output"])
-    assert {"year", "month"} <= set(migrated.columns)
-    assert migrated.count() == n_legacy  # same inputs → same keys, none lost
-    tag_dir = next(d for d in os.listdir(series) if d.startswith("tagpath="))
-    assert any(d.startswith("year=") for d in os.listdir(os.path.join(series, tag_dir)))
-    # second run is a normal pruned append no-op
-    s1 = _snapshot(spark, r["output"])
-    r2 = run_pipeline(spark, cfg)
-    assert _snapshot(spark, r2["output"]) == s1
+
+def test_overwrite_crash_between_swap_renames_keeps_history(
+    spark, tmp_path, crash_mid_swap
+):
+    """The daily overwrite dies between its two swap renames (series
+    renamed aside, the new state not yet in place) after the source
+    dropped the first day's rows. The retry must restore the history
+    before reading it, so the state ends as R1 ∪ R2 with no '_old'
+    left; rebuilding from the current inputs alone would lose R1."""
+    import datetime as dt
+    import os
+
+    now = dt.datetime(2024, 3, 15)
+    r1 = [(dt.datetime(2024, 3, 1, 8), 1, 1.0), (dt.datetime(2024, 3, 1, 9), 2, 2.0)]
+    r2 = [(dt.datetime(2024, 3, 10, 8), 1, 3.0), (dt.datetime(2024, 3, 10, 9), 2, 4.0)]
+    inp = str(tmp_path / "in")
+    cfg = PipelineConfig(input_dir=inp, output_dir=str(tmp_path / "out"))
+    series = os.path.join(cfg.output_dir, "series")
+    _mk_inputs(spark, inp, r1)
+    run_pipeline(spark, cfg, now=now)
+    _mk_inputs(spark, inp, r2)  # source retention dropped R1
+
+    with crash_mid_swap(), pytest.raises(OSError, match="injected"):
+        run_pipeline(spark, cfg, now=now)
+    assert not os.path.exists(series) and os.path.exists(series + "_old")
+
+    run_pipeline(spark, cfg, now=now)
+    got = spark.read.parquet(series).select("datetime", "sensor_id", "sensor_value")
+    assert sorted(map(tuple, got.collect())) == sorted(r1 + r2)
+    assert not os.path.exists(series + "_old")
+    assert not os.path.exists(series + "_staging")
 
 
 def test_append_keep_max_idempotent(spark, sf_dir, tmp_path):
