@@ -426,11 +426,17 @@ def _stream_warmup(spark) -> None:
     of it. This runs a 3-row windowed-count file stream through a
     memory sink — every piece of shared streaming machinery, zero
     overlap with any head's inputs or intermediates (throwaway
-    parquet, throwaway checkpoint)."""
+    parquet, throwaway checkpoint). It runs through the engine's
+    bounded drain, so a stuck warmup is stopped and fails the rep
+    instead of running on into the timed region."""
     import shutil
     import tempfile
 
     from pyspark.sql import functions as F
+
+    from sensorstream_scalable_sensor_data_pipeline_spark.streaming.pipeline import (
+        drain,
+    )
 
     wdir = tempfile.mkdtemp(prefix="bench_stream_warm_")
     try:
@@ -445,15 +451,13 @@ def _stream_warmup(spark) -> None:
             .groupBy(F.window("ts", "1 second"))
             .count()
         )
-        wq = (
+        drain(
+            spark,
             warm.writeStream.format("memory")
             .queryName("bench_stream_warm")
             .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(wdir, "ckpt"))
-            .start()
+            .option("checkpointLocation", os.path.join(wdir, "ckpt")),
         )
-        wq.awaitTermination(120)
     finally:
         shutil.rmtree(wdir, ignore_errors=True)
 

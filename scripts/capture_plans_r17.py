@@ -58,6 +58,7 @@ def main() -> None:
         funnel as fmod,
     )
     from sensorstream_scalable_sensor_data_pipeline_spark.streaming.pipeline import (
+        file_stream,
         prepare_session,
         stream_events,
     )
@@ -66,7 +67,7 @@ def main() -> None:
     fmod.stream_funnel_head_setup(spark, sf)
     for which in ("before", "after"):
         out = fmod.stream_funnel(
-            fmod._head_stream(spark, sf),
+            file_stream(spark, fmod._head_landing(spark, sf)),
             on="user_id",
             time_col="ts",
             type_col="event_type",

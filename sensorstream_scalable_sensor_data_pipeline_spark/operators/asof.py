@@ -99,6 +99,27 @@ def asof_join(
         )
     r = _dedup_state_rows(right, keys, time_col, value_cols)
     l_cols = [c for c in left.columns]
+    carried = _carry_state(left, r, keys, time_col, F.struct(*value_cols))
+    return carried.select(
+        *l_cols, *[F.col("_state")[c].alias(c) for c in value_cols]
+    )
+
+
+def _carry_state(
+    left: DataFrame,
+    r: DataFrame,
+    keys: list[str],
+    time_col: str,
+    state: F.Column,
+    forward: bool = False,
+) -> DataFrame:
+    """The union + window carry every as-of pass runs: tag ``left``
+    and the per-instant-unique state rows ``r``, null-pad the columns
+    each side lacks, and carry ``last(state, ignorenulls)`` along one
+    window per key, in ascending time (descending when ``forward``)
+    with the state row first at a tie. Returns the left rows with the
+    carried ``_state`` struct attached."""
+    l_cols = list(left.columns)
     # The whole state row travels as ONE struct: non-null on every
     # right row even when its fields are NULL, so last(ignorenulls)
     # attaches the latest state row wholesale — NULL state values are
@@ -108,7 +129,7 @@ def asof_join(
         *[F.col(k) for k in keys],
         F.col(time_col),
         F.lit(1).alias("_is_r"),
-        F.struct(*value_cols).alias("_state"),
+        state.alias("_state"),
     )
     state_type = tagged_r.schema["_state"].dataType
     tagged_l = left.select(
@@ -118,15 +139,14 @@ def asof_join(
         if c not in keys and c != time_col:
             tagged_r = tagged_r.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
     u = tagged_l.unionByName(tagged_r.select(*tagged_l.columns))
+    t = F.col(time_col)
     w = (
         Window.partitionBy(*keys)
-        .orderBy(F.col(time_col).asc(), F.col("_is_r").desc())
+        .orderBy(t.desc() if forward else t.asc(), F.col("_is_r").desc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = u.withColumn("_state", F.last("_state", ignorenulls=True).over(w))
-    return carried.filter(F.col("_is_r") == 0).select(
-        *l_cols, *[F.col("_state")[c].alias(c) for c in value_cols]
-    )
+    return carried.filter(F.col("_is_r") == 0)
 
 
 #: Auto-sizing target: rows in the densest key's densest bucket. Big
@@ -667,37 +687,8 @@ def _ext_pass(
     with the state timestamp inside the struct, left rows returned
     with the carried ``_state`` column still attached."""
     r = _dedup_state_rows(right, keys, time_col, value_cols)
-    l_cols = list(tagged_left.columns)
-    tagged_r = r.select(
-        *[F.col(k) for k in keys],
-        F.col(time_col),
-        F.lit(1).alias("_is_r"),
-        F.struct(
-            F.unix_micros(F.col(time_col)).alias("_sts"), *value_cols
-        ).alias("_state"),
-    )
-    state_type = tagged_r.schema["_state"].dataType
-    tl = tagged_left.select(
-        *l_cols, F.lit(0).alias("_is_r"), F.lit(None).cast(state_type).alias("_state")
-    )
-    for c in l_cols:
-        if c not in keys and c != time_col:
-            tagged_r = tagged_r.withColumn(
-                c, F.lit(None).cast(dict(tagged_left.dtypes)[c])
-            )
-    u = tl.unionByName(tagged_r.select(*tl.columns))
-    order = (
-        [F.col(time_col).desc(), F.col("_is_r").desc()]
-        if forward
-        else [F.col(time_col).asc(), F.col("_is_r").desc()]
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = u.withColumn("_state", F.last("_state", ignorenulls=True).over(w))
-    return carried.filter(F.col("_is_r") == 0)
+    state = F.struct(F.unix_micros(F.col(time_col)).alias("_sts"), *value_cols)
+    return _carry_state(tagged_left, r, keys, time_col, state, forward)
 
 
 def downsample(

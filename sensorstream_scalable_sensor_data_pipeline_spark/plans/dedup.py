@@ -582,62 +582,50 @@ def stream_ingest_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r21 rotation queue, pre-pinned r16) — the registry-shaped form
     of streaming/ingest.py::stream_ingest: materialize the shared
     two-batch delivery as two single-file parquet drops with
-    strictly ordered modification times, drain them through a real
-    checkpointed ``stream_ingest`` query (``maxFilesPerTrigger=1`` →
+    strictly ordered modification times
+    (``streaming/pipeline.py::land_files``), drain them through a real
+    checkpointed ``ingest_writer`` query (``maxFilesPerTrigger=1`` →
     one epoch per file, availableNow termination), and read the
     accepted corpus back. The survivor set must equal the batch
     protocol's — the closed-form min-even-else-min oracle — because
     foreachBatch's stable epoch ids compose with the
     idempotent-by-batch_id commit protocol into exactly-once state.
-
-    File-source ordering contract: FileStreamSource processes files
-    oldest-modification-time first; the two drops get explicit
-    mtimes 200 s apart so epoch 0 is ALWAYS the evens batch (the
+    The pinned mtimes make epoch 0 ALWAYS the evens batch (the
     history-wins side of the oracle)."""
-    import os
     import posixpath
     import shutil
     import tempfile
 
     from sensorstream_scalable_sensor_data_pipeline_spark.streaming.ingest import (
         accepted_corpus,
-        stream_ingest,
+        ingest_writer,
+    )
+    from sensorstream_scalable_sensor_data_pipeline_spark.streaming.pipeline import (
+        drain,
+        file_stream,
+        land_files,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     b1, b2 = _two_batch_delivery(docs)
 
     work = tempfile.mkdtemp(prefix="spark-graft-stream-recovery-")
-    src = posixpath.join(work, "src")
+    state = posixpath.join(work, "state")
     try:
-        # one data file per batch, mtimes strictly ordered
-        for i, frame in enumerate((b1, b2)):
-            d = posixpath.join(work, f"stage{i}")
-            frame.coalesce(1).write.parquet(d)
-            part = next(
-                n for n in os.listdir(d) if n.startswith("part-")
-            )
-            os.makedirs(src, exist_ok=True)
-            dst = posixpath.join(src, f"batch{i}.parquet")
-            os.replace(posixpath.join(d, part), dst)
-            t = 1_000_000_000 + i * 200
-            os.utime(dst, (t, t))
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = stream_ingest(
+        src = land_files([b1, b2], posixpath.join(work, "src"))
+        drain(
             spark,
-            stream,
-            posixpath.join(work, "state"),
-            posixpath.join(work, "ckpt"),
-            run_id="r21",
-            maintain_max_batch_dirs=None,
+            ingest_writer(
+                spark,
+                file_stream(spark, src),
+                state,
+                posixpath.join(work, "ckpt"),
+                run_id="r21",
+                maintain_max_batch_dirs=None,
+            ),
         )
-        q.awaitTermination()
         row = (
-            accepted_corpus(spark, posixpath.join(work, "state"))
+            accepted_corpus(spark, state)
             .agg(
                 F.count(F.lit(1)).alias("n_kept"),
                 F.sum("doc_id").alias("id_sum"),

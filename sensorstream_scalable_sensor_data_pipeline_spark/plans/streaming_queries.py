@@ -27,6 +27,7 @@ from sensorstream_scalable_sensor_data_pipeline_spark.sources.tables import load
 from sensorstream_scalable_sensor_data_pipeline_spark.streaming.pipeline import (
     drain_to_memory,
     drain_to_parquet,
+    read_sink,
     stream_events,
 )
 
@@ -99,7 +100,8 @@ def stream_sensor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet sink → read-back. Dedup includes ``value`` so the kept row
     is well-defined regardless of arrival order (the batch flagship
     instead keeps max-value; both are deterministic policies).
-    Exactly-once via the checkpoint — the streaming form of the
+    The per-batch sink makes the output exactly-once per checkpoint
+    (``streaming/pipeline.py``) — the streaming form of the
     reference's idempotent re-ingest."""
     ev = stream_events(spark, sf_dir)
     dim = load_table(spark, sf_dir, "customer").select(
@@ -114,8 +116,7 @@ def stream_sensor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("sensor_value"),
         F.col("user_id").alias("sensor_id"),
     )
-    out = drain_to_parquet(series)
-    return spark.read.parquet(out)
+    return read_sink(spark, drain_to_parquet(series))
 
 
 @query(
@@ -188,34 +189,11 @@ def stream_asof_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     task #4), taking ``dedup_ngram_blocked``'s slot (that query stays
     locally oracle-pinned in the rotated-slot suite)."""
     from sensorstream_scalable_sensor_data_pipeline_spark.streaming.temporal import (
-        _ASOF_HEAD_FLUSH_ID,
-        land_asof_streams,
-        stream_asof_join,
+        drain_landed_asof,
     )
 
-    r_dir, s_dir = land_asof_streams(spark, sf_dir, state_mod=29)
-
-    def _stream(d: str) -> DataFrame:
-        phys = spark.read.parquet(d).schema
-        return (
-            spark.readStream.schema(phys)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
-
-    joined = stream_asof_join(
-        _stream(r_dir),
-        _stream(s_dir),
-        on="user_id",
-        time_col="ts",
-        id_col="event_id",
-        value_col="calib_value",
-        watermark="1 minute",
-    )
-    return (
-        drain_to_memory(joined, output_mode="append")
-        .filter(F.col("event_id") != _ASOF_HEAD_FLUSH_ID)
-        .select("user_id", "event_id", "ts_us", "calib_value")
+    return drain_landed_asof(spark, sf_dir).select(
+        "user_id", "event_id", "ts_us", "calib_value"
     )
 
 

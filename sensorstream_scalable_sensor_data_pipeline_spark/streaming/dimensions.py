@@ -39,6 +39,7 @@ from sensorstream_scalable_sensor_data_pipeline_spark.sources.merge import (
     scd2_init,
 )
 from sensorstream_scalable_sensor_data_pipeline_spark.sources.writers import staged_swap
+from sensorstream_scalable_sensor_data_pipeline_spark.streaming.pipeline import drain
 
 
 def latest_per_key(
@@ -101,13 +102,14 @@ def stream_scd2_maintain(
     attr_cols: list[str],
     effective_col: str,
     checkpoint: str,
-    await_seconds: int = 300,
 ) -> DataFrame:
     """Drain a bounded change stream into the dimension at
-    ``dim_dir`` (availableNow; production drops the trigger for a
-    continuous feed) and return the resulting dimension. Batches
-    arrive through the checkpointed ``foreachBatch`` sink; every
-    batch is one :func:`apply_scd2_batch`."""
+    ``dim_dir`` and return the resulting dimension (drain contract in
+    ``streaming/pipeline.py``; production drops the trigger for a
+    continuous feed). Batches arrive through the checkpointed
+    ``foreachBatch`` sink; every batch is one :func:`apply_scd2_batch`.
+    A timed-out drain raises and leaves the dimension at its last
+    completed batch."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -116,28 +118,11 @@ def stream_scd2_maintain(
             spark, dim_dir, batch_df, key_cols, attr_cols, effective_col
         )
 
-    _drain(changes, _apply, checkpoint, await_seconds, "scd2")
-    return spark.read.parquet(dim_dir)
-
-
-def _drain(changes: DataFrame, apply_fn, checkpoint: str, await_seconds: int, label: str) -> None:
-    """Shared bounded-drain protocol for the foreachBatch sinks: start,
-    await, and on overrun STOP + RAISE rather than letting the caller
-    read mid-maintenance state (the reviewer-found ignored-timeout
-    class, fixed once here for both sinks)."""
-    q = (
-        changes.writeStream.foreachBatch(apply_fn)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark,
+        changes.writeStream.foreachBatch(_apply).option("checkpointLocation", checkpoint),
     )
-    finished = q.awaitTermination(await_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"{label} drain still running after {await_seconds}s; "
-            "output left consistent at the last completed batch"
-        )
+    return spark.read.parquet(dim_dir)
 
 
 def pruned_table_rows(
@@ -203,7 +188,6 @@ def stream_merge_upsert(
     partition_col: str,
     order_col: str,
     checkpoint: str,
-    await_seconds: int = 300,
     keys_move_partitions: bool = False,
 ) -> DataFrame:
     """The fact-table counterpart of :func:`stream_scd2_maintain`:
@@ -259,5 +243,8 @@ def stream_merge_upsert(
             keys_move_partitions=keys_move_partitions,
         )
 
-    _drain(changes, _apply, checkpoint, await_seconds, "merge-upsert")
+    drain(
+        spark,
+        changes.writeStream.foreachBatch(_apply).option("checkpointLocation", checkpoint),
+    )
     return spark.read.parquet(table_path)

@@ -47,6 +47,12 @@ from sensorstream_scalable_sensor_data_pipeline_spark.sources.writers import (
     bench_cache_dir,
     publish_once,
 )
+from sensorstream_scalable_sensor_data_pipeline_spark.streaming.pipeline import (
+    drain_to_memory,
+    file_stream,
+    land_files,
+    prepare_session,
+)
 
 #: "no chain" sentinel for b_flat slots: Long.MIN_VALUE, unreachable by
 #: any Spark timestamp's epoch-micros (min representable instant is
@@ -229,10 +235,11 @@ def _head_landing(spark, sf_dir: str) -> str:
     rep: ``_HEAD_BATCHES`` interleaved parquet files (split by a row
     hash, so every micro-batch spans the full time range — the
     cross-batch-disorder worst case the operator exists for) plus one
-    far-future flush file."""
+    far-future flush file. ``streaming/pipeline.py::land_files`` pins
+    the delivery order: the flush batch must arrive LAST or its
+    far-future timestamp advances the watermark immediately and every
+    real event is dropped as late."""
     import datetime as _dt
-    import glob
-    import shutil
 
     from sensorstream_scalable_sensor_data_pipeline_spark.sources.tables import (
         load_table,
@@ -252,21 +259,7 @@ def _head_landing(spark, sf_dir: str) -> str:
             ev.filter(F.pmod(F.hash("user_id", "ts"), F.lit(_HEAD_BATCHES)) == i)
             for i in range(_HEAD_BATCHES)
         ] + [flush]
-        for i, df in enumerate(parts):
-            d = os.path.join(stage, f"_w{i}")
-            df.coalesce(1).write.mode("overwrite").parquet(d)
-            src = glob.glob(os.path.join(d, "part-*.parquet"))[0]
-            dst = os.path.join(stage, f"{i:03d}.parquet")
-            shutil.move(src, dst)
-            # FileStreamSource orders files by MODIFICATION TIME, not
-            # name; the flush batch must arrive LAST or its far-future
-            # timestamp advances the watermark immediately and every real
-            # event is dropped as late. Sequential writes happen to give
-            # it the newest mtime, but an mtime tie (coarse filesystem
-            # timestamps) would break that silently — pin the ordering
-            # explicitly instead of relying on write latency.
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-            shutil.rmtree(d)
+        land_files(parts, stage)
 
     out = bench_cache_dir(
         "sfunnel", os.path.abspath(sf_dir), f"b{_HEAD_BATCHES}", _HEAD_LAYOUT_V
@@ -279,17 +272,6 @@ def stream_funnel_head_setup(spark, sf_dir: str) -> None:
     _head_landing(spark, sf_dir)
 
 
-def _head_stream(spark, sf_dir: str):
-    landing = _head_landing(spark, sf_dir)
-    phys = spark.read.option("pathGlobFilter", "*.parquet").parquet(landing).schema
-    return (
-        spark.readStream.schema(phys)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(landing)
-    )
-
-
 def stream_funnel_head(spark, sf_dir: str):
     """Bench head (r11): the streaming funnel's standing perf
     evidence, like the other ``stream_*`` heads. Drains the full
@@ -297,14 +279,9 @@ def stream_funnel_head(spark, sf_dir: str):
     micro-batches + a watermark flush — through the 3-step
     view → click → purchase funnel and summarizes the completed
     chains (count + span stats, so every chain column is consumed)."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.streaming.pipeline import (
-        drain_to_memory,
-        prepare_session,
-    )
-
     prepare_session(spark)
     out = stream_funnel(
-        _head_stream(spark, sf_dir),
+        file_stream(spark, _head_landing(spark, sf_dir)),
         on="user_id",
         time_col="ts",
         type_col="event_type",

@@ -56,25 +56,26 @@ the dedup state made durable and transactional.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
     ingest_batch,
 )
 
 
-def stream_ingest(
+def ingest_writer(
     spark: SparkSession,
     source: DataFrame,
     state_dir: str,
     checkpoint_dir: str,
     run_id: str = "stream",
     ingest_fn=ingest_batch,
-    available_now: bool = True,
     **ingest_kwargs,
-) -> StreamingQuery:
-    """Start a checkpointed streaming dedup-ingest query: every
-    micro-batch runs ``ingest_fn`` with ``batch_id=f"{run_id}-{epoch}"``.
+) -> DataStreamWriter:
+    """The checkpointed streaming dedup-ingest sink, not yet started:
+    every micro-batch runs ``ingest_fn`` with
+    ``batch_id=f"{run_id}-{epoch}"``. Drain it with
+    ``streaming/pipeline.py::drain``.
 
     ``run_id`` namespaces the epoch counter inside the state dir —
     keep it STABLE for the lifetime of one checkpoint (epoch numbers
@@ -82,15 +83,10 @@ def stream_ingest(
     the same state dir needs a new run_id, or epoch 0 would resume
     the OLD epoch 0's committed batch instead of ingesting).
 
-    ``available_now=True`` (default) drains the currently-available
-    input and terminates — the daily-batch shape, and the testable
-    one; pass ``False`` for a continuous query. Returns the started
-    :class:`StreamingQuery`; callers own ``awaitTermination``.
-
     Empty micro-batches are skipped entirely (availableNow commonly
     emits one; an empty ingest would commit an empty state dir per
-    epoch for nothing). Raises ValueError before starting the query
-    when ``state_dir`` was written by the pre-manifest layout."""
+    epoch for nothing). Raises ValueError when ``state_dir`` was
+    written by the pre-manifest layout."""
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
         _register_stream_run,
     )
@@ -111,12 +107,28 @@ def stream_ingest(
             **ingest_kwargs,
         )
 
-    writer = source.writeStream.foreachBatch(_apply).option(
+    return source.writeStream.foreachBatch(_apply).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def stream_ingest(
+    spark: SparkSession,
+    source: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    run_id: str = "stream",
+    ingest_fn=ingest_batch,
+    **ingest_kwargs,
+) -> StreamingQuery:
+    """Start :func:`ingest_writer`'s query with the ``availableNow``
+    trigger (drain the currently-available input, then stop: the
+    daily-batch shape) and return it, for a caller that watches the
+    live query. The caller owns the wait; engine code drains the
+    writer instead."""
+    return ingest_writer(
+        spark, source, state_dir, checkpoint_dir, run_id, ingest_fn, **ingest_kwargs
+    ).trigger(availableNow=True).start()
 
 
 def accepted_corpus(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -9,68 +9,23 @@ errors anywhere. Structured Streaming already publishes the numbers
 watermark per stateful operator, state rows, input rates); this
 module is the thin discipline of capturing and summarizing them.
 
-``drain_with_progress`` is the harness form (bounded availableNow
-drain that keeps the progress history the drain helpers discard);
-``progress_summary`` folds any progress list — from a drain here or
-from a live query's ``recentProgress`` — into the numbers an alert
-fires on. No listener threads, no globals: progress objects are
-plain dicts the query already retains.
+Every drain returns the query's progress history
+(``streaming/pipeline.py::drain``, which also raises Spark's progress
+retention for the drain); ``drain_with_progress`` is its memory-sink
+harness form, re-exported here. ``progress_summary`` folds any
+progress list — from a drain or from a live query's
+``recentProgress`` — into the numbers an alert fires on. No listener
+threads, no globals: progress objects are plain dicts the query
+already retains.
 """
 
 from __future__ import annotations
 
-import itertools
-import json
 from typing import Any
 
-from pyspark.sql import DataFrame
-
-_mem_counter = itertools.count()
-
-
-#: Progress entries retained per query. Spark's default cap is 100 —
-#: a 150-trigger drain would silently lose the first 50 triggers'
-#: late-drop counts from the summary, which defeats the module.
-PROGRESS_RETENTION = 10_000
-
-
-def drain_with_progress(
-    sdf: DataFrame, output_mode: str, await_seconds: int = 300
-) -> tuple[DataFrame, list[dict]]:
-    """drain_to_memory, plus the query's full progress history —
-    (result table, [progress dict per trigger]). Memory-sink harness
-    path, same caveats as streaming/pipeline.py. The progress
-    retention conf is raised for the drain (and restored) so "full"
-    means full up to PROGRESS_RETENTION triggers; a drain exceeding
-    ``await_seconds`` raises rather than returning partial metrics
-    that understate the very losses this module exists to surface."""
-    spark = sdf.sparkSession
-    conf_key = "spark.sql.streaming.numRecentProgressUpdates"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, str(PROGRESS_RETENTION))
-    try:
-        name = f"ss_obs_{next(_mem_counter)}"
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(await_seconds)
-        if not finished:
-            q.stop()
-            raise TimeoutError(
-                f"drain still running after {await_seconds}s; partial "
-                "progress would understate late-drop metrics"
-            )
-        progress = [json.loads(p.json) for p in q.recentProgress]
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
-    return spark.table(name), progress
+from sensorstream_scalable_sensor_data_pipeline_spark.streaming.pipeline import (  # noqa: F401
+    drain_with_progress,
+)
 
 
 def progress_summary(progress: list[dict[str, Any]]) -> dict[str, Any]:

@@ -39,9 +39,9 @@ from sensorstream_scalable_sensor_data_pipeline_spark.sources.merge import (
     merge_upsert,
 )
 from sensorstream_scalable_sensor_data_pipeline_spark.streaming.dimensions import (
-    _drain,
     pruned_table_rows,
 )
+from sensorstream_scalable_sensor_data_pipeline_spark.streaming.pipeline import drain
 
 
 def apply_sketch_batch(
@@ -127,13 +127,12 @@ def stream_sketch_maintain(
     partition_col: str,
     checkpoint: str,
     lgk: int = DEFAULT_LGK,
-    await_seconds: int = 300,
 ) -> DataFrame:
-    """Drain a bounded stream into the sketch table (availableNow;
-    drop the trigger for continuous feeds) and return the resulting
-    table. Downstream, any coarser-grain distinct question reads the
-    table through ``rollup_distinct_sketches`` — never the raw
-    history. (``last_batch_id`` is maintenance metadata; drop it
+    """Drain a bounded stream into the sketch table (drain contract in
+    ``streaming/pipeline.py``; drop the trigger for continuous feeds)
+    and return the resulting table. Downstream, any coarser-grain
+    distinct question reads the table through
+    ``rollup_distinct_sketches`` — never the raw history. (``last_batch_id`` is maintenance metadata; drop it
     before rolling up.)"""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -144,5 +143,8 @@ def stream_sketch_maintain(
             partition_col, batch_id, lgk=lgk,
         )
 
-    _drain(stream, _apply, checkpoint, await_seconds, "sketch-maintain")
+    drain(
+        spark,
+        stream.writeStream.foreachBatch(_apply).option("checkpointLocation", checkpoint),
+    )
     return spark.read.parquet(table_path)

@@ -29,7 +29,8 @@ a bounded join window.
 
 from __future__ import annotations
 
-import tempfile
+import os
+import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +40,17 @@ from sensorstream_scalable_sensor_data_pipeline_spark.functions.identifiers impo
 )
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.asof import asof_join
 from sensorstream_scalable_sensor_data_pipeline_spark.session import prepare_session
+from sensorstream_scalable_sensor_data_pipeline_spark.sources.writers import (
+    bench_cache_dir,
+    publish_once,
+)
+from sensorstream_scalable_sensor_data_pipeline_spark.streaming.pipeline import (
+    drain_to_memory,
+    drain_to_parquet,
+    file_stream,
+    land_files,
+    read_sink,
+)
 
 
 def stream_asof_enrich(
@@ -50,47 +62,28 @@ def stream_asof_enrich(
     value_cols: list[str],
     out_dir: str | None = None,
     checkpoint_dir: str | None = None,
-    await_seconds: int = 300,
 ) -> DataFrame:
     """Drain a bounded reading stream through per-micro-batch as-of
-    enrichment against a static ``state`` table into a checkpointed
-    parquet sink; returns the read-back result.
+    enrichment against a static ``state`` table into the per-batch
+    parquet sink (``streaming/pipeline.py::drain_to_parquet``, which
+    states the drain contract and the replay guarantee); returns the
+    read-back result.
 
     ``stream`` must be a streaming DataFrame carrying ``on``,
     ``time_col`` and any passthrough columns; ``state`` is a batch
     frame with (on, time_col, value_cols). The ``availableNow``
     trigger makes this testable as batch while keeping the exact
     production plan (swap the trigger for continuous ingestion).
-
-    ``foreachBatch`` is at-least-once — a micro-batch can be
-    re-delivered after a failure — so the sink must be idempotent per
-    ``batch_id``: each batch lands in its own ``_batch_id=<id>``
-    partition via DYNAMIC partition overwrite, so a replayed batch
-    replaces its own files instead of appending duplicates (exactly-
-    once output under replay; pinned by re-invoking a batch handler
-    in tests)."""
+    As-of enrichment is per-row, so a replayed batch rewrites the
+    same rows into its own partition."""
     prepare_session(spark)
-    out = out_dir or tempfile.mkdtemp(prefix="asof_stream_out_")
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="asof_stream_ckpt_")
-
-    def _enrich(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            asof_join(batch_df, state, on, time_col, value_cols)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_enrich)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    out = drain_to_parquet(
+        stream,
+        out_dir,
+        checkpoint=checkpoint_dir,
+        per_batch=lambda b: asof_join(b, state, on, time_col, value_cols),
     )
-    q.awaitTermination(await_seconds)
-    return spark.read.parquet(out).drop("_batch_id")
+    return read_sink(spark, out)
 
 
 def stream_latest_state(
@@ -164,7 +157,6 @@ def stream_state_enrich_pipeline(
     time_col: str,
     value_col: str,
     work_dir: str,
-    await_seconds: int = 300,
 ) -> DataFrame:
     """The composed fast-changing-state pipeline the two pieces above
     exist for — state changes arrive as a STREAM (not a static
@@ -173,14 +165,14 @@ def stream_state_enrich_pipeline(
 
     1. *Maintain*: :func:`stream_latest_state` folds the state stream
        into a live latest-per-key table; each micro-batch's emissions
-       land in an idempotent ``_batch_id`` partition of a durable
-       state log (at-least-once replay overwrites, never duplicates).
+       land in the per-batch parquet sink as a durable state log
+       (``streaming/pipeline.py``: replay overwrites, never
+       duplicates).
        Emissions are monotone (late/replayed rows never regress), so
        ``max_by`` over the log IS the maintained table at any moment.
     2. *Enrich*: per reading micro-batch, the BATCH as-of join runs
-       against the maintained table as it stands, into an idempotent
-       partitioned sink (same protocol as
-       :func:`stream_asof_enrich`).
+       against the maintained table as it stands, into the same
+       per-batch sink.
 
     Both queries use ``availableNow`` so the composition is testable
     end-to-end; in production they run concurrently and enrichment
@@ -197,30 +189,13 @@ def stream_state_enrich_pipeline(
     ``value_col`` must not collide with a reading column
     (:func:`~...operators.asof.asof_join` raises).
     """
-    import posixpath
-
     prepare_session(spark)
-    state_log = posixpath.join(work_dir, "state_log")
-    out = posixpath.join(work_dir, "enriched")
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(state_log)
-        )
-
-    live = stream_latest_state(state_stream, on, time_col, value_col)
-    q1 = (
-        live.writeStream.foreachBatch(_upsert)
-        .outputMode("update")
-        .option("checkpointLocation", posixpath.join(work_dir, "ckpt_state"))
-        .trigger(availableNow=True)
-        .start()
+    state_log = drain_to_parquet(
+        stream_latest_state(state_stream, on, time_col, value_col),
+        posixpath.join(work_dir, "state_log"),
+        checkpoint=posixpath.join(work_dir, "ckpt_state"),
+        output_mode="update",
     )
-    q1.awaitTermination(await_seconds)
 
     def _current_state() -> DataFrame:
         log = spark.read.parquet(state_log)
@@ -234,24 +209,13 @@ def stream_state_enrich_pipeline(
             )
         )
 
-    def _enrich(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            asof_join(batch_df, _current_state(), on, time_col, [value_col])
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
-
-    q2 = (
-        reading_stream.writeStream.foreachBatch(_enrich)
-        .option("checkpointLocation", posixpath.join(work_dir, "ckpt_enrich"))
-        .trigger(availableNow=True)
-        .start()
+    out = drain_to_parquet(
+        reading_stream,
+        posixpath.join(work_dir, "enriched"),
+        checkpoint=posixpath.join(work_dir, "ckpt_enrich"),
+        per_batch=lambda b: asof_join(b, _current_state(), on, time_col, [value_col]),
     )
-    q2.awaitTermination(await_seconds)
-    return spark.read.parquet(out).drop("_batch_id")
+    return read_sink(spark, out)
 
 
 def stream_asof_join(
@@ -564,73 +528,80 @@ def stream_interval_join_outer(
 
 # ------------------------------------------------------- bench head
 
-#: Landing dirs built by the untimed setup hook (bench.py runs
-#: ``stream_asof_join_head_setup`` before starting the timer, the
-#: ann_serving fixture discipline): readings and calibration state
-#: each land as (data file, far-future flush file) so the availableNow
-#: drain's final watermark passes every real row.
-_asof_head_dirs: tuple[str, str] | None = None
-
 #: Every 29th event becomes a calibration state change — dense enough
 #: that most keys carry real as-of history at bench scale.
 _ASOF_HEAD_STATE_MOD = 29
 _ASOF_HEAD_FLUSH_ID = 999_999_999
 
-
-def _land_one(df: DataFrame, landing: str, idx: int) -> None:
-    """Write ``df`` as one ordered file in ``landing`` (file order =
-    micro-batch order under maxFilesPerTrigger=1)."""
-    import glob
-    import os
-    import shutil
-
-    stage = tempfile.mkdtemp(prefix="asof_head_stage_")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    os.makedirs(landing, exist_ok=True)
-    src = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-    shutil.copy(src, os.path.join(landing, f"{idx:03d}.parquet"))
-    shutil.rmtree(stage, ignore_errors=True)
+#: Bump when the landing layout changes — the cache key embeds it.
+_ASOF_LAYOUT_V = "v1"
 
 
-def land_asof_streams(
-    spark: SparkSession, sf_dir: str, state_mod: int = _ASOF_HEAD_STATE_MOD
-) -> tuple[str, str]:
-    """Land the full event stream as readings and a 1-in-``state_mod``
+def land_asof_streams(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Land the full event stream as readings and a 1-in-29
     calibration subset as state changes, each followed by a far-future
-    flush row that drives the final watermark past every real event.
-    Returns (readings_dir, state_dir) under a fresh temp root."""
+    flush file that drives the final watermark past every real event.
+    The landing is a keyed cache dir built once
+    (``sources/writers.py::publish_once``), so the bench setup hook,
+    every timed rep and the registry query share it; the key covers
+    the events file's path, size and mtime. Returns
+    (readings_dir, state_dir)."""
     import datetime as dt
-    import os
 
     from sensorstream_scalable_sensor_data_pipeline_spark.sources.tables import (
         load_table,
     )
 
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    state = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") % state_mod == 0)
-        .select("user_id", "ts", F.col("value").alias("calib_value"))
+    def land(stage: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+        state = (
+            load_table(spark, sf_dir, "events")
+            .filter(F.col("event_id") % _ASOF_HEAD_STATE_MOD == 0)
+            .select("user_id", "ts", F.col("value").alias("calib_value"))
+        )
+        far = ev.agg(F.max("ts")).collect()[0][0] + dt.timedelta(days=400)
+        flush_r = spark.createDataFrame(
+            [(_ASOF_HEAD_FLUSH_ID, -1, far)], ev.schema
+        )
+        flush_s = spark.createDataFrame([(-1, far, 0.0)], state.schema)
+        land_files([ev, flush_r], os.path.join(stage, "readings"))
+        land_files([state, flush_s], os.path.join(stage, "state"))
+
+    events = os.path.join(os.path.abspath(sf_dir), "events.parquet")
+    st = os.stat(events)
+    root = publish_once(
+        bench_cache_dir(
+            "asof_streams", events, st.st_size, st.st_mtime_ns,
+            _ASOF_HEAD_STATE_MOD, _ASOF_LAYOUT_V,
+        ),
+        land,
     )
-    far = ev.agg(F.max("ts")).collect()[0][0] + dt.timedelta(days=400)
-    flush_r = spark.createDataFrame(
-        [(_ASOF_HEAD_FLUSH_ID, -1, far)], ev.schema
+    return os.path.join(root, "readings"), os.path.join(root, "state")
+
+
+def drain_landed_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The stream-stream as-of join over the two landed streams
+    (:func:`land_asof_streams`), drained, with the flush reading
+    removed: one (user_id, event_id, ts_us, calib_value) row per
+    event."""
+    r_dir, s_dir = land_asof_streams(spark, sf_dir)
+    joined = stream_asof_join(
+        file_stream(spark, r_dir),
+        file_stream(spark, s_dir),
+        on="user_id",
+        time_col="ts",
+        id_col="event_id",
+        value_col="calib_value",
+        watermark="1 minute",
     )
-    flush_s = spark.createDataFrame([(-1, far, 0.0)], state.schema)
-    root = tempfile.mkdtemp(prefix="asof_head_")
-    r_dir = os.path.join(root, "readings")
-    s_dir = os.path.join(root, "state")
-    _land_one(ev, r_dir, 0)
-    _land_one(flush_r, r_dir, 1)
-    _land_one(state, s_dir, 0)
-    _land_one(flush_s, s_dir, 1)
-    return r_dir, s_dir
+    return drain_to_memory(joined, output_mode="append").filter(
+        F.col("event_id") != _ASOF_HEAD_FLUSH_ID
+    )
 
 
 def stream_asof_join_head_setup(spark: SparkSession, sf_dir: str) -> None:
-    """Untimed fixture for the bench head: one landing per process."""
-    global _asof_head_dirs
-    _asof_head_dirs = land_asof_streams(spark, sf_dir)
+    """Untimed fixture for the bench head: land the two streams."""
+    land_asof_streams(spark, sf_dir)
 
 
 def stream_asof_join_head(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -642,33 +613,7 @@ def stream_asof_join_head(spark: SparkSession, sf_dir: str) -> DataFrame:
     then summarizes so every output column is consumed (bench-head
     doctrine: the aggregate must read the joined values or Catalyst
     prunes the operator from the timed plan)."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.streaming.pipeline import (
-        drain_to_memory,
-    )
-
-    if _asof_head_dirs is None:
-        stream_asof_join_head_setup(spark, sf_dir)
-    r_dir, s_dir = _asof_head_dirs
-
-    def _stream(d: str) -> DataFrame:
-        phys = spark.read.parquet(d).schema
-        return (
-            spark.readStream.schema(phys).option("maxFilesPerTrigger", 1).parquet(d)
-        )
-
-    joined = stream_asof_join(
-        _stream(r_dir),
-        _stream(s_dir),
-        on="user_id",
-        time_col="ts",
-        id_col="event_id",
-        value_col="calib_value",
-        watermark="1 minute",
-    )
-    out = drain_to_memory(joined, output_mode="append").filter(
-        F.col("event_id") != _ASOF_HEAD_FLUSH_ID
-    )
-    return out.agg(
+    return drain_landed_asof(spark, sf_dir).agg(
         F.count(F.lit(1)).alias("n_readings"),
         F.count("calib_value").alias("n_matched"),
         F.avg("calib_value").alias("avg_calib"),

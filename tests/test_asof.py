@@ -1312,13 +1312,18 @@ def test_stream_asof_join_head_matches_batch_summary(spark, sf_dir):
     """The bench head's drained summary must equal the same summary
     computed from the BATCH as-of join over the identical readings /
     calibration split — the head measures cost, this pins that what
-    it measures is the correct join."""
+    it measures is the correct join. The head reads the keyed landing
+    its setup hook built, and does not land it again."""
     import pytest
 
     import sensorstream_scalable_sensor_data_pipeline_spark.streaming.temporal as st
 
-    st._asof_head_dirs = None  # fresh landing dirs for this sf_dir
+    st.stream_asof_join_head_setup(spark, sf_dir)
+    r_dir, s_dir = st.land_asof_streams(spark, sf_dir)
+    landed = {d: os.stat(d).st_mtime_ns for d in (os.path.dirname(r_dir), r_dir, s_dir)}
     got = st.stream_asof_join_head(spark, sf_dir).collect()[0]
+    assert st.land_asof_streams(spark, sf_dir) == (r_dir, s_dir)
+    assert {d: os.stat(d).st_mtime_ns for d in landed} == landed
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     calib = (
         load_table(spark, sf_dir, "events")
