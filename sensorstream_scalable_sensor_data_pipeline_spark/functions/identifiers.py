@@ -6,9 +6,9 @@ need an expression string (SQL-function forms the Column API lacks,
 exact integer ``div`` chains) must backtick-quote any interpolated
 column NAME: unquoted, Spark's parser resolves ``a.b`` as struct
 access and rejects spaces/hyphens outright — the defect class the
-round-6 self-review fixed in stats.py and the r7 verdict flagged in
-anomaly/profile/asof (What's wrong #4). Embedded backticks escape by
-doubling, Spark's own ``quoteIfNeeded`` convention.
+round-6 self-review and the r7 verdict flagged in anomaly and asof
+(What's wrong #4). Embedded backticks escape by doubling, Spark's own
+``quoteIfNeeded`` convention.
 """
 
 from __future__ import annotations

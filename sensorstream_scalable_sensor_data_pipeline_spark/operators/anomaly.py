@@ -15,8 +15,8 @@ three shapes a monitoring deployment bolts on first:
   ``stddev`` OVER would drift by ulps and flip borderline flags).
 * :func:`mad_outliers` — distribution-level robust outliers:
   |x − median| > k·MAD. Median/MAD are exact interpolated
-  percentiles (the operators/profile.py convention, already pinned
-  bit-equal to DuckDB's ``quantile_cont``); two aggregate passes +
+  percentiles (``F.percentile``, bit-equal to DuckDB's
+  ``quantile_cont``); two aggregate passes +
   broadcastable joins, no window at all — the 100 TB path for
   "flag the corrupt readings" batch QC.
 
@@ -123,8 +123,7 @@ def mad_outliers(
 
     Two aggregate passes (median, then MAD on the residuals) + keyed
     joins — no window, no sort of the full data; percentiles are
-    exact interpolation (profile.py convention, DuckDB
-    ``quantile_cont``-equal)."""
+    exact interpolation (DuckDB ``quantile_cont``-equal)."""
     v = F.col(value_col).cast("double")
     med = readings.groupBy(on).agg(
         F.percentile(F.col(value_col), F.lit(0.5)).alias("_med")

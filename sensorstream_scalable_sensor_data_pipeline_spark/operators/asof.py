@@ -40,9 +40,8 @@ carries each bucket's LAST state onto later buckets with a second
 window over the per-bucket summaries (a parallel prefix pass: the
 summary table has one row per (key, bucket), orders smaller). Same
 two-level decomposition :func:`resample_locf` uses for its grid;
-salting (operators/skew.py) does NOT apply — window order within the
-key must survive the split, so the split must follow time, not a
-random salt.
+salting a hot key does NOT apply — window order within the key must
+survive the split, so the split must follow time, not a random salt.
 """
 
 from __future__ import annotations
@@ -164,9 +163,9 @@ def choose_bucket_seconds(
     right: DataFrame | None = None,
 ) -> int:
     """Pick ``bucket_seconds`` for :func:`asof_join_bucketed` from the
-    MEASURED hottest-key density instead of a guess — the skew
-    pre-flight idea of ``operators/skew.py::diagnose_skew`` applied to
-    the window-funnel problem.
+    MEASURED hottest-key density instead of a guess — a skew
+    pre-flight (measure the hot key before sizing) applied to the
+    window-funnel problem.
 
     One distributed aggregate (per-key count + time span), one scalar
     to the driver: the maximum rows-per-second density over keys whose

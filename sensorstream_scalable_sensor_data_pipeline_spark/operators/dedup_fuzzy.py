@@ -629,8 +629,8 @@ def drop_signed_duplicates(
     once instead of OOMing the driver. Below that limit the escape
     costs ~nothing — at sf0.1 with 10 % and 50 % contamination AQE
     re-planned the tiny id side back to a broadcast at runtime
-    (identical survivors, ≤0.4 MB shuffle, wall within ±10 %;
-    ``scripts/decontam_broadcast_rung.py``)."""
+    (identical survivors, ≤0.4 MB shuffle, wall within ±10 %; the
+    measurement is recorded in COVERAGE.md)."""
     with cached(*signatures) if cache else contextlib.nullcontext([]) as counts:
         found = pairs(*signatures, *counts)
         if len(signatures) == 1:

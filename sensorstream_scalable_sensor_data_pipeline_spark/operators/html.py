@@ -109,9 +109,8 @@ def html_to_text(col: Column) -> Column:
     c = F.regexp_replace(c, "[ \\t\\r\\f]+", " ")
     c = F.regexp_replace(c, " ?\\n ?", "\n")
     # adjacent block tags each mint a newline, so runs of newlines
-    # carry no structure — collapse to ONE: line-oriented output is
-    # what the line-level boilerplate stage (operators/text_lines.py)
-    # keys on
+    # carry no structure — collapse to ONE, so the output is one
+    # block per line
     c = F.regexp_replace(c, "\\n{2,}", "\n")
     return F.regexp_replace(c, "^\\s+|\\s+$", "")
 

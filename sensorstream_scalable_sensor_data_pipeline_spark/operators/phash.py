@@ -630,8 +630,8 @@ def decontaminate_images(
     on_error: str = "raise",
 ) -> DataFrame:
     """Drop corpus images within ``max_hamming`` bits of any EVAL-set
-    image — the image twin of the n-gram text decontaminator
-    (operators/decontaminate.py). Returns the clean corpus rows.
+    image — the image twin of :func:`~...audio_fp.decontaminate_audio`.
+    Returns the clean corpus rows.
 
     Recall first: the pigeonhole join is the DELIBERATE default
     (recall 1.0 at the bound; a missed eval twin is a silent benchmark

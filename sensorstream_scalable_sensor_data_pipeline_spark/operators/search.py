@@ -136,10 +136,8 @@ def chunk_documents(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Split documents into overlapping token windows — the
-    RAG-ingestion complement to operators/packing.py (packing
-    concatenates docs into training windows; this fans one doc out
-    into retrieval chunks): (id, chunk_id, chunk_text, n_tokens),
+    """Split documents into overlapping token windows, fanning one
+    doc out into retrieval chunks: (id, chunk_id, chunk_text, n_tokens),
     chunk_id 0-based in document order.
 
     Chunk starts step by ``window_tokens − overlap_tokens``; the last

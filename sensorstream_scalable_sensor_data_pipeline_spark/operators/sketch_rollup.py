@@ -1,6 +1,5 @@
 """Mergeable distinct-count sketch tables — incremental HLL rollups
-(§2.12 extension; the Datasketches-backed production tier of
-operators/sketches.py's teaching-shape HLL).
+(§2.12 extension, backed by Datasketches).
 
 The 100 TB pattern: you cannot afford to re-scan history every time
 someone asks "distinct users this month". Instead, maintain a SKETCH

@@ -197,7 +197,7 @@ def contrastive_logprob_score(
     Positive scores mean "looks more like the target corpus than like
     the average candidate" — the classifier-free form of the GPT-3
     quality-filter idea (a contrast of two LMs), one rung above
-    :func:`plans.text.unigram_logprob_score`'s single-model tier.
+    :func:`~...plans.text.unigram_logprob_score`'s single-model tier.
     Returns (id_col, llr, n_tokens).
 
     Both models smooth over the UNION vocabulary (standard for a
@@ -230,7 +230,7 @@ def contrastive_logprob_score(
     # three scalars come out of one aggregate job and the scoring join
     # reuses the same materialization — the naive form re-executed the
     # corpus explodes ~3× each (review-found; the sibling
-    # unigram_logprob_score's one-collect discipline).
+    # plans.text.unigram_logprob_score's one-collect discipline).
     both = bg_vocab.join(t_vocab, "token", "full_outer").localCheckpoint(
         eager=True
     )

@@ -17,6 +17,7 @@ writer role).
 from __future__ import annotations
 
 import itertools
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -102,7 +103,8 @@ def stream_sensor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead keeps max-value; both are deterministic policies).
     The per-batch sink makes the output exactly-once per checkpoint
     (``streaming/pipeline.py``) — the streaming form of the
-    reference's idempotent re-ingest."""
+    reference's idempotent re-ingest. The sink dir belongs to the call:
+    the small result is materialized before the dir is removed."""
     ev = stream_events(spark, sf_dir)
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("tagpath")
@@ -116,7 +118,10 @@ def stream_sensor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("sensor_value"),
         F.col("user_id").alias("sensor_id"),
     )
-    return read_sink(spark, drain_to_parquet(series))
+    with tempfile.TemporaryDirectory(prefix="ss_sink_") as out:
+        return read_sink(spark, drain_to_parquet(series, out)).localCheckpoint(
+            eager=True
+        )
 
 
 @query(
@@ -205,7 +210,7 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-file streaming source (BASELINE.json north star: "Kafka/IoT
     sources"): the built-in ``rate-micro-batch`` generator plays the
     IoT feed — the same declarative-source treatment a Kafka topic
-    gets via ``sources.readers.kafka_reader`` (no broker in this
+    gets via ``sources.readers.read_kafka_stream`` (no broker in this
     container). Deterministic values (0,1,2,… per batch) make even a
     *generator* stream hash-checkable: cap at value < 500, bucket by
     value div 100, complete-mode aggregate → exactly five buckets of

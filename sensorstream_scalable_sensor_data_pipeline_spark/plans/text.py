@@ -9,7 +9,7 @@ parallel, no shuffles at all. At 100 TB these run at scan speed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.text import (
@@ -328,150 +328,6 @@ def docs_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
     )
-
-
-def prepare_training_windows(
-    spark: SparkSession,
-    sf_dir: str,
-    max_tokens: int = 2048,
-    holdout_per_mille: int = 100,
-    scrub: bool = False,
-) -> DataFrame:
-    """The last mile of the corpus pipeline: curated survivors →
-    packed training windows. Composes :func:`curate_training_corpus`
-    (optional PII scrub → gate → exact dedup → LSH near-dup drop →
-    split; ``scrub=True`` redacts upstream of fingerprinting) with
-    ``pack_fixed_windows`` on the TRAIN split only — holdout documents
-    must never share a packed window with training data, which
-    packing after splitting guarantees by construction.
-
-    Output: one row per training document with its packed placement
-    ``(doc_id, n_tokens, shard, offset, start_window, end_window,
-    n_windows)`` — the manifest a packed-example writer consumes.
-    Plan shape: the curation result is already materialized (tiny);
-    packing adds one hash exchange + one per-shard cumsum window
-    (plan-pinned in tests/test_plans.py)."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.packing import (
-        pack_fixed_windows,
-    )
-
-    curated = curate_training_corpus(
-        spark, sf_dir, holdout_per_mille=holdout_per_mille, scrub=scrub
-    )
-    train = curated.filter(F.col("split") == "train").select("doc_id", "n_tokens")
-    packed = pack_fixed_windows(train, "doc_id", "n_tokens", max_tokens)
-    return train.join(packed, "doc_id").select(
-        "doc_id", "n_tokens", "shard", "offset",
-        "start_window", "end_window", "n_windows",
-    )
-
-
-def audit_split_contamination(
-    spark: SparkSession,
-    sf_dir: str,
-    holdout_per_mille: int = 100,
-    n: int = 8,
-) -> DataFrame:
-    """The decontamination report a training run files next to its
-    eval numbers: run the curation split, then measure every holdout
-    document's token-``n``-gram overlap against the TRAIN side
-    (operators/decontaminate.py). The split already guarantees no
-    shared *document* (hash-disjoint by construction — and near-dups
-    were dropped upstream); this audits the residual risk of shared
-    *content* between distinct surviving documents, which document-
-    level splitting cannot see.
-
-    Returns the per-holdout-doc contamination frame ``(doc_id,
-    n_grams, n_overlap, contamination_frac, contaminated)`` — the
-    artifact to gate an eval release on. Shape: curation (tiny
-    result) → two semi-joins to re-attach text → the gram-set join
-    (keyed on uniform md5 hashes, never all-pairs)."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.decontaminate import (
-        ngram_contamination,
-    )
-
-    assigned = curate_training_corpus(
-        spark, sf_dir, holdout_per_mille=holdout_per_mille
-    )
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    train = docs.join(
-        assigned.filter(F.col("split") == "train").select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
-    holdout = docs.join(
-        assigned.filter(F.col("split") == "holdout").select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
-    return ngram_contamination(train, holdout, n=n)
-
-
-#: DuckDB twin of tokenize_lower (matches tests/test_corpus_quality's
-#: pin), kept local to the decontamination oracle below.
-_TK_SQL = (
-    "string_split_regex(lower(regexp_replace(text, '^\\s+|\\s+$', '', 'g')),"
-    " '\\s+')"
-)
-
-#: decontaminate_text_report's oracle (QUEUED for the r20 registry
-#: rotation — written and locally pinned in r15; the text
-#: decontamination family's first driver slot, completing the
-#: decontamination trio the r17/r18 queue entries start for
-#: audio/video). A FULL value-hash replay of the GPT-3-style strict
-#: n-gram decontamination chain: tokenize → 8-gram md5 hashes →
-#: train-side distinct gram set (even doc_ids) → per-eval-doc
-#: (odd doc_ids) overlap counts, fraction, and flag — any missed
-#: gram, wrong count, or NULL-handling divergence breaks the hash.
-DECONTAMINATE_TEXT_REPORT_ORACLE = f"""
-    WITH d AS (SELECT doc_id, {_TK_SQL} AS tk FROM documents),
-    grams AS (
-      SELECT doc_id,
-             md5(array_to_string(list_slice(tk, i, i + 7), ' ')) AS gh
-      FROM d, unnest(generate_series(1, len(tk) - 7)) AS t(i)
-      WHERE len(tk) >= 8
-    ),
-    tr AS (SELECT DISTINCT gh FROM grams WHERE doc_id % 2 = 0),
-    ev AS (SELECT DISTINCT doc_id, gh FROM grams WHERE doc_id % 2 = 1),
-    hits AS (
-      SELECT ev.doc_id,
-             count(*) AS n_grams,
-             count(tr.gh) AS n_overlap
-      FROM ev LEFT JOIN tr ON ev.gh = tr.gh
-      GROUP BY 1
-    )
-    SELECT d.doc_id,
-           CAST(coalesce(n_grams, 0) AS BIGINT) AS n_grams,
-           CAST(coalesce(n_overlap, 0) AS BIGINT) AS n_overlap,
-           CAST(n_overlap AS DOUBLE) / CAST(nullif(n_grams, 0) AS DOUBLE)
-             AS contamination_frac,
-           coalesce(CAST(n_overlap AS DOUBLE)
-                    / CAST(nullif(n_grams, 0) AS DOUBLE) > 0.0,
-                    false) AS contaminated
-    FROM d LEFT JOIN hits ON d.doc_id = hits.doc_id
-    WHERE d.doc_id % 2 = 1
-    """
-
-
-def decontaminate_text_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry-shaped form of the strict n-gram text decontaminator
-    (r20 rotation queue, pre-pinned r15): even doc_ids play the
-    training corpus, odd doc_ids the eval set, and the full
-    per-eval-document contamination report (distinct 8-gram count,
-    train overlap, fraction, strict flag) hash-matches the
-    closed-replay DuckDB oracle. The family's operator twin has been
-    locally DuckDB-pinned since r10
-    (tests/test_corpus_quality.py::test_ngram_contamination_matches_
-    duckdb); this registers the same chain under the driver's
-    comparison."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.decontaminate import (
-        ngram_contamination,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    train = docs.filter(F.col("doc_id") % 2 == 0)
-    evals = docs.filter(F.col("doc_id") % 2 == 1)
-    return ngram_contamination(train, evals, n=8)
 
 
 def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:

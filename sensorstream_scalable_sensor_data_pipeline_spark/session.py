@@ -83,9 +83,9 @@ RUNTIME_CONFS: dict[str, str] = {
 #: the workers allocate several >128 KB numpy temporaries per payload;
 #: glibc serves those via mmap and returns them via munmap, and 32
 #: concurrent workers unmapping storms the TLB (kernel IPIs) —
-#: measured outside Spark (scripts/audio_warmband_ab.py: 1.38× at 32
-#: procs vs 1, erased exactly by this 128 MB threshold pin; warm
-#: dedup_audio median 9.46 → 4.40 s). These are STATIC confs — they
+#: measured outside Spark (1.38× at 32 procs vs 1, erased exactly by
+#: this 128 MB threshold pin; warm dedup_audio median 9.46 → 4.40 s;
+#: the A/B is recorded in COVERAGE.md). These are STATIC confs — they
 #: cannot be applied to a running session (prepare_session can't help)
 #: — so external session builders should merge this dict into their
 #: own builder confs. glibc-specific; other allocators ignore the

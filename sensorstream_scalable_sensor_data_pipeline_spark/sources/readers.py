@@ -204,8 +204,7 @@ def read_jsonl_docs(
     quarantined corrupt lines — how web-scale text corpora land
     (Common Crawl derivatives, dataset dumps are line-delimited
     JSON). Never ``inferSchema``: inference is a full extra pass and
-    silently retypes columns when a shard lacks a field — the same
-    discipline as the Kafka value parser (streaming/kafka_face.py).
+    silently retypes columns when a shard lacks a field.
 
     PERMISSIVE mode + a corrupt-record column quarantines malformed
     lines instead of failing the 10^5-file job at 99 % — callers

@@ -51,7 +51,6 @@ import itertools
 import json
 import os
 import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -172,7 +171,7 @@ def drain_to_memory(sdf: DataFrame, output_mode: str) -> DataFrame:
 
 def drain_to_parquet(
     sdf: DataFrame,
-    out_dir: str | None = None,
+    out_dir: str,
     checkpoint: str | None = None,
     per_batch: Callable[[DataFrame], DataFrame] | None = None,
     output_mode: str = "append",
@@ -184,8 +183,6 @@ def drain_to_parquet(
     say). The checkpoint defaults to ``<out_dir>/_checkpoint``, which
     parquet reads of ``out_dir`` skip; re-running with the same
     checkpoint resumes after the last committed batch."""
-    out = out_dir or tempfile.mkdtemp(prefix="ss_sink_")
-
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
         if per_batch is not None:
             bdf = per_batch(bdf)
@@ -194,16 +191,16 @@ def drain_to_parquet(
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_batch_id")
-            .parquet(out)
+            .parquet(out_dir)
         )
 
     drain(
         sdf.sparkSession,
         sdf.writeStream.foreachBatch(write_batch)
         .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint or os.path.join(out, "_checkpoint")),
+        .option("checkpointLocation", checkpoint or os.path.join(out_dir, "_checkpoint")),
     )
-    return out
+    return out_dir
 
 
 def read_sink(spark: SparkSession, path: str) -> DataFrame:

@@ -60,7 +60,7 @@ def stream_asof_enrich(
     on: str,
     time_col: str,
     value_cols: list[str],
-    out_dir: str | None = None,
+    out_dir: str,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Drain a bounded reading stream through per-micro-batch as-of

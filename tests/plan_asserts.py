@@ -1,15 +1,12 @@
-"""Plan-shape assertions — the engine's internal test discipline as a
-public API (§2.12 tooling).
+"""Plan-shape assertions for the test suite.
 
 Every scale claim in this repo is backed by a PLAN pin, not a hope:
 no-cartesian for dedup candidate joins, PushedFilters for range
 scans, zero-Exchange for bucketed joins, broadcast for dim enrich.
-Users composing their own pipelines on the engine need the same
-guard rails in their CI — a plan that silently degrades to a
-nested-loop join passes every correctness test and then dies at
-production scale. These helpers raise ``PlanAssertionError`` with
-the offending plan attached, so the failure is diagnosable from the
-CI log alone.
+A plan that silently degrades to a nested-loop join passes every
+correctness test and then dies at production scale. These helpers
+raise ``PlanAssertionError`` with the offending plan attached, so the
+failure is diagnosable from the CI log alone.
 
 All checks read the EXECUTED plan string (post-AQE-prep physical
 plan) — the same artifact ``df.explain("formatted")`` prints, which

@@ -1,4 +1,4 @@
-"""Repetition signals and train/eval decontamination vs DuckDB
+"""Repetition signals and the token-budget sampler vs DuckDB
 oracles (local-oracle: the registry sits at the driver's 50-row cap).
 Every ratio is a single IEEE divide of exact BIGINT counts, so the
 comparison is bit-exact, not tolerance-based."""
@@ -7,9 +7,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sensorstream_scalable_sensor_data_pipeline_spark.operators.decontaminate import (
-    ngram_contamination,
-)
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.repetition import (
     repetition_signals,
 )
@@ -84,46 +81,6 @@ def test_repetition_signals_known_values(spark):
     # 'spam spam' ×3 is the top
     assert r["n_ngrams"] == 7
     assert abs(r["top_ngram_frac"] - 3.0 / 7.0) < 1e-12
-
-
-def test_ngram_contamination_matches_duckdb(spark, duck, sf_dir):
-    """Even/odd doc split of the documents table, n=8 grams: every
-    (distinct-gram, overlap) count replayed in DuckDB."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    train = docs.filter(F.col("doc_id") % 2 == 0)
-    evals = docs.filter(F.col("doc_id") % 2 == 1)
-    got = ngram_contamination(train, evals, n=8)
-    oracle = f"""
-    WITH d AS (SELECT doc_id, {_TK} AS tk FROM documents),
-    grams AS (
-      SELECT doc_id,
-             md5(array_to_string(list_slice(tk, i, i + 7), ' ')) AS gh
-      FROM d, unnest(generate_series(1, len(tk) - 7)) AS t(i)
-      WHERE len(tk) >= 8
-    ),
-    tr AS (SELECT DISTINCT gh FROM grams WHERE doc_id % 2 = 0),
-    ev AS (SELECT DISTINCT doc_id, gh FROM grams WHERE doc_id % 2 = 1),
-    hits AS (
-      SELECT ev.doc_id,
-             count(*) AS n_grams,
-             count(tr.gh) AS n_overlap
-      FROM ev LEFT JOIN tr ON ev.gh = tr.gh
-      GROUP BY 1
-    )
-    SELECT d.doc_id,
-           CAST(coalesce(n_grams, 0) AS BIGINT) AS n_grams,
-           CAST(coalesce(n_overlap, 0) AS BIGINT) AS n_overlap,
-           CAST(n_overlap AS DOUBLE) / CAST(nullif(n_grams, 0) AS DOUBLE)
-             AS contamination_frac,
-           coalesce(CAST(n_overlap AS DOUBLE)
-                    / CAST(nullif(n_grams, 0) AS DOUBLE) > 0.0,
-                    false) AS contaminated
-    FROM d LEFT JOIN hits ON d.doc_id = hits.doc_id
-    WHERE d.doc_id % 2 = 1
-    """
-    assert_frames_match(
-        got.toPandas(), duck.sql(oracle).df(), "ngram_contamination"
-    )
 
 
 def test_sample_to_token_budget(spark, duck, sf_dir):
@@ -215,63 +172,10 @@ def test_curation_repetition_gate(spark, tmp_path):
     assert cm.isEmpty(), "repetition-gated curation leaked persists"
 
 
-def test_audit_split_contamination_runs(spark, sf_dir):
-    """The audit composition: one row per holdout survivor, counts
-    consistent (overlap never exceeds the gram count), and the
-    flagged set equals rows with positive overlap under the strict
-    default."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.plans.text import (
-        audit_split_contamination,
-        curate_training_corpus,
-    )
-
-    report = audit_split_contamination(spark, sf_dir, n=8).collect()
-    n_holdout = (
-        curate_training_corpus(spark, sf_dir)
-        .filter(F.col("split") == "holdout")
-        .count()
-    )
-    assert len(report) == n_holdout
-    for r in report:
-        assert 0 <= r["n_overlap"] <= r["n_grams"]
-        assert r["contaminated"] == (r["n_overlap"] > 0)
-
-
 def test_corpus_quality_plans_have_no_cartesian(spark, sf_dir):
-    """Neither new operator may ever plan an all-pairs join: no
+    """The repetition signals may never plan an all-pairs join: no
     CartesianProduct / BroadcastNestedLoopJoin nodes at any size."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    plans = [
-        repetition_signals(docs)._jdf.queryExecution().executedPlan().toString(),
-        ngram_contamination(
-            docs.filter(F.col("doc_id") % 2 == 0),
-            docs.filter(F.col("doc_id") % 2 == 1),
-        )._jdf.queryExecution().executedPlan().toString(),
-    ]
-    for p in plans:
-        assert "CartesianProduct" not in p
-        assert "BroadcastNestedLoopJoin" not in p
-
-
-def test_ngram_contamination_planted_leak(spark):
-    """A planted 8-gram shared between one train doc and one eval doc
-    must flag exactly that eval doc; a short eval doc (< n tokens)
-    reports zero grams and stays clean."""
-    leak = "alpha beta gamma delta epsilon zeta eta theta"
-    train = spark.createDataFrame(
-        [(1, f"training text begins {leak} and continues onward")],
-        "doc_id long, text string",
-    )
-    evals = spark.createDataFrame(
-        [
-            (10, f"an eval question quoting {leak} verbatim here"),
-            (11, "a fully original evaluation document with unique words"),
-            (12, "too short"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in ngram_contamination(train, evals, n=8).collect()}
-    assert got[10]["contaminated"] and got[10]["n_overlap"] >= 1
-    assert not got[11]["contaminated"] and got[11]["n_overlap"] == 0
-    assert not got[12]["contaminated"] and got[12]["n_grams"] == 0
-    assert got[12]["contamination_frac"] is None
+    p = repetition_signals(docs)._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in p
+    assert "BroadcastNestedLoopJoin" not in p

@@ -177,7 +177,7 @@ def test_fuzzy_state_hits_plan_shape_and_semantics(spark):
     from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_incremental import (
         fuzzy_state_hits,
     )
-    from sensorstream_scalable_sensor_data_pipeline_spark.testing import (
+    from tests.plan_asserts import (
         assert_no_cartesian,
     )
 

@@ -350,24 +350,6 @@ def test_sample_frames_fan_out(spark, sf_dir):
     assert set(by_doc) == {d for d, p in src.items() if len(p) >= _FAKE_FRAME_BYTES}
 
 
-# ------------------------------------------------------------ skew
-
-
-def test_salted_join_matches_plain_join(spark, sf_dir):
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.skew import salted_join
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    dim = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("seg")
-    )
-    plain = ev.join(dim, "user_id").select("event_id", "seg")
-    salted = salted_join(ev, dim, "user_id").select("event_id", "seg")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-    # the join key visible to the shuffle includes the salt
-    plan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "_salt" in plan
-
-
 # ----------------------------------------------- numeric determinism
 
 

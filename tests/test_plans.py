@@ -261,34 +261,6 @@ def test_bucketed_asof_plan_shape(spark, sf_dir):
     assert plan.count("Window") == 2, plan
 
 
-def test_pack_fixed_windows_single_shard_window(spark, sf_dir):
-    """Packing is one hash exchange on the shard + one per-shard
-    window cumsum — the parallel-prefix shape; no global (serial)
-    sort, no join, no cartesian."""
-    from pyspark.sql import functions as F
-
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.packing import (
-        pack_fixed_windows,
-    )
-    from sensorstream_scalable_sensor_data_pipeline_spark.sources.tables import (
-        load_table,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.length("text").alias("nt")
-    )
-    plan = (
-        pack_fixed_windows(docs, "doc_id", "nt", 512)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Window") == 1
-    assert plan.count("Exchange") == 1  # hash by shard, nothing global
-    assert "rangepartitioning" not in plan.lower()  # no global sort
-    assert "Join" not in plan
-
-
 def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
     """Co-bucketed equi-joins must run with ZERO shuffle: the write
     pre-paid it. This is the amortization argument for bucketing a
@@ -349,7 +321,7 @@ def test_python_workers_get_allocator_pins(spark):
     decode/FFT workers' >128 KB numpy temporaries otherwise ride
     mmap/munmap, and 32 concurrent workers unmapping storms the TLB —
     measured 1.38× on the fingerprint loop, erased by this pin
-    (scripts/audio_warmband_ab.py). The session fixture builds
+    (the A/B is recorded in COVERAGE.md). The session fixture builds
     through get_spark, so propagation is asserted on the real
     worker path."""
 

@@ -1,5 +1,4 @@
-"""Exact stratified sampling (operators/sampling.py) and equi-width
-histograms (operators/profile.py) vs DuckDB oracles."""
+"""Exact stratified sampling (operators/sampling.py) vs DuckDB oracles."""
 
 from __future__ import annotations
 
@@ -9,9 +8,6 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from sensorstream_scalable_sensor_data_pipeline_spark.operators.profile import (
-    histogram_fixed,
-)
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.sampling import (
     sample_per_group,
 )
@@ -92,64 +88,6 @@ def test_sample_per_group_salt_decorrelates(spark, sf_dir):
         ).collect()
     }
     assert a != b  # different salts pick different strata
-
-
-# -------------------------------------------------------------- histogram
-
-
-def test_histogram_matches_oracle(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    bins, lo, hi = 16, 0.0, 100.0
-    got = [
-        (r["bin"], r["lo_edge"], r["hi_edge"], r["n"])
-        for r in histogram_fixed(ev, "value", bins, lo, hi).collect()
-    ]
-    w = (hi - lo) / bins
-    want = {
-        int(b): int(n)
-        for b, n in duck(f"""
-            SELECT LEAST(GREATEST(FLOOR((CAST(value AS DOUBLE) - {lo}) / {w}),
-                                  0), {bins - 1}) AS bin,
-                   count(*) AS n
-            FROM read_parquet('{EV}')
-            WHERE value IS NOT NULL GROUP BY 1
-        """)
-    }
-    assert len(got) == bins
-    for b, le, he, n in got:
-        assert le == lo + b * w and he == lo + (b + 1) * w
-        assert n == want.get(b, 0)
-    assert sum(n for _, _, _, n in got) == ev.filter("value IS NOT NULL").count()
-
-
-def test_histogram_auto_bounds_and_edges(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    out = histogram_fixed(ev, "value", 8).collect()
-    vmin, vmax = ev.agg(F.min("value"), F.max("value")).collect()[0]
-    assert out[0]["lo_edge"] == float(vmin)
-    assert out[-1]["hi_edge"] == pytest.approx(float(vmax), rel=1e-12)
-    assert sum(r["n"] for r in out) == ev.filter("value IS NOT NULL").count()
-    # max value folds into the last bin, not past it
-    assert out[-1]["n"] >= 1
-    with pytest.raises(ValueError):
-        histogram_fixed(ev, "value", 0)
-    with pytest.raises(ValueError):
-        histogram_fixed(ev, "value", 4, lo=5.0, hi=5.0)
-
-
-def test_histogram_empty_bins_present(spark):
-    df = spark.createDataFrame([(0.0,), (10.0,)], "x double")
-    out = histogram_fixed(df, "x", 5, 0.0, 10.0).collect()
-    assert [r["n"] for r in out] == [1, 0, 0, 0, 1]
-
-
-def test_histogram_all_null_column_clear_error(spark):
-    df = spark.createDataFrame([(None,), (None,)], "x double")
-    with pytest.raises(ValueError, match="no non-null"):
-        histogram_fixed(df, "x", 4)
-    # explicit bounds still work over an all-NULL column: empty bins
-    out = histogram_fixed(df, "x", 4, 0.0, 1.0).collect()
-    assert [r["n"] for r in out] == [0, 0, 0, 0]
 
 
 # ---------------------------------------------------- weighted sampling

@@ -545,21 +545,6 @@ def test_queued_ingest_incremental_recovery_matches_oracle(spark, duck, sf_dir):
     assert_frames_match(sdf, ddf, "ingest_incremental_recovery")
 
 
-def test_queued_decontaminate_text_report_matches_oracle(spark, duck, sf_dir):
-    """r20 rotation-queue feasibility pin (written r15): the strict
-    n-gram text-decontamination report hash-matches its full-replay
-    DuckDB oracle BEFORE taking a registry slot — even/odd doc split,
-    8-gram md5 hashes, per-eval-doc overlap counts and strict flag."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.plans.text import (
-        DECONTAMINATE_TEXT_REPORT_ORACLE,
-        decontaminate_text_report,
-    )
-
-    sdf = decontaminate_text_report(spark, sf_dir).toPandas()
-    ddf = duck.sql(DECONTAMINATE_TEXT_REPORT_ORACLE).df()
-    assert_frames_match(sdf, ddf, "decontaminate_text_report")
-
-
 def test_queued_stream_ingest_recovery_matches_oracle(spark, duck, sf_dir):
     """r21 rotation-queue feasibility pin (written r16): the
     exactly-once STREAMING dedup ingest hash-matches the batch

@@ -293,60 +293,6 @@ def test_curate_training_corpus_end_to_end(spark, sf_dir):
     }
 
 
-def test_pack_fixed_windows_matches_oracle(spark, duck, sf_dir):
-    """Sequence packing vs DuckDB replaying the identical salted-shard
-    + window-cumsum arithmetic (token count = length(text), exact in
-    both engines)."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.packing import (
-        pack_fixed_windows,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.length("text").alias("n_tokens")
-    )
-    got = pack_fixed_windows(
-        docs, "doc_id", "n_tokens", max_tokens=512, n_shards=8
-    )
-    oracle = """
-    WITH d AS (
-      SELECT doc_id,
-             CAST(concat('0x', substr(md5('pack:' || CAST(doc_id AS VARCHAR)), 1, 7)) AS BIGINT) % 8 AS shard,
-             CAST(length(text) AS BIGINT) AS n
-      FROM documents WHERE length(text) > 0
-    ), o AS (
-      SELECT doc_id, shard, n,
-             COALESCE(SUM(n) OVER (PARTITION BY shard ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS "offset"
-      FROM d
-    )
-    SELECT doc_id, shard,
-           CAST("offset" AS BIGINT) AS "offset",
-           CAST("offset" // 512 AS BIGINT) AS start_window,
-           CAST(("offset" + n - 1) // 512 AS BIGINT) AS end_window,
-           CAST(("offset" + n - 1) // 512 - "offset" // 512 + 1 AS BIGINT)
-             AS n_windows
-    FROM o
-    """
-    assert_frames_match(got.toPandas(), duck.sql(oracle).df(), "pack_fixed_windows")
-    # packing invariants: per shard, offsets are gapless (stream
-    # concatenation) and deterministic under repartitioning
-    rows = got.collect()
-    by_shard: dict = {}
-    for r in rows:
-        by_shard.setdefault(r["shard"], []).append(r)
-    n_by_id = {r["doc_id"]: r for r in rows}
-    for shard, rs in by_shard.items():
-        rs.sort(key=lambda r: r["offset"])
-        assert rs[0]["offset"] == 0
-    again = {
-        (r["doc_id"], r["shard"], r["offset"])
-        for r in pack_fixed_windows(
-            docs.repartition(7), "doc_id", "n_tokens", max_tokens=512, n_shards=8
-        ).collect()
-    }
-    assert again == {(r["doc_id"], r["shard"], r["offset"]) for r in rows}
-
-
 def test_quantize_embedding_roundtrip_and_oracle(spark, duck, sf_dir):
     """SQ8 scalar quantization: codes match a DuckDB replay of the
     same round-half-up arithmetic, reconstruction error is bounded by
@@ -506,39 +452,6 @@ def test_unigram_logprob_matches_duckdb(spark, duck, sf_dir):
     assert all(s < 0 for s, _ in got.values())
 
 
-def test_profile_numeric_matches_duckdb(spark, duck, sf_dir):
-    """One-pass numeric profile vs DuckDB column aggregates with
-    quantile_cont — both interpolate between closest ranks on exactly
-    sorted doubles, so even the quantiles hash-compare."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.profile import (
-        profile_numeric,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    got = profile_numeric(li, ["l_quantity", "l_extendedprice", "l_discount"])
-    def col_sql(c):
-        qs = ", ".join(
-            f"quantile_cont(CAST({c} AS DOUBLE), {q}) AS q{int(q*100):02d}"
-            for q in (0.05, 0.25, 0.5, 0.75, 0.95)
-        )
-        return f"""
-        SELECT '{c}' AS "column",
-               CAST(count({c}) AS DOUBLE) AS n,
-               CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS DOUBLE) AS n_null,
-               CAST(min(CAST({c} AS DOUBLE)) AS DOUBLE) AS min,
-               CAST(max(CAST({c} AS DOUBLE)) AS DOUBLE) AS max,
-               {qs}
-        FROM lineitem
-        """
-    oracle = " UNION ALL ".join(
-        col_sql(c) for c in ("l_quantity", "l_extendedprice", "l_discount")
-    )
-    assert_frames_match(got.toPandas(), duck.sql(oracle).df(), "profile_numeric")
-    # approx path runs and respects bounds (not oracle-exact)
-    ap = profile_numeric(li, ["l_quantity"], approx=True).collect()[0]
-    assert ap["min"] <= ap["q50"] <= ap["max"]
-
-
 def test_incremental_dedup_two_batches_equals_one_shot(spark, sf_dir, tmp_path):
     """Splitting the corpus into two ingest batches must accept the
     same CONTENT set as one-shot exact dedup, history must win across
@@ -579,48 +492,6 @@ def test_incremental_dedup_two_batches_equals_one_shot(spark, sf_dir, tmp_path):
     fp1 = {r["fp"] for r in fingerprint_docs(a1, "doc_id", "text").select("fp").collect()}
     fp2 = {r["fp"] for r in fingerprint_docs(a2, "doc_id", "text").select("fp").collect()}
     assert not (fp1 & fp2)
-
-
-def test_profile_delta_flags_shift_and_null_drift(spark, sf_dir):
-    """The drift alert over two profiles: a shifted column flags with
-    the expected normalized magnitude, an unshifted column stays
-    quiet, injected nulls flag through the null-rate path, and a
-    column missing from one side always flags."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.profile import (
-        profile_delta,
-        profile_numeric,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    before = profile_numeric(li, ["l_quantity", "l_discount", "l_tax"])
-    shifted = li.select(
-        (F.col("l_quantity") + 10).alias("l_quantity"),  # hard shift
-        "l_discount",  # untouched
-        # ~20% nulls, values unchanged where present
-        F.when(F.col("l_orderkey") % 5 != 0, F.col("l_tax")).alias("l_tax"),
-    )
-    after = profile_numeric(shifted, ["l_quantity", "l_discount", "l_tax"])
-    d = {
-        r["column"]: r
-        for r in profile_delta(before, after, drift_threshold=0.2).collect()
-    }
-
-    bq = {r["column"]: r for r in before.collect()}
-    spread = bq["l_quantity"]["q95"] - bq["l_quantity"]["q05"]
-    assert d["l_quantity"]["flagged"]
-    assert abs(d["l_quantity"]["drift"] - 10.0 / spread) < 1e-9
-    assert not d["l_discount"]["flagged"]
-    assert d["l_discount"]["drift"] < 1e-12
-    assert d["l_tax"]["flagged"]  # null-rate path
-    assert d["l_tax"]["null_rate_delta"] > 0.15
-    # schema drift: column only in the before profile
-    d2 = {
-        r["column"]: r
-        for r in profile_delta(
-            before, profile_numeric(shifted, ["l_quantity"])
-        ).collect()
-    }
-    assert d2["l_discount"]["flagged"] and d2["l_discount"]["missing_side"]
 
 
 def test_curation_scrub_repairs_dedup_recall(spark, tmp_path):
@@ -780,46 +651,6 @@ def test_incremental_dedup_crash_consistency(
     ) == [1, 3, 5]
 
 
-def test_sketches_respect_error_bounds(spark, sf_dir):
-    """HLL distinct estimates must land within the advertised relative
-    error of the exact counts; the Count-Min sketch must never
-    underestimate a token's frequency and overestimates must stay
-    within eps*N."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.sketches import (
-        approx_distinct_counts,
-        token_count_min_sketch,
-    )
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.text import (
-        tokenize_lower,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    cols = ["user_id", "event_type"]
-    approx = {
-        r["column"]: r["approx_distinct"]
-        for r in approx_distinct_counts(ev, cols, rsd=0.05).collect()
-    }
-    for c in cols:
-        exact = ev.select(c).distinct().count()
-        assert abs(approx[c] - exact) <= max(2, 4 * 0.05 * exact), (c, approx[c], exact)
-
-    docs = load_table(spark, sf_dir, "documents")
-    cms = token_count_min_sketch(docs, eps=0.001, delta=0.01)
-    tok = docs.select(tokenize_lower(F.col("text")).alias("_tk")).select(
-        F.explode("_tk").alias("token")
-    )
-    counts = {r["token"]: r["cnt"] for r in tok.groupBy("token").agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).orderBy(F.desc("cnt")).limit(30).collect()}
-    n_total = tok.count()
-    for t, exact in counts.items():
-        est = cms.estimate(t)
-        assert est >= exact, (t, est, exact)  # one-sided error
-        assert est <= exact + 0.001 * n_total * 2, (t, est, exact)
-    # an absent token estimates (near-)zero
-    assert cms.estimate("zz-never-a-token-zz") <= 0.001 * n_total * 2
-
-
 def test_scrub_docs_matches_duckdb_and_semantics(spark, duck, sf_dir):
     """Scrubbed text and per-pattern redaction counts vs DuckDB
     replaying the same ordered regexp chain (patterns live in the
@@ -893,83 +724,6 @@ def test_read_jsonl_docs_quarantines_corrupt_lines(spark, tmp_path):
     assert bad.count() == 1
     assert "not json" in bad.collect()[0]["_corrupt_record"]
     df.unpersist()
-
-
-def test_compression_ratio_discriminates_boilerplate(spark, sf_dir):
-    """The zlib quality signal: deterministic across runs, exact byte
-    accounting, and repeated-boilerplate text scores far below natural
-    prose (the failure mode stopword gates and unigram LM scores both
-    miss)."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.compressibility import (
-        compression_ratio,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(50)
-    synth = spark.createDataFrame(
-        [
-            (100001, "click here to win! " * 200),  # boilerplate
-            (100002, ""),  # empty → NULL ratio
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in compression_ratio(docs.unionByName(synth)).collect()
-    }
-    # byte accounting exact; ratios in a sane band for natural text
-    import zlib
-
-    one = next(r for i, r in out.items() if i < 100001 and r["raw_bytes"] > 0)
-    row = docs.filter(F.col("doc_id") == one["doc_id"]).collect()[0]
-    assert one["raw_bytes"] == len(row["text"].encode("utf-8"))
-    assert one["compressed_bytes"] == len(zlib.compress(row["text"].encode(), 6))
-    natural = [
-        r["compression_ratio"]
-        for i, r in out.items()
-        if i < 100001 and r["compression_ratio"] is not None
-    ]
-    assert natural and min(natural) > 0.2
-    assert out[100001]["compression_ratio"] < 0.1  # boilerplate flagged
-    assert out[100002]["compression_ratio"] is None  # empty: no ratio
-    # determinism: a second run returns identical bytes
-    again = {
-        r["doc_id"]: r["compressed_bytes"]
-        for r in compression_ratio(docs.unionByName(synth)).collect()
-    }
-    assert again == {i: r["compressed_bytes"] for i, r in out.items()}
-
-
-def test_prepare_training_windows_end_to_end(spark, sf_dir):
-    """Curated corpus → packed training windows: every train-split
-    survivor gets exactly one placement, holdout documents never
-    appear, per-shard offsets are gapless, and window ids are
-    consistent with offsets and token counts."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.plans.text import (
-        curate_training_corpus,
-        prepare_training_windows,
-    )
-
-    max_tokens = 256
-    out = prepare_training_windows(spark, sf_dir, max_tokens=max_tokens).collect()
-    curated = curate_training_corpus(spark, sf_dir).collect()
-    train_ids = {r["doc_id"] for r in curated if r["split"] == "train"}
-    holdout_ids = {r["doc_id"] for r in curated if r["split"] == "holdout"}
-    got_ids = [r["doc_id"] for r in out]
-    assert sorted(got_ids) == sorted(set(got_ids))  # one placement each
-    assert set(got_ids) == train_ids
-    assert not (set(got_ids) & holdout_ids)
-    by_shard: dict = {}
-    for r in out:
-        by_shard.setdefault(r["shard"], []).append(r)
-    for rs in by_shard.values():
-        rs.sort(key=lambda r: r["offset"])
-        expect = 0
-        for r in rs:
-            assert r["offset"] == expect  # gapless concatenation
-            assert r["start_window"] == r["offset"] // max_tokens
-            assert r["end_window"] == (r["offset"] + r["n_tokens"] - 1) // max_tokens
-            assert r["n_windows"] == r["end_window"] - r["start_window"] + 1
-            expect += r["n_tokens"]
 
 
 def test_rademacher_projection_rejects_length_mismatch(spark):

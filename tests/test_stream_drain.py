@@ -8,14 +8,11 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import tempfile
 
 import pytest
 
 from sensorstream_scalable_sensor_data_pipeline_spark.streaming import pipeline
-from sensorstream_scalable_sensor_data_pipeline_spark.streaming.dimensions import (
-    stream_merge_upsert,
-    stream_scd2_maintain,
-)
 from sensorstream_scalable_sensor_data_pipeline_spark.streaming.observability import (
     drain_with_progress,
 )
@@ -25,9 +22,6 @@ from sensorstream_scalable_sensor_data_pipeline_spark.streaming.pipeline import 
     drain_to_parquet,
     file_stream,
     land_files,
-)
-from sensorstream_scalable_sensor_data_pipeline_spark.streaming.sketches import (
-    stream_sketch_maintain,
 )
 from sensorstream_scalable_sensor_data_pipeline_spark.streaming.temporal import (
     stream_asof_enrich,
@@ -83,18 +77,6 @@ def _entry_points():
             file_stream(s, _landing(s, p, "readings", ["id", "user_id", "ts"])),
             on="user_id", time_col="ts", value_col="v", work_dir=str(p / "work"),
         ),
-        "stream_scd2_maintain": lambda s, p: stream_scd2_maintain(
-            s, file_stream(s, _landing(s, p)), str(p / "dim"), ["id"], ["v"], "ts",
-            checkpoint=ck(p),
-        ),
-        "stream_merge_upsert": lambda s, p: stream_merge_upsert(
-            s, file_stream(s, _landing(s, p)), str(p / "fact"), ["id"], "pc", "seq",
-            checkpoint=ck(p),
-        ),
-        "stream_sketch_maintain": lambda s, p: stream_sketch_maintain(
-            s, file_stream(s, _landing(s, p)), str(p / "sk"), ["pc", "id"], "user_id", "pc",
-            checkpoint=ck(p),
-        ),
     }
 
 
@@ -147,3 +129,20 @@ def test_land_files_pins_delivery_order(spark, tmp_path):
     out = drain_to_parquet(file_stream(spark, landing), str(tmp_path / "out"))
     got = {(r["_batch_id"], r["seq"]) for r in spark.read.parquet(out).collect()}
     assert got == {(0, 0), (1, 1), (2, 2)}
+
+
+def test_stream_sensor_pipeline_leaves_no_sink_dir(spark, sf_dir):
+    """The registry's sink query drains into a dir its call owns and
+    removes: the temp dir lists the same ``ss_sink_*`` entries before
+    and after one call, and the returned frame still reads."""
+    from sensorstream_scalable_sensor_data_pipeline_spark.plans.streaming_queries import (
+        stream_sensor_pipeline,
+    )
+
+    def sinks():
+        return {n for n in os.listdir(tempfile.gettempdir()) if n.startswith("ss_sink_")}
+
+    before = sinks()
+    out = stream_sensor_pipeline(spark, sf_dir)
+    assert sinks() == before
+    assert out.count() > 0

@@ -1,4 +1,4 @@
-"""Public plan assertions (testing.py): each helper passes on a plan
+"""Plan assertions (tests/plan_asserts.py): each helper passes on a plan
 with the property and raises PlanAssertionError on one without."""
 
 from __future__ import annotations
@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from sensorstream_scalable_sensor_data_pipeline_spark.testing import (
+from tests.plan_asserts import (
     PlanAssertionError,
     assert_broadcast_join,
     assert_max_exchanges,
@@ -60,7 +60,7 @@ def test_broadcast_and_codegen(spark, sf_dir):
 
 
 def test_plan_digest(spark, sf_dir):
-    from sensorstream_scalable_sensor_data_pipeline_spark.testing import plan_digest
+    from tests.plan_asserts import plan_digest
 
     sup = load_table(spark, sf_dir, "supplier")
     nat = load_table(spark, sf_dir, "nation")
