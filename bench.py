@@ -578,13 +578,7 @@ def run_one(name: str) -> None:
     # BENCH_r09 is the honest re-baseline (see COVERAGE.md).
     cpu0 = _tree_cpu_seconds()
     df = fn(spark, SF_DIR)
-    if os.environ.get("SPARK_GRAFT_BENCH_MATERIALIZE") == "count":
-        # AUDIT-ONLY mode (scripts/audit_count_collect.py): reproduce
-        # the pre-r9 count() harness so the counted-vs-collected delta
-        # can be measured per head at bench scale. Never the default.
-        rows = df.count()
-    else:
-        rows = len(df.collect())
+    rows = len(df.collect())
     dt = round(time.time() - t0, 3)
     cpu_s = round(_tree_cpu_seconds() - cpu0, 3)
     print(json.dumps({"query": name, "sec": dt, "cpu_s": cpu_s, "rows": rows}))

@@ -590,8 +590,9 @@ def decontaminate_audio(
     probe-vote-verify rule of :func:`audio_candidates_cross` (aligned
     BER ≤ ``ber_max`` after ≥ ``min_probe_frames`` bit-exact probe
     hits at one offset) — the audio twin of
-    phash.decontaminate_images. Returns the clean corpus rows
-    (lifecycle: :func:`~...dedup_fuzzy.drop_signed_duplicates`).
+    :func:`~...video_dedup.decontaminate_videos`. Returns the clean
+    corpus rows (lifecycle:
+    :func:`~...dedup_fuzzy.drop_signed_duplicates`).
 
     Recall first: the ``max_word_df`` hub guard defaults OFF, because
     a dropped probe word can only cost recall (a silent benchmark

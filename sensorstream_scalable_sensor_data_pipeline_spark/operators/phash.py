@@ -392,8 +392,7 @@ def resolve_phash_method(
 ) -> tuple[str, int | None, int | None]:
     """Resolve ``method="auto"`` to a concrete candidate generator
     plus banded knobs: ``(method, bands, bits_per_band)`` — the ONE
-    place the auto doctrine lives, shared by :func:`dedup_phash`,
-    :func:`decontaminate_images`, and
+    place the auto doctrine lives, shared by :func:`dedup_phash` and
     :func:`~...dedup_incremental.ingest_image_batch`'s two joins.
 
     Pigeonhole (recall 1.0) while :func:`pigeonhole_row_estimate`
@@ -618,54 +617,3 @@ def dedup_phash(
         while_cached=quarantined if return_quarantined else None,
     )
 
-
-def decontaminate_images(
-    corpus: DataFrame,
-    eval_images: DataFrame,
-    id_col: str = "doc_id",
-    binary_col: str = "payload",
-    max_hamming: int = 8,
-    method: str = "pigeonhole",
-    broadcast_ids: bool = True,
-    on_error: str = "raise",
-) -> DataFrame:
-    """Drop corpus images within ``max_hamming`` bits of any EVAL-set
-    image — the image twin of :func:`~...audio_fp.decontaminate_audio`.
-    Returns the clean corpus rows.
-
-    Recall first: the pigeonhole join is the DELIBERATE default
-    (recall 1.0 at the bound; a missed eval twin is a silent benchmark
-    leak), and ``"auto"`` means pigeonhole here. Its cost is BILINEAR
-    in the small eval side (n_corpus × n_eval × (b+1) / 2^w), not the
-    corpus-squared wall that dedup's auto guards against. Pass
-    ``method="banded"`` for an eval set so large the bilinear term is
-    unpayable, accepting ~0.95 recall at the bound.
-
-    ``on_error`` quarantines CORPUS payloads only: a quarantined eval
-    image would match nothing, and every corpus near-duplicate of it
-    would silently leak. Eval sets are small and curated, so a corrupt
-    one raises. The hash tables are not cached: each feeds one join."""
-    _check_image_knobs(method, max_hamming)
-
-    def pairs(c_hash: DataFrame, e_hash: DataFrame) -> DataFrame:
-        if method != "banded":
-            return blocked_hamming_matches(
-                c_hash, e_hash, max_hamming, broadcast_b=True
-            )
-        # size from BOTH sides (the candidate row term is bilinear) and
-        # count the RAW inputs: counting the hash frames would run the
-        # decode scan once for the count and again for the join
-        n_corpus, n_eval = corpus.count(), eval_images.count()
-        bands, bits = auto_banded_params(n_eval, max_hamming, n_b=n_corpus)
-        return banded_hamming_matches(
-            c_hash, e_hash, max_hamming, bands=bands, bits_per_band=bits
-        )
-
-    return drop_signed_duplicates(
-        corpus, id_col,
-        [with_phash(corpus, id_col, binary_col, on_error=on_error),
-         with_phash(eval_images, id_col, binary_col)],
-        pairs,
-        broadcast_ids=broadcast_ids,
-        cache=False,
-    )

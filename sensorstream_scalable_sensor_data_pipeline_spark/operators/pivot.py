@@ -38,9 +38,3 @@ def pivot_wide(
     """W1: tall (time, key, value) → wide (time, <key1>, <key2>, ...)."""
     p = df.groupBy(time_col).pivot(key_col, values) if values else df.groupBy(time_col).pivot(key_col)
     return p.agg(agg)
-
-
-def distinct_keys(df: DataFrame, key_col: str) -> list[str]:
-    """A2 helper: enumerate pivot keys when the caller cannot supply
-    them. One distinct scan; cache the result if pivoting repeatedly."""
-    return [r[0] for r in df.select(key_col).distinct().collect()]

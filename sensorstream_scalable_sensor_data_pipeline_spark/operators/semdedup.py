@@ -27,9 +27,9 @@ Scale shape (100 TB honest accounting):
   window.
 * pruning — exact grid cosine (functions/vectors.py) on candidate
   pairs only; norms precomputed once per ROW, not once per pair.
-* resolution — the pairs feed the same transitive-closure machinery
-  every other dedup family uses (dedup_fuzzy.py::dup_components), so
-  chains (a~b, b~c) collapse to ONE survivor.
+* resolution — the pairs are (id_a, id_b) edges, the shape the
+  transitive-closure machinery every other dedup family uses
+  (dedup_fuzzy.py::dup_components) consumes.
 
 Unlike MinHash/SimHash (which bound *recall* combinatorially), the
 cluster block is heuristic: a near-dup pair straddling a cluster
@@ -63,19 +63,16 @@ def assign_clusters(
     k: int,
     sample_per_mille: int | None = None,
     probes: int = 1,
-    with_dist: bool = False,
 ) -> DataFrame:
     """Train the coarse quantizer and assign every vector to its
-    ``probes`` nearest centroids: (vec_id, j[, probe_rank][, dist]).
+    ``probes`` nearest centroids: (vec_id, j[, probe_rank]).
 
     One trained-centroid broadcast + one min_by (or bounded top-p)
     partial aggregate — the same argmin shape as the IVF build, tie
     on distance → smaller j, so assignment is engine-deterministic.
     ``sample_per_mille`` trains on the deterministic hash-bucket
     sample when a full training pass is too much (ivf_train's sampled
-    seeding path). ``with_dist`` (single-probe only) also returns the
-    grid-L2 distance to the assigned centroid — what the
-    centroid-distance keep policies rank on."""
+    seeding path)."""
     from sensorstream_scalable_sensor_data_pipeline_spark.plans.similarity import (
         _grid_l2,
         ivf_train,
@@ -83,8 +80,6 @@ def assign_clusters(
 
     if probes < 1:
         raise ValueError("probes must be >= 1")
-    if with_dist and probes != 1:
-        raise ValueError("with_dist supports only probes=1")
     from sensorstream_scalable_sensor_data_pipeline_spark.functions.localframe import (
         tiny_local_frame,
     )
@@ -105,10 +100,7 @@ def assign_clusters(
         best = d.groupBy("vec_id").agg(
             F.min(F.struct("dist", "j")).alias("_b")
         )
-        cols = ["vec_id", F.col("_b.j").alias("j")]
-        if with_dist:
-            cols.append(F.col("_b.dist").alias("dist"))
-        return best.select(*cols)
+        return best.select("vec_id", F.col("_b.j").alias("j"))
     # Bounded top-p per vector WITHOUT a row_number window over the
     # ×k fan-out: collect the k (dist, j) pairs map-side via a partial
     # aggregate, sort the k-element array, slice p. k is the (small)
@@ -130,7 +122,6 @@ def semdedup_pairs(
     tau: float = SEMDEDUP_TAU,
     sample_per_mille: int | None = None,
     probes: int = 1,
-    assigned: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs by learned-cluster blocking:
     (id_a, id_b, cosine) with id_a < id_b and cosine ≥ ``tau``, both
@@ -140,15 +131,10 @@ def semdedup_pairs(
     ``emb`` must carry (vec_id, embedding). Cosines are exact grid
     arithmetic (functions/vectors.py), so the τ-cut — and therefore
     the pair set — is identical across partitionings and engines.
-    ``assigned`` (vec_id, j) reuses a precomputed assignment —
-    :func:`semantic_dedup`'s centroid policies pass theirs so the
-    quantizer trains ONCE, not once per consumer.
     """
-    if assigned is None:
-        assigned = assign_clusters(
-            spark, emb, k, sample_per_mille=sample_per_mille, probes=probes
-        )
-    assigned = assigned.select("vec_id", "j")
+    assigned = assign_clusters(
+        spark, emb, k, sample_per_mille=sample_per_mille, probes=probes
+    ).select("vec_id", "j")
     # Norms once per row; cached so training's lineage and the norm
     # pass run once, not once per self-join side.
     side = assigned.join(emb.select("vec_id", "embedding"), "vec_id").select(
@@ -192,87 +178,3 @@ def semdedup_pairs(
 
     return cached_result(cosine_pairs, side)
 
-
-#: Survivor policies for :func:`semantic_dedup`. ``min_id`` keeps the
-#: smallest id (the cheap canonical choice every other dedup family
-#: uses); ``centroid_far`` keeps the member FARTHEST from its cluster
-#: centroid — the published SemDeDup choice (edge examples carry more
-#: signal than prototypical ones); ``centroid_near`` keeps the most
-#: prototypical member (the summarization-flavored inverse).
-KEEP_POLICIES = ("min_id", "centroid_far", "centroid_near")
-
-
-def semantic_dedup(
-    spark: SparkSession,
-    docs: DataFrame,
-    emb: DataFrame,
-    k: int,
-    id_col: str = "doc_id",
-    tau: float = SEMDEDUP_TAU,
-    sample_per_mille: int | None = None,
-    probes: int = 1,
-    keep: str = "min_id",
-) -> DataFrame:
-    """End-to-end semantic dedup: keep ONE document per
-    semantic-duplicate cluster, chosen by ``keep`` (KEEP_POLICIES).
-    ``emb.vec_id`` must equal ``docs[id_col]``. Pairs → transitive
-    closure → survivor pick → anti-join; chained near-dups collapse
-    to one survivor and non-duplicates pass through untouched.
-
-    The centroid policies rank members by their grid-L2 distance to
-    the assigned centroid (ties → the id completes a total order), at
-    the cost of ONE extra keyed aggregate over the components — the
-    assignment (with distances) is computed ONCE, persisted, and
-    shared by the pair stage and the survivor pick (training twice
-    was the dominant cost of the centroid path; review-found).
-    ``probes`` > 1 is min_id-only (a multi-probed doc has several
-    centroid distances; the policy would be ambiguous)."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.dedup_fuzzy import (
-        drop_near_duplicates,
-        dup_components,
-    )
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.enrich import (
-        anti_filter,
-    )
-
-    if keep not in KEEP_POLICIES:
-        raise ValueError(f"keep must be one of {KEEP_POLICIES}, got {keep!r}")
-    if keep != "min_id" and probes != 1:
-        raise ValueError("centroid keep policies support only probes=1")
-    if keep == "min_id":
-        pairs = semdedup_pairs(
-            spark, emb, k, tau=tau,
-            sample_per_mille=sample_per_mille, probes=probes,
-        )
-        return drop_near_duplicates(docs, pairs, id_col=id_col)
-
-    def keep_one(assigned: DataFrame) -> DataFrame:
-        pairs = semdedup_pairs(
-            spark, emb, k, tau=tau,
-            sample_per_mille=sample_per_mille, assigned=assigned,
-        )
-        comp = dup_components(pairs)
-        ranked = comp.join(
-            assigned.select(F.col("vec_id").alias("doc_id"), "dist"), "doc_id"
-        )
-        pick = F.struct(F.col("dist"), F.col("doc_id"))
-        agg = (
-            F.max_by("doc_id", pick)
-            if keep == "centroid_far"
-            else F.min_by("doc_id", pick)
-        )
-        survivors = ranked.groupBy("rep").agg(agg.alias("keep_id"))
-        losers = (
-            comp.join(survivors, "rep")
-            .filter(F.col("doc_id") != F.col("keep_id"))
-            .select(F.col("doc_id").alias(id_col))
-        )
-        return anti_filter(docs, losers, id_col, broadcast_keys=False)
-
-    # the assignment feeds semdedup_pairs' side build AND the ranked join
-    return cached_result(
-        keep_one,
-        assign_clusters(
-            spark, emb, k, sample_per_mille=sample_per_mille, with_dist=True
-        ),
-    )

@@ -146,7 +146,7 @@ ROLLING_MOD = 2_147_483_647
 def rolling_hash(toks: Column) -> Column:
     """Polynomial (Rabin-Karp) rolling hash over a token array:
     ``h = fold(h·B + md5_28(tok) mod P)``. ORDER-SENSITIVE — unlike
-    the min-token MinHash, reordering tokens changes the value, which
+    a min-token MinHash, reordering tokens changes the value, which
     is what makes it a sequence fingerprint rather than a set sketch.
     ``toks`` must be a materialized attribute (stage the tokenizer
     first — module docstring cliffs). DuckDB twin: ``list_reduce``
@@ -160,18 +160,6 @@ def rolling_hash(toks: Column) -> Column:
         hashed,
         F.lit(0).cast("long"),
         lambda acc, h: (acc * F.lit(ROLLING_BASE) + h) % F.lit(ROLLING_MOD),
-    )
-
-
-def doc_fingerprint(text: Column) -> Column:
-    """Content fingerprints: md5 of whitespace-normalized lowercase
-    text (exact-dup key) + min token md5 (a 1-permutation MinHash —
-    the primitive operators/dedup_fuzzy.py generalizes to k perms)."""
-    norm = F.regexp_replace(F.regexp_replace(F.lower(text), r"\s+", " "), r"^ | $", "")
-    toks = tokenize_lower(text)
-    return F.struct(
-        F.md5(norm).alias("norm_md5"),
-        F.array_min(F.transform(toks, F.md5)).alias("min_token_md5"),
     )
 
 

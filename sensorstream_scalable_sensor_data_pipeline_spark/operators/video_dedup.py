@@ -263,8 +263,8 @@ def decontaminate_videos(
 ) -> DataFrame:
     """Drop corpus clips that match any EVAL-set clip under
     :func:`video_candidates_cross` — the video twin of
-    phash.decontaminate_images. Returns the clean corpus rows
-    (lifecycle: :func:`~...dedup_fuzzy.drop_signed_duplicates`).
+    :func:`~...audio_fp.decontaminate_audio`. Returns the clean corpus
+    rows (lifecycle: :func:`~...dedup_fuzzy.drop_signed_duplicates`).
 
     Recall first: ``max_hamming`` defaults to 2 HERE, unlike the
     dedup path's 0, because exact-value frame matching is measured

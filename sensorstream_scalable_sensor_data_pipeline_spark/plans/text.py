@@ -279,7 +279,7 @@ def docs_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the order you want at 100 TB.
 
     The stages share ONE staged token array rather than composing
-    quality_score/language_id/doc_fingerprint directly: each of those
+    quality_score/language_id/a content fingerprint directly: each of those
     re-tokenizes, and the resulting expression tree (3 regex splits ×
     nested lambda filters) overwhelms codegen — measured 6.8 s cold
     and *degrading* to 42 s on re-run in one JVM, vs 5.1 s cold /

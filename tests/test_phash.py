@@ -321,35 +321,6 @@ def test_curate_image_corpus_composition(spark):
     assert splits == again  # content-keyed: reproducible end-to-end
 
 
-def test_decontaminate_images(spark):
-    """Image decontamination: corpus images that are re-encodes /
-    rescales of EVAL images drop (recall-guaranteed blocking — a
-    missed eval twin is a silent benchmark leak); everything else
-    survives untouched."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.phash import (
-        decontaminate_images,
-    )
-
-    eval_imgs = spark.createDataFrame(
-        [(100, encode_png(make_img(1))), (101, encode_png(make_img(11)))],
-        "doc_id long, payload binary",
-    )
-    corpus = spark.createDataFrame(
-        [
-            (0, encode_jpeg(make_img(1), quality=85, subsampling="420")),  # eval twin
-            (1, encode_png(resize_nearest(make_img(11), 72, 96))),         # eval twin
-            (2, encode_bmp(make_img(31))),                                  # clean
-            (3, encode_png(make_img(41))),                                  # clean
-        ],
-        "doc_id long, payload binary",
-    )
-    kept = sorted(
-        r["doc_id"]
-        for r in decontaminate_images(corpus, eval_imgs).collect()
-    )
-    assert kept == [2, 3]
-
-
 # ------------------- method="auto" (r12: self-executing scale doctrine)
 
 
@@ -661,65 +632,3 @@ def test_banded_hamming_matches_validates_bits_per_band(spark):
     for bad in (0, 63, 65):
         with pytest.raises(ValueError, match=r"\[1, 62\]"):
             banded_hamming_matches(df, df, 4, bits_per_band=bad)
-
-
-def test_decontaminate_images_plan_broadcasts_id_antijoin(spark):
-    """Image twin of the r13 anti-join fix pin (see the audio/video
-    tests): the contaminated-ID set broadcasts so corpus payloads
-    never ride an exchange."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.phash import (
-        decontaminate_images,
-    )
-
-    corpus = spark.createDataFrame(
-        [(i, encode_png(make_img(40 + i))) for i in range(3)],
-        "doc_id long, payload binary",
-    )
-    ev = spark.createDataFrame(
-        [(100, encode_png(make_img(40)))], "doc_id long, payload binary"
-    )
-    plan = (
-        decontaminate_images(corpus, ev)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "LeftAnti, BuildRight" in plan
-    left_anti_pos = plan.index("LeftAnti")
-    assert "hashpartitioning(doc_id" not in plan[left_anti_pos:].split(
-        "BroadcastExchange", 1
-    )[0]
-
-
-def test_decontaminate_images_broadcast_ids_escape(spark):
-    """``broadcast_ids=False`` (r14, r13 ADVICE): the escape for
-    contamination so extreme the ID set outgrows the broadcast limit
-    — the anti-join is no longer FORCED broadcast (the planner may
-    still pick one for a tiny set; the pin is that the plan carries
-    no BroadcastExchange hint-forced when AQE would shuffle) and the
-    survivor set is identical."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.phash import (
-        decontaminate_images,
-    )
-
-    corpus = spark.createDataFrame(
-        [(i, encode_png(make_img(40 + i))) for i in range(3)],
-        "doc_id long, payload binary",
-    )
-    ev = spark.createDataFrame(
-        [(100, encode_png(make_img(40)))], "doc_id long, payload binary"
-    )
-    forced = decontaminate_images(corpus, ev)
-    plain = decontaminate_images(corpus, ev, broadcast_ids=False)
-    assert {r["doc_id"] for r in plain.collect()} == {
-        r["doc_id"] for r in forced.collect()
-    } == {1, 2}
-    # the blocked-match internals legitimately broadcast the tiny
-    # eval-side hash table on BOTH paths; the escape removes exactly
-    # ONE hint — the anti-join's forced contaminated-ID broadcast —
-    # giving the planner freedom where the set could be corpus-sized
-    n_hints_plain = plain._jdf.queryExecution().analyzed().toString().count(
-        "ResolvedHint"
-    )
-    n_hints_forced = forced._jdf.queryExecution().analyzed().toString().count(
-        "ResolvedHint"
-    )
-    assert n_hints_forced == n_hints_plain + 1

@@ -31,7 +31,6 @@ from sensorstream_scalable_sensor_data_pipeline_spark.operators.multimodal impor
     extract_features,
 )
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.phash import (
-    decontaminate_images,
     dedup_phash,
     synth_image,
     with_phash,
@@ -340,36 +339,34 @@ def test_ingest_audio_batch_quarantine(spark, tmp_path):
 
 def test_decontaminate_eval_side_always_raises(spark):
     """Review-found r14: a quarantined EVAL payload would silently
-    disable its own decontamination protection (NULL hash matches
+    disable its own decontamination protection (NULL signature matches
     nothing -> every corpus near-dup of it LEAKS, with no recoverable
     signal). Quarantine therefore applies to the corpus side only —
-    a corrupt eval payload raises even under on_error='quarantine'."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.phash import (
-        decontaminate_images,
-    )
-
-    corpus = _images(spark, True)  # corrupt CORPUS rows: fine
-    ev_bad = spark.createDataFrame(
-        [(500, encode_png(synth_image(0, h=48, w=48))), (501, CORRUPT_PNG)],
-        "doc_id long, payload binary",
-    )
-    with pytest.raises(Exception):
-        decontaminate_images(
-            corpus, ev_bad, on_error="quarantine"
-        ).collect()
-    # corpus-side corruption quarantines; clean eval still protects
-    ev = spark.createDataFrame(
-        [(500, encode_png(synth_image(0, h=48, w=48)))],
-        "doc_id long, payload binary",
-    )
-    kept = {
-        r["doc_id"]
-        for r in decontaminate_images(
-            corpus, ev, on_error="quarantine"
-        ).collect()
-    }
-    # 0 and its re-encode 100 are contaminated; corrupt rows survive
-    assert kept == {1, 2, 900, 901}
+    a corrupt eval payload raises even under on_error='quarantine',
+    for audio and video alike."""
+    for decontaminate, rows, kw in (
+        (decontaminate_audio, _clips, {}),
+        (decontaminate_videos, _vids, {"every_n": 1}),
+    ):
+        corpus = rows(spark, True)  # corrupt CORPUS rows: fine
+        # eval copies of corpus item 0 (and of corrupt 900), keyed apart
+        ev_bad = corpus.filter("doc_id IN (0, 900)").selectExpr(
+            "doc_id + 500 AS doc_id", "payload"
+        )
+        with pytest.raises(Exception):
+            decontaminate(corpus, ev_bad, on_error="quarantine", **kw).collect()
+        # corpus-side corruption quarantines; clean eval still protects
+        ev = corpus.filter("doc_id = 0").selectExpr(
+            "doc_id + 500 AS doc_id", "payload"
+        )
+        kept = {
+            r["doc_id"]
+            for r in decontaminate(
+                corpus, ev, on_error="quarantine", **kw
+            ).collect()
+        }
+        # 0 and its re-encode 100 are contaminated; corrupt rows survive
+        assert kept == {1, 2, 900, 901}, decontaminate.__name__
 
 
 def test_quarantine_contract_excludes_runtime_failures():
@@ -447,7 +444,6 @@ def _job_group(spark):
 
 def _eval_rows(spark, kind):
     payload = {
-        "images": encode_png(synth_image(1, h=48, w=48)),
         "clips": encode_wav(synth_clip(51), RATE),
         "vids": encode_avi(
             np.stack([synth_image(10 + i, h=16, w=16) for i in range(4)]),
@@ -464,13 +460,6 @@ _BAD_KNOBS = [
             on_error="quarantine",
         ),
         "max_hamming", id="dedup_phash",
-    ),
-    pytest.param(
-        lambda s: decontaminate_images(
-            _images(s, True), _eval_rows(s, "images"), max_hamming=64,
-            on_error="quarantine",
-        ),
-        "max_hamming", id="decontaminate_images",
     ),
     pytest.param(
         lambda s: dedup_audio(
@@ -517,19 +506,14 @@ def test_invalid_knob_rejected_before_any_decode(spark, call, knob):
 def test_max_hamming_zero_matches_exact_hashes_on_every_route(spark):
     """``max_hamming=0`` passes the knob check, and both candidate
     routes then match exact hashes only: the lossless re-encode 100
-    collapses into 0 and the eval image's twin 1 is dropped, while the
-    quarantined rows survive. (``"auto"`` resolves to one of the two.)"""
+    collapses into 0, while the quarantined rows survive. (``"auto"``
+    resolves to one of the two.)"""
     for method in ("pigeonhole", "banded"):
         surv = dedup_phash(
             _images(spark, True), "doc_id", "payload", max_hamming=0,
             method=method, on_error="quarantine",
         )
         assert {r["doc_id"] for r in surv.collect()} == {0, 1, 2, 900, 901}, method
-    clean = decontaminate_images(
-        _images(spark, True), _eval_rows(spark, "images"), max_hamming=0,
-        on_error="quarantine",
-    )
-    assert {r["doc_id"] for r in clean.collect()} == {0, 2, 100, 900, 901}
 
 
 @pytest.mark.parametrize(
@@ -561,7 +545,6 @@ def test_decontaminate_releases_cache_on_corrupt_corpus(spark, call):
 @pytest.mark.parametrize(
     "decontaminate, corpus, kind, kw",
     [
-        pytest.param(decontaminate_images, _images, "images", {}, id="images"),
         pytest.param(decontaminate_audio, _clips, "clips", {}, id="audio"),
         pytest.param(
             decontaminate_videos, _vids, "vids", {"every_n": 1}, id="videos"

@@ -1,8 +1,8 @@
-"""SemDeDup (operators/semdedup.py): cluster-then-prune semantic
-dedup, pinned against an INDEPENDENT numpy re-implementation of the
+"""SemDeDup pairs (operators/semdedup.py): learned-cluster candidate
+pairs, pinned against an INDEPENDENT numpy re-implementation of the
 whole train → assign → pair → threshold chain (same grid arithmetic,
 no Spark evaluation anywhere in the oracle), plus the planted-dup /
-transitive-chain / repartition-stability properties."""
+repartition-stability / multi-probe properties."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.semdedup import (
     assign_clusters,
-    semantic_dedup,
     semdedup_pairs,
 )
 
@@ -151,97 +150,6 @@ def test_pairs_match_numpy_oracle(spark, corpus):
 def test_pairs_stable_under_repartition(spark, corpus):
     path, _ = corpus
     assert spark_pairs(spark, path) == spark_pairs(spark, path, repartition=7)
-
-
-def test_semantic_dedup_keeps_min_id_rep(spark, corpus):
-    path, allv = corpus
-    emb = spark.read.parquet(path)
-    docs = emb.select(F.col("vec_id").alias("doc_id"))
-    kept = {
-        r["doc_id"]
-        for r in semantic_dedup(spark, docs, emb, K, tau=TAU).collect()
-    }
-    want = np_pairs(allv, K, TAU)
-    # transitive closure over the oracle pairs -> expected survivors
-    parent = {i: i for i in range(len(allv))}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in want:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    expected = {i for i in range(len(allv)) if find(i) == i}
-    assert kept == expected
-    # the chain 0~500~510 collapsed to one survivor: 0
-    assert 0 in kept and 500 not in kept and 510 not in kept
-
-
-def test_keep_policies_match_numpy_oracle(spark, corpus):
-    """centroid_far keeps the member farthest from its assigned
-    centroid (the published SemDeDup survivor), centroid_near the
-    closest; both tie-break on id so identical planted copies resolve
-    deterministically. Expected survivors derived from the SAME numpy
-    re-implementation (train → assign → per-doc dist → closure)."""
-    path, allv = corpus
-    emb = spark.read.parquet(path)
-    docs = emb.select(F.col("vec_id").alias("doc_id"))
-
-    cent = np_train(allv, K)
-    assign = np_assign(allv, cent)
-    dist = np.empty(len(allv), dtype=np.int64)
-    for i, v in enumerate(allv):
-        dx = v.astype(np.float64)[None, :] - cent
-        dist[i] = int(np.floor(dx * dx * GRID).sum(axis=1)[assign[i]])
-    want_pairs = np_pairs(allv, K, TAU)
-    parent = {i: i for i in range(len(allv))}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in want_pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    comps: dict = {}
-    for i in range(len(allv)):
-        comps.setdefault(find(i), []).append(i)
-
-    def expected(policy):
-        out = set()
-        for members in comps.values():
-            if len(members) == 1:
-                out.add(members[0])
-            elif policy == "centroid_far":
-                out.add(max(members, key=lambda m: (dist[m], m)))
-            else:
-                out.add(min(members, key=lambda m: (dist[m], m)))
-        return out
-
-    for policy in ("centroid_far", "centroid_near"):
-        kept = {
-            r["doc_id"]
-            for r in semantic_dedup(
-                spark, docs, emb, K, tau=TAU, keep=policy
-            ).collect()
-        }
-        assert kept == expected(policy), policy
-    # the exact-copy chain {0, 500, 510}: identical dists, so far
-    # keeps the LARGEST id and near the smallest — policies differ
-    far = semantic_dedup(spark, docs, emb, K, tau=TAU, keep="centroid_far")
-    ids = {r["doc_id"] for r in far.collect()}
-    assert 510 in ids and 0 not in ids and 500 not in ids
-    with pytest.raises(ValueError):
-        semantic_dedup(spark, docs, emb, K, keep="bogus")
-    with pytest.raises(ValueError):
-        semantic_dedup(spark, docs, emb, K, keep="centroid_far", probes=2)
 
 
 def test_multiprobe_superset_and_dedup(spark, corpus):

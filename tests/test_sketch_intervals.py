@@ -1,5 +1,4 @@
-"""HLL sketch rollups (operators/sketch_rollup.py) and interval
-merging (operators/asof.py::merge_intervals)."""
+"""Interval merging (operators/asof.py::merge_intervals)."""
 
 from __future__ import annotations
 
@@ -7,91 +6,13 @@ import datetime as dt
 import os
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from sensorstream_scalable_sensor_data_pipeline_spark.operators.asof import merge_intervals
-from sensorstream_scalable_sensor_data_pipeline_spark.operators.sketch_rollup import (
-    build_distinct_sketches,
-    rollup_distinct_sketches,
-)
 from sensorstream_scalable_sensor_data_pipeline_spark.sources.tables import load_table
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 EV = os.path.join(SF_DIR, "events.parquet")
-
-
-# ---------------------------------------------------------- hll rollup
-
-
-def test_sketch_rollup_chain_matches_oneshot(spark, sf_dir):
-    """day-grain sketches unioned to per-type and to global must give
-    the SAME estimates as sketching at those grains directly — HLL
-    union is lossless, so incremental maintenance costs no accuracy."""
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "day", F.date_trunc("day", "ts")
-    )
-    fine = build_distinct_sketches(ev, ["day", "event_type"], "user_id")
-    by_type = rollup_distinct_sketches(fine, ["event_type"])
-    got = {
-        r["event_type"]: (r["approx_distinct"], r["n_rows"])
-        for r in by_type.collect()
-    }
-    direct = build_distinct_sketches(ev, ["event_type"], "user_id")
-    want = {
-        r["event_type"]: (r["approx_distinct"], r["n_rows"])
-        for r in rollup_distinct_sketches(direct, ["event_type"]).collect()
-    }
-    assert got == want
-    # chain further: per-type -> global, vs one-shot global
-    g = rollup_distinct_sketches(by_type, []).collect()[0]
-    g2 = rollup_distinct_sketches(
-        build_distinct_sketches(ev, [], "user_id"), []
-    ).collect()[0]
-    assert g["approx_distinct"] == g2["approx_distinct"]
-    assert g["n_rows"] == ev.count()
-
-
-def test_sketch_estimates_near_exact(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "day", F.date_trunc("day", "ts")
-    )
-    fine = build_distinct_sketches(ev, ["day"], "user_id")
-    est = rollup_distinct_sketches(fine, []).collect()[0]["approx_distinct"]
-    exact = ev.select("user_id").distinct().count()
-    # lgK=12 -> ~1.6% standard error; allow 5 sigma-ish at tiny n
-    assert abs(est - exact) <= max(2, 0.08 * exact)
-    # per-day estimates track exact counts too
-    per_day = {
-        str(r["day"]): r["approx_distinct"]
-        for r in rollup_distinct_sketches(fine, ["day"]).collect()
-    }
-    exact_day = {
-        str(r["day"]): r["n"]
-        for r in ev.groupBy("day")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    assert set(per_day) == set(exact_day)
-    for d in per_day:
-        assert abs(per_day[d] - exact_day[d]) <= max(2, 0.08 * exact_day[d])
-
-
-def test_sketch_batch_insensitive(spark, sf_dir):
-    """Two half-corpus sketch tables unioned = the one-shot sketch:
-    incremental daily maintenance converges to the same answer."""
-    ev = load_table(spark, sf_dir, "events")
-    a = build_distinct_sketches(ev.filter("event_id % 2 = 0"), [], "user_id")
-    b = build_distinct_sketches(ev.filter("event_id % 2 = 1"), [], "user_id")
-    merged = rollup_distinct_sketches(a.unionByName(b), []).collect()[0]
-    oneshot = rollup_distinct_sketches(
-        build_distinct_sketches(ev, [], "user_id"), []
-    ).collect()[0]
-    assert merged["approx_distinct"] == oneshot["approx_distinct"]
-    assert merged["n_rows"] == oneshot["n_rows"]
-
-
-# ------------------------------------------------------ merge_intervals
 
 
 def _iv(spark, rows):
@@ -175,127 +96,3 @@ def test_merge_intervals_matches_oracle(spark, sf_dir):
     }
     con.close()
     assert got == want and got
-
-
-# ------------------------------------------------ KLL quantile rollups
-
-
-def test_kll_rollup_exact_below_k(spark):
-    """Below the KLL accuracy parameter every value is retained, so
-    day→global merged quantiles equal the true percentiles exactly —
-    and equal the one-shot sketch."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.sketch_rollup import (
-        build_quantile_sketches,
-        rollup_quantile_sketches,
-    )
-
-    rows = [(d, float(v)) for d in range(5) for v in range(d * 20, d * 20 + 20)]
-    df = spark.createDataFrame(rows, "day int, value double")  # 100 values 0..99
-    fine = build_quantile_sketches(df, ["day"], "value")
-    glob = rollup_quantile_sketches(fine, [], quantiles=[0.5, 0.95]).collect()[0]
-    assert glob["n_rows"] == 100
-    # true quantiles of 0..99 under the KLL rank convention
-    assert 49.0 <= glob["q50"] <= 50.0
-    assert 94.0 <= glob["q95"] <= 95.0
-    oneshot = rollup_quantile_sketches(
-        build_quantile_sketches(df, [], "value"), [], quantiles=[0.5, 0.95]
-    ).collect()[0]
-    assert (glob["q50"], glob["q95"]) == (oneshot["q50"], oneshot["q95"])
-
-
-def test_kll_rollup_rank_error_bounded_at_scale(spark, sf_dir):
-    """Above k the sketch compacts: merged-rollup quantile estimates
-    must land within the documented ~1.65% rank error of the exact
-    percentiles (checked by computing the TRUE rank of each
-    estimate)."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.sketch_rollup import (
-        build_quantile_sketches,
-        rollup_quantile_sketches,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.dayofmonth("ts").alias("day"), F.col("value")
-    )
-    n = ev.count()
-    fine = build_quantile_sketches(ev, ["day"], "value")
-    glob = rollup_quantile_sketches(fine, [], quantiles=[0.5, 0.99]).collect()[0]
-    for q, est in ((0.5, glob["q50"]), (0.99, glob["q99"])):
-        true_rank = ev.filter(F.col("value") <= est).count() / n
-        assert abs(true_rank - q) <= 0.02, (q, est, true_rank)
-
-
-# ------------------------------------------------- Theta set algebra
-
-
-def test_theta_overlap_exact_in_exact_mode(spark):
-    """Below nominal entries Theta sketches are exact: the overlap
-    report reproduces the true set cardinalities for planted
-    segments."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.sketch_rollup import (
-        build_theta_sketches,
-        segment_overlap,
-    )
-
-    a = set(range(0, 600))
-    b = set(range(400, 900))
-    rows = [("A", u) for u in a] + [("B", u) for u in b]
-    df = spark.createDataFrame(rows, "seg string, user long")
-    sk = build_theta_sketches(df, ["seg"], "user")
-    r = segment_overlap(sk, "seg", "A", "B").collect()[0]
-    assert round(r["n_a"]) == len(a) and round(r["n_b"]) == len(b)
-    assert round(r["n_intersection"]) == len(a & b)
-    assert round(r["n_union"]) == len(a | b)
-    assert round(r["n_only_a"]) == len(a - b)
-    assert round(r["n_only_b"]) == len(b - a)
-    assert abs(r["jaccard"] - len(a & b) / len(a | b)) < 1e-9
-
-
-def test_theta_overlap_from_fine_grain_rollup(spark):
-    """segment_overlap must accept a FINE-grain sketch table (several
-    rows per segment) — rows collapse via Theta union first, and the
-    union is exact below nominal entries."""
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.sketch_rollup import (
-        build_theta_sketches,
-        segment_overlap,
-    )
-
-    rows = [("A", d, u) for d in range(3) for u in range(d * 100, d * 100 + 150)] + [
-        ("B", d, u) for d in range(3) for u in range(200 + d * 50, 200 + d * 50 + 80)
-    ]
-    df = spark.createDataFrame(rows, "seg string, day int, user long")
-    a = {u for s, d, u in rows if s == "A"}
-    b = {u for s, d, u in rows if s == "B"}
-    sk = build_theta_sketches(df, ["seg", "day"], "user")
-    assert sk.count() == 6  # fine grain: (segment, day)
-    r = segment_overlap(sk, "seg", "A", "B").collect()[0]
-    assert round(r["n_intersection"]) == len(a & b)
-    assert round(r["n_union"]) == len(a | b)
-
-
-def test_kll_subpercent_quantiles_do_not_collide(spark):
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.sketch_rollup import (
-        build_quantile_sketches,
-        rollup_quantile_sketches,
-    )
-
-    df = spark.createDataFrame(
-        [(float(v),) for v in range(100)], "value double"
-    )
-    fine = build_quantile_sketches(df, [], "value")
-    row = rollup_quantile_sketches(fine, [], quantiles=[0.995, 0.999]).collect()[0]
-    assert "q99_5" in row.asDict() and "q99_9" in row.asDict()
-    assert row["q99_5"] <= row["q99_9"]
-    with pytest.raises(ValueError, match="duplicate"):
-        rollup_quantile_sketches(fine, [], quantiles=[0.5, 0.5]).collect()
-
-
-def test_theta_overlap_missing_segment_raises(spark):
-    from sensorstream_scalable_sensor_data_pipeline_spark.operators.sketch_rollup import (
-        build_theta_sketches,
-        segment_overlap,
-    )
-
-    df = spark.createDataFrame([("A", 1), ("A", 2)], "seg string, user long")
-    sk = build_theta_sketches(df, ["seg"], "user")
-    with pytest.raises(ValueError, match="not present"):
-        segment_overlap(sk, "seg", "A", "BB")
